@@ -704,9 +704,9 @@ def main():
     # "parsed": null), so every run also commits
     #   - BENCH_LOCAL.json: the full line verbatim (next run's fallback
     #     baseline), and
-    #   - BENCH_HISTORY.json: per-query warm/cold timings keyed by round,
-    #     so any regression is attributable across rounds even when the
-    #     driver's capture fails.
+    #   - BENCH_HISTORY.json: per-query warm/cold timings keyed by round
+    #     and core count, so any regression is attributable across rounds
+    #     even when the stdout capture fails.
     try:
         _write_records(os.path.dirname(os.path.abspath(__file__)), result)
     except OSError as e:
@@ -785,8 +785,10 @@ def _write_records(here: str, result: dict) -> None:
         json.dump(result, fh)
         fh.write("\n")
     os.replace(local_path + ".tmp", local_path)
+    # one row per (round, core count): a scaling run at another core
+    # count must never take the row of the round's headline run
     latest = _latest_round()
-    round_key = f"r{(latest[0] if latest else 0) + 1:02d}"
+    round_key = f"r{(latest[0] if latest else 0) + 1:02d}_c{result['cpus']}"
     hist_path = os.path.join(here, "BENCH_HISTORY.json")
     try:
         with open(hist_path) as fh:
@@ -797,6 +799,7 @@ def _write_records(here: str, result: dict) -> None:
         hist = {}
     hist[round_key] = {
         "sf": result["sf"],
+        "cpus": result["cpus"],
         "total": result["value"],
         "env_drift_median_ratio": result["env_drift_median_ratio"],
         "queries": result["queries"],

@@ -57,10 +57,10 @@ def ivf_index_health(
     DuckDB-oracle-checkable. 100 TB: one footer walk, amortizable via
     the store's chain-manifest pattern; the report is the cheap gate in
     front of the expensive maintenance it recommends."""
-    from smoltable_spark.sources.hadoop_fs import fs_for
+    from smoltable_spark.sources.store_fs import store_fs_for
 
     base = path.rstrip("/")
-    fs = fs_for(spark, base)
+    fs = store_fs_for(spark, base)
     _m, gmap, meta = _ivf_pointer(fs, base)
     rows_by_list: dict[int, int] = {}
     for name, is_dir in fs.list_status(base):

@@ -19,35 +19,20 @@ cadence (the rebuild path that already exists) while ``append`` serves
 the fast path. That split, fast appends + slow rebuilds, is exactly the
 compaction story the CellStore uses for table data.
 
-Filesystem contract (round 11, VERDICT r10 ask #1): the WHOLE
-maintenance family — append, delete, fold, compact — goes through the
-Hadoop FileSystem API (``sources/hadoop_fs.py``), so an index hosted on
-``hdfs://`` or ``s3a://`` is maintained from any driver, no local mount
-required. The r9–r10 version used raw ``os.rename``/``os.listdir`` for
-delete/fold/compact, which bound upsert-heavy workloads to a single
-node. On S3A, directory rename is copy+delete (non-atomic); the staged
-publish + crash-evidence fail-fast discipline below is what keeps a
-torn publish detectable there too — detectable by the next WRITER,
-that is: a CONCURRENT READER on such a scheme could still catch a
-reader-visible ``list_id=`` dir mid-swap. So the fold/compact family
-dispatches on the probed ``atomic_rename`` capability
-(``sources/store_fs.RENAME_ATOMIC_SCHEMES``): rename-atomic
-filesystems keep the in-place per-list swap, and rename-unsafe schemes
-use a RENAME-FREE generation protocol (round 13, VERDICT r12 ask #2 —
-replacing the r12 refusal gate): survivors land in dot-prefixed
-``.gen/g=<m>/`` dirs invisible to every reader, and ONE
-create-if-absent ``_LISTGEN-v<m>`` pointer PUT (see
-``functions/similarity.py`` for the pointer format and the
-generation-aware serving reads) atomically swaps the affected lists to
-their new generation and transitions the tombstone set — the same
-pointer-generation scheme ``CellStore`` uses for ``_VERSION``.
-``vacuum_ivf_index`` reclaims superseded generations under FIFO
-pointer retention; ``allow_non_atomic_swap=True`` retains its r12
-meaning for pointer-less indexes (assert a no-readers maintenance
-window, use the cheaper in-place swap). Bare paths dispatch through
-``fs_for``'s defaultFS-aware rule — shared verbatim with the
-CellStore's adapter (round 13), so a bare-path index, a bare-path
-store, and Spark's own data plane always address the same filesystem.
+Filesystem contract: the whole maintenance family — append, delete,
+fold, compact, vacuum — runs its metadata through the storage adapter
+(``sources/store_fs.py``), so an index on ``hdfs://`` or ``s3a://`` is
+maintained from any driver. Publishes are staged under dot-prefixed
+names invisible to readers, and crash leftovers fail the next
+maintenance op fast. The fold/compact family dispatches on the probed
+``atomic_rename`` capability: rename-atomic filesystems keep the
+in-place per-list swap; elsewhere survivors land in dot-prefixed
+``.gen/g=<m>/`` dirs and one ``_LISTGEN`` pointer commit (see
+``functions/similarity.py``) atomically swaps the affected lists to
+their new generation and transitions the tombstone set.
+``vacuum_ivf_index`` reclaims superseded generations under FIFO pointer
+retention; ``allow_non_atomic_swap=True`` selects the in-place swap for
+pointer-less indexes in a no-readers maintenance window.
 """
 
 from __future__ import annotations
@@ -56,22 +41,14 @@ from pyspark.sql import DataFrame, functions as F
 
 from smoltable_spark.functions.similarity import (
     _GEN_ROOT,
-    _LISTGEN_PREFIX,
     _collected_centroids,
     _ivf_pointer,
+    _listgen_pointer,
     _with_nearest_list,
     read_ivf_lists,
     with_quantized_norm,
 )
-from smoltable_spark.sources.hadoop_fs import fs_for
-
-
-class ConcurrentIndexCommitError(IOError):
-    """Two maintenance writers raced to publish the same ``_LISTGEN-v<m>``
-    pointer; this writer LOST the create-if-absent CAS. Single-writer
-    maintenance contract violated — re-read the index state and re-run
-    the operation (the loser's staged ``.gen`` output is dot-prefixed
-    garbage that ``vacuum_ivf_index`` sweeps)."""
+from smoltable_spark.sources.store_fs import store_fs_for
 
 
 def _serving_dir(base: str, gmap: dict[int, int], k: int) -> str | None:
@@ -91,42 +68,16 @@ def _commit_listgen(
     fs, base: str, m_new: int, lists: dict[int, int],
     tomb_keep: list[str], tomb_folded: list[str],
 ) -> None:
-    """CAS-publish pointer generation ``m_new`` (create-if-absent, like
-    ``CellStore._commit_version``): exactly one winner per pointer
-    number; a torn previous attempt (unparsable content) is swept and
-    re-CASed once; a parsable collision is a concurrent maintenance
-    writer and raises loudly."""
-    import json
-
-    content = json.dumps(
+    """Publish IVF pointer number ``m_new``. A concurrent maintenance
+    writer makes the loser raise ``ConcurrentCommitError``; its staged
+    ``.gen`` output is dot-prefixed garbage ``vacuum_ivf_index`` sweeps."""
+    _listgen_pointer(fs, base).commit(
+        m_new,
         {
-            "m": m_new,
             "lists": {str(k): g for k, g in sorted(lists.items())},
             "tomb_keep": sorted(tomb_keep),
             "tomb_folded": sorted(tomb_folded),
-        }
-    )
-    target = f"{base}/{_LISTGEN_PREFIX}{m_new}"
-    for _attempt in range(2):
-        try:
-            fs.create_exclusive(target, content)
-            return
-        except FileExistsError:
-            try:
-                import json as _json
-
-                _json.loads(fs.read_text(target))
-            except (ValueError, FileNotFoundError):
-                fs.delete(target, recursive=False)
-                continue  # torn pre-commit garbage: sweep and re-CAS
-            raise ConcurrentIndexCommitError(
-                f"IVF pointer commit v{m_new} in {base} lost the "
-                f"create-if-absent race: {target} was published by a "
-                "concurrent maintenance writer."
-            )
-    raise ConcurrentIndexCommitError(
-        f"IVF pointer commit v{m_new} in {base} collided twice while "
-        "sweeping torn garbage — a concurrent maintenance writer is live."
+        },
     )
 
 
@@ -153,47 +104,31 @@ def append_ivf_index(
     name; two concurrent appenders would collide). Serialize appends per
     index, exactly like LSM memtable flushes.
 
-    Delete interplay (round 10, VERDICT r9 "resurrection" bug): a batch
-    id that carries an OUTSTANDING tombstone (deleted, not yet
-    compacted) is the standard vector-DB upsert — FAISS ``remove_ids``
-    then ``add`` with the same id serves the new vector. A vec_id-keyed
-    tombstone cannot distinguish the old row from the new one, so before
-    publishing, the intersecting tombstones are FOLDED: the old rows are
-    physically dropped from their (recorded) list partitions and the
-    matching tombstones cleared — a targeted compact restricted to the
-    batch's ids, O(affected lists). Every crash window in that sequence
-    leaves the id in a consistent fully-deleted state and a replay of
-    the append converges; plain appends (no matching tombstone) pay one
-    bounded tombstone read and nothing else."""
+    Delete interplay: a batch id with an OUTSTANDING tombstone is the
+    vector-DB upsert (FAISS ``remove_ids`` then ``add``). A vec_id-keyed
+    tombstone cannot tell the old row from the new one, so before
+    publishing, the intersecting tombstones are FOLDED — a targeted
+    compact restricted to the batch's ids, O(affected lists). Every
+    crash window leaves the id fully deleted and a replay converges;
+    plain appends pay one bounded tombstone read."""
     cents = spark.read.parquet(path.rstrip("/") + "/_centroids")
     nv = with_quantized_norm(new_vectors, vec_col).select(
         F.col(id_col).alias("vec_id"), "q", "nrm2"
     )
     nv_listed = _with_nearest_list(nv, _collected_centroids(cents))
-    # ADVICE r6: a bare mode("append") exposes partially-committed task
-    # files to a concurrent reader while the committer moves them. Stage
-    # the delta under a dot-prefixed dir INSIDE the index (same
-    # filesystem, so renames are metadata ops; parquet partition
-    # discovery ignores dot/underscore-prefixed paths, so readers never
-    # see the staging area), then move the finished files into their
-    # ``list_id=`` partitions LAST — the LSM "atomic memtable flush"
-    # shape. Each rename is atomic, so a reader concurrent with the
-    # publish step observes a clean prefix of the delta's files, never a
-    # torn file; full all-or-nothing visibility would need a manifest
-    # (snapshot isolation), which is the table-format layer's job.
+    # a bare mode("append") exposes partially-committed task files to
+    # readers. Stage the delta under a dot-prefixed dir inside the index
+    # (invisible to partition discovery), then move the finished files
+    # into their ``list_id=`` partitions LAST: a concurrent reader sees
+    # a clean prefix of the delta's files, never a torn file.
     base = path.rstrip("/")
     staging = base + "/.staging-append"
-    fs = fs_for(spark, base)
-    # ADVICE r7: a crash mid-publish leaves SOME delta files already
-    # renamed into the index with the staging dir still present; blindly
-    # re-running the append would overwrite staging and re-publish the
-    # whole delta under fresh task-UUID filenames, silently DUPLICATING
-    # the partially-published vectors. Fail fast instead — recovery is
-    # explicit (inspect staging: finish the publish by moving the
-    # remaining files, or delete staging to roll back), matching the
-    # single-writer contract above. Retry semantics: an append that
-    # raised here has NOT consumed its input; re-run it only after the
-    # staging dir is reconciled.
+    fs = store_fs_for(spark, base)
+    # a crash mid-publish leaves some delta files already moved in with
+    # the staging dir still present; re-running would re-publish the
+    # whole delta under fresh filenames and DUPLICATE those vectors.
+    # Fail fast instead: recovery is explicit, and the refused append
+    # has not consumed its input.
     if fs.exists(staging):
         raise IOError(
             f"IVF append aborted: staging dir {staging} already exists — "
@@ -203,33 +138,17 @@ def append_ivf_index(
             "partitions to finish that publish, or delete the staging dir "
             "to roll it back; then retry this append."
         )
-    # ADVICE r10 (low): a crashed FOLD's leftovers mean a list partition
-    # may be sitting retired inside its staging dir — appending more
-    # rows on top of that damage (and folding this batch's tombstones
-    # against a half-swapped layout) would compound it. Fail fast here
-    # too, before any mutation, not only on the next fold/compact.
+    # a crashed fold may have left a list retired inside its staging
+    # dir; appending on top would compound the damage
     _check_fold_crash_evidence(fs, base)
-    # r14 (guide §1.2): the assigned batch feeds TWO actions — the
-    # tombstone-intersection collect below and the staged publish write —
-    # and the caller's batch frame is often join-derived (the upsert
-    # path joins the corpus to build the replacement rows), so
-    # unmaterialized it executed that upstream twice per append. The
-    # batch is caller-bounded (an API request) by this function's
-    # contract, so an eager localCheckpoint is the module's bounded-data
-    # idiom: one execution, both consumers read the materialized blocks.
-    # Runs AFTER the fail-fast checks above so a refused append computes
-    # nothing.
+    # the assigned batch feeds two actions (the tombstone intersection
+    # and the staged write) and is often join-derived: materialize the
+    # caller-bounded batch once, after the fail-fast checks.
     nv_listed = nv_listed.localCheckpoint(eager=True)
-    # fold tombstones that the incoming batch supersedes BEFORE the new
-    # rows become visible: once the old row is physically gone and the
-    # tombstone cleared, the published new row serves unmasked. Batch
-    # ids are caller-bounded (an API request) and tombstones are bounded
-    # by deletes-since-last-compact, so the intersection is driver-safe.
-    # Runs AFTER the crash-evidence checks above (a crashed previous
-    # append/fold must be reconciled before any further mutation) and
-    # before the staged publish below (every crash window between the
-    # fold and the publish leaves the id in a consistent fully-deleted
-    # state).
+    # fold the tombstones the batch supersedes BEFORE its rows become
+    # visible, so the published rows serve unmasked. Batch ids and
+    # outstanding tombstones are both bounded: the collect is
+    # driver-safe.
     tombs = _tombstones(spark, path)
     if tombs is not None:
         batch_ids = {
@@ -239,11 +158,6 @@ def append_ivf_index(
             ).collect()
         }
         if batch_ids:
-            # upsert path: the subset fold publishes via the in-place
-            # swap on rename-atomic filesystems and via the rename-free
-            # generation pointer everywhere else (round 13); the flag
-            # only selects the legacy maintenance-window swap for
-            # pointer-less indexes on rename-unsafe schemes
             _fold_tombstones(
                 spark, path, only_vec_ids=batch_ids,
                 allow_non_atomic_swap=allow_non_atomic_swap,
@@ -254,10 +168,8 @@ def append_ivf_index(
         .partitionBy("list_id")
         .parquet(staging)
     )
-    # generation-aware destinations (round 13): a list folded on a
-    # rename-unsafe filesystem serves from its .gen/g=<g>/ dir — new
-    # files must land THERE, not in the stale (pointer-shielded) plain
-    # dir, or the appended vectors would be invisible to serving reads.
+    # a list folded generationally serves from its .gen/g=<g>/ dir: new
+    # files must land there, not in the pointer-shielded plain dir
     m, gmap, meta = _ivf_pointer(fs, base)
     revived: dict[int, int] = {}
     for part, is_dir in fs.list_status(staging):
@@ -278,23 +190,15 @@ def append_ivf_index(
             # revival visible all-or-nothing
             dst_dir = f"{base}/{_GEN_ROOT}/g={m + 1}/{part}"
             revived[k] = m + 1
-        fs.mkdirs(dst_dir)
+        fs.makedirs(dst_dir)
         for name, _ in fs.list_status(f"{staging}/{part}"):
             if name.startswith("_") or name.startswith("."):
                 continue
-            # task-UUID filenames: no collision with base files. Hadoop
-            # rename reports failure via its RETURN VALUE, not an
-            # exception — an unchecked false (dst exists, concurrent
-            # appender on the fixed staging path, fs quirk) would leave
-            # the file in staging and the delete below would destroy it:
-            # a silent data-loss append. Fail loudly instead.
-            if not fs.rename(f"{staging}/{part}/{name}", f"{dst_dir}/{name}"):
-                raise IOError(
-                    f"IVF append publish failed: could not rename "
-                    f"{staging}/{part}/{name} into {dst_dir}; staging left "
-                    f"in place for inspection (single-writer contract "
-                    f"violated, or a stale destination file exists)"
-                )
+            # task-UUID filenames: no collision with base files. A failed
+            # rename raises, leaving staging in place for inspection (a
+            # concurrent appender on the fixed staging path, or a stale
+            # destination file) — never deleted with unpublished rows
+            fs.rename(f"{staging}/{part}/{name}", f"{dst_dir}/{name}")
     if revived:
         # pointer BEFORE the staging delete: a crash in between leaves
         # the staging dir as fail-fast evidence, never silently-lost
@@ -304,7 +208,7 @@ def append_ivf_index(
             list(meta.get("tomb_keep", [])),
             list(meta.get("tomb_folded", [])),
         )
-    fs.delete(staging)
+    fs.rmtree(staging)
 
 
 # ---------------------------------------------------------------------------
@@ -351,16 +255,11 @@ def delete_from_ivf_index(
     ``compact_ivf_index`` resets by rewriting ONLY the affected list
     partitions. Returns the number of tombstoned rows (0 when no victim
     id exists in the index — deleting an absent id is a no-op, not an
-    error). Single-writer contract, like ``append_ivf_index``.
-
-    Filesystem contract (round 11): all metadata ops go through the
-    Hadoop FS API, so the index may live on any Hadoop-supported store
-    (local, ``file:``, ``hdfs://``, ``s3a://``) — the r9–r10 local-only
-    restriction is gone."""
+    error). Single-writer contract, like ``append_ivf_index``."""
     import uuid
 
     base = path.rstrip("/")
-    fs = fs_for(spark, base)
+    fs = store_fs_for(spark, base)
     # sweep rollback artifacts of a crashed PREVIOUS delete: a leftover
     # .staging-delete-* was never published (the atomic rename into
     # _tombstones/ is the commit point), so under the single-writer
@@ -369,7 +268,7 @@ def delete_from_ivf_index(
     # needs reconciliation
     for d in fs.listdir(base):
         if d.startswith(".staging-delete-"):
-            fs.delete(f"{base}/{d}")
+            fs.rmtree(f"{base}/{d}")
     # ADVICE r10 (low): after a crashed fold, a list partition may be
     # sitting retired inside staging — the victim→list resolution below
     # would then record 0 hits for ids in that list (treated as absent),
@@ -397,14 +296,14 @@ def delete_from_ivf_index(
     hits.coalesce(1).write.mode("overwrite").parquet(staging)
     n = fs.parquet_dir_rows(staging)
     if n == 0:
-        fs.delete(staging)
+        fs.rmtree(staging)
         return 0
     dst_root = f"{base}/{_TOMBSTONE_ROOT}"
-    fs.mkdirs(dst_root)
+    fs.makedirs(dst_root)
     # atomic publish (dir rename on HDFS/local; see module header
     # for the S3A caveat — an unpublished staging dir is swept by
     # the next delete, so a torn copy never becomes a tombstone leg)
-    fs.rename_or_raise(staging, f"{dst_root}/d-{tag}", "tombstone publish")
+    fs.rename(staging, f"{dst_root}/d-{tag}")
     return int(n)
 
 
@@ -443,14 +342,14 @@ def _fold_tombstones(
     a subset of tombstoned ids (the append-upsert path); the remaining
     tombstones are preserved via an atomic rewrite of ``_tombstones/``.
 
-    Crash discipline (ADVICE r9): the per-list swap publishes the new
+    Crash discipline: the per-list swap publishes the new
     dir BESIDE the old one first (dot-prefixed, invisible to readers),
     then retires the old, then renames the new into place — every
     intermediate state is either pre-swap, detectable via
     ``_check_fold_crash_evidence``, or post-swap; already-removed list
     dirs are tolerated on replay.
 
-    Scale discipline (round 11, VERDICT r10 ask #2): NOTHING
+    Scale discipline: NOTHING
     table-sized touches the driver. The victim/keep split and the
     survivor rewrite are Spark jobs over the tombstone legs; the only
     collect is the DISTINCT affected list ids, bounded by the coarse
@@ -461,22 +360,16 @@ def _fold_tombstones(
     import uuid
 
     base = path.rstrip("/")
-    fs = fs_for(spark, base)
-    # ADVICE r10 (low): run the crash-evidence check BEFORE the
-    # no-tombstones early return — an index whose tombstone legs were
-    # cleared during partial manual reconciliation but that still has
-    # swap leftovers must fail fast, not report a clean no-op compact.
+    fs = store_fs_for(spark, base)
+    # before the no-tombstones early return: swap leftovers must fail
+    # fast, not report a clean no-op compact
     _check_fold_crash_evidence(fs, base)
     m, gmap, meta = _ivf_pointer(fs, base)
-    # Generation mode (round 13, VERDICT r12 ask #2): an index with a
-    # ``_LISTGEN`` pointer is permanently generational (its live dirs
-    # are dot-prefixed, resolved only through the pointer); a
-    # pointer-less index goes generational the first time it folds on a
-    # rename-unsafe scheme — so object-store indexes are MAINTAINED,
-    # not just served (the r12 gate refused here).
-    # ``allow_non_atomic_swap`` keeps its r12 meaning for pointer-less
-    # indexes only: assert a no-concurrent-readers maintenance window
-    # and take the cheaper legacy in-place swap.
+    # an index with a ``_LISTGEN`` pointer is permanently generational
+    # (its live dirs resolve only through the pointer); a pointer-less
+    # one goes generational the first time it folds on a rename-unsafe
+    # scheme, unless ``allow_non_atomic_swap`` asserts a no-readers
+    # window for the in-place swap
     gen_mode = m > 0 or (
         not getattr(fs, "atomic_rename", True) and not allow_non_atomic_swap
     )
@@ -494,14 +387,14 @@ def _fold_tombstones(
     leg_names = []  # their basenames — the next pointer's tomb_folded
     for d, is_dir in fs.list_status(troot):
         if d.startswith(".staging-rewrite-"):
-            fs.delete(f"{troot}/{d}")
+            fs.rmtree(f"{troot}/{d}")
         elif not is_dir:
             continue
         elif (d.startswith("d-") and d not in folded_names) or d in keep_names:
             legs.append(f"{troot}/{d}")
             leg_names.append(d)
         elif d.startswith(".t-"):
-            fs.delete(f"{troot}/{d}")  # unreferenced kept-leg: rollback
+            fs.rmtree(f"{troot}/{d}")  # unreferenced kept-leg: rollback
     # total tombstone rows from the legs' parquet FOOTERS — driver-side
     # metadata, no Spark job; n_folded derives from it (total − kept)
     # so neither the full fold nor the subset fold pays a count job
@@ -583,7 +476,7 @@ def _fold_tombstones(
         n_folded = tombs_total - kept
         if n_folded == 0:
             if stage is not None:
-                fs.delete(stage)
+                fs.rmtree(stage)
             return {"tombstones": 0, "lists_rewritten": 0}
         # tolerate already-removed list dirs (a fully-tombstoned list
         # from a previous fold, or a replay after manual crash
@@ -595,7 +488,7 @@ def _fold_tombstones(
             if int(r["folded"]) == 0:
                 continue  # kept-only list: nothing of it folds
             d = _serving_dir(base, gmap, r["list_id"])
-            if d is not None and fs.is_dir(d):
+            if d is not None and fs.isdir(d):
                 affected.append(r["list_id"])
         affected.sort()
         victims = fold_df.select("vec_id").distinct()
@@ -637,7 +530,7 @@ def _fold_tombstones(
             # legs, so a crash mid-sweep leaves only ignored garbage
             # (vacuum_ivf_index finishes the job)
             for d in legs:
-                fs.delete(d)
+                fs.rmtree(d)
             return {
                 "tombstones": int(n_folded),
                 "lists_rewritten": len(affected),
@@ -660,24 +553,20 @@ def _fold_tombstones(
                 # until the final rename, and a crash from here on
                 # leaves recoverable evidence instead of a
                 # silently-vanished list
-                if fs.is_dir(staged):
-                    fs.rename_or_raise(staged, new, "fold publish-beside")
-                if fs.is_dir(old):
-                    fs.rename_or_raise(
-                        old, f"{staging}/.retired-{l}", "fold retire"
-                    )
-                if fs.is_dir(new):
-                    fs.rename_or_raise(new, old, "fold swap-in")
+                if fs.isdir(staged):
+                    fs.rename(staged, new)
+                if fs.isdir(old):
+                    fs.rename(old, f"{staging}/.retired-{l}")
+                if fs.isdir(new):
+                    fs.rename(new, old)
                 # a list whose every row was tombstoned has no staged
                 # dir: the partition simply disappears (an empty LSM
                 # level)
-            fs.delete(staging)
+            fs.rmtree(staging)
         if stage is not None:
-            fs.rename_or_raise(
-                stage, f"{troot}/d-{tag}", "tombstone-rewrite publish"
-            )
+            fs.rename(stage, f"{troot}/d-{tag}")
         for d in legs:
-            fs.delete(d)
+            fs.rmtree(d)
         return {"tombstones": int(n_folded), "lists_rewritten": len(affected)}
     finally:
         tombs.unpersist()
@@ -694,30 +583,14 @@ def compact_ivf_index(
     read-amplification maintenance, exactly like the CellStore's minor
     fold.
 
-    Publish strategy is capability-dispatched (round 13, VERDICT r12
-    ask #2):
-
-    - **rename-atomic filesystems** (local/HDFS/viewfs), no pointer:
-      the r9 in-place per-list swap — each affected ``list_id=`` dir is
-      atomically replaced, zero extra read-side cost.
-    - **rename-unsafe schemes** (s3a/gs/unknown), or any index that
-      already has a ``_LISTGEN`` pointer: the RENAME-FREE generation
-      protocol — survivors land in a dot-prefixed ``.gen/g=<m+1>/``
-      dir, and ONE create-if-absent pointer PUT atomically swaps the
-      affected lists to the new generation and transitions the
-      tombstone set. Concurrent readers see pre-fold or post-fold,
-      never a mid-copy directory — this replaces the r12 refusal gate.
-      ``vacuum_ivf_index`` reclaims superseded generations.
-
-    Contract: single maintenance writer (the pointer CAS makes a
-    violation loud — :class:`ConcurrentIndexCommitError` — never a lost
-    update), fails fast on crash evidence from a previous legacy fold
-    (``_check_fold_crash_evidence``), and — like the whole maintenance
-    family since round 11 — runs against any Hadoop-supported
-    filesystem via ``sources/hadoop_fs.py``. ``allow_non_atomic_swap``
-    retains its r12 meaning for pointer-less indexes on rename-unsafe
-    schemes: assert a no-concurrent-readers window and use the cheaper
-    in-place swap instead of going generational."""
+    Publish strategy (see the module docstring): the in-place per-list
+    swap on rename-atomic filesystems for pointer-less indexes, else
+    the ``_LISTGEN`` generation commit — readers see pre-fold or
+    post-fold, never a mid-copy directory. ``allow_non_atomic_swap``
+    asserts a no-readers window and takes the in-place swap on a
+    rename-unsafe scheme. Single maintenance writer (a violation raises
+    ``ConcurrentCommitError``); fails fast on a previous fold's crash
+    evidence (``_check_fold_crash_evidence``)."""
     return _fold_tombstones(
         spark, path, only_vec_ids=None,
         allow_non_atomic_swap=allow_non_atomic_swap,
@@ -748,27 +621,17 @@ def vacuum_ivf_index(spark, path: str, keep_pointers: int = 2) -> dict:
     generational to reclaim. Single-maintenance-writer contract, like
     the fold family. Returns counts of reclaimed dirs per kind."""
     base = path.rstrip("/")
-    fs = fs_for(spark, base)
+    fs = store_fs_for(spark, base)
     keep_pointers = max(1, keep_pointers)
-    import json
-
-    nums = []
-    for name, is_dir in fs.list_status(base):
-        if is_dir or not name.startswith(_LISTGEN_PREFIX):
-            continue
-        try:
-            nums.append(int(name[len(_LISTGEN_PREFIX):]))
-        except ValueError:
-            continue
-    if not nums:
+    pointer = _listgen_pointer(fs, base)
+    retained = pointer.generations()[:keep_pointers]
+    if not retained:
         return {"pointers": 0, "generations": 0, "plain_dirs": 0, "tomb_legs": 0}
-    nums.sort(reverse=True)
-    retained, dropped = nums[:keep_pointers], nums[keep_pointers:]
     maps = []
     current_meta: dict = {}
     for i, mnum in enumerate(retained):
         try:
-            d = json.loads(fs.read_text(f"{base}/{_LISTGEN_PREFIX}{mnum}"))
+            d = pointer.load(mnum)
             maps.append({int(k): int(g) for k, g in d["lists"].items()})
             if i == 0:
                 current_meta = d
@@ -786,7 +649,7 @@ def vacuum_ivf_index(spark, path: str, keep_pointers: int = 2) -> dict:
         except ValueError:
             continue
         if g not in live_gens:
-            fs.delete(f"{gen_root}/{name}")
+            fs.rmtree(f"{gen_root}/{name}")
             stats["generations"] += 1
     # stale plain dirs: shielded by every retained pointer
     for name, is_dir in fs.list_status(base):
@@ -797,18 +660,16 @@ def vacuum_ivf_index(spark, path: str, keep_pointers: int = 2) -> dict:
         except ValueError:
             continue
         if maps and all(k in mp for mp in maps):
-            fs.delete(f"{base}/{name}")
+            fs.rmtree(f"{base}/{name}")
             stats["plain_dirs"] += 1
     # tombstone legs the current pointer already excludes
     troot = f"{base}/{_TOMBSTONE_ROOT}"
     folded = set(current_meta.get("tomb_folded", []))
     for name, is_dir in fs.list_status(troot):
         if is_dir and name in folded:
-            fs.delete(f"{troot}/{name}")
+            fs.rmtree(f"{troot}/{name}")
             stats["tomb_legs"] += 1
     # old pointer files last: everything they referenced is now gone or
     # re-referenced by a retained pointer
-    for mnum in dropped:
-        fs.delete(f"{base}/{_LISTGEN_PREFIX}{mnum}", recursive=False)
-        stats["pointers"] += 1
+    stats["pointers"] = pointer.sweep(retained[-1])
     return stats

@@ -567,11 +567,11 @@ def build_ivf_index(
     cents.write.mode("overwrite").parquet(path.rstrip("/") + "/_centroids")
 
 
-#: rename-free IVF maintenance pointer (round 13, VERDICT r12 ask #2):
-#: ``_LISTGEN-v<m>`` files at the index root, CAS-committed
-#: (create-if-absent) exactly like the CellStore's ``_VERSION-v<n>``
-#: generations. Content is JSON:
-#:   {"m": m, "lists": {list_id: g}, "tomb_keep": [...], "tomb_folded": [...]}
+#: The IVF maintenance pointer: a ``store_fs.GenerationPointer`` named
+#: ``_LISTGEN`` at the index root, always committed as create-if-absent
+#: generations (vacuum_ivf_index keeps the newest few, and readers of an
+#: older one must still find its dirs). Its JSON payload:
+#:   {"v": m, "lists": {list_id: g}, "tomb_keep": [...], "tomb_folded": [...]}
 #: - ``lists``: lists whose LIVE data is the dot-prefixed generation dir
 #:   ``.gen/g=<g>/list_id=<k>`` (g >= 1) or retired entirely (g == 0).
 #:   Lists absent from the map serve their plain ``list_id=<k>`` dir.
@@ -580,56 +580,34 @@ def build_ivf_index(
 #: - ``tomb_folded``: the ``d-*``/``.t-*`` legs this fold superseded —
 #:   excluded from reads even if their deletion sweep crashed.
 #: One pointer read resolves the whole serving state, so a fold commit
-#: is a single all-or-nothing PUT: readers see the pre-fold index or the
-#: post-fold index, never a mid-swap directory — the rename-unsafe
-#: filesystems answer to the r12 refuse-on-s3a gate.
-_LISTGEN_PREFIX = "_LISTGEN-v"
+#: is a single all-or-nothing create: readers see the pre-fold or the
+#: post-fold index, never a mid-swap directory.
+_LISTGEN = "_LISTGEN"
 _GEN_ROOT = ".gen"
 
 
-def _ivf_pointer(fs, base: str) -> tuple[int, dict[int, int], dict]:
-    """(pointer number, {list_id: generation}, full pointer meta) from
-    the newest parsable ``_LISTGEN-v<m>``; (0, {}, {}) when the index
-    has never been folded on a rename-unsafe filesystem. Torn newest
-    pointers (crashed writer on a flush-visible scheme) are pre-commit
-    garbage: fall back to the next-lower parsable one, mirroring
-    ``CellStore.current_version``."""
-    import json
+def _listgen_pointer(fs, base: str):
+    from smoltable_spark.sources.store_fs import GenerationPointer
 
-    gens = []
-    for name, is_dir in fs.list_status(base):
-        if is_dir or not name.startswith(_LISTGEN_PREFIX):
-            continue
-        try:
-            gens.append(int(name[len(_LISTGEN_PREFIX):]))
-        except ValueError:
-            continue
-    for m in sorted(gens, reverse=True):
-        try:
-            text = fs.read_text(f"{base}/{_LISTGEN_PREFIX}{m}")
-        except Exception:
-            # vacuumed between the listing and this read (an old pointer
-            # swept under a reader's feet — the max retained pointer is
-            # never deleted, so falling through is safe); a file that
-            # still exists is a real IO failure
-            if fs.exists(f"{base}/{_LISTGEN_PREFIX}{m}"):
-                raise
-            continue
-        try:
-            d = json.loads(text)
-            return m, {int(k): int(g) for k, g in d["lists"].items()}, d
-        except (ValueError, KeyError):
-            continue  # torn newest pointer: pre-commit garbage
-    return 0, {}, {}
+    return GenerationPointer(fs, base, _LISTGEN, swap=False)
+
+
+def _ivf_pointer(fs, base: str) -> tuple[int, dict[int, int], dict]:
+    """(pointer number, {list_id: generation}, full pointer payload);
+    (0, {}, {}) when the index has never been folded generationally."""
+    m, meta = _listgen_pointer(fs, base).resolve()
+    if meta is None:
+        return 0, {}, {}
+    return m, {int(k): int(g) for k, g in meta["lists"].items()}, meta
 
 
 def ivf_list_generations(spark, path: str) -> tuple[int, dict[int, int]]:
     """(pointer number, {list_id: live generation}) of a persisted IVF
     index — (0, {}) for never-folded-on-rename-unsafe indexes."""
-    from smoltable_spark.sources.hadoop_fs import fs_for
+    from smoltable_spark.sources.store_fs import store_fs_for
 
     base = path.rstrip("/")
-    m, gmap, _meta = _ivf_pointer(fs_for(spark, base), base)
+    m, gmap, _meta = _ivf_pointer(store_fs_for(spark, base), base)
     return m, gmap
 
 
@@ -647,10 +625,10 @@ def read_ivf_lists(spark, path: str, list_ids=None):
     dirs of mapped lists are never listed), and mapped lists group into
     one read per generation with that generation's basePath, so the
     read fan-out is O(live generations), not O(lists)."""
-    from smoltable_spark.sources.hadoop_fs import fs_for
+    from smoltable_spark.sources.store_fs import store_fs_for
 
     base = path.rstrip("/")
-    fs = fs_for(spark, base)
+    fs = store_fs_for(spark, base)
     _m, gmap, _meta = _ivf_pointer(fs, base)
     if not gmap:
         df = spark.read.parquet(base)
@@ -699,24 +677,17 @@ def ivf_tombstones(spark, path: str):
     persisted IVF index, or None (functions/ann_index.py writes them
     under the underscore-prefixed ``_tombstones/`` root, invisible to
     the index's own partition discovery). Lives here so the serving
-    path needs no import of the maintenance module. Round 11 listed
-    through the Hadoop FS API so serving masks deletes on
-    object-store-hosted indexes too; round 12 (ADVICE r11) dispatches
-    like the CellStore adapter — bare paths use local syscalls (two
-    stat-class calls, zero Py4J traffic on the serving path), scheme
-    URIs one listStatus RPC — so a bare-path index and a bare-path
-    store always address the same filesystem.
+    path needs no import of the maintenance module.
 
-    Round 13: pointer-aware. With a ``_LISTGEN`` pointer, the live set
-    is (all ``d-*`` legs minus the pointer's ``tomb_folded``) plus its
-    ``tomb_keep`` legs — so a generation fold's tombstone transition is
-    atomic with its list swap, and a crashed post-commit deletion sweep
-    can only leave ignored garbage, never resurrect folded tombstones."""
-    from smoltable_spark.sources.hadoop_fs import fs_for
+    With a ``_LISTGEN`` pointer the live set is (all ``d-*`` legs minus
+    the pointer's ``tomb_folded``) plus its ``tomb_keep`` legs, so a
+    generation fold's tombstone transition is atomic with its list swap
+    and a crashed post-commit sweep only leaves ignored garbage."""
+    from smoltable_spark.sources.store_fs import store_fs_for
 
     base = path.rstrip("/")
     root = base + "/_tombstones"
-    fs = fs_for(spark, base)
+    fs = store_fs_for(spark, base)
     _m, _gmap, meta = _ivf_pointer(fs, base)
     folded = set(meta.get("tomb_folded", []))
     keep = list(meta.get("tomb_keep", []))

@@ -11918,9 +11918,9 @@ def ann_ivf_fold_unsafe(spark, sf_dir):
         delete_from_ivf_index,
         vacuum_ivf_index,
     )
-    from smoltable_spark.sources.hadoop_fs import LocalFS
+    from smoltable_spark.sources.store_fs import LocalStoreFS
 
-    class _UnsafeFS(LocalFS):
+    class _UnsafeFS(LocalStoreFS):
         scheme = "s3a"  # the probe's verdict for an S3A-hosted index
         atomic_rename = False
 
@@ -11943,8 +11943,8 @@ def ann_ivf_fold_unsafe(spark, sf_dir):
         ).withColumn("rank", F.col("rank").cast("int"))
 
     masked = sorted(map(tuple, serve().collect()))
-    real_fs_for = ann_index.fs_for
-    ann_index.fs_for = lambda _s, _b: _UnsafeFS()
+    real_fs_for = ann_index.store_fs_for
+    ann_index.store_fs_for = lambda _s, _b: _UnsafeFS()
     try:
         stats = compact_ivf_index(spark, path)
         assert stats["tombstones"] > 0 and stats["lists_rewritten"] > 0
@@ -11956,7 +11956,7 @@ def ann_ivf_fold_unsafe(spark, sf_dir):
         vstats = vacuum_ivf_index(spark, path, keep_pointers=1)
         assert vstats["plain_dirs"] >= 1  # pre-fold stale dirs reclaimed
     finally:
-        ann_index.fs_for = real_fs_for
+        ann_index.store_fs_for = real_fs_for
     vacuumed = serve()
     assert sorted(map(tuple, vacuumed.collect())) == masked
     return vacuumed

@@ -382,14 +382,14 @@ def wc_store_unsafe_commit(spark, sf_dir):
     simulated here over local syscalls with a deliberately TORN
     ``replace_text``, so any regression to rename-based publishing
     surfaces as a missing pointer) commits every version as a fresh
-    ``_VERSION-v<n>`` generation file. The row pins the full protocol
+    ``_VERSION`` generation file. The row pins the full protocol
     against orders-derived oracle math: resolution (max over
     generations), LSM shadowing across the generation-committed chain
     (newest per-coordinate totalprice after two rewrite deltas), MVCC
     time travel to v1, and vacuum's generation sweep (legs all retained
     by the v3 chain; pointer generations below the retention cutoff
     removed, readers unaffected)."""
-    from smoltable_spark.sources.store import CellStore, _VERSION_GEN_PREFIX
+    from smoltable_spark.sources.store import CellStore
     from smoltable_spark.sources.store_fs import LocalStoreFS
 
     class _UnsafeFS(LocalStoreFS):
@@ -418,7 +418,7 @@ def wc_store_unsafe_commit(spark, sf_dir):
 
     def _gens():
         return ",".join(
-            str(g) for g in sorted(store._pointer_generations())
+            str(g) for g in sorted(store._pointer.generations())
         )
 
     def _cents(df):

@@ -35,51 +35,32 @@ table at 100 TB):
 - ``compact()`` folds base+deltas into a new base (``OPTIMIZE`` analog;
   reference levelled compaction, mod.rs:156-165).
 
-Readers always see a consistent version: the ``_VERSION`` pointer is the
-commit point, written after the snapshot's data and kind marker are
-fully on disk. HOW it is written depends on a probed filesystem
-capability (round 12, VERDICT r11 ask #2):
+Readers always see a consistent version: the ``_VERSION`` pointer
+(``store_fs.GenerationPointer``) is the commit point, published after
+the snapshot's data and kind marker are fully on disk. On rename-atomic
+filesystems it is one file swapped in place; elsewhere each commit
+creates a fresh generation file, so no reader can catch a torn pointer,
+and ``vacuum`` sweeps generations below its retention cutoff.
 
-- on filesystems with atomic rename (local, HDFS, viewfs — the
-  ``store_fs.py`` allowlist) the pointer is one ``_VERSION`` file
-  swapped via write-beside + overwrite-rename, exactly as before;
-- on everything else (s3a/gs/unknown schemes, where rename is
-  copy+delete and a reader could catch the pointer mid-copy) commits
-  are RENAME-FREE: each writes a fresh ``_VERSION-v<n>`` generation
-  file (an object-store PUT is all-or-nothing: the key is invisible
-  until the stream closes), readers resolve ``max(n)`` over one
-  listing, and ``vacuum`` sweeps generations older than its retention
-  cutoff. The two forms interoperate — resolution always takes the
-  max over both — so a store can move between schemes.
+The pointer's content is a JSON chain manifest ``{"v": n, "legs": {v:
+[kind, folds], ...}}`` — a write-once cache of every live leg's
+``_KIND``/``_FOLDS`` markers, so opening a chain costs one pointer read
+instead of two reads per leg on object stores. The marker files stay
+authoritative: a legacy plain-int pointer, or a version missing from
+the manifest, falls back to reading markers. Kind and folds are
+immutable per version number (numbers are never reused), so the cache
+needs no invalidation.
 
-The pointer's CONTENT is a JSON chain manifest (round 12, VERDICT r11
-ask #7): ``{"v": n, "legs": {v: [kind, folds], ...}}`` — a write-once
-cache of every live leg's ``_KIND``/``_FOLDS`` markers, so opening a
-chain costs ONE pointer read instead of 2 RPCs per leg per open on
-object stores. The marker files stay authoritative: a legacy plain-int
-pointer, or any version missing from the manifest, falls back to
-reading markers. Kind and folds are immutable per version number
-(version numbers are never reused), which is what makes the cache
-coherent without invalidation.
-
-**Writer-concurrency contract (round 13, VERDICT r12 asks #1/#7).**
-Mutations assume a SINGLE writer per store: ``append``/``write``/
-``compact``/``minor_compact`` stage data under the next version dir and
-``vacuum`` reclaims by a listing — two concurrent writers can interleave
-those steps (both stage ``v=<n>``, vacuum lists while a commit is
-mid-flight) in ways no pointer protocol can repair after the fact.
-What the engine DOES guarantee is that a contract violation is LOUD,
-never a silent lost update: on rename-unsafe filesystems each commit
-publishes its ``_VERSION-v<n>`` generation via an atomic
-create-if-absent CAS (``store_fs.create_exclusive`` —
-``open(..., 'x')`` locally, ``FileSystem.create(path, overwrite=false)``
-on Hadoop), so two writers racing to commit the same generation get
-exactly one winner and the loser raises :class:`ConcurrentCommitError`
-naming the collision. (On rename-atomic filesystems the single
-``_VERSION`` file matches the reference's single-process fsync model —
-smoltable/src/table/writer.rs:75-79 — and multi-writer deployments
-should use the generation protocol's schemes.) Serialize writers per
-store, exactly like LSM memtable flushes; readers need no coordination.
+**Writer concurrency.** Mutations assume a SINGLE writer per store, like
+LSM memtable flushes: two writers can interleave staging under the same
+``v=<n>`` dir, or a vacuum listing with a commit, in ways no pointer
+protocol repairs after the fact. What the engine guarantees is that a
+violation is loud: on rename-unsafe filesystems the generation create is
+a create-if-absent CAS, so of two writers racing to commit the same
+version exactly one wins and the other raises
+:class:`ConcurrentCommitError`. (On rename-atomic filesystems the single
+``_VERSION`` file matches the reference's single-process model,
+smoltable/src/table/writer.rs:75-79.) Readers need no coordination.
 """
 
 from __future__ import annotations
@@ -87,33 +68,24 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from smoltable_spark.api import ColumnFamilyDef
-from smoltable_spark.schema import CELL_COLUMNS
-from smoltable_spark.sources.store_fs import publish_text, store_fs_for
+from smoltable_spark.schema import CELL_COLUMNS, CELLS_SCHEMA
+from smoltable_spark.sources.store_fs import (  # noqa: F401 — re-exported
+    ConcurrentCommitError,
+    GenerationPointer,
+    publish_text,
+    store_fs_for,
+)
 
 _VERSION_FILE = "_VERSION"
-#: rename-free pointer generations (``_VERSION-v<n>``) for filesystems
-#: without atomic rename — see the module docstring
-_VERSION_GEN_PREFIX = "_VERSION-v"
 _MANIFEST_FILE = "_MANIFEST.json"
 #: chain-manifest entries older than the latest base below (current -
 #: this many) versions are trimmed from the pointer at commit time —
 #: bounds pointer size on long-lived stores; trimmed versions just fall
 #: back to their marker files (time travel stays correct, only slower)
 _MANIFEST_KEEP_VERSIONS = 64
-
-class ConcurrentCommitError(IOError):
-    """Two writers raced to publish the same ``_VERSION-v<n>`` generation;
-    this writer LOST the create-if-absent CAS. This is a single-writer
-    contract violation made LOUD (the alternative was a silent
-    last-writer-wins lost update): because both writers also staged data
-    under the same ``v=<n>`` dir before racing on the pointer, the
-    winner's committed generation may reference files the loser
-    overwrote — verify the winning snapshot (``read(n)``) and re-commit
-    the lost batch before resuming writes."""
-
 
 #: physical directory value for the default locality group: Hive-style
 #: partitioning cannot round-trip an empty string (it reads back as NULL),
@@ -127,12 +99,7 @@ class CellStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        # round 11: driver-side metadata ops dispatch on the path scheme
-        # (sources/store_fs.py) — bare paths keep the zero-overhead local
-        # syscalls, scheme paths (file:/hdfs://s3a://) go through the JVM
-        # Hadoop FileSystem, so a store on object storage is fully
-        # administerable (commit / compact / vacuum / stats), not just
-        # readable through Spark jobs
+        # driver-side metadata adapter (sources/store_fs.py)
         self._fs = store_fs_for(spark, path)
         self._fs.makedirs(path)
         # write-once chain metadata: version -> (kind, folds|None),
@@ -148,15 +115,9 @@ class CellStore:
             dict(name=f.name, ttl_secs=f.ttl_secs, version_limit=f.version_limit, lg=f.lg)
             for f in families
         ]
-        self._publish_text(
-            os.path.join(self.path, _MANIFEST_FILE), json.dumps(data)
+        publish_text(
+            self._fs, os.path.join(self.path, _MANIFEST_FILE), json.dumps(data)
         )
-
-    def _publish_text(self, p: str, content: str) -> None:
-        """Reader-visible small-file publish, capability-dispatched —
-        see ``store_fs.publish_text`` (shared since round 13 with the
-        streaming meta commits and the Z-order sidecar marker)."""
-        publish_text(self._fs, p, content)
 
     def load_families(self) -> list[ColumnFamilyDef]:
         p = os.path.join(self.path, _MANIFEST_FILE)
@@ -169,151 +130,33 @@ class CellStore:
 
     # -- versions ----------------------------------------------------------
 
-    @staticmethod
-    def _parse_pointer(text: str) -> tuple[int, dict[int, tuple[str, tuple[int, int] | None]]]:
-        """(version, chain manifest) from pointer file content — JSON
-        form ``{"v": n, "legs": {...}}`` or the legacy plain int (empty
-        manifest). Anything else raises ValueError, as the legacy int
-        parse always did on a corrupt pointer."""
-        text = text.strip()
-        if text.startswith("{"):
-            d = json.loads(text)
-            legs = {
-                int(v): (str(kf[0]), tuple(kf[1]) if kf[1] is not None else None)
-                for v, kf in d.get("legs", {}).items()
-            }
-            return int(d["v"]), legs
-        return int(text), {}
-
-    def _pointer_generations(self) -> list[int]:
-        """Generation numbers of every ``_VERSION-v<n>`` file present
-        (one listing; staging leftovers and foreign names are ignored)."""
-        out = []
-        for name in self._fs.listdir(self.path):
-            if name.startswith(_VERSION_GEN_PREFIX) and not name.endswith(".tmp"):
-                try:
-                    out.append(int(name[len(_VERSION_GEN_PREFIX):]))
-                except ValueError:
-                    continue
-        return out
+    @property
+    def _pointer(self) -> GenerationPointer:
+        # built per use: the adapter (and its probed capability) is what
+        # the handle holds right now
+        return GenerationPointer(self._fs, self.path, _VERSION_FILE)
 
     def current_version(self) -> int:
-        """Resolve the committed version: max over the plain ``_VERSION``
-        pointer and any rename-free ``_VERSION-v<n>`` generations (both
-        forms coexist when a store has moved between rename-atomic and
-        rename-unsafe filesystems). Re-reads every call — a long-lived
-        handle (streaming CDC polls this per batch) must observe other
-        writers' commits. Also refreshes the chain-manifest cache.
-
-        Two degraded states resolve instead of raising (ADVICE r12):
-
-        - **vacuum race**: a generation listed a moment ago can be gone
-          by the time it is read (other writers committed ≥ keep_last
-          newer versions and ``vacuum`` swept past it). Re-list and
-          retry — the newer max is guaranteed present, so each retry
-          strictly advances.
-        - **torn newest generation**: the CAS create is all-or-nothing
-          on object-store PUTs, but on flush-visible Hadoop schemes
-          (wasb/abfs) a writer crash between flush and close can leave
-          a half-written ``_VERSION-v<n>``. Unparsable content there is
-          pre-commit garbage, not a committed pointer: fall back to the
-          next-lower parsable generation (the next commit or vacuum
-          sweeps the torn file — see ``_commit_version``).
-        """
-        plain_path = os.path.join(self.path, _VERSION_FILE)
-        for _attempt in range(5):
-            best: tuple[int, dict] | None = None
-            if self._fs.exists(plain_path):
-                # the plain pointer is only ever published via atomic
-                # rename, so unparsable content is real corruption: raise
-                best = self._parse_pointer(self._fs.read_text(plain_path))
-            raced = False
-            for g in sorted(self._pointer_generations(), reverse=True):
-                if best is not None and best[0] >= g:
-                    break
-                gp = os.path.join(self.path, f"{_VERSION_GEN_PREFIX}{g}")
-                try:
-                    text = self._fs.read_text(gp)
-                except Exception:
-                    if self._fs.exists(gp):
-                        raise  # real IO failure, not a vacuum race
-                    raced = True
-                    break
-                try:
-                    best = self._parse_pointer(text)
-                    break
-                except ValueError:
-                    continue  # torn generation: try the next-lower one
-            if raced:
-                continue
-            if best is None:
-                return 0
-            self._chain_cache.update(best[1])
-            return best[0]
-        raise IOError(
-            f"current_version({self.path}): the max pointer generation "
-            "vanished between listing and read 5 times in a row — vacuum "
-            "is racing this reader faster than it can re-list (retention "
-            "keep_last is too small for the write rate)"
-        )
+        """The committed version (0 before the first commit). Re-resolves
+        every call — a long-lived handle (streaming CDC polls this per
+        batch) must observe other writers' commits — and refreshes the
+        chain-manifest cache."""
+        n, payload = self._pointer.resolve()
+        for v, (kind, folds) in (payload or {}).get("legs", {}).items():
+            self._chain_cache[int(v)] = (
+                str(kind), tuple(folds) if folds is not None else None
+            )
+        return n
 
     def _commit_version(self, n: int) -> None:
-        """Publish version ``n`` with its chain manifest. Atomic-rename
-        filesystems swap the single ``_VERSION`` file (write-beside +
-        overwrite-rename); rename-unsafe schemes write a fresh
-        ``_VERSION-v<n>`` generation instead — a new key, complete on
-        close, so no reader can ever observe a torn pointer. Old
-        generations stay until ``vacuum`` sweeps past them (deleting
-        n-1 here could strand a reader that listed just before this
-        commit)."""
+        """Publish version ``n`` with its chain manifest. Old generations
+        stay until ``vacuum`` sweeps past them (removing n-1 here would
+        make a reader that listed just before this commit re-list)."""
         manifest = {
             str(v): [kind, list(folds) if folds is not None else None]
             for v, (kind, folds) in self._trimmed_manifest(n).items()
         }
-        content = json.dumps({"v": n, "legs": manifest})
-        if getattr(self._fs, "atomic_rename", True):
-            self._fs.replace_text(
-                os.path.join(self.path, _VERSION_FILE), content
-            )
-            return
-        # Rename-free branch: the generation create is a CAS
-        # (create-if-absent — VERDICT r12 ask #1: a plain overwrite let
-        # two racing writers silently last-writer-win on exactly the
-        # multi-writer object-store deployments this protocol targets).
-        # One retry handles the torn-garbage case: a crashed writer on a
-        # flush-visible scheme can leave an UNPARSABLE _VERSION-v<n>
-        # (current_version skips it, so a fresh writer re-computes the
-        # same n and collides with garbage, not with a commit) — sweep
-        # it and re-CAS; a second collision is a real concurrent writer.
-        target = os.path.join(self.path, f"{_VERSION_GEN_PREFIX}{n}")
-        for _attempt in range(2):
-            try:
-                self._fs.create_exclusive(target, content)
-                return
-            except FileExistsError:
-                try:
-                    self._parse_pointer(self._fs.read_text(target))
-                except (ValueError, FileNotFoundError):
-                    # torn pre-commit garbage (or it just vanished):
-                    # sweep and retry the CAS — create_exclusive still
-                    # arbitrates if two writers both saw the garbage
-                    try:
-                        self._fs.remove(target)
-                    except FileNotFoundError:
-                        pass
-                    continue
-                raise ConcurrentCommitError(
-                    f"commit of generation v{n} in {self.path} lost the "
-                    f"create-if-absent race: {target} was published by a "
-                    "concurrent writer between this writer's version "
-                    "resolution and its commit. Single-writer contract "
-                    "violated — see ConcurrentCommitError for recovery."
-                )
-        raise ConcurrentCommitError(
-            f"commit of generation v{n} in {self.path} collided twice "
-            f"(a concurrent writer re-published {target} while this "
-            "writer was sweeping torn garbage)"
-        )
+        self._pointer.commit(n, {"legs": manifest})
 
     def _trimmed_manifest(self, n: int) -> dict[int, tuple[str, tuple[int, int] | None]]:
         """Chain-cache entries worth publishing in version ``n``'s
@@ -328,16 +171,14 @@ class CellStore:
                 floor = v
         return {v: kf for v, kf in self._chain_cache.items() if v >= floor}
 
-    #: minor (tiered-compaction) legs live under a DOT-prefixed dir name
-    #: (round 10, VERDICT r9 ask #1): Spark's file listing skips
-    #: dot/underscore-prefixed paths at every level, so a minor leg is
-    #: STRUCTURALLY invisible both to a flat store's root partition
-    #: discovery (``readStream.parquet(store.path)``) and to the layout
-    #: stores' ``v=*/lg=*/*.parquet`` delta glob — the streaming CDC
-    #: source can never re-consume re-laid-out cells, which is what made
-    #: minor compaction and live change feeds mutually exclusive in r9.
-    #: Explicit-path reads (``_merge_legs``) see the dir fine: the
-    #: hidden-name filter applies to listed CHILDREN, not a given root.
+    #: minor (tiered-compaction) legs live under a DOT-prefixed dir name:
+    #: Spark's file listing skips dot/underscore-prefixed paths, so a
+    #: minor leg is invisible to a flat store's root partition discovery
+    #: (``readStream.parquet(store.path)``) and to the layout stores'
+    #: ``v=*/lg=*/*.parquet`` delta glob — the streaming CDC source never
+    #: re-consumes re-laid-out cells. Explicit-path reads
+    #: (``_merge_legs``) see the dir fine: the hidden-name filter applies
+    #: to listed CHILDREN, not a given root.
     _MINOR_DIR = ".v={n}.minor"
 
     @staticmethod
@@ -383,7 +224,7 @@ class CellStore:
     def _base_of(self, n: int) -> int:
         """Latest base version ≤ n (0 when the chain starts with deltas).
 
-        Manifest fast path (round 12, VERDICT r11 ask #7): walk CACHED
+        Manifest fast path: walk CACHED
         kinds downward with zero filesystem calls; only the candidate
         base pays one isdir probe (non-base versions can never be
         returned, so skipping their existence probes changes nothing).
@@ -497,25 +338,33 @@ class CellStore:
         cell per coordinate). At scale that dedup is a full shuffle of
         the table per compaction, paid for nothing.
         """
-        fam_lg = {
-            f: (g if g != "" else _DEFAULT_LG) for f, g in self.family_to_lg().items()
-        }
+        return self._commit_snapshot(
+            self._batch_with_lg(cells, seq_col, assume_unique_coords),
+            kind="base",
+            num_range_partitions=num_range_partitions,
+        )
+
+    def _batch_with_lg(
+        self, cells: DataFrame, seq_col: str | None, assume_unique_coords: bool
+    ) -> DataFrame:
+        """The cell columns of a write batch, deduplicated per coordinate
+        (see ``_dedup_coords``; skipped for ``assume_unique_coords``),
+        plus ``lg``: each cell's locality group by family, the
+        ``_DEFAULT_LG`` sentinel for the default group and for families
+        the manifest does not name."""
+        fam_lg = {f: g or _DEFAULT_LG for f, g in self.family_to_lg().items()}
         lg_expr = F.lit(_DEFAULT_LG)
         if fam_lg:
             mapping = F.create_map(
                 *[x for f, g in fam_lg.items() for x in (F.lit(f), F.lit(g))]
             )
             lg_expr = F.coalesce(mapping[F.col("family")], F.lit(_DEFAULT_LG))
-        cols = list(CELL_COLUMNS) + ([seq_col] if seq_col else [])
-        df = cells.select(*cols)
+        df = cells.select(*CELL_COLUMNS, *([seq_col] if seq_col else []))
         if not assume_unique_coords:
             df = self._dedup_coords(df, seq_col)
         elif seq_col:
             df = df.drop(seq_col)
-        df = df.withColumn("lg", lg_expr)
-        return self._commit_snapshot(
-            df, kind="base", num_range_partitions=num_range_partitions
-        )
+        return df.withColumn("lg", lg_expr)
 
     #: parquet layout tuning — the reference picks 64 KiB LSM blocks because
     #: "the workload is dominated by prefix & range searches"
@@ -579,6 +428,14 @@ class CellStore:
                 F.col("ts").desc(),
             )
         return df, ["lg"]
+
+    def _leg_schema(self) -> T.StructType:
+        """The schema every leg reads back with: the cell columns plus
+        the columns ``_layout`` adds, at their on-disk types. Leg reads
+        pass it so Spark runs no schema-inference job per leg."""
+        return T.StructType(
+            [T.StructField(f.name, f.dataType) for f in CELLS_SCHEMA.fields]
+        ).add("lg", T.StringType())
 
     #: target bytes per base range partition — matches WRITE_OPTIONS'
     #: 64 MiB parquet block ("levelled target size"): one range
@@ -717,30 +574,13 @@ class CellStore:
         coordinates are unique by construction (e.g. one cell per source
         row); like ``write``'s flag, it removes a full shuffle of the
         batch that would find nothing to drop."""
-        fam_lg = {
-            f: (g if g != "" else _DEFAULT_LG) for f, g in self.family_to_lg().items()
-        }
-        lg_expr = F.lit(_DEFAULT_LG)
-        if fam_lg:
-            mapping = F.create_map(
-                *[x for f, g in fam_lg.items() for x in (F.lit(f), F.lit(g))]
-            )
-            lg_expr = F.coalesce(mapping[F.col("family")], F.lit(_DEFAULT_LG))
-        cols = list(CELL_COLUMNS) + ([seq_col] if seq_col else [])
-        batch = cells.select(*cols)
-        if not assume_unique_coords:
-            batch = self._dedup_coords(batch, seq_col)
-        elif seq_col:
-            batch = batch.drop(seq_col)
-        df = (
-            batch
-            .withColumn("lg", lg_expr)
-            .sortWithinPartitions(
-                F.col("row_key").asc(),
-                F.col("family").asc(),
-                F.col("qualifier").asc(),
-                F.col("ts").desc(),
-            )
+        df = self._batch_with_lg(
+            cells, seq_col, assume_unique_coords
+        ).sortWithinPartitions(
+            F.col("row_key").asc(),
+            F.col("family").asc(),
+            F.col("qualifier").asc(),
+            F.col("ts").desc(),
         )
         return self._commit_snapshot(df, kind="delta")
 
@@ -835,35 +675,22 @@ class CellStore:
 
     def migrate_minor_legs(self, allow_non_atomic: bool = False) -> int:
         """Rename legacy PLAIN-named minor legs (``v=<n>`` dirs with a
-        ``_KIND`` of ``minor``, committed before the round-10 dot
-        naming) to the stream-invisible ``.v=<n>.minor`` form. Returns
-        the number of legs migrated (0 = nothing legacy: no-op).
+        ``_KIND`` of ``minor``, from before the dot naming) to the
+        stream-invisible ``.v=<n>.minor`` form; returns how many. A
+        plain minor leg is visible to the streaming-CDC file source, so
+        the chain guard classifies it as a base rewrite and every stream
+        over the store hits the resync error; migrating makes the fold
+        invisible, as if committed by current code.
 
-        Why (VERDICT r10 "What's missing" #2): a pre-r10 minor leg's
-        files are VISIBLE to the streaming-CDC file source, so the
-        chain guard permanently classifies it as a base rewrite and
-        every stream incarnation over that store hits the resync error
-        forever. One migration pass makes the fold structurally
-        invisible — the store gains fold-transparent CDC exactly as if
-        the minor had been committed by r10+ code.
-
-        Contract: single writer, like ``compact()`` — run in a
-        maintenance window with no concurrent appends/compactions and
-        no LIVE streaming incarnation over this store (a live
-        incarnation's checkpoint may have already consumed the plain
-        leg's files — the very double-count hazard being repaired —
-        and its guard cache has permanently classified the leg as a
-        rewrite). Per-leg atomicity holds on rename-atomic filesystems
-        (local/HDFS/viewfs — the ``store_fs.py`` allowlist): a crash
-        between legs leaves a smaller legacy set and a re-run
-        converges. On copy+delete schemes (s3a/gs) a crash MID-LEG can
-        instead leave both the plain and the dotted dir present — a
-        torn copy, not a concurrent writer — which the both-exist check
-        below refuses with recovery guidance (ADVICE r11: the plain dir
-        is the source of truth; the dotted one is the partial copy).
-        Batch readers are unaffected either way (``_version_dir``
-        resolves both names); start a FRESH stream incarnation after
-        migrating."""
+        Contract: single writer, like ``compact()``, and no LIVE stream
+        incarnation over the store (its checkpoint may already have
+        consumed the plain leg); start a fresh one afterwards. Each leg
+        rename is atomic on rename-atomic filesystems, so a crash leaves
+        a smaller legacy set and a re-run converges. On copy+delete
+        schemes a crash mid-leg can leave both dirs — a torn copy, which
+        the both-exist check refuses with recovery guidance (the plain
+        dir is the source of truth). Batch readers are unaffected
+        (``_version_dir`` resolves both names)."""
         if not getattr(self._fs, "atomic_rename", True) and not allow_non_atomic:
             raise IOError(
                 f"minor-leg migration refused on rename-unsafe scheme "
@@ -939,7 +766,8 @@ class CellStore:
         levels shadow older. Deltas are small, so the anti-join build
         side is small (AQE broadcasts it); single-leg stores (the
         common compacted state) skip all of this."""
-        dfs = [self.spark.read.parquet(self._version_dir(v)) for v in legs]
+        reader = self.spark.read.schema(self._leg_schema())
+        dfs = [reader.parquet(self._version_dir(v)) for v in legs]
         if len(dfs) == 1:
             return dfs[0]
         coord = ["row_key", "family", "qualifier", "ts"]
@@ -1079,21 +907,14 @@ class CellStore:
         needed: set[int] = set()
         for v in range(oldest_kept, cur + 1):
             needed.update(self._legs_of(v))
-        for name in self._fs.listdir(self.path):
+        names = self._fs.listdir(self.path)
+        for name in names:
             n = self._dirname_version(name)
             if n is not None and n <= cur and n not in needed:
                 self._fs.rmtree(os.path.join(self.path, name))
-            elif name.startswith(_VERSION_GEN_PREFIX):
-                # rename-free pointer generations: sweep those below the
-                # retention cutoff — never the max (readers resolve
-                # max(n), and a reader that listed before this vacuum
-                # can hold at most a generation ≥ oldest_kept)
-                try:
-                    g = int(name[len(_VERSION_GEN_PREFIX):])
-                except ValueError:
-                    continue
-                if g < oldest_kept:
-                    self._fs.remove(os.path.join(self.path, name))
+        # pointer generations below the retention cutoff — never the
+        # max, and a reader that listed before this sweep re-lists
+        self._pointer.sweep(oldest_kept, names)
 
     # -- stats (S8 parity) -------------------------------------------------
 

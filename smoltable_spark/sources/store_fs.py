@@ -1,62 +1,47 @@
-"""Filesystem adapter for the CellStore's driver-side METADATA ops —
-round 11, extending the r11 ANN-index port (``hadoop_fs.py``) to the
-table engine itself.
+"""The storage-metadata layer: one file-system adapter and one commit
+pointer for every persisted structure — the CellStore, the IVF index
+and the streaming rollup/admitter metas.
 
-The store's DATA always moved through Spark jobs (``spark.read`` /
-``df.write`` work against any Hadoop-supported URI), but its metadata —
-the family manifest, the ``_VERSION`` pointer, per-leg ``_KIND`` /
-``_FOLDS`` markers, vacuum's directory reclaim, the parquet-footer
-stats — used local ``os``/``open`` calls, so a store on ``hdfs://`` or
-``s3a://`` could only be ADMINISTERED from a node mounting it locally:
-the same single-node residue VERDICT r10 flagged for the IVF fold, one
-layer deeper.
+Data always moves through Spark jobs (``spark.read`` / ``df.write`` work
+against any Hadoop URI). What lives here is the driver-side metadata
+around it: pointers, manifests, markers, listings, reclaim and
+parquet-footer stats.
 
-Dispatch is by path scheme:
+**The adapter.** :func:`store_fs_for` returns one of two
+implementations of the same vocabulary:
 
-- bare paths (``/tmp/...``) follow ``fs.defaultFS`` — the same rule as
-  Spark's data plane (round 13). With a local defaultFS (the default,
-  and every test/bench environment) they get :class:`LocalStoreFS`:
-  byte-identical to the old inline calls, zero Py4J traffic, so the hot
-  chain-resolver loops (``_kind`` reads per ``_legs_of`` walk) cost
-  what they always did. With an hdfs/viewfs defaultFS they resolve
-  through the JVM like any scheme path — a bare-path store and its
-  Spark-written parquet can never address different filesystems;
-- scheme paths (``file:``, ``hdfs://``, ``s3a://``) get
-  :class:`HadoopStoreFS` over the JVM FileSystem API. Text IO streams
-  through commons-io; the ``_VERSION`` pointer swap uses
-  ``FileContext.rename(..., Options.Rename.OVERWRITE)`` (atomic on
-  HDFS/local — FileSystem.rename refuses existing destinations);
-  footer stats read row counts via parquet-hadoop's
-  ``ParquetFileReader`` without touching data pages.
+- :class:`LocalStoreFS` — local syscalls, no Py4J traffic. It serves
+  bare paths (``/tmp/...``) when ``fs.defaultFS`` is local, which is the
+  default and every test/bench environment.
+- :class:`HadoopStoreFS` — the JVM ``FileSystem`` API. It serves scheme
+  paths (``file:``, ``hdfs://``, ``s3a://``) and bare paths under a
+  non-local ``fs.defaultFS``, so the metadata always addresses the
+  filesystem Spark's data plane resolves the same string against.
 
-Rename-atomicity is a PROBED CAPABILITY, not a documented caveat
-(round 12, VERDICT r11 ask #2): each adapter exposes
-``atomic_rename`` — True only for schemes where a rename is a single
-metadata operation readers can never observe half-done (local
-syscalls, HDFS, viewfs-over-those). On everything else (s3a/gs/...
-where rename is client-side copy+delete, and UNKNOWN schemes, which
-default to False so a new connector can only be safer than assumed)
-the CellStore switches its ``_VERSION`` commit to a rename-free
-generation protocol — see ``store.py::_commit_version`` — instead of
-relying on a "the window is milliseconds" argument. Every other
-rename in the engine happens inside dot-prefixed staging invisible to
-readers; the maintenance families that swap VISIBLE directories
-(``ann_index.py`` fold/compact) gate on this same flag.
+Each adapter reports ``atomic_rename``: True only on schemes where a
+rename is one metadata operation no reader can observe half-done
+(:data:`RENAME_ATOMIC_SCHEMES`). Unknown schemes default to False, so a
+new connector can only be treated more safely than it deserves.
+
+**The pointer.** :class:`GenerationPointer` is the single commit point
+of a persisted structure — the analog of the reference's one keyspace
+batch commit (smoltable/src/table/writer.rs:75-79). See its docstring
+for the rules.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
 
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
 
-#: schemes whose FileSystem.rename/FileContext.rename is a single atomic
-#: metadata op. Conservative ALLOWLIST: anything not listed (s3a, s3, gs,
-#: oss, cos, swift, wasb, ...) is treated as copy+delete. viewfs delegates
-#: to its mount targets — atomic only within one mount point, which is how
-#: the store uses it (every rename stays inside the store root).
+#: schemes whose rename is a single atomic metadata op. Conservative
+#: ALLOWLIST: anything not listed (s3a, gs, wasb, ...) is treated as
+#: copy+delete. viewfs delegates to its mount targets — atomic within
+#: one mount point, which is how every rename here is used.
 RENAME_ATOMIC_SCHEMES = frozenset({"file", "hdfs", "viewfs"})
 
 
@@ -66,52 +51,50 @@ def path_has_scheme(path: str) -> bool:
 
 def default_fs_scheme(spark) -> str:
     """Scheme of the session's ``fs.defaultFS`` (``file`` when unset or
-    given in bare-path form). This is what Spark's DATA plane resolves
-    scheme-less paths against, so the driver-side metadata adapters must
-    dispatch by it too — ONE rule for both planes."""
+    given in bare-path form) — what Spark resolves scheme-less paths
+    against."""
     d = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
     m = _SCHEME_RE.match(d or "")
     return m.group(0)[:-1].lower() if m else "file"
 
 
+def store_fs_for(spark, path: str):
+    """The adapter for ``path``: :class:`HadoopStoreFS` for scheme URIs
+    and for bare paths under a non-local ``fs.defaultFS``;
+    :class:`LocalStoreFS` for bare paths otherwise."""
+    if path_has_scheme(path) or default_fs_scheme(spark) != "file":
+        return HadoopStoreFS(spark, path)
+    return LocalStoreFS()
+
+
 def publish_text(fs, p: str, content: str) -> None:
-    """Reader-visible small-file publish, capability-dispatched (round
-    13, factored out of ``CellStore._publish_text`` when the cpdel shim
-    proved the streaming meta/marker publishes still rename-published on
-    rename-unsafe filesystems): a plain ``write_text`` truncates in
-    place, so a reader racing the write can catch an empty/partial file
-    on local/HDFS — publish via the staged swap there. On rename-unsafe
-    schemes a create IS the atomic primitive (an object-store PUT is
-    all-or-nothing on close, while the swap's rename would be the torn
-    copy+delete), so plain ``write_text`` is the safe branch."""
+    """Reader-visible small-file publish. On rename-atomic filesystems a
+    plain overwrite could be read half-written, so it goes through the
+    staged swap; elsewhere the swap's rename is itself the torn
+    copy+delete, while a create is all-or-nothing on close."""
     if getattr(fs, "atomic_rename", True):
         fs.replace_text(p, content)
     else:
         fs.write_text(p, content)
 
 
-def store_fs_for(spark, path: str):
-    """HadoopStoreFS for scheme URIs; bare paths follow ``fs.defaultFS``
-    (round 13, VERDICT r12 ask #6 / ADVICE r12 medium): LocalStoreFS —
-    the zero-JVM-traffic fast path — only when defaultFS is local, else
-    the JVM FileSystem resolved against defaultFS, exactly where
-    ``spark.read``/``df.write`` on the same bare string put the data.
-    The pre-r13 rule (bare == local, unconditionally) silently split the
-    two planes on clusters with an hdfs/viewfs defaultFS: the store's
-    parquet landed in HDFS while its pointer/manifest administration
-    addressed the driver's local disk. ``hadoop_fs.fs_for`` shares this
-    helper, so a bare-path CellStore and a bare-path IVF index can never
-    resolve differently."""
-    if path_has_scheme(path):
-        return HadoopStoreFS(spark, path)
-    if default_fs_scheme(spark) == "file":
-        return LocalStoreFS()
-    return HadoopStoreFS(spark, path)
+class _MetadataFS:
+    """Operations both adapters derive from their primitives."""
+
+    def parquet_dir_rows(self, d: str) -> int:
+        """Total rows across a flat directory's parquet files, from
+        footers only (no Spark job, no data pages)."""
+        return sum(
+            self.parquet_num_rows(f"{d}/{name}")
+            for name, is_dir in self.list_status(d)
+            if not is_dir and name.endswith(".parquet")
+        )
 
 
-class LocalStoreFS:
-    """The original inline behavior, verbatim — local syscalls only."""
+class LocalStoreFS(_MetadataFS):
+    """Local syscalls only."""
 
+    scheme = "file"
     #: os.replace / os.rename are atomic on POSIX
     atomic_rename = True
 
@@ -125,13 +108,18 @@ class LocalStoreFS:
         return os.path.isdir(p)
 
     def listdir(self, p: str) -> list[str]:
-        """Child names; [] when the path is missing — ONE contract across
-        all three adapters (ADVICE r11: LocalStoreFS used to raise Python
-        FileNotFoundError, HadoopStoreFS a Py4J-wrapped Java one, and
-        hadoop_fs.HadoopFS returned [] — a caller catching one of the
-        three would behave differently per scheme)."""
+        """Child names; [] when the path is missing (both adapters)."""
         try:
             return os.listdir(p)
+        except FileNotFoundError:
+            return []
+
+    def list_status(self, p: str) -> list[tuple[str, bool]]:
+        """(name, is_directory) per child in one listing; [] when the
+        path is missing."""
+        try:
+            with os.scandir(p) as it:
+                return [(e.name, e.is_dir()) for e in it]
         except FileNotFoundError:
             return []
 
@@ -151,11 +139,8 @@ class LocalStoreFS:
         os.replace(tmp, p)
 
     def create_exclusive(self, p: str, content: str) -> None:
-        """Atomic create-if-absent (CAS): raises :class:`FileExistsError`
-        when ``p`` already exists — the one-flag compare-and-swap the
-        rename-free generation commit needs to make two racing writers
-        LOSE LOUDLY instead of last-writer-wins (VERDICT r12 ask #1).
-        ``open(..., 'x')`` is O_CREAT|O_EXCL — atomic on POSIX."""
+        """Atomic create-if-absent: raises :class:`FileExistsError` when
+        ``p`` exists (``O_CREAT|O_EXCL``)."""
         with open(p, "x") as fh:
             fh.write(content)
 
@@ -182,8 +167,8 @@ class LocalStoreFS:
 
     def put_parquet_int64(self, path: str, column: str, values: list[int]) -> None:
         """Driver-side write of a tiny single-column parquet file (the
-        Z-order boundaries sidecar — launching a Spark job for <=2^bits
-        rows costs ~3s of fixed overhead per commit)."""
+        Z-order boundaries sidecar — a Spark job for <= 2^bits rows
+        costs seconds of fixed overhead per commit)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -192,9 +177,9 @@ class LocalStoreFS:
         )
 
 
-class HadoopStoreFS:
-    """JVM-FileSystem-backed metadata ops for scheme paths. Driver-side
-    only; one FileSystem resolve per store instance."""
+class HadoopStoreFS(_MetadataFS):
+    """JVM-FileSystem-backed metadata ops. Driver-side only; one
+    FileSystem resolve per instance."""
 
     def __init__(self, spark, base: str):
         self._jvm = spark._jvm
@@ -204,9 +189,8 @@ class HadoopStoreFS:
         self._fs = self._Path(base).getFileSystem(self._conf)
         self._fc = None  # FileContext lazily, only replace_text needs it
         self._base = base
-        # capability probe: the RESOLVED filesystem's scheme (not the path
-        # string's — viewfs/defaultFS indirection resolves here), checked
-        # against the conservative allowlist. Unknown scheme => False.
+        # capability probe on the RESOLVED filesystem's scheme (viewfs
+        # and defaultFS indirection resolve here), not the path string's
         self.scheme = str(self._fs.getUri().getScheme() or "").lower()
         self.atomic_rename = self.scheme in RENAME_ATOMIC_SCHEMES
 
@@ -221,12 +205,18 @@ class HadoopStoreFS:
         )
 
     def listdir(self, p: str) -> list[str]:
-        """Child names; [] when the path is missing (see LocalStoreFS —
-        one contract across adapters)."""
+        return [name for name, _ in self.list_status(p)]
+
+    def list_status(self, p: str) -> list[tuple[str, bool]]:
+        """(name, is_directory) per child from ONE listStatus RPC — not a
+        listdir plus a per-entry probe, which matters on object stores."""
         jp = self._Path(p)
         if not self._fs.exists(jp):
             return []
-        return [st.getPath().getName() for st in self._fs.listStatus(jp)]
+        return [
+            (st.getPath().getName(), bool(st.isDirectory()))
+            for st in self._fs.listStatus(jp)
+        ]
 
     def read_text(self, p: str) -> str:
         stream = self._fs.open(self._Path(p))
@@ -249,12 +239,9 @@ class HadoopStoreFS:
             out.close()
 
     def create_exclusive(self, p: str, content: str) -> None:
-        """Atomic create-if-absent (CAS): ``FileSystem.create(path,
-        overwrite=false)`` raises when the path exists — an atomic
-        create-if-absent on HDFS (one NameNode op) and the
-        conditional-put analog elsewhere. Mapped to Python
-        :class:`FileExistsError` so the store's conflict handling is
-        adapter-independent (VERDICT r12 ask #1)."""
+        """Atomic create-if-absent: ``FileSystem.create(path,
+        overwrite=false)`` (one NameNode op on HDFS, the conditional-put
+        analog elsewhere), mapped to :class:`FileExistsError`."""
         from py4j.protocol import Py4JJavaError
 
         try:
@@ -273,8 +260,8 @@ class HadoopStoreFS:
 
     def replace_text(self, p: str, content: str) -> None:
         """Atomic-overwrite publish: FileSystem.rename refuses existing
-        destinations, so the pointer swap goes through FileContext with
-        Options.Rename.OVERWRITE (atomic on HDFS and local)."""
+        destinations, so the swap goes through FileContext with
+        Options.Rename.OVERWRITE."""
         tmp = p + ".tmp"
         self.write_text(tmp, content)
         if self._fc is None:
@@ -287,6 +274,7 @@ class HadoopStoreFS:
         self._fc.rename(self._Path(tmp), self._Path(p), opts)
 
     def rename(self, src: str, dst: str) -> None:
+        # Hadoop reports a failed rename by its return value
         if not self._fs.rename(self._Path(src), self._Path(dst)):
             raise IOError(f"rename failed: {src} -> {dst}")
 
@@ -318,11 +306,9 @@ class HadoopStoreFS:
         return int(sum(b.getRowCount() for b in footer.getBlocks()))
 
     def put_parquet_int64(self, path: str, column: str, values: list[int]) -> None:
-        """pyarrow writes the tiny sidecar to a local temp file, then
-        one copyFromLocalFile publishes it — still no Spark job. The
-        local staging file is removed on EVERY exit (delSrc=True covers
-        the success path; the finally covers a failed upload — VERDICT
-        r11 ask #5)."""
+        """pyarrow writes the sidecar to a local temp file and one
+        copyFromLocalFile publishes it; the temp file is removed on every
+        exit."""
         import tempfile
 
         import pyarrow as pa
@@ -341,3 +327,182 @@ class HadoopStoreFS:
         finally:
             if os.path.exists(local):
                 os.remove(local)
+
+
+class ConcurrentCommitError(IOError):
+    """This writer lost the create-if-absent race for a pointer
+    generation: another writer published the same ``<prefix>-v<n>``
+    between this writer's resolve and its commit. Writers are expected
+    to be serialized per structure; this error makes a violation loud
+    instead of a silent lost update. Both writers may have staged data
+    under the same names first, so verify the winner's state before
+    redoing the lost work."""
+
+
+class GenerationPointer:
+    """The commit point of one persisted structure under ``root``: the
+    newest of a plain ``<prefix>`` file and ``<prefix>-v<n>`` generation
+    files. Its content is a JSON object that carries the pointer number
+    under ``"v"``.
+
+    ``commit(n, payload)`` publishes ``payload`` as number ``n``:
+
+    - on rename-atomic filesystems (``swap`` defaults to the adapter's
+      ``atomic_rename``) the plain file is swapped in (write beside,
+      then rename over);
+    - everywhere else ``<prefix>-v<n>`` is created if absent — a new
+      file, complete on close, so no reader sees a torn pointer. Exactly
+      one writer wins each ``n``; the loser raises
+      :class:`ConcurrentCommitError`. An unparsable file already at
+      ``n`` is garbage from a crashed writer: it is swept once and the
+      create retried, and a second collision raises. With ``keep`` set,
+      generations older than the newest ``keep`` are swept after each
+      commit; otherwise the owner sweeps (``sweep``).
+
+    ``resolve()`` returns ``(n, payload)`` of the newest parsable
+    pointer, ``(0, None)`` when there is none:
+
+    - both forms are read and the max wins, so a structure can move
+      between schemes; a plain file's number is its ``"v"`` (a bare
+      JSON int, or 0 when the field is missing — legacy formats);
+    - the plain file is only ever published by an atomic swap, so
+      unparsable content there is corruption and raises;
+    - a torn generation is skipped for the next lower one;
+    - a listed file that vanishes before it is read (a vacuum racing
+      the reader) re-lists; the newer max is then present, so each retry
+      advances.
+    """
+
+    #: consecutive vacuum races a resolve tolerates before raising
+    ATTEMPTS = 5
+
+    def __init__(self, fs, root: str, prefix: str,
+                 swap: bool | None = None, keep: int | None = None):
+        self.fs = fs
+        self.root = root
+        self.prefix = prefix
+        self.swap = swap
+        self.keep = keep
+
+    def _path(self, name: str) -> str:
+        return os.path.join(self.root, name)
+
+    def _gen_name(self, n: int) -> str:
+        return f"{self.prefix}-v{n}"
+
+    def _numbers(self, names) -> list[int]:
+        """Generation numbers among ``names``, newest first."""
+        head = self.prefix + "-v"
+        out = []
+        for name in names:
+            if name.startswith(head):
+                try:
+                    out.append(int(name[len(head):]))
+                except ValueError:
+                    continue  # staging leftovers, foreign names
+        return sorted(out, reverse=True)
+
+    def generations(self) -> list[int]:
+        """Generation numbers present, newest first (one listing)."""
+        return self._numbers(self.fs.listdir(self.root))
+
+    def _decode(self, text: str) -> tuple[int, dict]:
+        d = json.loads(text)
+        if isinstance(d, int):
+            return d, {}
+        if not isinstance(d, dict):
+            raise ValueError(f"pointer content is not an object: {text[:40]!r}")
+        return int(d.get("v", 0)), d
+
+    def _read(self, name: str) -> str:
+        """Content of a listed pointer file; FileNotFoundError when it
+        has vanished since the listing, any other failure as raised."""
+        p = self._path(name)
+        try:
+            return self.fs.read_text(p)
+        except Exception:
+            if self.fs.exists(p):
+                raise
+            raise FileNotFoundError(p) from None
+
+    def load(self, n: int) -> dict:
+        """Payload of generation ``n``: FileNotFoundError when it is
+        gone, ValueError when it is torn."""
+        return self._decode(self._read(self._gen_name(n)))[1]
+
+    def resolve(self) -> tuple[int, dict | None]:
+        for _attempt in range(self.ATTEMPTS):
+            names = self.fs.listdir(self.root)
+            try:
+                best: tuple[int, dict | None] = (0, None)
+                if self.prefix in names:
+                    best = self._decode(self._read(self.prefix))
+                for g in self._numbers(names):
+                    if best[1] is not None and g <= best[0]:
+                        break
+                    try:
+                        return g, self.load(g)
+                    except ValueError:
+                        continue  # torn: pre-commit garbage
+                return best
+            except FileNotFoundError:
+                continue  # vacuum race: re-list
+        raise IOError(
+            f"resolving {self._path(self.prefix)}: the newest pointer "
+            f"vanished between listing and read {self.ATTEMPTS} times in a "
+            "row — vacuum is sweeping faster than readers can re-list "
+            "(retention is too short for the commit rate)"
+        )
+
+    def commit(self, n: int, payload: dict) -> None:
+        content = json.dumps({**payload, "v": n})
+        swap = self.swap
+        if swap is None:
+            swap = getattr(self.fs, "atomic_rename", True)
+        if swap:
+            self.fs.replace_text(self._path(self.prefix), content)
+            return
+        target = self._path(self._gen_name(n))
+        for _attempt in range(2):
+            try:
+                self.fs.create_exclusive(target, content)
+                break
+            except FileExistsError:
+                try:
+                    self.load(n)
+                except (ValueError, FileNotFoundError):
+                    # torn garbage (or it just vanished): sweep and
+                    # retry; the create still arbitrates between two
+                    # writers that both saw the garbage
+                    self._remove(self._gen_name(n))
+                    continue
+                raise ConcurrentCommitError(
+                    f"commit of {self._gen_name(n)} in {self.root} lost the "
+                    "create-if-absent race: a concurrent writer published "
+                    "it between this writer's resolve and its commit"
+                ) from None
+        else:
+            raise ConcurrentCommitError(
+                f"commit of {self._gen_name(n)} in {self.root} collided "
+                "twice: a concurrent writer re-published it while this "
+                "writer swept torn garbage"
+            )
+        if self.keep is not None:
+            self.sweep(n - self.keep + 1)
+
+    def _remove(self, name: str) -> None:
+        try:
+            self.fs.remove(self._path(name))
+        except FileNotFoundError:
+            pass
+
+    def sweep(self, below: int, names: list[str] | None = None) -> int:
+        """Remove generations numbered below ``below`` (among ``names``
+        when the caller already listed ``root``); returns how many. Safe
+        against readers: one that listed a swept file re-lists."""
+        if names is None:
+            names = self.fs.listdir(self.root)
+        gone = [g for g in self._numbers(names) if g < below]
+        for g in gone:
+            self._remove(self._gen_name(g))
+        return len(gone)

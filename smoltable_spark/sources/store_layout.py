@@ -26,11 +26,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from smoltable_spark.functions.layout import morton2, zorder_covering
 from smoltable_spark.schema import CELL_COLUMNS
 from smoltable_spark.sources.store import CellStore
+from smoltable_spark.sources.store_fs import publish_text
 
 
 class ZorderCellStore(CellStore):
@@ -87,6 +88,10 @@ class ZorderCellStore(CellStore):
             )
         )
         return df, ["lg", "zb"]
+
+    def _leg_schema(self) -> T.StructType:
+        # zb: a partition column of base legs, a data column of the rest
+        return super()._leg_schema().add("zb", T.IntegerType())
 
     def box_scan(
         self, a_values: list[int], b_values: list[int],
@@ -332,10 +337,8 @@ class RangeZorderCellStore(ZorderCellStore):
         self._migrate_legacy_sidecar()
         bounds = self._compute_boundaries(cells)
         self._fs.makedirs(self._boundaries_root)
-        # capability-dispatched publish (round 13): replace_text's
-        # rename swap is the torn copy+delete on rename-unsafe schemes
-        self._publish_text(
-            self._image_version_path(), str(_KEY_IMAGE_VERSION)
+        publish_text(
+            self._fs, self._image_version_path(), str(_KEY_IMAGE_VERSION)
         )
         d = os.path.join(self._boundaries_root, f"v={at_version}")
         # driver-side pyarrow write: the sidecar is <= 2^bits - 1 rows of

@@ -7,9 +7,10 @@ a missing timestamp defaults to "now" in nanos (writer.rs:28-33); the
 batch commits atomically.
 
 Here a batch becomes a DataFrame in the canonical schema via
-``spark.createDataFrame`` (Arrow path) and commits through
-``CellStore.append`` (single snapshot commit = the reference's single
-fjall batch).
+``spark.createDataFrame`` on a list of dicts — a pickled Python RDD
+(PySpark's Arrow path applies to pandas input only) — and commits
+through ``CellStore.append`` (single snapshot commit = the reference's
+single fjall batch).
 """
 
 from __future__ import annotations

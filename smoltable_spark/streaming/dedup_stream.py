@@ -39,7 +39,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from smoltable_spark.sources.store_fs import publish_text, store_fs_for
+from smoltable_spark.sources.store_fs import GenerationPointer, store_fs_for
 
 from smoltable_spark.functions.dedup_incremental import (
     lsh_index,
@@ -52,7 +52,7 @@ class MinhashAdmitter:
 
     Layout under ``path``:
 
-    - ``_META`` — ``{last_batch_id, checkpoint}`` (atomic rename commit);
+    - ``_META`` — ``{last_batch_id, checkpoint}`` (a ``GenerationPointer``);
     - ``index/b=<n>/`` — LSH rows of the docs batch ``n`` admitted;
     - ``decisions/b=<n>/`` — the batch's full admit/reject record
       (one row per input doc: ``doc_id, sz, corpus_dup, batch_dup,
@@ -82,27 +82,22 @@ class MinhashAdmitter:
         self.bands = bands
         self.k = k
         self.max_bucket_df = max_bucket_df
-        # round 11: the admitter's state (meta + LSH index + decision
-        # legs) is the persisted dedup index — at scale it lives on
-        # object storage, so metadata ops dispatch on the path scheme
-        # like CellStore's (sources/store_fs.py)
+        # the persisted dedup index, through the storage-metadata layer
         self._fs = store_fs_for(spark, path)
         self._fs.makedirs(path)
+        self._meta_pointer = GenerationPointer(
+            self._fs, path, self._META, keep=2
+        )
 
     # -- meta (same commit discipline as store_cdc.StoreChangeRollup) ------
 
     def _meta(self) -> dict:
-        p = os.path.join(self.path, self._META)
-        if not self._fs.exists(p):
-            return {"last_batch_id": -1}
-        return json.loads(self._fs.read_text(p))
+        _gen, meta = self._meta_pointer.resolve()
+        return meta if meta is not None else {"last_batch_id": -1}
 
     def _commit_meta(self, meta: dict) -> None:
-        # atomic publish: the admitter's commit point (capability-
-        # dispatched like the store pointer — see store_fs.publish_text)
-        publish_text(
-            self._fs, os.path.join(self.path, self._META), json.dumps(meta)
-        )
+        # the admitter's commit point, published like the rollup's
+        self._meta_pointer.commit(meta.get("v", 0) + 1, meta)
 
     def bind_checkpoint(self, checkpoint_dir: str) -> None:
         """foreachBatch batch ids are monotone only WITHIN one checkpoint

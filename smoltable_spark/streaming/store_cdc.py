@@ -48,7 +48,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from smoltable_spark.schema import CELLS_SCHEMA
-from smoltable_spark.sources.store_fs import publish_text, store_fs_for
+from smoltable_spark.sources.store_fs import GenerationPointer, store_fs_for
 
 
 def _cdc_schema() -> T.StructType:
@@ -150,12 +150,13 @@ class StoreChangeRollup:
         self._kind_hwm = 0
         self._base_rewrites: set[int] = set()
         self._minor_folds: dict[int, tuple[int, int] | None] = {}
-        # round 11: the rollup's own state (meta + versioned result legs)
-        # is a derived TABLE — at scale it lives beside the store on
-        # object storage, so its metadata ops dispatch on the path scheme
-        # exactly like CellStore's (sources/store_fs.py)
+        # the rollup's own state (meta + versioned result legs) lives
+        # beside the store, through the same metadata layer
         self._fs = store_fs_for(spark, path)
         self._fs.makedirs(path)
+        self._meta_pointer = GenerationPointer(
+            self._fs, path, self._META, keep=2
+        )
         # Base legs at/below the START VERSION existed before the stream
         # started and are NOT change data (the initial snapshot); only
         # base rewrites AFTER it violate the append-only contract. The
@@ -191,19 +192,14 @@ class StoreChangeRollup:
     # -- meta / versions -----------------------------------------------------
 
     def _meta(self) -> dict:
-        p = os.path.join(self.path, self._META)
-        if not self._fs.exists(p):
-            return {"last_batch_id": -1, "version": 0}
-        return json.loads(self._fs.read_text(p))
+        _gen, meta = self._meta_pointer.resolve()
+        return meta if meta is not None else {"last_batch_id": -1, "version": 0}
 
     def _commit_meta(self, meta: dict) -> None:
-        # atomic publish: the rollup's commit point. Capability-
-        # dispatched (round 13): on rename-unsafe filesystems the
-        # staged swap's rename is the torn copy+delete hazard, and a
-        # plain create IS the atomic primitive there.
-        publish_text(
-            self._fs, os.path.join(self.path, self._META), json.dumps(meta)
-        )
+        # the rollup's commit point: the generation after the one this
+        # meta was read at, so a concurrent writer's commit makes this
+        # one raise ConcurrentCommitError on rename-unsafe filesystems
+        self._meta_pointer.commit(meta.get("v", 0) + 1, meta)
 
     def _version_dir(self, n: int) -> str:
         return os.path.join(self.path, f"v={n}")

@@ -4,7 +4,7 @@ The r9–r10 delete/fold/compact family used raw ``os.rename``/
 ``os.listdir``, so an index hosted on hdfs:// or s3a:// could only be
 maintained from a node that mounted it locally — single-node-bound,
 exactly the constraint this engine exists to remove. Round 11 routes
-every metadata op through ``sources/hadoop_fs.HadoopFS``.
+every metadata op through ``sources/store_fs.HadoopStoreFS``.
 
 These tests drive the FULL lifecycle (build → delete → serve → upsert
 append → compact → serve) against TWO real Hadoop filesystems via the
@@ -28,7 +28,7 @@ from smoltable_spark.functions.ann_index import (
     compact_ivf_index,
     delete_from_ivf_index,
 )
-from smoltable_spark.sources.hadoop_fs import HadoopFS
+from smoltable_spark.sources.store_fs import HadoopStoreFS
 from smoltable_spark.sources.relational import load_table
 
 
@@ -79,7 +79,7 @@ def test_full_lifecycle_on_file_uri(spark, tmp_path, built_uri):
     # pre-fold dirs so even a RAW root read agrees.
     from smoltable_spark.functions.ann_index import vacuum_ivf_index
     from smoltable_spark.functions.similarity import read_ivf_lists
-    from smoltable_spark.sources.hadoop_fs import fs_for
+    from smoltable_spark.sources.store_fs import store_fs_for
 
     def _gone():
         return read_ivf_lists(spark, path).filter(
@@ -87,7 +87,7 @@ def test_full_lifecycle_on_file_uri(spark, tmp_path, built_uri):
         )
 
     assert _gone().count() == 0
-    fsa = fs_for(spark, path)
+    fsa = store_fs_for(spark, path)
     if not fsa.atomic_rename:
         vacuum_ivf_index(spark, path, keep_pointers=1)
         # every pre-fold stale plain dir of a mapped list is reclaimed:
@@ -97,7 +97,7 @@ def test_full_lifecycle_on_file_uri(spark, tmp_path, built_uri):
         _m, gmap = ivf_list_generations(spark, path)
         stale = [
             k for k in gmap
-            if fsa.is_dir(f"{path.rstrip('/')}/list_id={k}")
+            if fsa.isdir(f"{path.rstrip('/')}/list_id={k}")
         ]
         assert stale == []
         assert _serve(spark, path, emb) == served
@@ -123,9 +123,9 @@ def test_crash_evidence_fails_fast_on_uri(spark, tmp_path, built_uri):
     ADVICE r10: delete/append fail fast on fold leftovers too — not
     just the next fold."""
     emb, path = built_uri
-    fs = HadoopFS(spark, path)
+    fs = HadoopStoreFS(spark, path)
     evidence = path + "/.new-list_id=0"
-    fs.mkdirs(evidence)
+    fs.makedirs(evidence)
     with pytest.raises(IOError, match="crashed mid-swap"):
         compact_ivf_index(spark, path)
     with pytest.raises(IOError, match="crashed mid-swap"):
@@ -138,7 +138,7 @@ def test_crash_evidence_fails_fast_on_uri(spark, tmp_path, built_uri):
             path,
             emb.filter(F.col("vec_id") == 0).select("vec_id", "embedding"),
         )
-    fs.delete(evidence)
+    fs.rmtree(evidence)
     # recovered: the lifecycle proceeds
     assert (
         delete_from_ivf_index(
@@ -177,13 +177,13 @@ def test_fold_without_tombstone_legs_still_checks_crash_evidence(
     during partial manual reconciliation but that still has swap
     leftovers must fail fast — not report a clean no-op compact."""
     emb, path = built_uri
-    fs = HadoopFS(spark, path)
-    fs.mkdirs(path + "/.staging-compact-deadbeef")
+    fs = HadoopStoreFS(spark, path)
+    fs.makedirs(path + "/.staging-compact-deadbeef")
     # no tombstones exist at all — the old code early-returned here
     assert similarity.ivf_tombstones(spark, path) is None
     with pytest.raises(IOError, match="crashed mid-swap"):
         compact_ivf_index(spark, path)
-    fs.delete(path + "/.staging-compact-deadbeef")
+    fs.rmtree(path + "/.staging-compact-deadbeef")
     assert compact_ivf_index(spark, path) == {
         "tombstones": 0,
         "lists_rewritten": 0,

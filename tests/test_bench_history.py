@@ -124,12 +124,14 @@ def test_compact_summary_sheds_flag_floods():
 def test_write_records_atomic_into_tmpdir(tmp_path, monkeypatch):
     """Both durable records are written via tmp+os.replace into the given
     directory — no .tmp leftovers, valid JSON, history keyed by the next
-    round — and a pre-existing corrupt history is tolerated, not fatal."""
+    round plus the core count — and a pre-existing corrupt history is
+    tolerated, not fatal."""
     monkeypatch.setattr(bench, "_latest_round", lambda: (5, "ignored"))
     (tmp_path / "BENCH_HISTORY.json").write_text('{"r05": {tor')  # torn
     result = {
         "metric": "total_headline_sec", "value": 1.23, "unit": "sec",
         "queries": {"q": 0.5}, "cold_queries": {"q": 0.9}, "sf": 0.1,
+        "cpus": 32,
         "prev_round_total": None, "prev_source": None,
         "env_drift_median_ratio": 1.0, "regressions": {},
         "cold_regressions": {},
@@ -140,4 +142,12 @@ def test_write_records_atomic_into_tmpdir(tmp_path, monkeypatch):
     local = json.loads((tmp_path / "BENCH_LOCAL.json").read_text())
     assert local == result
     hist = json.loads((tmp_path / "BENCH_HISTORY.json").read_text())
-    assert hist["r06"]["total"] == 1.23 and hist["r06"]["queries"] == {"q": 0.5}
+    row = hist["r06_c32"]
+    assert row["total"] == 1.23 and row["queries"] == {"q": 0.5}
+    assert row["cpus"] == 32
+    # a scaling run of the same round at another core count gets its own
+    # row instead of overwriting (or posing as) the headline one
+    bench._write_records(str(tmp_path), {**result, "cpus": 8, "value": 2.5})
+    hist = json.loads((tmp_path / "BENCH_HISTORY.json").read_text())
+    assert sorted(hist) == ["r06_c32", "r06_c8"]
+    assert hist["r06_c32"]["total"] == 1.23 and hist["r06_c8"]["total"] == 2.5

@@ -181,19 +181,16 @@ def test_two_writer_ivf_pointer_cas_one_winner(tmp_path_factory, steps):
     """The IVF maintenance pointer (_LISTGEN-v<m>) uses the same
     create-if-absent CAS as the store's _VERSION generations: two
     maintenance writers interleaving resolve→commit get at most one
-    winner per pointer number, losers raise ConcurrentIndexCommitError,
+    winner per pointer number, losers raise ConcurrentCommitError,
     and a fresh resolution always reads the max committed pointer
     parsably. Pure pointer-layer test (no Spark session needed):
-    the LocalFS adapter over a scratch dir."""
-    from smoltable_spark.functions.ann_index import (
-        ConcurrentIndexCommitError,
-        _commit_listgen,
-    )
+    the local adapter over a scratch dir."""
+    from smoltable_spark.functions.ann_index import _commit_listgen
     from smoltable_spark.functions.similarity import _ivf_pointer
-    from smoltable_spark.sources.hadoop_fs import LocalFS
+    from smoltable_spark.sources.store_fs import LocalStoreFS
 
     base = str(tmp_path_factory.mktemp("prop_ivf_cas"))
-    fs = LocalFS()
+    fs = LocalStoreFS()
     pending: list[int | None] = [None, None]
     wins: dict[int, int] = {}
     conflicts: list[tuple[int, int]] = []
@@ -209,7 +206,7 @@ def test_two_writer_ivf_pointer_cas_one_winner(tmp_path_factory, steps):
                 )
                 assert m_new not in wins
                 wins[m_new] = w
-            except ConcurrentIndexCommitError:
+            except ConcurrentCommitError:
                 conflicts.append((w, m_new))
         m_now, gmap_now, _ = _ivf_pointer(fs, base)
         assert m_now == (max(wins) if wins else 0)

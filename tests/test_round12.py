@@ -20,7 +20,7 @@ import os
 import pytest
 
 from smoltable_spark.api import ColumnFamilyDef
-from smoltable_spark.sources.store import CellStore, _VERSION_GEN_PREFIX
+from smoltable_spark.sources.store import CellStore
 from smoltable_spark.sources.store_fs import (
     LocalStoreFS,
     RENAME_ATOMIC_SCHEMES,
@@ -99,7 +99,7 @@ def test_unsafe_store_commits_generations_never_rename(spark, tmp_path):
     _append(spark, s, "b")
     s.compact()
     names = sorted(os.listdir(s.path))
-    gens = [n for n in names if n.startswith(_VERSION_GEN_PREFIX)]
+    gens = [n for n in names if n.startswith("_VERSION-v")]
     assert gens == ["_VERSION-v1", "_VERSION-v2", "_VERSION-v3"]
     assert "_VERSION" not in names  # no plain pointer ever written
     assert s._fs.replace_calls == 0  # the torn path was never taken
@@ -148,7 +148,7 @@ def test_vacuum_sweeps_old_generations_keeps_retained(spark, tmp_path):
         _append(spark, s, f"a{i}")
     s.vacuum(keep_last=2)
     gens = sorted(
-        n for n in os.listdir(s.path) if n.startswith(_VERSION_GEN_PREFIX)
+        n for n in os.listdir(s.path) if n.startswith("_VERSION-v")
     )
     assert gens == ["_VERSION-v4", "_VERSION-v5"]
     assert s.current_version() == 5
@@ -259,7 +259,6 @@ def test_ivf_fold_on_rename_unsafe_scheme_goes_generational(
     import pyspark.sql.functions as F
 
     from smoltable_spark.functions import ann_index, similarity
-    from smoltable_spark.sources.hadoop_fs import LocalFS
     from smoltable_spark.sources.relational import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -269,7 +268,7 @@ def test_ivf_fold_on_rename_unsafe_scheme_goes_generational(
         spark, path, emb.filter(F.col("vec_id") == 6).select("vec_id")
     )
 
-    class UnsafeLocalFS(LocalFS):
+    class UnsafeLocalFS(LocalStoreFS):
         scheme = "s3a"  # what the probe would report for an S3A index
         atomic_rename = False
 
@@ -279,7 +278,7 @@ def test_ivf_fold_on_rename_unsafe_scheme_goes_generational(
             UnsafeLocalFS.renames.append((src, dst))
             return super().rename(src, dst)
 
-    monkeypatch.setattr(ann_index, "fs_for", lambda _s, _b: UnsafeLocalFS())
+    monkeypatch.setattr(ann_index, "store_fs_for", lambda _s, _b: UnsafeLocalFS())
     stats = ann_index.compact_ivf_index(spark, path)
     assert stats == {"tombstones": 1, "lists_rewritten": 1}
     assert similarity.ivf_tombstones(spark, path) is None

@@ -167,12 +167,10 @@ def test_vacuum_race_relists_and_retries(spark, tmp_path):
 
 
 def test_bare_path_dispatch_follows_default_fs(spark, tmp_path):
-    """Both adapters resolve a bare path the way Spark's data plane
-    does: against ``fs.defaultFS``. With a non-local defaultFS (here a
-    viewfs mount) the SAME bare string must address the SAME filesystem
-    through both adapters — pre-r13, the store/index metadata went to
-    the driver's local disk while the data plane wrote to defaultFS."""
-    from smoltable_spark.sources.hadoop_fs import HadoopFS, LocalFS, fs_for
+    """A bare path resolves the way Spark's data plane does: against
+    ``fs.defaultFS``. With a non-local defaultFS (here a viewfs mount)
+    the metadata must land on that filesystem, not the driver's local
+    disk — the store and the IVF index share this one dispatch."""
     from smoltable_spark.sources.store_fs import store_fs_for
 
     hc = spark._jsc.hadoopConfiguration()
@@ -183,20 +181,17 @@ def test_bare_path_dispatch_follows_default_fs(spark, tmp_path):
     hc.set("fs.defaultFS", "viewfs://dfx/")
     try:
         sfs = store_fs_for(spark, "/s/store")
-        afs = fs_for(spark, "/s/store")
         assert isinstance(sfs, HadoopStoreFS)
-        assert isinstance(afs, HadoopFS)
-        # identical resolution: a file created through one adapter is
-        # visible through the other AND physically under the mount target
+        # a file created through the adapter is physically under the
+        # mount target
         sfs.write_text("/s/probe.txt", "x")
-        assert afs.exists("/s/probe.txt")
+        assert sfs.exists("/s/probe.txt")
         assert (tmp_path / "probe.txt").exists()
-        assert sfs.scheme == afs.scheme == "viewfs"
+        assert sfs.scheme == "viewfs"
     finally:
         hc.set("fs.defaultFS", old)
-    # local defaultFS: both keep the zero-JVM fast path
+    # local defaultFS: the zero-JVM fast path
     assert isinstance(store_fs_for(spark, str(tmp_path)), LocalStoreFS)
-    assert isinstance(fs_for(spark, str(tmp_path)), LocalFS)
 
 
 # ---------------------------------------------------------------------------
@@ -323,14 +318,14 @@ def test_cpdel_ivf_generation_fold_for_real(spark, tmp_path):
         ivf_tombstones,
         query_ivf_index,
     )
-    from smoltable_spark.sources.hadoop_fs import fs_for
+    from smoltable_spark.sources.store_fs import store_fs_for
     from smoltable_spark.sources.relational import load_table
 
     base = _cpdel(spark, tmp_path)
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     path = base + "/ivf"
     build_ivf_index(emb, path, n_centroids=8)
-    fs = fs_for(spark, path)
+    fs = store_fs_for(spark, path)
     assert fs.scheme == "cpdel" and fs.atomic_rename is False
     ann_index.delete_from_ivf_index(
         spark, path, emb.filter(F.col("vec_id") == 9).select("vec_id")
@@ -383,7 +378,7 @@ def test_ivf_pointer_read_survives_vacuum_race(tmp_path):
     import json
 
     from smoltable_spark.functions.similarity import _ivf_pointer
-    from smoltable_spark.sources.hadoop_fs import LocalFS
+    from smoltable_spark.sources.store_fs import LocalStoreFS as LocalFS
 
     base = str(tmp_path)
     with open(f"{base}/_LISTGEN-v1", "w") as fh:
@@ -526,7 +521,7 @@ def test_cpdel_legacy_fold_crash_leaves_evidence(spark, tmp_path):
 
     from smoltable_spark.functions import ann_index
     from smoltable_spark.functions.similarity import build_ivf_index
-    from smoltable_spark.sources.hadoop_fs import fs_for
+    from smoltable_spark.sources.store_fs import store_fs_for
     from smoltable_spark.sources.relational import load_table
 
     base = _cpdel(spark, tmp_path)
@@ -536,7 +531,7 @@ def test_cpdel_legacy_fold_crash_leaves_evidence(spark, tmp_path):
     ann_index.delete_from_ivf_index(
         spark, path, emb.filter(F.col("vec_id") == 4).select("vec_id")
     )
-    fsa = fs_for(spark, path)
+    fsa = store_fs_for(spark, path)
     fsa._fs.getConf().set("fs.cpdel.rename.fault", "fail-mid-copy")
     try:
         with pytest.raises(Exception, match="fault injection"):
@@ -565,9 +560,7 @@ class _UnsafeAnnFS:
     syscalls for the ANN maintenance family."""
 
     def __new__(cls):
-        from smoltable_spark.sources.hadoop_fs import LocalFS
-
-        class UnsafeLocalFS(LocalFS):
+        class UnsafeLocalFS(LocalStoreFS):
             scheme = "s3a"
             atomic_rename = False
 
@@ -578,7 +571,7 @@ class _UnsafeAnnFS:
 def unsafe_ann(monkeypatch):
     from smoltable_spark.functions import ann_index
 
-    monkeypatch.setattr(ann_index, "fs_for", lambda _s, _b: _UnsafeAnnFS())
+    monkeypatch.setattr(ann_index, "store_fs_for", lambda _s, _b: _UnsafeAnnFS())
 
 
 def _topk(spark, path, queries, k=5):

@@ -30,7 +30,7 @@ def main() -> None:
         delete_from_ivf_index,
     )
     from smoltable_spark.functions.similarity import read_ivf_lists
-    from smoltable_spark.sources.hadoop_fs import fs_for
+    from smoltable_spark.sources.store_fs import store_fs_for
     from smoltable_spark.queries_util import scratch_dir
 
     spark = get_spark("profile_fold_fine", cpus=cpus, shuffle_partitions=cpus)
@@ -45,7 +45,7 @@ def main() -> None:
         batch_ids = {r["vec_id"] for r in victims.select("vec_id").collect()}
 
         base = path.rstrip("/")
-        fs = fs_for(spark, base)
+        fs = store_fs_for(spark, base)
         t0 = time.time()
         m, gmap, meta = _ivf_pointer(fs, base)
         tombs = _tombstones(spark, base)
@@ -79,7 +79,7 @@ def main() -> None:
         affected = []
         for r in fold_df.select("list_id").distinct().collect():
             d = _serving_dir(base, gmap, r["list_id"])
-            if d is not None and fs.is_dir(d):
+            if d is not None and fs.isdir(d):
                 affected.append(r["list_id"])
         affected.sort()
         t3 = time.time()
@@ -96,17 +96,17 @@ def main() -> None:
             old = f"{base}/list_id={l}"
             staged = f"{staging}/list_id={l}"
             new = f"{base}/.new-list_id={l}"
-            if fs.is_dir(staged):
-                fs.rename_or_raise(staged, new, "x")
-            if fs.is_dir(old):
-                fs.rename_or_raise(old, f"{staging}/.retired-{l}", "x")
-            if fs.is_dir(new):
-                fs.rename_or_raise(new, old, "x")
-        fs.delete(staging)
+            if fs.isdir(staged):
+                fs.rename(staged, new)
+            if fs.isdir(old):
+                fs.rename(old, f"{staging}/.retired-{l}")
+            if fs.isdir(new):
+                fs.rename(new, old)
+        fs.rmtree(staging)
         if kept == 0:
-            fs.delete(stage)
+            fs.rmtree(stage)
         for d in legs:
-            fs.delete(d)
+            fs.rmtree(d)
         tombs.unpersist()
         t5 = time.time()
         print(

@@ -28,10 +28,10 @@ def main() -> None:
         delete_from_ivf_index,
         vacuum_ivf_index,
     )
-    from smoltable_spark.sources.hadoop_fs import LocalFS
+    from smoltable_spark.sources.store_fs import LocalStoreFS
     from smoltable_spark.queries_util import scratch_dir
 
-    class _UnsafeFS(LocalFS):
+    class _UnsafeFS(LocalStoreFS):
         scheme = "s3a"
         atomic_rename = False
 
@@ -68,8 +68,8 @@ def main() -> None:
 
         masked = sorted(map(tuple, serve().collect()))
         mark("serve1")
-        real_fs_for = ann_index.fs_for
-        ann_index.fs_for = lambda _s, _b: _UnsafeFS()
+        real_fs_for = ann_index.store_fs_for
+        ann_index.store_fs_for = lambda _s, _b: _UnsafeFS()
         try:
             stats = compact_ivf_index(spark, path)
             assert stats["tombstones"] > 0 and stats["lists_rewritten"] > 0
@@ -86,7 +86,7 @@ def main() -> None:
             assert vstats["plain_dirs"] >= 1
             mark("vacuum")
         finally:
-            ann_index.fs_for = real_fs_for
+            ann_index.store_fs_for = real_fs_for
         vacuumed = serve()
         assert sorted(map(tuple, vacuumed.collect())) == masked
         mark("serve3")

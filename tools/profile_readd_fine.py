@@ -33,7 +33,7 @@ def main() -> None:
         _with_nearest_list,
         with_quantized_norm,
     )
-    from smoltable_spark.sources.hadoop_fs import fs_for
+    from smoltable_spark.sources.store_fs import store_fs_for
     from smoltable_spark.queries_util import scratch_dir
 
     spark = get_spark("profile_readd_fine", cpus=cpus, shuffle_partitions=cpus)
@@ -63,7 +63,7 @@ def main() -> None:
         t1 = time.time()
         base = path.rstrip("/")
         staging = base + "/.staging-append"
-        fs = fs_for(spark, base)
+        fs = store_fs_for(spark, base)
         assert not fs.exists(staging)
         _check_fold_crash_evidence(fs, base)
         t2 = time.time()
@@ -93,13 +93,13 @@ def main() -> None:
             if not is_dir:
                 continue
             dst_dir = f"{base}/{part}"
-            fs.mkdirs(dst_dir)
+            fs.makedirs(dst_dir)
             for name, _ in fs.list_status(f"{staging}/{part}"):
                 if name.startswith("_") or name.startswith("."):
                     continue
                 fs.rename(f"{staging}/{part}/{name}", f"{dst_dir}/{name}")
                 moved += 1
-        fs.delete(staging)
+        fs.rmtree(staging)
         t7 = time.time()
         print(
             f"[{rep}] cents+plan={t1-t0:.3f} checks={t2-t1:.3f} "

@@ -371,9 +371,9 @@ def main():
         import shutil as _sh
 
         from smoltable_spark.functions import ann_index
-        from smoltable_spark.sources.hadoop_fs import LocalFS
+        from smoltable_spark.sources.store_fs import LocalStoreFS
 
-        class _Unsafe(LocalFS):
+        class _Unsafe(LocalStoreFS):
             scheme = "s3a"
             atomic_rename = False
 
@@ -383,12 +383,12 @@ def main():
         ann_index.delete_from_ivf_index(
             spark, p, emb.filter(F.col("vec_id") % 701 == 0).select("vec_id")
         )
-        real = ann_index.fs_for
-        ann_index.fs_for = lambda _s, _b: _Unsafe()
+        real = ann_index.store_fs_for
+        ann_index.store_fs_for = lambda _s, _b: _Unsafe()
         try:
             stats = ann_index.compact_ivf_index(spark, p)
         finally:
-            ann_index.fs_for = real
+            ann_index.store_fs_for = real
         assert similarity.ivf_tombstones(spark, p) is None
         served = similarity.query_ivf_index(spark, p, qs, k=10, nprobe=4)
         return (stats["lists_rewritten"], served.count())
