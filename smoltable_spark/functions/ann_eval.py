@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from smoltable_spark.session import materialize
+
 from smoltable_spark.functions.similarity import (
     _GEN_ROOT,
     _ivf_pointer,
@@ -136,20 +138,14 @@ def ivf_probe_advisor(
     cost the recall was bought with. Recall is monotone in nprobe
     (candidate sets are nested), so "smallest meeting target" is
     well-defined."""
-    curve = (
+    # the advisor reads the curve three times (eligible / fallback /
+    # achieved-recall self-join): the corpus evaluation runs once
+    curve = materialize(
         ivf_recall_curve(
             corpus, queries, ks=ks, nprobes=nprobes,
             n_centroids=n_centroids, id_col=id_col, vec_col=vec_col,
-        )
-        .select("nprobe", "k", "mean_recall")
-        # r13: the advisor consumes the curve THREE times (eligible /
-        # fallback / achieved-recall self-join); without materializing
-        # it, the whole curve subtree is embedded 3x in one plan and the
-        # corpus evaluation runs 3x (measured: 68 Exchanges, 9.8 s
-        # isolated at sf0.1). The curve is |nprobes|x|ks| rows — a
-        # bounded localCheckpoint, after which the advisor is pure
-        # tiny-table algebra.
-        .localCheckpoint(eager=True)
+        ).select("nprobe", "k", "mean_recall"),
+        "bounded",
     )
     eligible = (
         curve.filter(F.col("mean_recall") >= F.lit(float(target_recall)))

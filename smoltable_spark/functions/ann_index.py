@@ -48,6 +48,7 @@ from smoltable_spark.functions.similarity import (
     read_ivf_lists,
     with_quantized_norm,
 )
+from smoltable_spark.session import materialize
 from smoltable_spark.sources.store_fs import store_fs_for
 
 
@@ -142,9 +143,9 @@ def append_ivf_index(
     # dir; appending on top would compound the damage
     _check_fold_crash_evidence(fs, base)
     # the assigned batch feeds two actions (the tombstone intersection
-    # and the staged write) and is often join-derived: materialize the
-    # caller-bounded batch once, after the fail-fast checks.
-    nv_listed = nv_listed.localCheckpoint(eager=True)
+    # and the staged write) and is often join-derived: compute it once,
+    # after the fail-fast checks.
+    nv_listed = materialize(nv_listed, "bounded")
     # fold the tombstones the batch supersedes BEFORE its rows become
     # visible, so the published rows serve unmasked. Batch ids and
     # outstanding tombstones are both bounded: the collect is
@@ -402,174 +403,174 @@ def _fold_tombstones(
     if tombs_total == 0:
         return {"tombstones": 0, "lists_rewritten": 0}
     fold_df = None
-    tombs = tombs.persist()
-    try:
-        tag = uuid.uuid4().hex[:12]
-        kept = 0
-        stage = None
-        # r14 (guide §2.4 / VERDICT r13 ask #3 — commit/job-count
-        # reduction on the maintenance floor): ONE bounded aggregation
-        # job computes the per-list folded counts (which IS the
-        # 'affected' set), the kept count, and therefore n_folded —
-        # replacing the old unconditional kept-leg write + footer
-        # read + separate distinct-list collect. The grouped rows are
-        # bounded by n_centroids (the same driver-safe bound the old
-        # collect relied on). The kept leg is then written ONLY when
-        # kept > 0: the append-upsert path's common case folds EVERY
-        # tombstone it intersects, so it skips that whole parquet
-        # commit (write + footer round-trip + publish rename).
-        if only_vec_ids is not None:
-            # the subset is the append batch's ids: caller-bounded (an
-            # API request), so the split joins broadcast it
-            batch = spark.createDataFrame(
-                [(int(v),) for v in sorted(only_vec_ids)], "vec_id long"
+    # the victim/keep split, the per-list aggregation and the survivor
+    # anti-join all read the (bounded) tombstone set; it fills in the
+    # first of them
+    tombs = materialize(tombs, "bounded", eager=False)
+    tag = uuid.uuid4().hex[:12]
+    kept = 0
+    stage = None
+    # r14 (guide §2.4 / VERDICT r13 ask #3 — commit/job-count
+    # reduction on the maintenance floor): ONE bounded aggregation
+    # job computes the per-list folded counts (which IS the
+    # 'affected' set), the kept count, and therefore n_folded —
+    # replacing the old unconditional kept-leg write + footer
+    # read + separate distinct-list collect. The grouped rows are
+    # bounded by n_centroids (the same driver-safe bound the old
+    # collect relied on). The kept leg is then written ONLY when
+    # kept > 0: the append-upsert path's common case folds EVERY
+    # tombstone it intersects, so it skips that whole parquet
+    # commit (write + footer round-trip + publish rename).
+    if only_vec_ids is not None:
+        # the subset is the append batch's ids: caller-bounded (an
+        # API request), so the split joins broadcast it
+        batch = spark.createDataFrame(
+            [(int(v),) for v in sorted(only_vec_ids)], "vec_id long"
+        )
+        fold_df = tombs.join(F.broadcast(batch), "vec_id")
+        split = (
+            tombs.join(
+                F.broadcast(batch.withColumn("_b", F.lit(1))),
+                "vec_id",
+                "left",
             )
-            fold_df = tombs.join(F.broadcast(batch), "vec_id")
-            split = (
-                tombs.join(
-                    F.broadcast(batch.withColumn("_b", F.lit(1))),
-                    "vec_id",
-                    "left",
-                )
-                .groupBy("list_id")
-                .agg(
-                    F.count(F.when(F.col("_b").isNotNull(), 1)).alias("folded"),
-                    F.count(F.when(F.col("_b").isNull(), 1)).alias("kept"),
-                )
-                .collect()
+            .groupBy("list_id")
+            .agg(
+                F.count(F.when(F.col("_b").isNotNull(), 1)).alias("folded"),
+                F.count(F.when(F.col("_b").isNull(), 1)).alias("kept"),
             )
-            kept = sum(int(r["kept"]) for r in split)
-            if kept:
-                keep_df = tombs.join(F.broadcast(batch), "vec_id", "left_anti")
-                # subset fold: atomically replace the tombstone set with
-                # the survivors. Legacy mode stages under a dot dir and
-                # renames it in as a d-* leg after the list swap (every
-                # crash window leaves a SUPERSET of the intended
-                # tombstones — over-masking = still-deleted, consistent).
-                # Generation mode writes the kept leg under its final DOT
-                # name directly: invisible to both listing rules until
-                # the pointer commit below names it in ``tomb_keep`` —
-                # the tombstone transition is atomic WITH the list swap.
-                # Types pinned to the d-* leg schema (vec_id int64,
-                # list_id int32) so multi-leg reads merge.
-                stage = (
-                    f"{troot}/.t-{tag}"
-                    if gen_mode
-                    else f"{troot}/.staging-rewrite-{tag}"
-                )
-                (
-                    keep_df.select(
-                        F.col("vec_id").cast("long").alias("vec_id"),
-                        F.col("list_id").cast("int").alias("list_id"),
-                    )
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(stage)
-                )
-        else:
-            fold_df = tombs
-            split = (
-                tombs.groupBy("list_id")
-                .agg(F.count(F.lit(1)).alias("folded"))
-                .collect()
+            .collect()
+        )
+        kept = sum(int(r["kept"]) for r in split)
+        if kept:
+            keep_df = tombs.join(F.broadcast(batch), "vec_id", "left_anti")
+            # subset fold: atomically replace the tombstone set with
+            # the survivors. Legacy mode stages under a dot dir and
+            # renames it in as a d-* leg after the list swap (every
+            # crash window leaves a SUPERSET of the intended
+            # tombstones — over-masking = still-deleted, consistent).
+            # Generation mode writes the kept leg under its final DOT
+            # name directly: invisible to both listing rules until
+            # the pointer commit below names it in ``tomb_keep`` —
+            # the tombstone transition is atomic WITH the list swap.
+            # Types pinned to the d-* leg schema (vec_id int64,
+            # list_id int32) so multi-leg reads merge.
+            stage = (
+                f"{troot}/.t-{tag}"
+                if gen_mode
+                else f"{troot}/.staging-rewrite-{tag}"
             )
-        n_folded = tombs_total - kept
-        if n_folded == 0:
-            if stage is not None:
-                fs.rmtree(stage)
-            return {"tombstones": 0, "lists_rewritten": 0}
-        # tolerate already-removed list dirs (a fully-tombstoned list
-        # from a previous fold, or a replay after manual crash
-        # reconciliation): a tombstone pointing at a vanished list has
-        # nothing left to drop. Serving dirs resolve generation-aware:
-        # a retired list (g=0) has nothing to drop.
-        affected = []
-        for r in split:
-            if int(r["folded"]) == 0:
-                continue  # kept-only list: nothing of it folds
-            d = _serving_dir(base, gmap, r["list_id"])
-            if d is not None and fs.isdir(d):
-                affected.append(r["list_id"])
-        affected.sort()
-        victims = fold_df.select("vec_id").distinct()
-        if tombs_total <= _BROADCAST_MAX_TOMBS:
-            victims = F.broadcast(victims)
-        if gen_mode:
-            g_new = m + 1
-            new_lists = dict(gmap)
-            if affected:
-                survivors = read_ivf_lists(spark, base, affected).join(
-                    victims, "vec_id", "left_anti"
+            (
+                keep_df.select(
+                    F.col("vec_id").cast("long").alias("vec_id"),
+                    F.col("list_id").cast("int").alias("list_id"),
                 )
-                gen_dir = f"{base}/{_GEN_ROOT}/g={g_new}"
-                # dot-prefixed: invisible to every reader until the
-                # pointer commit; a crashed previous attempt at this
-                # same generation number is simply overwritten
-                survivors.write.mode("overwrite").partitionBy(
-                    "list_id"
-                ).parquet(gen_dir)
-                present = {
-                    int(nm.split("=", 1)[1])
-                    for nm, isd in fs.list_status(gen_dir)
-                    if isd and nm.startswith("list_id=")
-                }
-                for l in affected:
-                    # a list whose every row was tombstoned RETIRES
-                    # (g=0): readers skip it (the empty LSM level)
-                    new_lists[l] = g_new if l in present else 0
-            # THE commit point: one all-or-nothing pointer PUT swaps
-            # the affected lists to their new generation AND
-            # transitions the tombstone set (folded legs out, kept leg
-            # in). Readers see pre-fold or post-fold, never mid-swap.
-            _commit_listgen(
-                fs, base, g_new, new_lists,
-                tomb_keep=[stage.rsplit("/", 1)[1]] if stage else [],
-                tomb_folded=sorted(folded_names | set(leg_names)),
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(stage)
             )
-            # post-commit sweep: the pointer already excludes these
-            # legs, so a crash mid-sweep leaves only ignored garbage
-            # (vacuum_ivf_index finishes the job)
-            for d in legs:
-                fs.rmtree(d)
-            return {
-                "tombstones": int(n_folded),
-                "lists_rewritten": len(affected),
-            }
+    else:
+        fold_df = tombs
+        split = (
+            tombs.groupBy("list_id")
+            .agg(F.count(F.lit(1)).alias("folded"))
+            .collect()
+        )
+    n_folded = tombs_total - kept
+    if n_folded == 0:
+        if stage is not None:
+            fs.rmtree(stage)
+        return {"tombstones": 0, "lists_rewritten": 0}
+    # tolerate already-removed list dirs (a fully-tombstoned list
+    # from a previous fold, or a replay after manual crash
+    # reconciliation): a tombstone pointing at a vanished list has
+    # nothing left to drop. Serving dirs resolve generation-aware:
+    # a retired list (g=0) has nothing to drop.
+    affected = []
+    for r in split:
+        if int(r["folded"]) == 0:
+            continue  # kept-only list: nothing of it folds
+        d = _serving_dir(base, gmap, r["list_id"])
+        if d is not None and fs.isdir(d):
+            affected.append(r["list_id"])
+    affected.sort()
+    victims = fold_df.select("vec_id").distinct()
+    if tombs_total <= _BROADCAST_MAX_TOMBS:
+        victims = F.broadcast(victims)
+    if gen_mode:
+        g_new = m + 1
+        new_lists = dict(gmap)
         if affected:
-            survivors = (
-                spark.read.option("basePath", base)
-                .parquet(*[f"{base}/list_id={l}" for l in affected])
-                .join(victims, "vec_id", "left_anti")
+            survivors = read_ivf_lists(spark, base, affected).join(
+                victims, "vec_id", "left_anti"
             )
-            staging = f"{base}/.staging-compact-{tag}"
+            gen_dir = f"{base}/{_GEN_ROOT}/g={g_new}"
+            # dot-prefixed: invisible to every reader until the
+            # pointer commit; a crashed previous attempt at this
+            # same generation number is simply overwritten
             survivors.write.mode("overwrite").partitionBy(
                 "list_id"
-            ).parquet(staging)
+            ).parquet(gen_dir)
+            present = {
+                int(nm.split("=", 1)[1])
+                for nm, isd in fs.list_status(gen_dir)
+                if isd and nm.startswith("list_id=")
+            }
             for l in affected:
-                old = f"{base}/list_id={l}"
-                staged = f"{staging}/list_id={l}"
-                new = f"{base}/.new-list_id={l}"
-                # publish-beside first: readers keep serving the old dir
-                # until the final rename, and a crash from here on
-                # leaves recoverable evidence instead of a
-                # silently-vanished list
-                if fs.isdir(staged):
-                    fs.rename(staged, new)
-                if fs.isdir(old):
-                    fs.rename(old, f"{staging}/.retired-{l}")
-                if fs.isdir(new):
-                    fs.rename(new, old)
-                # a list whose every row was tombstoned has no staged
-                # dir: the partition simply disappears (an empty LSM
-                # level)
-            fs.rmtree(staging)
-        if stage is not None:
-            fs.rename(stage, f"{troot}/d-{tag}")
+                # a list whose every row was tombstoned RETIRES
+                # (g=0): readers skip it (the empty LSM level)
+                new_lists[l] = g_new if l in present else 0
+        # THE commit point: one all-or-nothing pointer PUT swaps
+        # the affected lists to their new generation AND
+        # transitions the tombstone set (folded legs out, kept leg
+        # in). Readers see pre-fold or post-fold, never mid-swap.
+        _commit_listgen(
+            fs, base, g_new, new_lists,
+            tomb_keep=[stage.rsplit("/", 1)[1]] if stage else [],
+            tomb_folded=sorted(folded_names | set(leg_names)),
+        )
+        # post-commit sweep: the pointer already excludes these
+        # legs, so a crash mid-sweep leaves only ignored garbage
+        # (vacuum_ivf_index finishes the job)
         for d in legs:
             fs.rmtree(d)
-        return {"tombstones": int(n_folded), "lists_rewritten": len(affected)}
-    finally:
-        tombs.unpersist()
+        return {
+            "tombstones": int(n_folded),
+            "lists_rewritten": len(affected),
+        }
+    if affected:
+        survivors = (
+            spark.read.option("basePath", base)
+            .parquet(*[f"{base}/list_id={l}" for l in affected])
+            .join(victims, "vec_id", "left_anti")
+        )
+        staging = f"{base}/.staging-compact-{tag}"
+        survivors.write.mode("overwrite").partitionBy(
+            "list_id"
+        ).parquet(staging)
+        for l in affected:
+            old = f"{base}/list_id={l}"
+            staged = f"{staging}/list_id={l}"
+            new = f"{base}/.new-list_id={l}"
+            # publish-beside first: readers keep serving the old dir
+            # until the final rename, and a crash from here on
+            # leaves recoverable evidence instead of a
+            # silently-vanished list
+            if fs.isdir(staged):
+                fs.rename(staged, new)
+            if fs.isdir(old):
+                fs.rename(old, f"{staging}/.retired-{l}")
+            if fs.isdir(new):
+                fs.rename(new, old)
+            # a list whose every row was tombstoned has no staged
+            # dir: the partition simply disappears (an empty LSM
+            # level)
+        fs.rmtree(staging)
+    if stage is not None:
+        fs.rename(stage, f"{troot}/d-{tag}")
+    for d in legs:
+        fs.rmtree(d)
+    return {"tombstones": int(n_folded), "lists_rewritten": len(affected)}
 
 
 def compact_ivf_index(

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from smoltable_spark.functions.hashing import md5_long, seeded
 from smoltable_spark.functions.text import tokens, fingerprint
+from smoltable_spark.session import materialize
 
 
 def spread(df: DataFrame, target: int | None = None) -> DataFrame:
@@ -51,35 +52,6 @@ def spread(df: DataFrame, target: int | None = None) -> DataFrame:
         return df
     return df.repartition(target)
 
-
-def _materialize_unbounded(df: DataFrame) -> DataFrame:
-    """Compute a CORPUS-SCALE intermediate once for several consumers —
-    the fault-tolerant form (ADVICE r13, medium): a RELIABLE checkpoint
-    (``sparkContext.setCheckpointDir`` + ``checkpoint(eager=True)``),
-    the option the advice itself names for unbounded intermediates. On
-    a real cluster the checkpoint lives in shared storage, so an
-    executor loss re-reads it instead of failing the job — which
-    ``localCheckpoint`` (executor-local blocks) cannot survive — and
-    unlike ``persist``-with-lineage it also TRUNCATES the logical plan:
-    chained materializations (postings → pair set → arrays) would
-    otherwise nest each cached subtree inside the next consumer's plan
-    and hand Catalyst a re-analysis of the whole pipeline per action
-    (measured: the dedup_containment dump grew 2.6k → 10.5k lines under
-    nested persists). localCheckpoint stays the right tool for the
-    module's bounded/tiny intermediates (pair sets, labels, anchors);
-    unbounded ones route here.
-
-    The checkpoint dir is set once per context (scratch-backed locally;
-    a deployment overrides via ``$SPARK_GRAFT_SCRATCH`` or by setting
-    its own checkpoint dir to shared storage), and the session enables
-    ``spark.cleaner.referenceTracking.cleanCheckpoints`` so checkpoints
-    of GC'd frames are reclaimed in long-lived sessions."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        from smoltable_spark.queries_util import scratch_dir
-
-        sc.setCheckpointDir(scratch_dir("smoltable_ckpt_"))
-    return df.checkpoint(eager=True)
 
 # ---------------------------------------------------------------------------
 # exact
@@ -217,11 +189,9 @@ def lsh_candidate_pairs(
             bucket = bucket * 31 + F.col(f"h{i}")
         return F.struct(F.lit(b).alias("band"), bucket.alias("bucket"))
 
-    # the signature pipeline (explode + md5 + 16-way min agg) is the
-    # expensive upstream; the signature TABLE is tiny (one row/doc).
-    # Materialize it once so the band explode + self-join below don't
-    # re-execute the shingle pipeline per plan branch.
-    signatures = signatures.localCheckpoint(eager=True)
+    # both sides of the band self-join read the signatures: compute the
+    # shingle pipeline once
+    signatures = materialize(signatures, "corpus")
     # single pass: each signature row emits all its (band, bucket) pairs
     buckets = signatures.select(
         F.col(id_col),
@@ -306,15 +276,12 @@ def jaccard_pairs(
         docs.join(cand_ids, id_col, "left_semi"), text_col, id_col, k, hashed=True
     )
     if _materialize_arrays:
-        # r14 (guide §1.2): the pair join below embeds ``arr`` TWICE
-        # (side a and side b), and through ``cand_ids`` each embedding
-        # drags the caller's whole candidate pipeline along — measured
-        # on dedup_containment, the tokenize+candidate subtree ran 3×.
-        # Opt-in (corpus-scale ⇒ the checkpointed form) because only
-        # callers whose candidate frame is itself materialized benefit;
-        # small-pair callers measured a LOSS (the extra materializing
-        # job outweighs the saved recompute).
-        arr = _materialize_unbounded(arr)
+        # the pair join below reads ``arr`` twice (side a and side b), and
+        # through ``cand_ids`` each read drags the caller's candidate
+        # pipeline along. Opt-in: only callers whose candidate frame is
+        # itself materialized benefit; for small pair sets the extra job
+        # costs more than the recompute it saves.
+        arr = materialize(arr, "corpus")
     pairs = pairs.repartition(pairs.sparkSession.sparkContext.defaultParallelism)
     a = arr.select(F.col(id_col).alias("id_a"), F.col("sh_arr").alias("_sa"))
     b = arr.select(F.col(id_col).alias("id_b"), F.col("sh_arr").alias("_sb"))
@@ -436,17 +403,10 @@ def containment_near_duplicates(
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") >= 2)
     )
-    # r13 (guide §1.2): ``pall`` feeds THREE consumers (rare-shingle
-    # postings, the per-doc anchor window, anchor-posting expansion) —
-    # unmaterialized, each consumer re-ran the whole
-    # tokenize→shingle→hash→distinct→df-join pipeline, and the final
-    # plan embedded it 5× (measured: 4115-line plan, 304 Exchanges at
-    # sf0.1). One materialization of the (doc, shingle-hash, df)
-    # postings — the same corpus-shingle-scale intermediate the
-    # df-aggregate already shuffles — collapses that to one pass.
-    # r14 (ADVICE r13, medium): this intermediate is UNBOUNDED, so it
-    # takes the reliable-checkpoint form instead of localCheckpoint.
-    pall = _materialize_unbounded(shh.join(dfs, "hsh"))
+    # ``pall`` feeds three consumers (rare-shingle postings, the per-doc
+    # anchor window, anchor-posting expansion); unmaterialized, each
+    # re-ran the tokenize→shingle→hash→distinct→df-join pipeline
+    pall = materialize(shh.join(dfs, "hsh"), "corpus")
     rare_posts = pall.filter(F.col("df") <= max_df).select(id_col, "hsh")
     wr = Window.partitionBy(id_col).orderBy(F.col("df").asc(), F.col("hsh").asc())
     # the ANCHOR SHINGLE SET: every shingle that is some doc's rarest.
@@ -466,11 +426,9 @@ def containment_near_duplicates(
         # whole shingle+groupBy pass at collect() time
         .select("hsh", "df")
         .distinct()
-        # materialized once (small: <= min_postings distinct hashes per
-        # doc): the guard aggregate and the expansion join below both
-        # read the checkpoint instead of re-running the shingle pass
-        .localCheckpoint(eager=True)
     )
+    # the guard aggregate and the expansion join below both read it
+    anchors = materialize(anchors, "corpus")
     if max_anchor_df is not None:
         worst = anchors.agg(F.max("df").alias("mx")).collect()[0]["mx"]
         if worst is not None and worst > max_anchor_df:
@@ -482,19 +440,16 @@ def containment_near_duplicates(
                 "or raise/disable max_anchor_df"
             )
     anchor_posts = pall.join(anchors.select("hsh"), "hsh").select(id_col, "hsh")
-    # r14 (guide §1.2/§2.4): unmaterialized, the posts union+distinct ran
-    # once per self-join SIDE and the whole candidate pipeline re-ran
-    # inside BOTH of the verify's array builds (the r13 plan embedded the
-    # subtree 3×: 7 SortMergeJoins for 3 logical joins). Materialize the
-    # postings and the deduped pair set once; the verify then reads ~1M
-    # skinny checkpointed pair rows instead of recomputing the index.
-    posts = _materialize_unbounded(rare_posts.union(anchor_posts).distinct())
+    # the postings feed both self-join sides, and the pair set both of
+    # the verify's array builds
+    posts = materialize(rare_posts.union(anchor_posts).distinct(), "corpus")
     a = posts.select("hsh", F.col(id_col).alias("id_a"))
     b = posts.select(F.col("hsh").alias("_hb"), F.col(id_col).alias("id_b"))
-    cands = _materialize_unbounded(
+    cands = materialize(
         a.join(b, (F.col("hsh") == F.col("_hb")) & (F.col("id_a") < F.col("id_b")))
         .select("id_a", "id_b")
-        .distinct()
+        .distinct(),
+        "corpus",
     )
     jac = jaccard_pairs(docs, cands, text_col, id_col, k, _materialize_arrays=True)
     num, den = round(threshold * 1000), 1000
@@ -590,19 +545,10 @@ def blocked_jaccard_near_duplicates(
             sz.alias("_sz"),
             F.explode(F.slice("_sorted", F.lit(1), plen)).alias("_tok"),
         )
-        # r14 (VERDICT r13 ask #9 — the NARROW variant of the rejected
-        # r13 prototype): materialize the exploded PREFIX postings once
-        # for the guard aggregate and both sides of the pair join, so
-        # the tokenize→shingle→sort→slice pipeline runs one time, not
-        # once for the guard plus once for the join. Unlike the r13
-        # shingle-ARRAY checkpoint this pins only the skinny
-        # (id, blk, size, tok-hash) rows — the prefix half of the
-        # shingle count at ~24 bytes/row, not O(corpus) sorted arrays.
-        # Skinny but still corpus-proportional, so it takes the
-        # fault-tolerant persist form (ADVICE r13, medium), not a
-        # localCheckpoint.
     )
-    pre = _materialize_unbounded(pre)
+    # the skinny prefix postings feed the guard aggregate and both sides
+    # of the pair join: tokenize→shingle→sort→slice runs once
+    pre = materialize(pre, "corpus")
     if max_block_rows is not None:
         worst = (
             pre.groupBy("blk", "_tok")
@@ -703,11 +649,9 @@ def cluster_pairs(pairs: DataFrame, rounds: int = 4) -> DataFrame:
     Each round is one join + one aggregate on the (small) pair set —
     the expensive corpus never participates.
     """
-    # materialize the (small) pair set once: iterative propagation would
-    # otherwise re-execute the full upstream pipeline (e.g. MinHash) per
-    # round, and each round's plan embeds the previous round's twice —
-    # exponential lineage without the checkpoint
-    pairs = pairs.localCheckpoint(eager=True)
+    # every round reads the pair set (and each round's plan would embed
+    # the previous round's twice): compute the upstream pipeline once
+    pairs = materialize(pairs, "corpus")
     nodes = (
         pairs.select(F.col("id_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
@@ -725,15 +669,16 @@ def cluster_pairs(pairs: DataFrame, rounds: int = 4) -> DataFrame:
             .groupBy("src")
             .agg(F.min("cluster_id").alias("_nbr_min"))
         )
-        labels = (
+        # the next round reads labels twice; truncating keeps lineage flat
+        labels = materialize(
             labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
             .select(
                 "doc_id",
                 F.least(
                     F.col("cluster_id"), F.coalesce(F.col("_nbr_min"), F.col("cluster_id"))
                 ).alias("cluster_id"),
-            )
-            .localCheckpoint(eager=True)  # labels are tiny; lineage stays flat
+            ),
+            "corpus",
         )
     return labels
 
@@ -768,23 +713,23 @@ def cluster_pairs_cc(pairs: DataFrame, max_rounds: int = 64) -> DataFrame:
     cluster_id = min doc_id of the component — identical labels to a
     union-find on the driver, but fully distributed.
     """
-    pairs = pairs.localCheckpoint(eager=True)
-    # nodes has exactly ONE consumer (the final label join) — a
-    # checkpoint here would materialize it eagerly mid-pipeline for
-    # nothing (r14, guide §5: cache only reused intermediates)
+    # nodes and edges both read the pair set; nodes itself has one
+    # consumer (the final label join) and stays lazy
+    pairs = materialize(pairs, "corpus")
     nodes = (
         pairs.select(F.col("id_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    # canonical undirected edges, larger endpoint first, no self-loops
-    edges = (
+    # canonical undirected edges, larger endpoint first, no self-loops;
+    # read by the first round and its convergence check
+    edges = materialize(
         pairs.select(
             F.greatest("id_a", "id_b").alias("u"), F.least("id_a", "id_b").alias("v")
         )
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "corpus",
     )
 
     def _large_star(e: DataFrame) -> DataFrame:
@@ -823,14 +768,11 @@ def cluster_pairs_cc(pairs: DataFrame, max_rounds: int = 64) -> DataFrame:
 
     n_edges = edges.count()
     for _ in range(max_rounds):
-        # LAZY checkpoint: the count below materializes it inside its own
-        # job (bpe_train's trick, r14 — the eager form paid a separate
-        # materialization job per round), while the plan is truncated
-        # immediately so lineage never compounds across rounds
-        nxt = _small_star(_large_star(edges)).localCheckpoint(eager=False)
+        # read by the convergence check and the next round
+        nxt = materialize(_small_star(_large_star(edges)), "corpus")
         # converged ⇔ identical canonical edge sets; both sides are distinct
         # sets, so equal cardinality + empty one-way difference suffices
-        # (one count + one anti-join on the tiny checkpointed pair table)
+        # (one count + one anti-join on the checkpointed pair table)
         n_nxt = nxt.count()
         if n_nxt == n_edges and nxt.subtract(edges).isEmpty():
             edges = nxt
@@ -1029,7 +971,8 @@ def simhash_near_duplicates(
     """
     rows_bits = bits // bands
     if sigs is None:
-        sigs = simhash_df(docs, text_col, id_col, bits).localCheckpoint(eager=True)
+        # both sides of the band self-join read the signatures
+        sigs = materialize(simhash_df(docs, text_col, id_col, bits), "corpus")
     mask = (1 << rows_bits) - 1
     buckets = sigs.select(
         F.col(id_col),

@@ -43,6 +43,7 @@ from smoltable_spark.functions.dedup import (
     minhash_params,
 )
 from smoltable_spark.functions.hashing import md5_long
+from smoltable_spark.session import materialize
 
 
 def lsh_index(
@@ -189,9 +190,10 @@ def minhash_dedup_incremental(
     if batch_index is not None:
         bidx = batch_index
     else:
-        bidx = lsh_index(
-            batch, text_col, id_col, num_hashes, bands, k
-        ).localCheckpoint(eager=True)  # built once, 4 plan branches
+        # built once, read by 4 plan branches
+        bidx = materialize(
+            lsh_index(batch, text_col, id_col, num_hashes, bands, k), "bounded"
+        )
     nb = _skinny_buckets(bidx, id_col, "new_id")
     ob = _skinny_buckets(index, id_col, "old_id")
     if max_bucket_df is not None:

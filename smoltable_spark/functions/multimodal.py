@@ -72,6 +72,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from smoltable_spark.session import materialize
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -2037,12 +2039,12 @@ def ahash_near_pairs(
     (now two-level) df-cap; precision = exact (verified). Pair volume is
     bounded by max_df²·bands + max_df²·rarest-buckets + Σ family sizes.
 
-    The hash table is ``localCheckpoint``-ed first: it feeds FOUR
+    The hash table is materialized first: it feeds FOUR
     branches (band melt, exact-star anchor, both verify sides), and
     without materialization each branch would re-run the upstream
     decode+hash Arrow pass — 4× the full media decode for a table of
     5 scalar columns per image."""
-    h = hashes.select("media_id", "ahash_hi", "ahash_lo").localCheckpoint()
+    h = materialize(hashes.select("media_id", "ahash_hi", "ahash_lo"), "corpus")
     bands = h.select(
         "media_id",
         F.expr(

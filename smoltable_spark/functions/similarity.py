@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from smoltable_spark.session import materialize
+
 #: fixed-point quantization scale for embedding values
 QUANT = 1_000_000
 
@@ -404,8 +406,10 @@ def kmeans_centroids(
     ``sample_mod=m`` trains on the deterministic ~1/m hash-sample of the
     corpus — at 100 TB the iterations touch only the sample, and only
     the FINAL assignment pass reads the full corpus. Each iteration is a
-    broadcast-join assign + one (cid, dim) aggregate; centroids are
-    localCheckpoint'ed so the loop's lineage stays flat.
+    broadcast-join assign + one (cid, dim) aggregate; each iteration
+    collects the previous centroids as driver literals, so the loop's
+    lineage stays flat, and only the returned set is materialized (its
+    callers read it many times).
     """
     from smoltable_spark.functions.hashing import seeded
 
@@ -422,10 +426,8 @@ def kmeans_centroids(
     # window over n_centroids rows only (post-limit) — bounded, not a
     # corpus-wide single-partition sort
     w = Window.orderBy("_h", "vec_id")
-    cents = (
-        seeds.withColumn("cid", F.row_number().over(w) - 1)
-        .select(F.col("cid"), F.col("q").alias("cq"), F.col("nrm2").alias("cn2"))
-        .localCheckpoint(eager=True)
+    cents = seeds.withColumn("cid", F.row_number().over(w) - 1).select(
+        F.col("cid"), F.col("q").alias("cq"), F.col("nrm2").alias("cn2")
     )
     for _ in range(iters):
         # assignment as a projected column (r13): the old
@@ -454,9 +456,8 @@ def kmeans_centroids(
                     F.col("cq"), F.lit(0).cast("long"), lambda acc, x: acc + x * x
                 ),
             )
-            .localCheckpoint(eager=True)
         )
-    return cents
+    return materialize(cents, "bounded")
 
 
 def cosine_topk_ivf(
@@ -1218,17 +1219,20 @@ def pq_codebooks(
     seed_ids = seeds.withColumn("cid", F.row_number().over(w) - 1).select(
         "vec_id", "cid"
     )
-    cb = (
-        sub.join(F.broadcast(seed_ids), "vec_id")
-        .select("m", "cid", F.col("sq").alias("cw"))
-        .localCheckpoint(eager=True)
+    # every round joins the codebook back onto the sub-vectors; each
+    # generation is materialized so the next round's plan starts from it
+    cb = materialize(
+        sub.join(F.broadcast(seed_ids), "vec_id").select(
+            "m", "cid", F.col("sq").alias("cw")
+        ),
+        "bounded",
     )
     for _ in range(iters):
         assign = _pq_assign(sub, cb)
         dims = sub.join(assign, ["vec_id", "m"]).select(
             "m", "cid", F.posexplode("sq").alias("pos", "val")
         )
-        cb = (
+        cb = materialize(
             dims.groupBy("m", "cid", "pos")
             .agg(F.round(F.avg("val")).cast("long").alias("v"))
             .groupBy("m", "cid")
@@ -1241,8 +1245,8 @@ def pq_codebooks(
                 "m",
                 "cid",
                 F.transform(F.col("_s"), lambda x: x.getField("v")).alias("cw"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "bounded",
         )
     return cb
 
@@ -1562,16 +1566,17 @@ def mmr_rerank(
     Output: (pick, doc_id, rel, mmr_score) — pick = 1-based selection
     order.
     """
-    c = cands.select(
-        F.col(id_col).alias("doc_id"), F.col(rel_col).cast("double").alias("rel")
-    # r13: materialize the candidate cut and the pair-similarity table
-    # ONCE — both are bounded (<=|cands| and <=|cands|² rows), but each
-    # of the k unrolled steps references them, so without this the
-    # upstream retrieval (a full corpus scan + top-k window) re-ran in
-    # EVERY step's argmax job (measured: 5 brute-force passes for k=5,
-    # 3.9 s; guide §1.2 "don't recompute")
-    ).localCheckpoint(eager=True)
-    pair_sims = pair_sims.localCheckpoint(eager=True)
+    # each of the k unrolled steps reads the candidate cut and the
+    # pair-similarity table: the upstream retrieval (a corpus scan +
+    # top-k window) runs once, not in every step's argmax job
+    c = materialize(
+        cands.select(
+            F.col(id_col).alias("doc_id"),
+            F.col(rel_col).cast("double").alias("rel"),
+        ),
+        "bounded",
+    )
+    pair_sims = materialize(pair_sims, "bounded")
     picks = []
     selected = None
     for i in range(1, k + 1):
@@ -1600,7 +1605,7 @@ def mmr_rerank(
             scored = remaining.join(pen, "doc_id", "left").withColumn(
                 "_pen", F.coalesce(F.col("_pen"), F.lit(0.0))
             )
-        pick = (
+        pick = materialize(
             scored.withColumn(
                 "mmr_score",
                 F.lit(lam) * F.col("rel") - F.lit(1.0 - lam) * F.col("_pen"),
@@ -1609,11 +1614,11 @@ def mmr_rerank(
             .limit(1)
             .select(
                 F.lit(i).cast("int").alias("pick"), "doc_id", "rel", "mmr_score"
-            )
-            # keep the unrolled greedy plan flat: without this, step i's
-            # plan embeds steps 1..i-1 twice each (argmax + selected-set),
-            # doubling per step; each pick is ONE tiny row
-            .localCheckpoint(eager=True)
+            ),
+            # each pick is read by every later step (argmax + selected
+            # set) and the output union; without this, step i's plan
+            # embeds steps 1..i-1 twice each
+            "bounded",
         )
         picks.append(pick)
         sel_ids = pick.select("doc_id")

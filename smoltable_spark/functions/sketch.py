@@ -40,6 +40,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from smoltable_spark.session import materialize
+
 
 def _mg_add(counters: dict, tok: str, c: int, k: int) -> None:
     """Weighted Misra-Gries step: fold ``c`` occurrences of ``tok`` in,
@@ -114,10 +116,9 @@ def heavy_hitters(
             f"k={k} breaks the MG superset guarantee for threshold={threshold}"
             f" (needs k >= {math.ceil(1 / threshold)})"
         )
-    # phase 1 yields candidates AND per-partition row counts in one scan
-    # (localCheckpoint materializes the small summary so the candidate
-    # list and the total don't each re-run the corpus pass)
-    summary = mg_candidates(tokens_df, k=k, token_col=token_col).localCheckpoint()
+    # phase 1 yields candidates AND per-partition row counts in one scan;
+    # the candidate list and the total both read the summary
+    summary = materialize(mg_candidates(tokens_df, k=k, token_col=token_col), "bounded")
     cand = summary.filter(F.col(token_col).isNotNull()).select(token_col).distinct()
     total = summary.agg(F.sum("_n")).collect()[0][0] or 0
     cutoff = math.ceil(threshold * total)

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F  # noqa: F401
 
 from smoltable_spark.functions.hashing import md5_long
+from smoltable_spark.session import materialize
 
 # ---------------------------------------------------------------------------
 # tokenization
@@ -831,11 +832,9 @@ def ccnet_buckets(
         .cast("long")
         .alias("avg_milli"),
     )
-    # the score table feeds BOTH the tercile computation and the output
-    # join; it is (id, lang, int64) — narrow per-doc rows, NOT corpus
-    # text — so materializing it once beats re-running the whole bigram-LM
-    # pipeline twice (the duplicated subtree halves the executed plan)
-    av = av.localCheckpoint(eager=True)
+    # the score table feeds both the tercile computation and the output
+    # join: run the bigram-LM pipeline once
+    av = materialize(av, "corpus")
     qs = grouped_exact_quantiles(av, "lang", "avg_milli", permilles=(333, 667)).select(
         "lang", "p333", "p667"
     )
@@ -1053,32 +1052,12 @@ def bpe_train(
     moves only the pair-count partials, and the output artifact is
     ``n_merges`` rows.
 
-    Deep-vocabulary contract (ADVICE r11): each merge round stacks a
-    ``regexp_replace`` projection on the previous round's plan, so with
-    LAZY caching alone the logical plan grows linearly with
-    ``n_merges`` — fine at single digits, quadratic driver analysis
-    time (and StackOverflowError risk) at realistic vocabulary sizes.
-    So every ``_BPE_CHECKPOINT_EVERY`` rounds the new generation is a
-    LAZY ``localCheckpoint`` instead of a plain persist: it still
-    materializes inside the next count job (no extra write pass — the
-    r11 saving is preserved) but truncates lineage, bounding plan depth
-    at the checkpoint interval.
+    Each round's vocabulary state is read by the next round's count and
+    rewrite, so every generation is a lazy bounded materialization: it
+    fills inside the next count job (no separate write pass) and
+    truncates lineage, so plan depth stays one round however large
+    ``n_merges`` is.
 
-    Durability trade-off (ADVICE r12): ``localCheckpoint`` stores the
-    ONLY copy of the truncated-lineage blocks on executors — after a
-    checkpoint, losing an executor makes those blocks unrecoverable
-    and FAILS the training job (there is no lineage left to recompute
-    through; a plain persist would have recomputed, slowly). On
-    ``local[*]`` (this engine's bench/test mode) driver and executors
-    share one JVM, so the distinction is moot; on a real cluster where
-    executor loss over a long training is expected, either restart the
-    training from the (cheap, deterministic) merge list prefix already
-    returned, or swap the localCheckpoint for a reliable
-    ``checkpoint()`` with ``spark.sparkContext.setCheckpointDir`` —
-    paying one HDFS write per interval for loss-tolerance. The engine
-    keeps the local form as default because BPE training rounds are
-    short relative to executor MTTF and the restart cost is one
-    training, not lost data.
     The DuckDB oracle replays the identical rounds with window
     functions (islands-and-parity greedy application — provably the
     same rule; see the oracle in queries_analytics.py), so the learned
@@ -1086,8 +1065,6 @@ def bpe_train(
 
     Returns (step, lhs, rhs, merged, pair_count) — the ordered merge
     table, i.e. the learned tokenizer."""
-    from pyspark import StorageLevel
-
     from smoltable_spark.functions.dedup import spread
 
     spark = docs.sparkSession
@@ -1106,21 +1083,16 @@ def bpe_train(
     # table row-identical), and at 100 TB the cached trainer state is
     # vocabulary-sized instead of corpus-sized — which also shrinks
     # what the sampling note above has to apologize for.
-    # spread ONCE so every round's regexp+count pass uses the cluster,
-    # then persist LAZILY: round k's count job computes round k-1's
-    # merge rewrite and materializes its cache in the SAME pass
-    # (VERDICT r10 ask #6 — the old eager localCheckpoint paid a
-    # separate write pass per round)
+    # spread ONCE so every round's regexp+count pass uses the cluster
     target = min(docs.sparkSession.sparkContext.defaultParallelism, 16)
     words = (
         docs.select(F.explode(tokens(F.col(text_col))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    t = spread(
-        words.select(s0.alias("s"), "n"),
-        target,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    t = materialize(
+        spread(words.select(s0.alias("s"), "n"), target), "bounded", eager=False
+    )
     # symbols back out of the string state: split keeps leading/trailing
     # empties (limit -1), so slots 2..n+1 hold the n symbols. The array
     # materializes ONCE per row in its own projection — inlining it into
@@ -1135,8 +1107,6 @@ def bpe_train(
         ),
     )
     merges = []
-    retired = None  # the grandparent cache: safe to drop once its child
-    #                 generation has materialized (see unpersist below)
     for step in range(1, n_merges + 1):
         best = (
             t.select(syms.alias("sy"), "n")
@@ -1148,13 +1118,6 @@ def bpe_train(
             .limit(1)
             .collect()
         )
-        # this collect materialized t's cache, so the PREVIOUS
-        # generation's cache (t's parent) is now dead weight — dropping
-        # it earlier would force the count to recompute t all the way
-        # from the source
-        if retired is not None:
-            retired.unpersist()
-            retired = None
         if not best:  # corpus exhausted (every word is one symbol)
             break
         a, b, cnt = best[0]["a"], best[0]["b"], int(best[0]["c"])
@@ -1166,29 +1129,12 @@ def bpe_train(
             + _java_regex_quote(b)
             + f"(?={_BPE_SEP})"
         )
-        new_t = t.select(
-            F.regexp_replace("s", pat, _java_repl_quote(a + b)).alias("s"), "n"
-        )
-        if step % _BPE_CHECKPOINT_EVERY == 0:
-            # lazy lineage truncation: materializes in the next round's
-            # count pass like the persist would, but the plan restarts
-            # from the checkpointed RDD (see docstring)
-            new_t = new_t.localCheckpoint(eager=False)
-        else:
-            new_t = new_t.persist(StorageLevel.MEMORY_AND_DISK)
-        retired, t = t, new_t
-    t.unpersist()
-    if retired is not None:
-        retired.unpersist()
+        merged = F.regexp_replace("s", pat, _java_repl_quote(a + b))
+        t = materialize(t.select(merged.alias("s"), "n"), "bounded", eager=False)
     return spark.createDataFrame(
         merges, "step int, lhs string, rhs string, merged string, pair_count long"
     )
 
-
-#: lineage-truncation interval for ``bpe_train`` (ADVICE r11): plan
-#: depth is bounded by this many stacked regexp projections between
-#: lazy localCheckpoints
-_BPE_CHECKPOINT_EVERY = 20
 
 #: symbol-boundary separator for the string-encoded BPE fast path.
 #: Words containing it are pre-stripped (a NUL inside a token is mojibake,
@@ -1300,10 +1246,10 @@ def pack_split(
     Ids must cast to long (non-null): a silently-NULL cast would pack
     the doc at an arbitrary offset and return unattributable spans, so
     the cast is guarded by an in-plan ``raise_error``. The slim
-    (doc_id, ntok) frame is materialized once (``localCheckpoint``):
-    three plan branches consume it — the boundary aggregate, the
-    per-bucket window, and the bucket totals — and without the
-    materialization each branch re-runs the corpus tokenization."""
+    (doc_id, ntok) frame is materialized once: three plan branches
+    consume it — the boundary aggregate, the per-bucket window, and the
+    bucket totals — and without it each branch re-runs the corpus
+    tokenization."""
     # try_cast: NULL on malformed instead of the ANSI-mode-dependent
     # CAST_INVALID_INPUT, so the guard below raises the same
     # descriptive error whatever spark.sql.ansi.enabled is
@@ -1320,7 +1266,8 @@ def pack_split(
             ).cast("long"),
         ).otherwise(did).alias("doc_id"),
         token_count(F.col(text_col)).cast("long").alias("ntok"),
-    ).filter(F.col("ntok") > 0).localCheckpoint(eager=True)
+    ).filter(F.col("ntok") > 0)
+    toked = materialize(toked, "corpus")
     qs = [i / n_buckets for i in range(1, n_buckets)]
     bnds = toked.agg(
         F.percentile_approx("doc_id", qs, 10_000).alias("_bnds")

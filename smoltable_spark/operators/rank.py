@@ -20,6 +20,63 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from smoltable_spark.session import materialize
+
+
+def _frozen_offset_pass(
+    df: DataFrame,
+    order: list,
+    num_partitions: int | None,
+    group_cols: tuple = (),
+    weight: str | None = None,
+) -> tuple[DataFrame, int]:
+    """The shared skeleton: range-partition ``df`` on ``order``, number
+    rows (or running-sum ``weight``) inside each (partition, group) run,
+    then add the collected totals of the partitions before it in that
+    group. Returns ``(df + _pos LONG, total)``: ``_pos`` is the global
+    1-based position (or inclusive running sum) within the group, and
+    ``total`` the row count (or weight sum) over all rows."""
+    if num_partitions is None:
+        num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    rows = df.repartitionByRange(num_partitions, *order).withColumn(
+        "_pid", F.spark_partition_id()
+    )
+    # freeze the physical partitioning: the offsets computed below are
+    # only valid for THIS materialization — re-executing the lineage in
+    # the final join lets AQE coalesce differently, shifting partition
+    # ids and corrupting positions. A correctness pin, not a cache.
+    rows = materialize(rows, "bounded")
+    keys = ["_pid", *group_cols]
+    w = Window.partitionBy(*keys).orderBy(*order)
+    if weight is None:
+        local, size = F.row_number().over(w), F.count(F.lit(1))
+    else:
+        local, size = F.sum(weight).over(w), F.sum(weight)
+    rows = rows.withColumn("_local", local)
+    # one row per (partition, group): bounded by partitions x groups
+    runs: dict = {}
+    for r in rows.groupBy(*keys).agg(size.alias("_n")).collect():
+        runs.setdefault(tuple(r[g] for g in group_cols), []).append(
+            (r["_pid"], r["_n"])
+        )
+    off_rows, total = [], 0
+    for g, lst in runs.items():
+        acc = 0
+        for pid, n in sorted(lst):
+            off_rows.append((pid, *g, acc))
+            acc += n
+        total += acc
+    types = "".join(
+        f", {g} {df.schema[g].dataType.simpleString()}" for g in group_cols
+    )
+    off_df = df.sparkSession.createDataFrame(off_rows, f"_pid INT{types}, _off LONG")
+    out = (
+        rows.join(F.broadcast(off_df), keys)
+        .withColumn("_pos", (F.col("_local") + F.col("_off")).cast("long"))
+        .drop("_pid", "_local", "_off")
+    )
+    return out, total
+
 
 def ranked_row_keys(
     cells: DataFrame,
@@ -34,36 +91,7 @@ def ranked_row_keys(
     ``pipeline_interleave_datasets``."""
     order = F.col(col).desc() if descending else F.col(col).asc()
     keys = cells.select(col).distinct()
-    if num_partitions is None:
-        num_partitions = max(keys.sparkSession.sparkContext.defaultParallelism, 8)
-    keys = keys.repartitionByRange(num_partitions, order)
-    keys = keys.withColumn("_pid", F.spark_partition_id())
-    # freeze the physical partitioning: the offsets computed below are only
-    # valid for THIS materialization — without the checkpoint, the final
-    # join re-executes the lineage and AQE may coalesce differently,
-    # shifting partition ids and corrupting ranks.
-    keys = keys.localCheckpoint(eager=True)
-    w = Window.partitionBy("_pid").orderBy(order)
-    keys = keys.withColumn("_rn", F.row_number().over(w))
-    # per-partition counts: tiny (one row per partition) → safe to collect
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in keys.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    spark = cells.sparkSession
-    off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid INT, _off LONG"
-    )
-    out = (
-        keys.join(F.broadcast(off_df), "_pid")
-        .withColumn("rk", (F.col("_rn") + F.col("_off")).cast("long"))
-        .select(col, "rk")
-    )
-    return out
+    return ranked_rows(keys, [order], num_partitions=num_partitions)
 
 
 def ranked_rows(
@@ -84,30 +112,8 @@ def ranked_rows(
     pass a total order (include a unique tiebreaker) when determinism
     matters, as every caller here does.
     """
-    if num_partitions is None:
-        num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 8)
-    rows = df.repartitionByRange(num_partitions, *order)
-    rows = rows.withColumn("_pid", F.spark_partition_id())
-    # freeze the physical partitioning (same reasoning as ranked_row_keys)
-    rows = rows.localCheckpoint(eager=True)
-    w = Window.partitionBy("_pid").orderBy(*order)
-    rows = rows.withColumn("_rn", F.row_number().over(w))
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in rows.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_df = df.sparkSession.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid INT, _off LONG"
-    )
-    return (
-        rows.join(F.broadcast(off_df), "_pid")
-        .withColumn(rk_col, (F.col("_rn") + F.col("_off")).cast("long"))
-        .drop("_pid", "_rn", "_off")
-    )
+    out, _ = _frozen_offset_pass(df, order, num_partitions)
+    return out.withColumnRenamed("_pos", rk_col)
 
 
 def value_min_ranks(
@@ -137,35 +143,13 @@ def value_min_ranks(
     window-free ``count() OVER ()`` replacement.
     """
     counts = df.groupBy(value_col).agg(F.count(F.lit(1)).alias("_cnt"))
-    if num_partitions is None:
-        num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 8)
-    counts = counts.repartitionByRange(num_partitions, F.col(value_col).asc())
-    counts = counts.withColumn("_pid", F.spark_partition_id())
-    # freeze the physical partitioning (same reasoning as ranked_row_keys)
-    counts = counts.localCheckpoint(eager=True)
-    w = Window.partitionBy("_pid").orderBy(F.col(value_col).asc())
-    counts = counts.withColumn("_run", F.sum("_cnt").over(w))
-    totals = {
-        r["_pid"]: r["t"]
-        for r in counts.groupBy("_pid").agg(F.sum("_cnt").alias("t")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(totals):
-        offsets[pid] = acc
-        acc += totals[pid]
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid INT, _off LONG"
+    out, n = _frozen_offset_pass(
+        counts, [F.col(value_col).asc()], num_partitions, weight="_cnt"
     )
-    ranks = (
-        counts.join(F.broadcast(off_df), "_pid")
-        .withColumn(
-            "r",
-            (F.col("_off") + F.col("_run") - F.col("_cnt") + 1).cast("long"),
-        )
-        .select(value_col, "r")
+    ranks = out.select(
+        value_col, (F.col("_pos") - F.col("_cnt") + 1).cast("long").alias("r")
     )
-    return ranks, acc
+    return ranks, n
 
 
 def grouped_ranked_values(
@@ -193,42 +177,13 @@ def grouped_ranked_values(
     at in-group rank k is deterministic even though tie order is not.
     Returns DataFrame(group_col, value_col, rk LONG) with rk = 1..n_group.
     """
-    rows = df.select(group_col, value_col)
-    if num_partitions is None:
-        num_partitions = max(rows.sparkSession.sparkContext.defaultParallelism, 8)
-    rows = rows.repartitionByRange(
-        num_partitions, F.col(group_col).asc(), F.col(value_col).asc()
+    out, _ = _frozen_offset_pass(
+        df.select(group_col, value_col),
+        [F.col(group_col).asc(), F.col(value_col).asc()],
+        num_partitions,
+        group_cols=(group_col,),
     )
-    rows = rows.withColumn("_pid", F.spark_partition_id())
-    # freeze the physical partitioning (same reasoning as ranked_row_keys):
-    # offsets below are only valid for THIS materialization.
-    rows = rows.localCheckpoint(eager=True)
-    w = Window.partitionBy("_pid", group_col).orderBy(F.col(value_col).asc())
-    rows = rows.withColumn("_rn", F.row_number().over(w))
-    counts = (
-        rows.groupBy("_pid", group_col)
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    )  # one row per (partition, group) — bounded by partitions × groups
-    by_group: dict = {}
-    for r in counts:
-        by_group.setdefault(r[group_col], []).append((r["_pid"], r["cnt"]))
-    off_rows = []
-    for g, lst in by_group.items():
-        acc = 0
-        for pid, cnt in sorted(lst):
-            off_rows.append((pid, g, acc))
-            acc += cnt
-    spark = df.sparkSession
-    gtype = df.schema[group_col].dataType.simpleString()
-    off_df = spark.createDataFrame(
-        off_rows, f"_pid INT, {group_col} {gtype}, _off LONG"
-    )
-    return (
-        rows.join(F.broadcast(off_df), ["_pid", group_col])
-        .withColumn("rk", (F.col("_rn") + F.col("_off")).cast("long"))
-        .select(group_col, value_col, "rk")
-    )
+    return out.select(group_col, value_col, F.col("_pos").alias("rk"))
 
 
 def top_row_keys(cells: DataFrame, n: int, descending: bool = False) -> DataFrame:

@@ -37,6 +37,7 @@ from smoltable_spark.queries_util import (
     scratch_dir,
     seeded_sql,
 )
+from smoltable_spark.session import materialize
 from smoltable_spark.sources.relational import load_table
 
 ANALYTICS_QUERIES: dict = {}
@@ -2955,7 +2956,7 @@ def _ann_ivf_kmeans_oracle(
 #: trained centroids per (session, sf_dir): training is a build-once
 #: artifact (the production pattern — train offline, broadcast to every
 #: query batch), so repeated calls (bench warm runs, driver re-runs)
-#: reuse the localCheckpoint'ed result instead of re-running Lloyd's.
+#: reuse the materialized result instead of re-running Lloyd's.
 _KMEANS_CACHE: dict = {}
 
 #: persisted ANN index paths per (session, sf_dir, kind) — indexes are
@@ -2966,7 +2967,7 @@ _INDEX_PATH_CACHE: dict = {}
 
 def _trained_centroids(spark, sf_dir):
     # keyed by applicationId, not id(spark): CPython reuses ids after GC,
-    # so an id-keyed cache could hand a later session localCheckpoint'ed
+    # so an id-keyed cache could hand a later session materialized
     # DataFrames bound to a stopped session (ADVICE r2)
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _KMEANS_CACHE:
@@ -4045,9 +4046,9 @@ def mm_ahash_dups(spark, sf_dir):
     on a 64-bit key — no pair enumeration anywhere."""
     docs = load_table(spark, sf_dir, "documents")
     media = multimodal.synthesize_media(docs)
-    # materialize once: the hash table feeds both the group rollup and
-    # the join-back — without this the decode+hash Arrow pass runs twice
-    h = multimodal.ahash_media(media).localCheckpoint()
+    # the hash table feeds both the group rollup and the join-back:
+    # run the decode+hash Arrow pass once
+    h = materialize(multimodal.ahash_media(media), "corpus")
     groups = h.groupBy("ahash_hi", "ahash_lo").agg(
         F.count("*").alias("group_n"),
         F.min("media_id").alias("_keeper"),
@@ -5158,8 +5159,7 @@ def rel_pagerank(spark, sf_dir):
     iteration is one join on the rank table (partitioned by node) + one
     partial-aggregated sum — the standard Pregel-style plan. Two
     iterations unroll into one lazy plan; for deep iteration counts,
-    localCheckpoint per round caps plan growth (see
-    similarity.py k-means)."""
+    materializing the ranks per round caps plan growth."""
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     pairs = (
@@ -5178,22 +5178,26 @@ def rel_pagerank(spark, sf_dir):
             (-F.col("l_suppkey").cast("long") - 1).alias("dst"),
         )
         .distinct()
-        # edges feed every iteration: materialize the orders×lineitem
-        # distinct ONCE instead of re-deriving it per unrolled step (the
-        # k-means localCheckpoint pattern, similarity.py)
-        .localCheckpoint()
     )
-    edges = (
-        pairs.union(pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    # both directions of every pair, emitted from ONE read of the
+    # orders×lineitem distinct
+    both = F.explode(
+        F.array(
+            F.struct(F.col("src").alias("src"), F.col("dst").alias("dst")),
+            F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+        )
+    ).alias("e")
+    edges = materialize(
+        pairs.select(both).select("e.src", "e.dst")
         # rank/degree tables are node-sized — NODE count grows with the
         # data (customers+suppliers), so no F.broadcast hints: pin the
-        # edge partitioning on src ONCE (localCheckpoint preserves it)
-        # and let every iteration's rank join reuse it. The node-sized
-        # side shuffles into that partitioning per step (AQE still
-        # broadcasts it while it measures small); the only other
+        # edge partitioning on src ONCE (materialize keeps it) and let
+        # the degree table and every iteration's rank join reuse it. The
+        # node-sized side shuffles into that partitioning per step (AQE
+        # still broadcasts it while it measures small); the only other
         # shuffle is the contribution aggregate on dst.
-        .repartition("src")
-        .localCheckpoint()
+        .repartition("src"),
+        "corpus",
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ranks = deg.select(F.col("src").alias("node"), F.lit(_PR_SCALE).cast("long").alias("r"))
@@ -6129,20 +6133,20 @@ def rel_triangle_count(spark, sf_dir):
     items = li.join(ok, "l_orderkey").select("l_orderkey", "l_partkey")
     a = items.alias("a")
     b = items.alias("b")
-    edges = (
+    edges = materialize(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
             & (F.col("a.l_partkey") < F.col("b.l_partkey")),
         )
         .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-        # edges feed degree, orientation AND the final stats — checkpoint
-        # so the pair self-join runs once, not once per downstream action
-        # (an array collect_set + nested-transform pair-gen was measured
-        # SLOWER here: per-order array allocation beats the hash join only
-        # when orders are wide, and the cap keeps them narrow)
-        .localCheckpoint(eager=True)
+        .distinct(),
+        # edges feed degree, orientation AND the final stats: the pair
+        # self-join runs once (an array collect_set + nested-transform
+        # pair-gen was measured SLOWER here: per-order array allocation
+        # beats the hash join only when orders are wide, and the cap
+        # keeps them narrow)
+        "corpus",
     )
     deg = (
         edges.select(F.col("u").alias("n"))
@@ -6163,13 +6167,16 @@ def rel_triangle_count(spark, sf_dir):
         .withColumn("rkv", F.expr("dv * 4294967296 + v"))
     )
     fwd = F.col("rku") < F.col("rkv")
-    oriented = ranked.select(
-        F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("s"),
-        F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("t_id"),
-        F.greatest(F.col("rku"), F.col("rkv")).alias("t_rk"),
-        # three consumers (both wedge legs + the closing probe): materialize
-        # the degree-join once
-    ).localCheckpoint(eager=True)
+    # three consumers (both wedge legs + the closing probe): run the
+    # degree join once
+    oriented = materialize(
+        ranked.select(
+            F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("s"),
+            F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("t_id"),
+            F.greatest(F.col("rku"), F.col("rkv")).alias("t_rk"),
+        ),
+        "corpus",
+    )
     o1 = oriented.select(
         "s", F.col("t_id").alias("t1_id"), F.col("t_rk").alias("t1_rk")
     )
@@ -6589,9 +6596,10 @@ def rel_rfm_segments(spark, sf_dir):
         ),
         F.count(F.lit(1)).alias("frequency"),
         F.sum(cents(F.col("o_totalprice"))).alias("monetary_cents"),
-        # four consumers (three cutoff jobs + the scoring pass): checkpoint
-        # so the orders scan + rollup runs once, not once per consumer
-    ).localCheckpoint(eager=True)
+    )
+    # four consumers (three cutoff jobs + the scoring pass): the orders
+    # scan + rollup runs once
+    rfm = materialize(rfm, "corpus")
     permilles = (200, 400, 600, 800)
     cuts = {}
     for alias, col in [
@@ -6681,13 +6689,10 @@ def rel_market_basket(spark, sf_dir):
         .filter(F.col("_c") <= _TRI_MAX_ITEMS)
         .select("l_orderkey")
     )
-    it = (
-        li.join(ok, "l_orderkey")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-        # three consumers (N, unigram counts, the pair self-join): one
-        # materialization of the capped basket table
-        .localCheckpoint(eager=True)
+    # three consumers (N, unigram counts, the pair self-join)
+    it = materialize(
+        li.join(ok, "l_orderkey").select("l_orderkey", "l_partkey").distinct(),
+        "corpus",
     )
     nn = it.agg(F.countDistinct("l_orderkey").alias("n_orders"))
     ca = it.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("c"))
@@ -7349,8 +7354,9 @@ _CLF_CACHE: dict = {}
 
 def _train_quality_clf(spark, sf_dir):
     """Train the linear quality model (see pipeline_quality_classifier)
-    and cache (checkpointed feature table incl. doc_id/source, doc
-    count, weights) per session."""
+    and cache (materialized feature table incl. doc_id/source, doc
+    count, weights) per session: the count, every gradient step and the
+    callers' evaluations read the feature table."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key in _CLF_CACHE:
         return _CLF_CACHE[key]
@@ -7363,7 +7369,8 @@ def _train_quality_clf(spark, sf_dir):
         ),
         text.stopword_permille(F.col("text")).alias("f2"),
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-    ).localCheckpoint(eager=True)
+    )
+    feats = materialize(feats, "corpus")
     n = feats.count()
     w = [0.0, 0.0, 0.0]
     for _ in range(_CLF_STEPS):
@@ -7635,13 +7642,11 @@ def rel_chisq_drift(spark, sf_dir):
         "event_type",
         F.when(F.col("ts") >= F.col("m"), F.lit(1)).otherwise(F.lit(0)).alias("late"),
     )
-    # cells is tiny (|types| × 2) but feeds the grid, both marginals and
-    # the dense join — materialize once instead of re-running the corpus
-    # count per consumer
-    cells = (
-        lab.groupBy("event_type", "late")
-        .agg(F.count(F.lit(1)).alias("o"))
-        .localCheckpoint(eager=True)
+    # cells (|types| × 2) feeds the grid, both marginals and the dense
+    # join: the corpus count runs once
+    cells = materialize(
+        lab.groupBy("event_type", "late").agg(F.count(F.lit(1)).alias("o")),
+        "bounded",
     )
     # type universe from the aggregated cells, NOT a third corpus scan
     grid = (
@@ -8204,8 +8209,8 @@ def rel_kcore(spark, sf_dir):
 
     Scale: per round, one map-side-combining degree count plus two
     semi-joins of the edge list against the ≤|nodes| surviving set —
-    edges localCheckpoint'ed per round so lineage stays flat (the
-    PageRank pattern); per-round scalars are the only driver traffic."""
+    edges materialized per round so lineage stays flat (the PageRank
+    pattern); per-round scalars are the only driver traffic."""
     li = load_table(spark, sf_dir, "lineitem")
     ok = (
         li.groupBy("l_orderkey")
@@ -8215,15 +8220,16 @@ def rel_kcore(spark, sf_dir):
     )
     items = li.join(ok, "l_orderkey").select("l_orderkey", "l_partkey")
     a, b = items.alias("a"), items.alias("b")
-    edges = (
+    # read by the node count, the edge count and the first peel round
+    edges = materialize(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
             & (F.col("a.l_partkey") < F.col("b.l_partkey")),
         )
         .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "corpus",
     )
     n0 = (
         edges.select(F.col("u").alias("n"))
@@ -8233,26 +8239,24 @@ def rel_kcore(spark, sf_dir):
     )
     traj = [(0, n0, edges.count())]
     for r in range(1, _KCORE_ROUNDS + 1):
-        # checkpoint the surviving-node set BEFORE it fans out (r13,
-        # guide §1.2): `keep` feeds both semi-joins of the edge filter
-        # AND the n_nodes scalar — un-checkpointed, the degree
-        # aggregation subtree ran once inside the edges-checkpoint job
-        # and AGAIN for keep.count(), a full extra pass over the edge
-        # list per peel round
-        keep = (
+        # `keep` feeds both semi-joins of the edge filter AND the
+        # n_nodes scalar; unmaterialized, the degree aggregation ran once
+        # inside the edges job and again for keep.count()
+        keep = materialize(
             edges.select(F.col("u").alias("n"))
             .unionByName(edges.select(F.col("v").alias("n")))
             .groupBy("n")
             .agg(F.count(F.lit(1)).alias("d"))
             .filter(F.col("d") >= _KCORE_K)
-            .select("n")
-            .localCheckpoint(eager=True)
+            .select("n"),
+            "corpus",
         )
-        edges = (
+        # read by the edge count and the next peel round
+        edges = materialize(
             edges.join(keep.withColumnRenamed("n", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("n", "v"), "v", "left_semi")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
+            .select("u", "v"),
+            "corpus",
         )
         traj.append((r, keep.count(), edges.count()))
         if traj[-1][1:] == traj[-2][1:]:

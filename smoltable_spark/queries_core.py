@@ -42,6 +42,7 @@ from smoltable_spark.queries_util import (
     scratch_dir,
     slim,
 )
+from smoltable_spark.session import materialize
 from smoltable_spark.sources.relational import (
     events_cells,
     lineitem_cells,
@@ -1349,13 +1350,12 @@ def wc_merge_upsert(spark, sf_dir):
             "row_key", "family", "qualifier", F.col("v_f64").alias("_cur")
         )
     )
-    # materialize the classification ONCE: the three class counts, the
-    # batch size and the append all consume the same join — without the
-    # checkpoint each action would re-scan the store and re-run the
-    # latest-version window
-    classed = batch.join(
-        visible, ["row_key", "family", "qualifier"], "left"
-    ).localCheckpoint(eager=True)
+    # the three class counts, the batch size and the append all consume
+    # the classification join: the store scan and latest-version window
+    # run once
+    classed = materialize(
+        batch.join(visible, ["row_key", "family", "qualifier"], "left"), "corpus"
+    )
     ins = F.col("_cur").isNull()
     upd = F.col("_cur").isNotNull() & (F.col("v_f64") != F.col("_cur"))
     noop = F.col("_cur").isNotNull() & (F.col("v_f64") == F.col("_cur"))

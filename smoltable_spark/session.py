@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for the engine.
+"""SparkSession factory tuned for the engine, and the one materialization
+policy.
 
 Local mode is a test stand-in for a multi-executor cluster; every config
 here is chosen to behave sanely at both scales:
@@ -8,14 +9,38 @@ here is chosen to behave sanely at both scales:
 - shuffle partitions sized to cores locally; on a real cluster this is
   overridden by AQE's coalescing from the 2000-partition default.
 - Arrow enabled for the few pandas-UDF paths (similarity / multimodal).
+
+Materialization. An intermediate that several consumers read is computed
+once through :func:`materialize`; nothing else in the package calls
+``localCheckpoint``, ``checkpoint``, ``persist``, ``cache`` or
+``unpersist``. The caller names the intermediate's scale:
+
+- ``"corpus"``: the row count grows with an input table or a store
+  snapshot (per-doc signatures, graph edges, a folded store). It takes a
+  reliable, eager ``checkpoint``: the blocks live in the context's
+  checkpoint dir, so losing an executor re-reads them instead of failing
+  the job.
+- ``"bounded"``: a constant, a micro-batch, a vocabulary, a centroid or
+  partition count, or a caller-bounded key set caps it. It takes
+  ``localCheckpoint`` (executor-local blocks), eager by default; a lazy
+  one materializes inside the next action's own job.
+
+Both forms truncate lineage, so a checkpointed frame re-plans as an RDD
+scan. The checkpoint dir is set on first use to a scratch dir (see
+``queries_util.scratch_dir``; ``$SPARK_GRAFT_SCRATCH`` moves it) unless the
+context already has one, so a deployment points it at shared storage by
+calling ``setCheckpointDir`` first. Checkpoint files of garbage-collected
+frames are deleted by ``spark.cleaner.referenceTracking.cleanCheckpoints``,
+and local blocks by the context cleaner, so no caller unpersists.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
+from smoltable_spark.queries_util import scratch_dir
 
 def get_spark(
     app_name: str = "smoltable_spark",
@@ -40,9 +65,6 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # reliable checkpoints (unbounded dedup intermediates, r14) are
-        # reclaimed once their frame is GC'd, so long-lived sessions
-        # don't accumulate checkpoint files in the scratch dir
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in (extra_conf or {}).items():
@@ -50,3 +72,21 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def materialize(df: DataFrame, scale: str, *, eager: bool = True) -> DataFrame:
+    """Compute ``df`` once for several consumers under the module's
+    policy: ``scale="bounded"`` is a ``localCheckpoint`` (lazy when
+    ``eager=False``), ``scale="corpus"`` an eager reliable
+    ``checkpoint``."""
+    if scale == "bounded":
+        return df.localCheckpoint(eager=eager)
+    if scale != "corpus":
+        raise ValueError(f"scale must be 'bounded' or 'corpus', got {scale!r}")
+    if not eager:
+        # a lazy reliable checkpoint recomputes its input in a second job
+        raise ValueError("corpus-scale materialization is always eager")
+    sc = df.sparkSession.sparkContext
+    if sc.getCheckpointDir() is None:
+        sc.setCheckpointDir(scratch_dir("smoltable_ckpt_"))
+    return df.checkpoint(eager=True)

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from smoltable_spark.functions.layout import morton2, zorder_covering
 from smoltable_spark.schema import CELL_COLUMNS
+from smoltable_spark.session import materialize
 from smoltable_spark.sources.store import CellStore
 from smoltable_spark.sources.store_fs import publish_text
 
@@ -405,28 +406,13 @@ class RangeZorderCellStore(ZorderCellStore):
         n = self.current_version()
         if n == 0 or self._kind(n) == "base":
             return n
-        from pyspark import StorageLevel
-
-        # r14 (guide §1.2/§5): the folded snapshot feeds TWO passes —
-        # the boundary percentile and the bucketed rewrite — and
-        # unmaterialized it executed the whole LSM fold (read every
-        # leg + the shadowing window's full shuffle) twice per compact.
-        # Snapshot-scale data takes the fault-tolerant persist form
-        # (lineage retained: an executor loss recomputes lost blocks);
-        # the percentile collect is the materializing action, the
-        # rewrite reads the cached blocks, and the pin is released
-        # before returning.
-        cells = (
-            self.read().select(*CELL_COLUMNS)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            self._write_boundaries(cells, at_version=n + 1)
-            # fold input comes from read() → coordinate-unique by contract
-            return self.write(cells, num_range_partitions,
-                              assume_unique_coords=True)
-        finally:
-            cells.unpersist()
+        # the folded snapshot feeds the boundary percentile and the
+        # bucketed rewrite: the LSM fold (every leg + the shadowing
+        # window's shuffle) runs once
+        cells = materialize(self.read().select(*CELL_COLUMNS), "corpus")
+        self._write_boundaries(cells, at_version=n + 1)
+        # fold input comes from read() → coordinate-unique by contract
+        return self.write(cells, num_range_partitions, assume_unique_coords=True)
 
     # -- range reads ---------------------------------------------------------
 

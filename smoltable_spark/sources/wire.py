@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from smoltable_spark.session import materialize
+
 #: struct of every typed-value variant the reference's CellValue carries
 #: (exactly one is non-null per cell, like the serde enum)
 _VALUE_STRUCT = (
@@ -155,11 +157,9 @@ def cells_from_json_wire(
     )
     if strict:
         # reference 400 parity: whole batch rejected on any malformed
-        # cell or unparseable body. Materialize the parsed cells ONCE
-        # (localCheckpoint) so the gate's count and the returned
-        # DataFrame's consumption don't each re-scan + re-parse every
-        # body.
-        typed = typed.localCheckpoint()
+        # cell or unparseable body. The gate's count and the returned
+        # frame both read the parsed cells: parse every body once.
+        typed = materialize(typed, "corpus")
         bad = typed.filter(F.col("_bad") | F.col("_parse_fail")).count()
         if bad:
             raise ValueError(

@@ -39,6 +39,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from smoltable_spark.session import materialize
 from smoltable_spark.sources.store_fs import GenerationPointer, store_fs_for
 
 from smoltable_spark.functions.dedup_incremental import (
@@ -177,10 +178,13 @@ class MinhashAdmitter:
             return
         # one shingle pass per batch: the batch index feeds BOTH the
         # admit decision and the rows appended for admitted docs
-        bidx = lsh_index(
-            batch_df, self.text_col, self.id_col, self.num_hashes,
-            self.bands, self.k,
-        ).localCheckpoint(eager=True)
+        bidx = materialize(
+            lsh_index(
+                batch_df, self.text_col, self.id_col, self.num_hashes,
+                self.bands, self.k,
+            ),
+            "bounded",
+        )
         idx = self.index()
         if idx is None:
             idx = bidx.limit(0)  # empty index, same frozen hash family
@@ -196,7 +200,7 @@ class MinhashAdmitter:
             self.max_bucket_df,
             batch_index=bidx,
         ).withColumn("batch_no", F.lit(batch_id).cast("int"))
-        res = res.localCheckpoint(eager=True)  # decisions + admit filter
+        res = materialize(res, "bounded")  # decisions + admit filter
         res.write.mode("overwrite").parquet(
             os.path.join(self.path, "decisions", f"b={batch_id}")
         )

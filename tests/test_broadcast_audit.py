@@ -117,19 +117,10 @@ BOUNDED_BROADCASTS: dict[tuple[str, str], str] = {
     ("functions/text.py", "oov_rate_df"):
         "k-cut: vocabulary is LIMIT vocab_size after the corpus "
         "rollup",
-    ("operators/rank.py", "grouped_ranked_values"):
+    ("operators/rank.py", "_frozen_offset_pass"):
         "per-(partition, group) offset table: |partitions| x |groups| "
         "rows, partition count is a cluster config, groups bounded by "
-        "the grouping dimension",
-    ("operators/rank.py", "ranked_row_keys"):
-        "per-partition offset table: one row per shuffle partition "
-        "(cluster config, not data size)",
-    ("operators/rank.py", "ranked_rows"):
-        "per-partition offset table: one row per shuffle partition "
-        "(cluster config, not data size)",
-    ("operators/rank.py", "value_min_ranks"):
-        "per-partition offset table: one row per shuffle partition "
-        "(cluster config, not data size)",
+        "the grouping dimension (one group for the ungrouped ranks)",
     ("operators/read.py", "multi_get_cells"):
         "contract: the user-supplied multi_get key list (a point-read "
         "API, bounded batch)",

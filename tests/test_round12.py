@@ -330,17 +330,24 @@ def test_bpe_sampled_training_is_seeded_and_valid(spark):
     assert len(a) == 4 and all(row[3] == row[1] + row[2] for row in a)
 
 
-def test_bpe_checkpoint_interval_does_not_change_merges(spark, monkeypatch):
-    """Crossing the lineage-truncation boundary must be invisible in the
-    learned merge table: train past the interval with the default, then
-    with an aggressive interval of 2 — identical output."""
+def test_bpe_merge_table_is_pinned(spark):
+    """Every round's state is a lineage-truncating materialization; the
+    learned merge table must be exactly the one the per-round persist
+    trainer produced (ties at 36 break bytewise on lhs, then rhs)."""
     from smoltable_spark.functions import text
 
     docs = _bpe_docs(spark)
-    deep = [tuple(r) for r in text.bpe_train(docs, n_merges=8).collect()]
-    monkeypatch.setattr(text, "_BPE_CHECKPOINT_EVERY", 2)
-    often = [tuple(r) for r in text.bpe_train(docs, n_merges=8).collect()]
-    assert deep == often
+    got = [tuple(r) for r in text.bpe_train(docs, n_merges=8).collect()]
+    assert got == [
+        (1, "a", "n", "an", 156),
+        (2, "an", "a", "ana", 84),
+        (3, "b", "an", "ban", 72),
+        (4, "ban", "ana", "banana", 36),
+        (5, "ban", "d", "band", 36),
+        (6, "band", "ana", "bandana", 36),
+        (7, "a", "b", "ab", 12),
+        (8, "ab", "ana", "abana", 12),
+    ]
 
 
 def test_migrate_minor_legs_gates_on_rename_unsafe(spark, tmp_path):

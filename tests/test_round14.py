@@ -9,8 +9,6 @@ the optimization round.
   corpus side for every quantizer.
 - ``_probe_ranking`` warns loudly when a caller violates the bounded
   coarse-quantizer regime its folded-literal form is designed for.
-- ``_materialize_unbounded`` (dedup) persists WITH lineage and keeps at
-  most one live CacheManager entry across repeated operator calls.
 """
 
 from __future__ import annotations
@@ -104,28 +102,3 @@ def test_probe_ranking_warns_above_centroid_bound(spark, monkeypatch):
         [(1, [1, 1], 2)], "vec_id long, q array<bigint>, nrm2 long"
     ).select(F.element_at(col, 1).getField("cid").alias("c"))
     assert df.collect()[0]["c"] in (0, 1, 2)
-
-
-# ---------------------------------------------------------------------------
-# fault-tolerant unbounded materialization (ADVICE r13 medium: dedup)
-
-
-def test_materialize_unbounded_reliable_checkpoint(spark):
-    from smoltable_spark.functions import dedup
-
-    a = dedup._materialize_unbounded(
-        spark.range(100).withColumn("x", F.col("id") * 2)
-    )
-    # a RELIABLE checkpoint (shared-storage dir, survives executor
-    # loss), not a localCheckpoint: the context's checkpoint dir is set
-    assert spark.sparkContext.getCheckpointDir() is not None
-    # and the plan is TRUNCATED — downstream consumers re-analyze an
-    # RDD scan, not the whole upstream pipeline per action
-    assert "LogicalRDD" in a._jdf.queryExecution().optimizedPlan().toString()
-    assert a.count() == 100
-    assert a.filter(F.col("x") >= 100).count() == 50
-    # the session reclaims checkpoints of GC'd frames in long sessions
-    assert (
-        spark.conf.get("spark.cleaner.referenceTracking.cleanCheckpoints")
-        == "true"
-    )
