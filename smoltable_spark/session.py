@@ -31,12 +31,17 @@ scan. The checkpoint dir is set on first use to a scratch dir (see
 context already has one, so a deployment points it at shared storage by
 calling ``setCheckpointDir`` first. Checkpoint files of garbage-collected
 frames are deleted by ``spark.cleaner.referenceTracking.cleanCheckpoints``,
-and local blocks by the context cleaner, so no caller unpersists.
+and local blocks by the context cleaner, so no caller unpersists. Spark
+leaves the rest behind when the context stops, so a scratch checkpoint
+dir this module created is removed when the process exits (a dir the
+caller set is never touched).
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -88,5 +93,7 @@ def materialize(df: DataFrame, scale: str, *, eager: bool = True) -> DataFrame:
         raise ValueError("corpus-scale materialization is always eager")
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is None:
-        sc.setCheckpointDir(scratch_dir("smoltable_ckpt_"))
+        ckpt = scratch_dir("smoltable_ckpt_")
+        atexit.register(shutil.rmtree, ckpt, True)
+        sc.setCheckpointDir(ckpt)
     return df.checkpoint(eager=True)

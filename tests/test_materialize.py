@@ -101,3 +101,28 @@ def test_corpus_keeps_a_preset_checkpoint_dir(spark, tmp_path):
     finally:
         if prev is not None:
             sc.setCheckpointDir(prev)
+
+
+def test_scratch_checkpoint_dir_removed_at_exit(tmp_path):
+    """Spark keeps reliable checkpoint files when its context stops; the
+    scratch dir ``materialize`` created goes away with the process."""
+    import subprocess
+    import sys
+
+    script = (
+        "from smoltable_spark.session import get_spark, materialize\n"
+        "spark = get_spark('ckpt_exit', cpus=1, shuffle_partitions=1)\n"
+        "materialize(spark.range(10), 'corpus').count()\n"
+        "print(spark.sparkContext.getCheckpointDir())\n"
+        "spark.stop()\n"
+    )
+    repo = os.path.dirname(PKG_DIR)
+    env = {**os.environ, "SPARK_GRAFT_SCRATCH": str(tmp_path),
+           "PYTHONPATH": repo}
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, env=env,
+        capture_output=True, text=True, timeout=300, check=True,
+    ).stdout
+    ckpt = out.strip().splitlines()[-1]
+    assert ckpt.startswith(("file:" + str(tmp_path), str(tmp_path))), ckpt
+    assert not [p for p in tmp_path.iterdir() if p.name.startswith("smoltable_ckpt_")]
