@@ -89,16 +89,6 @@ def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 # ---------------------------------------------------------------------------
 # shingles
 
-def shingles(col, k: int = 3):
-    """Distinct k-token shingles (space-joined) of a document."""
-    toks = tokens(col)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-    )
-
-
 def doc_shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3) -> DataFrame:
     """Exploded (id, shingle) pairs — the input to MinHash and Jaccard.
 
@@ -1011,15 +1001,6 @@ def simhash_near_duplicates(
         .distinct()
     )
     return pairs
-
-
-def simhash_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 60) -> DataFrame:
-    """Documents sharing a SimHash value (candidate near-dup clusters)."""
-    return (
-        simhash_df(docs, text_col, id_col, bits)
-        .groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("keeper_id"))
-    )
 
 
 def repeated_ngrams(

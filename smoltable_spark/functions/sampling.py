@@ -32,12 +32,6 @@ def keep_fraction(seed: str, ident: Column, rate: float) -> Column:
     return bucket < int(round(rate * RATE_MOD))
 
 
-def keep_fraction_sql(seed: str, ident_expr: str, rate: float) -> str:
-    """DuckDB rendering of :func:`keep_fraction` (same bits)."""
-    h = md5_long_sql(f"concat('{seed}|', {ident_expr})")
-    return f"({h} % {RATE_MOD}) < {int(round(rate * RATE_MOD))}"
-
-
 def stratified_sample(
     df: DataFrame,
     strata_col: str,

@@ -230,24 +230,6 @@ def fingerprint(col: Column) -> Column:
     return F.md5(F.lower(F.trim(col)))
 
 
-def rolling_fingerprint(col: Column, window: int = 8) -> Column:
-    """Winnowing-style rolling fingerprint: minimum 60-bit hash over all
-    ``window``-token shingles — robust to local edits (the min-shingle
-    survives unless the edit touches it). Pure array expressions.
-
-    NOTE: embeds the tokenizer inside the transform lambda — fine for
-    one-off expressions; for table-scale scans use
-    ``rolling_fingerprint_df`` which binds tokens as a column first
-    (Catalyst does not CSE into higher-order lambdas).
-    """
-    toks = tokens(col)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - (window - 1), F.lit(1)))
-    shingle_at = lambda i: F.concat_ws(" ", F.slice(toks, i, window))  # noqa: E731
-    hashes = F.transform(idx, lambda i: md5_long(shingle_at(i)))
-    return F.array_min(hashes)
-
-
 def rolling_fingerprint_df(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", window: int = 8
 ) -> DataFrame:

@@ -59,8 +59,3 @@ def approximate_row_count(cells: DataFrame, family_count: int) -> DataFrame:
         .alias("approx_row_count"),
         F.count(F.lit(1)).alias("cell_count"),
     )
-
-
-def approximate_row_count_hll(cells: DataFrame, rsd: float = 0.05) -> DataFrame:
-    """Idiomatic alternative: HyperLogLog distinct row keys (not oracle-exact)."""
-    return cells.agg(F.approx_count_distinct("row_key", rsd).alias("approx_row_count"))

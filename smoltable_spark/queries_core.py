@@ -1242,7 +1242,7 @@ def _orders_value_index(spark, sf_dir):
             tempfile.gettempdir(),
             "smoltable_vidx_" + re.sub(r"\W", "_", sf_dir) + f"_v{key[1]}",
         )
-        if vindex.indexed_store_version(path) != store.current_version():
+        if vindex.indexed_store_version(spark, path) != store.current_version():
             vindex.build_value_index(store, path, families=["o"])
         _VIDX_CACHE[key] = path
     return store, _VIDX_CACHE[key]

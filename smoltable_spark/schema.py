@@ -89,31 +89,3 @@ def value_as_string():
         .when(F.col("vtype") == "f32", F.col("v_f32").cast("string"))
         .when(F.col("vtype") == "f64", F.col("v_f64").cast("string"))
     )
-
-
-def value_as_double():
-    """Numeric view of a cell value (NULL for non-numeric types)."""
-    return (
-        F.when(F.col("vtype") == "byte", F.col("v_byte").cast("double"))
-        .when(F.col("vtype") == "i32", F.col("v_i32").cast("double"))
-        .when(F.col("vtype") == "i64", F.col("v_i64").cast("double"))
-        .when(F.col("vtype") == "f32", F.col("v_f32").cast("double"))
-        .when(F.col("vtype") == "f64", F.col("v_f64").cast("double"))
-    )
-
-
-def empty_value_columns(vtype: str):
-    """Dict of v_* columns with all but the tagged one NULL-typed."""
-    out = {}
-    for tag, col in VTYPE_COLUMNS.items():
-        dtype = dict(
-            v_str="string",
-            v_bool="boolean",
-            v_byte="short",
-            v_i32="int",
-            v_i64="long",
-            v_f32="float",
-            v_f64="double",
-        )[col]
-        out[col] = F.lit(None).cast(dtype)
-    return out

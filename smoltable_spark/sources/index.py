@@ -16,7 +16,9 @@ and served with partition pruning:
   ``val``, so the ``val = X`` predicate reaches parquet as a pushed
   filter with min/max page skipping — a disk-seek lookup, not a scan;
 - a sidecar records the store version indexed, so readers can detect a
-  stale index (the store has moved on) and refuse or rebuild.
+  stale index (the store has moved on) and refuse or rebuild. It is
+  published and read through the storage-metadata adapter
+  (``store_fs.py``), so the index may live on any URI Spark can write.
 
 At 100 TB the index is a fraction of the table (three short strings +
 key per cell) and the lookup cost is O(matching rows), independent of
@@ -31,6 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from smoltable_spark.schema import value_as_string
+from smoltable_spark.sources.store_fs import publish_text, store_fs_for
 
 _META_FILE = "_INDEX_META.json"
 
@@ -71,17 +74,20 @@ def build_value_index(
         .partitionBy("family", "qualifier")
         .parquet(path)
     )
-    with open(os.path.join(path, _META_FILE), "w") as fh:
-        json.dump({"store_version": version}, fh)
+    publish_text(
+        store_fs_for(store.spark, path),
+        os.path.join(path, _META_FILE),
+        json.dumps({"store_version": version}),
+    )
     return version
 
 
-def indexed_store_version(path: str) -> int | None:
+def indexed_store_version(spark: SparkSession, path: str) -> int | None:
+    fs = store_fs_for(spark, path)
     p = os.path.join(path, _META_FILE)
-    if not os.path.exists(p):
+    if not fs.exists(p):
         return None
-    with open(p) as fh:
-        return json.load(fh).get("store_version")
+    return json.loads(fs.read_text(p)).get("store_version")
 
 
 def lookup_rows_by_value(
@@ -100,7 +106,7 @@ def lookup_rows_by_value(
     Distinct because multiple timestamped versions of a cell index the
     same (val, row_key)."""
     if expect_store_version is not None:
-        got = indexed_store_version(index_path)
+        got = indexed_store_version(spark, index_path)
         if got != expect_store_version:
             raise ValueError(
                 f"value index at {index_path} was built for store version "

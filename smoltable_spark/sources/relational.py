@@ -368,11 +368,3 @@ def unmelt(cells: DataFrame, columns: dict[str, tuple[str, str]]) -> DataFrame:
         )
         aggs.append(F.max(picked).getField("v").alias(out))
     return cells.groupBy("row_key").agg(*aggs)
-
-
-def all_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Union of the melted tables — a multi-family cells table."""
-    out = orders_cells(spark, sf_dir)
-    out = out.unionByName(lineitem_cells(spark, sf_dir))
-    out = out.unionByName(events_cells(spark, sf_dir))
-    return out

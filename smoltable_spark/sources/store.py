@@ -51,6 +51,16 @@ the manifest, falls back to reading markers. Kind and folds are
 immutable per version number (numbers are never reused), so the cache
 needs no invalidation.
 
+**One pointer read + one listing per operation.** Every operation
+(``read``, ``read_changes``, a commit, ``vacuum``, ``migrate_minor_legs``,
+the stats) starts with ``current_version()``: the pointer resolve lists
+the store root and reads the pointer, and that one listing becomes the
+handle's version → leg-dir map (``_leg_dirs``). Leg-dir names, the
+chain's base and every missing-leg check are answered from the map — no
+per-leg existence probe, which on a URI store would be one RPC each. A
+mutation on the handle (a commit, ``vacuum``, ``migrate_minor_legs``)
+updates the entries it changed.
+
 **Writer concurrency.** Mutations assume a SINGLE writer per store, like
 LSM memtable flushes: two writers can interleave staging under the same
 ``v=<n>`` dir, or a vacuum listing with a commit, in ways no pointer
@@ -107,6 +117,10 @@ class CellStore:
         # read (see module docstring — kind/folds are immutable per
         # version number, so entries never need invalidation)
         self._chain_cache: dict[int, tuple[str, tuple[int, int] | None]] = {}
+        # the store root as the last pointer resolve listed it, and the
+        # leg dirs in it: version -> dir name (see module docstring)
+        self._listing: list[str] = []
+        self._leg_dirs: dict[int, str] = {}
 
     # -- manifest (column families / locality groups) ----------------------
 
@@ -140,12 +154,21 @@ class CellStore:
         """The committed version (0 before the first commit). Re-resolves
         every call — a long-lived handle (streaming CDC polls this per
         batch) must observe other writers' commits — and refreshes the
-        chain-manifest cache."""
-        n, payload = self._pointer.resolve()
+        chain-manifest cache and the leg-dir map from the listing the
+        resolve took."""
+        n, payload, names = self._pointer.resolve_listed()
         for v, (kind, folds) in (payload or {}).get("legs", {}).items():
             self._chain_cache[int(v)] = (
                 str(kind), tuple(folds) if folds is not None else None
             )
+        legs = self._leg_map(names)
+        if n and n not in legs:
+            # the newest leg's dir appeared after the listing (a commit
+            # landed between the listing and the pointer read): every leg
+            # dir of version <= n exists by now
+            names = self._fs.listdir(self.path)
+            legs = self._leg_map(names)
+        self._listing, self._leg_dirs = names, legs
         return n
 
     def _commit_version(self, n: int) -> None:
@@ -178,7 +201,10 @@ class CellStore:
     #: ``v=*/lg=*/*.parquet`` delta glob — the streaming CDC source never
     #: re-consumes re-laid-out cells. Explicit-path reads
     #: (``_merge_legs``) see the dir fine: the hidden-name filter applies
-    #: to listed CHILDREN, not a given root.
+    #: to listed CHILDREN, not a given root — so the ``All paths were
+    #: ignored`` WARN Spark logs for such a root is benign. Both name
+    #: forms are recognised from the one root listing an operation takes
+    #: (``_leg_map``); nothing probes for either.
     _MINOR_DIR = ".v={n}.minor"
 
     @staticmethod
@@ -197,18 +223,22 @@ class CellStore:
                 return None
         return None
 
+    @classmethod
+    def _leg_map(cls, names: list[str]) -> dict[int, str]:
+        """Version -> leg dir name among a root listing. The plain name
+        wins when both forms exist, so legacy minor legs committed
+        before the dot naming keep resolving to their plain dirs."""
+        legs: dict[int, str] = {}
+        for name in names:
+            v = cls._dirname_version(name)
+            if v is not None and (v not in legs or name.startswith("v=")):
+                legs[v] = name
+        return legs
+
     def _version_dir(self, n: int) -> str:
-        """Resolve a version's leg dir: the plain name when present (or
-        when nothing exists yet — new base/delta commits), else the
-        dot-prefixed minor name. Legacy minor legs committed before the
-        dot naming keep their plain dirs and still resolve here."""
-        plain = os.path.join(self.path, f"v={n}")
-        if self._fs.isdir(plain):
-            return plain
-        dotted = os.path.join(self.path, self._MINOR_DIR.format(n=n))
-        if self._fs.isdir(dotted):
-            return dotted
-        return plain
+        """A version's leg dir as the last listing named it, else the
+        plain name (the name a new base/delta commit takes)."""
+        return os.path.join(self.path, self._leg_dirs.get(n, f"v={n}"))
 
     _KIND_FILE = "_KIND"
 
@@ -222,29 +252,12 @@ class CellStore:
         return self._fs.read_text(p).strip()
 
     def _base_of(self, n: int) -> int:
-        """Latest base version ≤ n (0 when the chain starts with deltas).
-
-        Manifest fast path: walk CACHED
-        kinds downward with zero filesystem calls; only the candidate
-        base pays one isdir probe (non-base versions can never be
-        returned, so skipping their existence probes changes nothing).
-        A cache gap, or a cached base whose dir is gone (out-of-contract
-        vacuum), resumes the original per-version marker walk from that
-        point — identical semantics, just fewer RPCs on the URI path."""
-        v = n
-        while v >= 1:
-            kf = self._chain_cache.get(v)
-            if kf is None:
-                break  # cache gap: marker walk takes over from v
-            if kf[0] == "base":
-                if self._fs.isdir(self._version_dir(v)):
-                    return v
-                v -= 1
-                break  # missing base dir: keep scanning below it
-            v -= 1
-        for u in range(v, 0, -1):
-            if self._fs.isdir(self._version_dir(u)) and self._kind(u) == "base":
-                return u
+        """Latest listed base version ≤ n (0 when the chain starts with
+        deltas): one downward walk over the listed legs, kinds from the
+        chain cache (a marker read only for a version it lacks)."""
+        for v in range(n, 0, -1):
+            if v in self._leg_dirs and self._kind(v) == "base":
+                return v
         return 0
 
     _FOLDS_FILE = "_FOLDS"
@@ -531,11 +544,8 @@ class CellStore:
         n = self.current_version() + 1
         # kind picks the dir name at commit time: minor legs get the
         # dot-prefixed stream-invisible form (see _MINOR_DIR)
-        d = (
-            os.path.join(self.path, self._MINOR_DIR.format(n=n))
-            if kind == "minor"
-            else os.path.join(self.path, f"v={n}")
-        )
+        leg = self._MINOR_DIR.format(n=n) if kind == "minor" else f"v={n}"
+        d = os.path.join(self.path, leg)
         w = df.write.mode("overwrite")
         opts = dict(self.WRITE_OPTIONS)
         if kind != "base":
@@ -556,6 +566,7 @@ class CellStore:
             folds = (int(fd["from"]), int(fd["through"]))
         self._chain_cache[n] = (kind, folds)
         self._commit_version(n)  # pointer publish = the commit point
+        self._leg_dirs[n] = leg
         return n
 
     def append(
@@ -690,7 +701,7 @@ class CellStore:
         schemes a crash mid-leg can leave both dirs — a torn copy, which
         the both-exist check refuses with recovery guidance (the plain
         dir is the source of truth). Batch readers are unaffected
-        (``_version_dir`` resolves both names)."""
+        (the leg-dir map resolves both names)."""
         if not getattr(self._fs, "atomic_rename", True) and not allow_non_atomic:
             raise IOError(
                 f"minor-leg migration refused on rename-unsafe scheme "
@@ -702,15 +713,14 @@ class CellStore:
                 "rename-atomic filesystem (hdfs/local/viewfs)."
             )
         migrated = 0
-        for v in range(1, self.current_version() + 1):
-            plain = os.path.join(self.path, f"v={v}")
-            kind_file = os.path.join(plain, self._KIND_FILE)
-            if not (self._fs.isdir(plain) and self._fs.exists(kind_file)):
+        cur = self.current_version()
+        for v, name in sorted(self._leg_dirs.items()):
+            if v > cur or not name.startswith("v=") or self._kind(v) != "minor":
                 continue
-            if self._fs.read_text(kind_file).strip() != "minor":
-                continue
-            dotted = os.path.join(self.path, self._MINOR_DIR.format(n=v))
-            if self._fs.isdir(dotted):
+            plain = os.path.join(self.path, name)
+            dotted_name = self._MINOR_DIR.format(n=v)
+            dotted = os.path.join(self.path, dotted_name)
+            if dotted_name in self._listing:
                 raise IOError(
                     f"minor-leg migration aborted: both {plain} and "
                     f"{dotted} exist for v{v}. On a copy+delete-rename "
@@ -722,6 +732,7 @@ class CellStore:
                     "removing the other"
                 )
             self._fs.rename(plain, dotted)  # atomic per-leg
+            self._leg_dirs[v] = dotted_name
             migrated += 1
         return migrated
 
@@ -732,13 +743,18 @@ class CellStore:
         it. Each leg is its own parquet relation, so predicate pushdown,
         row-group skipping, and lg partition pruning apply per leg.
         """
-        n = self.current_version() if version is None else version
+        cur = self.current_version()
+        return self._read_listed(cur if version is None else version)
+
+    def _read_listed(self, n: int) -> DataFrame:
+        """``read(n)`` against the listing the caller's
+        ``current_version()`` just took."""
         if n == 0:
             raise FileNotFoundError(f"no snapshot in {self.path}")
         # lg keeps the physical sentinel value ('_default' for ''): decoding
         # here would wrap the partition column in a projection and defeat
         # Catalyst partition pruning on lg filters.
-        if not self._fs.isdir(self._version_dir(n)):
+        if n not in self._leg_dirs:
             raise FileNotFoundError(f"version {n} vacuumed from {self.path}")
         legs = self._legs_of(n)
         # Every resolved leg is part of this snapshot's chain; vacuum()
@@ -746,7 +762,7 @@ class CellStore:
         # missing leg means corruption (or an out-of-contract manual
         # delete) — fail loudly instead of silently returning partial
         # data.
-        missing = [v for v in legs if not self._fs.isdir(self._version_dir(v))]
+        missing = [v for v in legs if v not in self._leg_dirs]
         if missing:
             raise FileNotFoundError(
                 f"snapshot chain for v{n} in {self.path} is missing leg dirs "
@@ -794,19 +810,20 @@ class CellStore:
         from the base snapshot instead (the same contract as change-feed
         reads across full-rewrite commits in lakehouse CDF designs).
         """
-        to = self.current_version() if to_version is None else to_version
+        cur = self.current_version()
+        to = cur if to_version is None else to_version
         if since_version > to:
             raise ValueError(f"since_version {since_version} > to_version {to}")
         legs = list(range(since_version + 1, to + 1))
         if not legs:
-            return self.read(to).limit(0)
+            return self._read_listed(to).limit(0)
         rewrites = [
             v
             for v in legs
             # a missing dir is NOT a base rewrite (``_kind`` falls back
             # to "base" for pre-delta layouts): let the minor-resolution
             # and missing-leg checks below name the real condition
-            if self._fs.isdir(self._version_dir(v)) and self._kind(v) == "base"
+            if v in self._leg_dirs and self._kind(v) == "base"
         ]
         if rewrites:
             raise ValueError(
@@ -845,10 +862,8 @@ class CellStore:
                 skip_below = frm  # the fold covers these in-range deltas
                 continue
             # straddles since: the original deltas are the only exact feed
-            originals = list(range(since_version + 1, through + 1))
-            if all(
-                self._fs.isdir(self._version_dir(u)) for u in originals
-            ):
+            originals = range(since_version + 1, through + 1)
+            if all(u in self._leg_dirs for u in originals):
                 continue  # read the originals (they are in `legs` below v)
             raise ValueError(
                 f"change range ({since_version}, {to}] crosses minor "
@@ -857,16 +872,14 @@ class CellStore:
                 "snapshot"
             )
         effective.sort()
-        missing = [
-            v for v in effective if not self._fs.isdir(self._version_dir(v))
-        ]
+        missing = [v for v in effective if v not in self._leg_dirs]
         if missing:
             raise FileNotFoundError(
                 f"change range ({since_version}, {to}] is missing leg dirs "
                 f"{missing}; vacuumed or corrupt"
             )
         if not effective:
-            return self.read(to).limit(0)
+            return self._read_listed(to).limit(0)
         return self._merge_legs(effective)
 
     def read_for_filter(self, column_filter=None, version: int | None = None) -> DataFrame:
@@ -907,23 +920,21 @@ class CellStore:
         needed: set[int] = set()
         for v in range(oldest_kept, cur + 1):
             needed.update(self._legs_of(v))
-        names = self._fs.listdir(self.path)
-        for name in names:
+        for name in self._listing:
             n = self._dirname_version(name)
             if n is not None and n <= cur and n not in needed:
                 self._fs.rmtree(os.path.join(self.path, name))
+                self._leg_dirs.pop(n, None)
         # pointer generations below the retention cutoff — never the
         # max, and a reader that listed before this sweep re-lists
-        self._pointer.sweep(oldest_kept, names)
+        self._pointer.sweep(oldest_kept, self._listing)
 
     # -- stats (S8 parity) -------------------------------------------------
 
     def _chain_dirs(self) -> list[str]:
         n = self.current_version()
         return [
-            self._version_dir(v)
-            for v in self._legs_of(n)
-            if self._fs.isdir(self._version_dir(v))
+            self._version_dir(v) for v in self._legs_of(n) if v in self._leg_dirs
         ]
 
     def approximate_cell_count(self) -> int:

@@ -360,7 +360,8 @@ class GenerationPointer:
       commit; otherwise the owner sweeps (``sweep``).
 
     ``resolve()`` returns ``(n, payload)`` of the newest parsable
-    pointer, ``(0, None)`` when there is none:
+    pointer, ``(0, None)`` when there is none (``resolve_listed()`` also
+    returns the root listing it read):
 
     - both forms are read and the max wins, so a structure can move
       between schemes; a plain file's number is its ``"v"`` (a bare
@@ -431,6 +432,13 @@ class GenerationPointer:
         return self._decode(self._read(self._gen_name(n)))[1]
 
     def resolve(self) -> tuple[int, dict | None]:
+        n, payload, _names = self.resolve_listed()
+        return n, payload
+
+    def resolve_listed(self) -> tuple[int, dict | None, list[str]]:
+        """``resolve()`` plus the names of ``root`` it listed on the way,
+        so an owner that also needs the listing (the CellStore's leg
+        dirs) pays for one listing, not two."""
         for _attempt in range(self.ATTEMPTS):
             names = self.fs.listdir(self.root)
             try:
@@ -441,10 +449,10 @@ class GenerationPointer:
                     if best[1] is not None and g <= best[0]:
                         break
                     try:
-                        return g, self.load(g)
+                        return g, self.load(g), names
                     except ValueError:
                         continue  # torn: pre-commit garbage
-                return best
+                return (*best, names)
             except FileNotFoundError:
                 continue  # vacuum race: re-list
         raise IOError(

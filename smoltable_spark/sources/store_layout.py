@@ -204,25 +204,16 @@ class RangeZorderCellStore(ZorderCellStore):
         return os.path.join(self.path, "_layout_boundaries")
 
     def boundary_versions(self) -> list[int]:
-        """Snapshot versions at which a boundary set takes effect. A
-        pre-versioning sidecar (parquet files directly in the root dir)
-        reads as version 1 — it applied to the whole store."""
-        root = self._boundaries_root
-        if not self._fs.isdir(root):
-            return []
-        vs: set[int] = set()
-        for name in self._fs.listdir(root):
-            if name.startswith("v="):
-                vs.add(int(name.split("=", 1)[1]))
-            elif name.endswith(".parquet"):
-                vs.add(1)
-        return sorted(vs)
+        """Snapshot versions at which a boundary set takes effect (one
+        listing of the sidecar root; [] when it does not exist)."""
+        return sorted(
+            int(name[2:])
+            for name in self._fs.listdir(self._boundaries_root)
+            if name.startswith("v=")
+        )
 
     def _boundaries_dir(self, bv: int) -> str:
-        d = os.path.join(self._boundaries_root, f"v={bv}")
-        if not self._fs.isdir(d) and bv == 1:
-            return self._boundaries_root  # legacy flat sidecar
-        return d
+        return os.path.join(self._boundaries_root, f"v={bv}")
 
     def _valid_boundary_versions(self) -> list[int]:
         """Sidecar versions that actually took effect. A boundary set
@@ -282,22 +273,6 @@ class RangeZorderCellStore(ZorderCellStore):
         )
         return [int(b) for b in (bounds or [])]
 
-    def _migrate_legacy_sidecar(self) -> None:
-        """Move a pre-versioning flat sidecar (parquet files directly in
-        the root) into ``v=1/`` — mixing loose files and ``v=`` subdirs
-        in one dir would break parquet reads of the flat path."""
-        root = self._boundaries_root
-        if not self._fs.isdir(root):
-            return
-        loose = [n for n in self._fs.listdir(root) if not n.startswith("v=")]
-        if not any(n.endswith(".parquet") for n in loose):
-            return
-        v1 = os.path.join(root, "v=1")
-        self._fs.makedirs(v1)
-        for n in loose:
-            self._fs.rename(os.path.join(root, n), os.path.join(v1, n))
-        self._boundaries_cache.pop(1, None)
-
     def _image_version_path(self) -> str:
         return os.path.join(self._boundaries_root, "_IMAGE_VERSION")
 
@@ -311,13 +286,13 @@ class RangeZorderCellStore(ZorderCellStore):
         partitions holding in-range rows. A store with a sidecar but no
         marker predates the marker (= image v1). Fail loudly; full
         ``read()`` scans of the old store remain safe for a rebuild."""
-        if not self._fs.isdir(self._boundaries_root):
-            return
         p = self._image_version_path()
         have = 1
         marker_exists = self._fs.exists(p)
         if marker_exists:
             have = int(self._fs.read_text(p).strip() or 1)
+        elif not self._fs.listdir(self._boundaries_root):
+            return  # no sidecar yet: nothing was laid out under any image
         if have != _KEY_IMAGE_VERSION:
             detail = (
                 f"declares key-image v{have}" if marker_exists else
@@ -335,13 +310,12 @@ class RangeZorderCellStore(ZorderCellStore):
 
     def _write_boundaries(self, cells: DataFrame, at_version: int) -> None:
         self._check_image_version()
-        self._migrate_legacy_sidecar()
         bounds = self._compute_boundaries(cells)
         self._fs.makedirs(self._boundaries_root)
         publish_text(
             self._fs, self._image_version_path(), str(_KEY_IMAGE_VERSION)
         )
-        d = os.path.join(self._boundaries_root, f"v={at_version}")
+        d = self._boundaries_dir(at_version)
         # driver-side pyarrow write: the sidecar is <= 2^bits - 1 rows of
         # metadata — launching a Spark job for it (the previous
         # createDataFrame().coalesce(1).write) serialized through the

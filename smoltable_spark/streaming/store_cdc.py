@@ -280,24 +280,23 @@ class StoreChangeRollup:
 
         Cost per call (VERDICT r9 ask #7): the kind walk is cached
         behind a high-water mark — versions once classified are never
-        re-read, so each trigger pays O(new commits) ``_kind`` reads
-        plus O(known minors) existence probes, not O(chain)."""
+        re-read, so each trigger pays O(new commits) ``_kind`` reads;
+        which leg dirs exist, and under which name, comes from the one
+        root listing ``current_version()`` takes (the store's leg-dir
+        map), not from a probe per leg."""
         if self.store is None:
             return []
         cur = self.store.current_version()
+        legs = self.store._leg_dirs
         hwm = max(self._kind_hwm, self._start_version)
         for v in range(hwm + 1, cur + 1):
-            d = self.store._version_dir(v)
-            # probe through the STORE's filesystem adapter (round 11):
-            # the watched store may live on an object store even though
-            # this rollup's own state dir is local consumer state
-            if not self.store._fs.isdir(d):
+            if v not in legs:
                 continue  # vacuumed leg: same skip as the pre-r10 walk
             k = self.store._kind(v)
             if k == "base":
                 self._base_rewrites.add(v)
             elif k == "minor":
-                if not os.path.basename(d).startswith("."):
+                if not legs[v].startswith("."):
                     # legacy plain-named minor: structurally visible to
                     # the file source — permanent double-count hazard
                     self._base_rewrites.add(v)
@@ -311,10 +310,7 @@ class StoreChangeRollup:
                 continue
             frm, through = folds
             originals = range(max(frm, self._start_version + 1), through + 1)
-            if any(
-                not self.store._fs.isdir(self.store._version_dir(u))
-                for u in originals
-            ):
+            if any(u not in legs for u in originals):
                 out.add(v)  # originals vacuumed under the stream
         return sorted(out)
 

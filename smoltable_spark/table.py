@@ -26,8 +26,6 @@ and writeout stay the caller's choice, like any Spark API.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 
 from smoltable_spark.api import (
@@ -37,9 +35,9 @@ from smoltable_spark.api import (
     QueryRowInput,
     ScanInput,
 )
+from smoltable_spark.jobs.workers import gc_worker
 from smoltable_spark.operators import (
     count_exact,
-    run_gc,
     scan_cells,
     scan_count,
 )
@@ -189,21 +187,10 @@ class Smoltable:
     def run_gc(self, now_nanos: int | None = None) -> int:
         """Version + TTL GC per family settings; commits a snapshot, returns
         deleted-cell count (reference run_version_gc, mod.rs:455-562).
-        Short-circuits (no write) when no family defines retention."""
-        fams = self.store.load_families()
-        if not any(f.ttl_secs or f.version_limit for f in fams):
-            return 0  # D4 short-circuit (reference mod.rs:466-473)
-        if now_nanos is None:
-            now_nanos = time.time_ns()
-        cells = self.store.read().drop("lg")
-        before = cells.count()
-        kept = run_gc(cells, fams, now_nanos=now_nanos)
-        # GC is a pure row filter of read(): coordinates stay unique
-        # (skip the dedup window), and the rewrite is the chain's only
-        # leg, so the after-count reads from parquet footers — one
-        # shuffle and one count job removed per GC (round 12)
-        self.store.write(kept, assume_unique_coords=True)
-        return before - self.store.approximate_cell_count()
+        Short-circuits (no write) when no family defines retention. The
+        GC background worker does the work (``jobs/workers.py::gc_worker``)
+        — one GC path for the facade and the scheduler."""
+        return gc_worker(self.store, now_nanos=now_nanos)
 
     # -- maintenance / stats (S8) -----------------------------------------
 

@@ -6,6 +6,10 @@
 - ``scale="corpus"`` is a reliable checkpoint that truncates the plan.
 - A checkpoint dir the caller set first is kept, and the checkpoint
   files land under it.
+
+The same static style guards the store's one-listing rule: no module
+other than ``sources/store.py`` resolves or probes a store's leg dirs
+(``_version_dir``, ``_fs.isdir``); they read the store's listing.
 """
 
 from __future__ import annotations
@@ -25,30 +29,69 @@ _MATERIALIZING = {
 }
 
 
-def _materializing_calls() -> list[tuple[str, str, int, str]]:
-    found = []
+def _modules():
+    """(path relative to the package, parsed module) per package file."""
     for root, _dirs, files in os.walk(PKG_DIR):
         for fname in files:
-            if not fname.endswith(".py"):
-                continue
-            path = os.path.join(root, fname)
-            rel = os.path.relpath(path, PKG_DIR)
-            tree = ast.parse(open(path, "rb").read())
+            if fname.endswith(".py"):
+                path = os.path.join(root, fname)
+                yield os.path.relpath(path, PKG_DIR), ast.parse(open(path, "rb").read())
 
-            def walk(node, fn):
-                for ch in ast.iter_child_nodes(node):
-                    inner = fn
-                    if isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                        inner = ch.name if fn == "<module>" else f"{fn}.{ch.name}"
-                    if (
-                        isinstance(ch, ast.Call)
-                        and isinstance(ch.func, ast.Attribute)
-                        and ch.func.attr in _MATERIALIZING
+
+def _materializing_calls() -> list[tuple[str, str, int, str]]:
+    found = []
+    for rel, tree in _modules():
+
+        def walk(node, fn):
+            for ch in ast.iter_child_nodes(node):
+                inner = fn
+                if isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    inner = ch.name if fn == "<module>" else f"{fn}.{ch.name}"
+                if (
+                    isinstance(ch, ast.Call)
+                    and isinstance(ch.func, ast.Attribute)
+                    and ch.func.attr in _MATERIALIZING
+                ):
+                    found.append((rel, fn, ch.lineno, ch.func.attr))
+                walk(ch, inner)
+
+        walk(tree, "<module>")
+    return found
+
+
+def _store_probe_calls() -> list[tuple[str, int, str]]:
+    """``<x>._version_dir(...)`` and ``<x>._fs.isdir(...)`` calls on a
+    store outside ``sources/store.py``: on any receiver but ``self``, and
+    on ``self`` too inside a ``CellStore`` subclass."""
+    found = []
+    for rel, tree in _modules():
+        if rel == os.path.join("sources", "store.py"):
+            continue
+
+        def walk(node, in_store):
+            for ch in ast.iter_child_nodes(node):
+                inner = in_store
+                if isinstance(ch, ast.ClassDef):
+                    inner = any(
+                        ast.unparse(b).endswith("CellStore") for b in ch.bases
+                    )
+                if isinstance(ch, ast.Call) and isinstance(ch.func, ast.Attribute):
+                    recv, target = ch.func.value, None
+                    if ch.func.attr == "_version_dir":
+                        target = recv
+                    elif (
+                        ch.func.attr == "isdir"
+                        and isinstance(recv, ast.Attribute)
+                        and recv.attr == "_fs"
                     ):
-                        found.append((rel, fn, ch.lineno, ch.func.attr))
-                    walk(ch, inner)
+                        target = recv.value
+                    if target is not None and (
+                        in_store or ast.unparse(target) != "self"
+                    ):
+                        found.append((rel, ch.lineno, ast.unparse(ch.func)))
+                walk(ch, inner)
 
-            walk(tree, "<module>")
+        walk(tree, False)
     return found
 
 
@@ -59,6 +102,14 @@ def test_materialize_is_the_only_materialization_site():
     assert not stray, (
         "route these through smoltable_spark.session.materialize(df, scale): "
         f"{stray}"
+    )
+
+
+def test_only_the_store_resolves_leg_dirs():
+    stray = _store_probe_calls()
+    assert not stray, (
+        "read leg-dir existence and names from the store's listing "
+        f"(CellStore._leg_dirs after current_version()): {stray}"
     )
 
 

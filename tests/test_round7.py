@@ -409,30 +409,6 @@ class TestRangeZorderCellStore:
         scanned_new = s.box_scan(covering_new, [0, 1, 2, 3], version=v3).count()
         assert scanned_new <= scanned_old
 
-    def test_legacy_flat_sidecar_migrates_on_compact(self, spark, tmp_path):
-        """A pre-versioning store (boundaries parquet directly in the
-        sidecar root) keeps working: reads treat it as v=1, and the
-        first compact() moves it into v=1/ before writing the new set."""
-        import os
-
-        s = self._store(spark, tmp_path)
-        s.write(_mk_cells(spark, [(f"k{i:02d}", i, i) for i in range(8)]))
-        # devolve to the legacy flat layout
-        root = s._boundaries_root
-        v1 = os.path.join(root, "v=1")
-        for n in os.listdir(v1):
-            os.replace(os.path.join(v1, n), os.path.join(root, n))
-        os.rmdir(v1)
-        s._boundaries_cache.clear()
-        assert s.boundary_versions() == [1]
-        b1 = s.boundaries_for(1)
-        s.append(_mk_cells(spark, [("q%d" % i, i, i) for i in range(3)]))
-        s.compact()
-        assert s.boundary_versions() == [1, 3]
-        s._boundaries_cache.clear()
-        assert s.boundaries_for(1) == b1  # migrated copy, same values
-        assert s.key_range_scan("k", "k~", b_values=[0, 1, 2, 3]).count() == 8
-
     def test_non_ascii_keys_bucket_consistently(self, spark, tmp_path):
         """ADVICE r7 medium: write-side (JVM) and scan-side (Python) key
         images must agree on NON-ASCII keys — both now derive from UTF-8

@@ -60,3 +60,21 @@ def test_stale_index_refused(spark):
         spark, path, "f", "color", "red", expect_store_version=v
     )
     assert sorted(r["row_key"] for r in keys.collect()) == ["r1", "r3", "r9"]
+
+
+def test_index_sidecar_on_uri(spark, tmp_path, mkuri):
+    """The version sidecar is published and read through the
+    storage-metadata adapter, so an index on a URI records the store
+    version it was built for and the staleness check can see it."""
+    store = _store(spark)
+    path = mkuri(tmp_path / "idx")
+    v = vindex.build_value_index(store, path)
+    assert vindex.indexed_store_version(spark, path) == v
+    keys = vindex.lookup_rows_by_value(
+        spark, path, "f", "color", "red", expect_store_version=v
+    )
+    assert sorted(r["row_key"] for r in keys.collect()) == ["r1", "r3"]
+    with pytest.raises(ValueError, match=f"built for store version {v}"):
+        vindex.lookup_rows_by_value(
+            spark, path, "f", "color", "red", expect_store_version=v + 1
+        )
