@@ -233,75 +233,21 @@ def bench_query_names(registry: dict) -> list[str]:
 
 REGRESSION_FACTOR = 1.5
 
-#: queries under explicit cross-round observation (VERDICT r6 finding #2):
-#: always re-measure these in isolation at the end of the sweep and record
-#: the result under "watch_isolated" in BENCH_LOCAL/BENCH_HISTORY, whether
-#: or not the gate flags them — the r6 driver run flagged both on code
-#: unchanged since r4 and the judge asked for a confirming r7 row.
-#: txt_collocations added per VERDICT r7 ask #5 (0.79→1.01 s, the largest
-#: unexplained r7 mover — sub-gate but worth an isolated-confirm row;
-#: r8 isolated re-measure confirmed noise at 0.513 s).
-#: rel_grouping_sets added per VERDICT r8 ask #3 (pending flag
-#: 0.26→0.41 s, 1.83× vs drift median): the implementation is the
-#: native one-pass groupingSets expand — 0.4 s absolute smells like
-#: noise, and the isolated row decides.
-#: txt_cm_frequency added per VERDICT r9 ask #3 (pending flag
-#: 0.663→1.16 s, 1.79× vs drift median): the plan is the intended
-#: 4096-key bounded shuffle whatever the corpus; 1.2 s absolute smells
-#: like noise, and the isolated row decides — exactly the
-#: rel_grouping_sets protocol (r9 isolated re-measure: 0.184 s, noise).
-#: wc_scan_multi_range added per VERDICT r11 ask #1 (pending flag
-#: 0.328→0.629 s, 1.67× vs drift median): plan unchanged (same pushed
-#: range predicates, 0 shuffles); the r12 isolated A/B already re-measured
-#: it at 0.43/0.53 s (HEAD) vs 0.40/0.50 s (r10 tree) on the same VM —
-#: noise — and the watchlist row makes the drain part of the record.
-#: pipeline_classifier_gate + txt_inverted_index_persisted added after
-#: the r12 sweep raised pending flags on them (0.081→0.136 s and
-#:  0.256→0.39 s): neither query's modules changed this round, and the
-#: same-session isolated re-measure read 0.193 s / 0.435 s — VM noise at
-#: the sub-half-second scale; the watchlist row keeps the drain on
-#: record either way.
-#: r13 end-of-round sweep raised 10 sub-second pending flags
-#: (mm_color_features, txt_rolling_fingerprint, txt_vocab_topk,
-#: wc_filter_multi_key, wc_gc_ttl, wc_multi_get, wc_plan_probe,
-#: wc_row_shape, wc_scan_count, wc_scan_range_exclusive — all 0.15-0.9 s
-#: rows at ratios 1.5-2.05 vs the SAME code's sweep 2 h earlier).
-#: Same-session isolated drain (tools/iso_measure.py --tag
-#: r13-flag-drain): every row reads the same 1.5-1.7x inflation solo,
-#: INCLUDING the two whose module closures did not change at all this
-#: round (txt_rolling_fingerprint: text.py docstring-only;
-#: mm_color_features: multimodal.py untouched) — the module-unchanged
-#: controls make this the r12-documented evening-VM slowdown (SCALE.md
-#: recorded 291.7 s at drift 1.088 for untouched code), not a code
-#: effect. wc_plan_probe (the largest ratio) joins the watchlist as the
-#: standing control; the rest are recorded here per the drain protocol.
-#: wc_approx_cell_count added per VERDICT r12 ask #4 (r12 pending flag
-#: 0.213→0.326 s, 1.66× vs drift median): a footer-metadata-only read
-#: whose plan did not change; the r13 isolated drain re-measured it at
-#: 0.21–0.24 s solo (see BENCH_LOCAL watch_isolated) — noise at the
-#: fsync-floor scale, same verdict as the four prior drains. The
-#: watchlist row keeps the drain on record.
-#: mm_color_fractional added after the r13 optimization-round final
-#: sweep flagged it (0.622→1.029 s, 1.55× vs drift median) on an
-#: UNTOUCHED module (multimodal.py had no r13 changes). Same-session
-#: isolated drain (iso_measure --tag r13-flag-drain2): 0.956 s solo,
-#: with the module-unchanged control mm_color_features inflating
-#: identically (0.618→0.842 s solo) — uniform session drift per the
-#: standing control protocol, not a code effect; the watchlist row
-#: keeps the drain on record.
-WATCHLIST = [
-    "pipeline_temperature_mix",
-    "emb_cosine_hist",
-    "txt_collocations",
-    "rel_grouping_sets",
-    "txt_cm_frequency",
-    "wc_scan_multi_range",
-    "pipeline_classifier_gate",
-    "txt_inverted_index_persisted",
-    "wc_approx_cell_count",
-    "wc_plan_probe",
-    "mm_color_fractional",
-]
+#: queries re-measured solo (min of 3) after every sweep and recorded
+#: under "watch_isolated", flagged or not; each value says why
+WATCHLIST = {
+    "pipeline_temperature_mix": "r6 flag on code unchanged since r4",
+    "emb_cosine_hist": "r6 flag on code unchanged since r4",
+    "txt_collocations": "r7 largest unexplained mover; r8 solo: noise",
+    "rel_grouping_sets": "r8 flag on the one-pass groupingSets plan",
+    "txt_cm_frequency": "r9 flag on a bounded-shuffle plan; r9 solo: noise",
+    "wc_scan_multi_range": "r11 flag, plan unchanged; r12 A/B: noise",
+    "pipeline_classifier_gate": "r12 flag, module unchanged; solo: noise",
+    "txt_inverted_index_persisted": "r12 flag, module unchanged; solo: noise",
+    "wc_approx_cell_count": "r12 flag on a footer-only read; r13 solo: noise",
+    "wc_plan_probe": "standing control for r13's uniform session drift",
+    "mm_color_fractional": "r13 flag, module unchanged; solo: session drift",
+}
 
 #: Size of the isolated re-measure band (VERDICT r12 ask #4): after the
 #: sweep, the this-many slowest warm queries are re-measured SOLO
@@ -312,33 +258,10 @@ WATCHLIST = [
 #: ground the round-over-round target is evaluated against.
 ISO_BAND = 15
 
-#: Deliberate plan-shape trades the regression gate must record as
-#: ACCEPTED (with the reason) instead of red-flagging: e.g. VERDICT r8
-#: ask #1 replaced unpartitioned row-sized windows (single-partition
-#: global sorts — fast at sf0.1, a driver-killer at 100 TB) with
-#: operators/rank.py's two-phase decomposition, whose ~1 s of fixed
-#: multi-job overhead is the measured sf0.1 price of the scale-safe
-#: plan. The isolated-confirm protocol still runs, the numbers are
-#: still recorded — only the verdict class changes.
-#:
-#: SCOPED (ADVICE r9): each entry is (landed_round, reason) and applies
-#: ONLY while the comparison baseline predates the landing round — once
-#: BENCH_r{landed} becomes the prev baseline, its times already include
-#: the accepted plan, so any FURTHER confirmed regression of the same
-#: query is a new, unexplained slowdown and must red-flag normally.
-#: (The r9 two-phase-rank entries for rel_percentile_rank /
-#: pipeline_interleave_datasets / txt_zipf_fit expired exactly this
-#: way: BENCH_r09 is now prev, so they are gone rather than blanket
-#: carve-outs.)
+#: confirmed regressions the gate records as ACCEPTED instead of
+#: red-flagging: name -> (landed_round, reason); an entry applies only
+#: while the baseline round predates landed_round
 ACCEPTED_PLAN_CHANGES: dict[str, tuple[int, str]] = {
-    # The r13 committed record's 3.3 s rel_triangle_count row measured a
-    # packed-single-long closing-join variant that was REVERTED the same
-    # round: it OOM'd the 10x scale smoke (derived-key equi-join pulls
-    # the inferred isnotnull inside the wedge SMJ; sort buffers exhaust
-    # execution memory — OPTIMIZATION_r13.md §5). The reverted (= r12)
-    # plan reading slower than that record at sf0.1 is the accepted
-    # price of the scale-safe join; vs the r12 driver baseline (7.9 s)
-    # it is still an improvement-or-neutral row.
     "rel_triangle_count": (13, "10x-OOM variant reverted; baseline row "
                                "measured the reverted plan"),
 }

@@ -9,8 +9,6 @@ the original relational tables (melt CTEs in queries_util.py).
 from __future__ import annotations
 
 import os
-import re
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -38,6 +36,7 @@ from smoltable_spark.queries_util import (
     LINEITEM_MELT,
     ORDERS_MELT,
     SLIM_COLS,
+    build_once,
     cells_cte,
     scratch_dir,
     slim,
@@ -278,11 +277,9 @@ def wc_unmelt_roundtrip(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # native-storage scan (S2/S5/S6: sorted, lg-partitioned CellStore)
 
-_STORE_CACHE: dict = {}
-
-
 def _orders_store(spark, sf_dir):
-    """Build-once CellStore of the orders melt (per sf dir, cached on disk).
+    """Build-once CellStore of the orders melt (per session and sf dir, in
+    scratch).
 
     This is the engine's NATIVE layout — lg-partitioned, range-partitioned
     and sorted by row key — in which prefix/point predicates reach the
@@ -290,19 +287,19 @@ def _orders_store(spark, sf_dir):
     replaces the reference's LSM seek (reader.rs:46-78). The melt-based
     queries above exercise the loader path; this one exercises storage.
     """
+    return build_once(
+        spark, sf_dir, "orders_store", lambda: _orders_cell_store(spark, sf_dir)
+    )
+
+
+def _orders_cell_store(spark, sf_dir):
+    """A new single-version CellStore of the orders melt in scratch."""
     from smoltable_spark.sources.store import CellStore
 
-    key = sf_dir
-    if key not in _STORE_CACHE:
-        path = os.path.join(
-            tempfile.gettempdir(), "smoltable_store_" + re.sub(r"\W", "_", sf_dir)
-        )
-        store = CellStore(spark, path)
-        store.save_families([ColumnFamilyDef("o", lg="lg_orders")])
-        if store.current_version() == 0:
-            store.write(orders_cells(spark, sf_dir))
-        _STORE_CACHE[key] = store
-    return _STORE_CACHE[key]
+    store = CellStore(spark, scratch_dir("smoltable_store_"))
+    store.save_families([ColumnFamilyDef("o", lg="lg_orders")])
+    store.write(orders_cells(spark, sf_dir))
+    return store
 
 
 @q(
@@ -457,28 +454,15 @@ def wc_store_unsafe_commit(spark, sf_dir):
     )
 
 
-_PROBE_STORE_CACHE: dict = {}
-
-
 def _probe_store(spark, sf_dir):
     """Fresh single-version orders store for wc_plan_probe: the SHARED
     ``_orders_store`` accretes probe deltas from sibling queries, which
     changes leg counts (and hence plan-fact counts) with driver run
     order — this one is written exactly once by exactly this query, so
     every plan fact below is deterministic."""
-    from smoltable_spark.sources.store import CellStore
-
-    if sf_dir not in _PROBE_STORE_CACHE:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            "smoltable_planprobe_" + re.sub(r"\W", "_", sf_dir),
-        )
-        store = CellStore(spark, path)
-        store.save_families([ColumnFamilyDef("o", lg="lg_orders")])
-        if store.current_version() == 0:
-            store.write(orders_cells(spark, sf_dir))
-        _PROBE_STORE_CACHE[sf_dir] = store
-    return _PROBE_STORE_CACHE[sf_dir]
+    return build_once(
+        spark, sf_dir, "probe_store", lambda: _orders_cell_store(spark, sf_dir)
+    )
 
 
 @q(
@@ -883,8 +867,6 @@ def wc_metrics_series(spark, sf_dir):
     (server/src/html.rs:11-196, cell_limit 720). The 720-read pins the
     retention cut (only 500 of 1000 points survive per series); the
     100-read pins the dashboard limit itself."""
-    import tempfile as _tf
-
     from smoltable_spark.jobs.metrics import MetricsTable
     from smoltable_spark.sources.store import CellStore
 
@@ -932,8 +914,6 @@ def wc_gc_worker_cycle(spark, sf_dir):
     worker's deleted count, max surviving versions per coordinate, and
     the post-vacuum chain length — all derived from the orders table by
     the oracle, not hardcoded from a run."""
-    import tempfile as _tf
-
     from smoltable_spark.jobs.workers import compaction_worker, gc_worker
     from smoltable_spark.sources.store import CellStore
 
@@ -1226,26 +1206,21 @@ def wc_minor_compact(spark, sf_dir):
     )
 
 
-_VIDX_CACHE: dict = {}
-
-
 def _orders_value_index(spark, sf_dir):
-    """Build-once secondary value index over the orders CellStore (per sf
-    dir; rebuilt when the store version moves)."""
+    """Build-once secondary value index over the probed orders CellStore
+    (per session and sf dir; the lookup checks the store version it was
+    built for)."""
     from smoltable_spark.sources import index as vindex
 
     store = _orders_store(spark, sf_dir)
     _ensure_probe(spark, store)
-    key = (sf_dir, store.current_version())
-    if key not in _VIDX_CACHE:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            "smoltable_vidx_" + re.sub(r"\W", "_", sf_dir) + f"_v{key[1]}",
-        )
-        if vindex.indexed_store_version(spark, path) != store.current_version():
-            vindex.build_value_index(store, path, families=["o"])
-        _VIDX_CACHE[key] = path
-    return store, _VIDX_CACHE[key]
+
+    def build():
+        path = scratch_dir("smoltable_vidx_") + "/idx"
+        vindex.build_value_index(store, path, families=["o"])
+        return path
+
+    return store, build_once(spark, sf_dir, "orders_value_index", build)
 
 
 @q(
@@ -1311,8 +1286,6 @@ def wc_merge_upsert(spark, sf_dir):
     the same key the store is laid out by); the append is O(applied),
     and the no-op class never touches disk. This is the Delta/Hudi-style
     CDC merge expressed over the LSM chain the engine already has."""
-    import tempfile as _tf
-
     from pyspark.sql import Window as _W
 
     from smoltable_spark.sources.store import CellStore
@@ -1432,8 +1405,6 @@ def wc_scd2_intervals(spark, sf_dir):
     (per-coordinate version counts are tiny and bounded by the family's
     version_limit policy); the store read itself is the pushed-filter
     scan path."""
-    import tempfile as _tf
-
     from pyspark.sql import Window as _W
 
     from smoltable_spark.sources.store import CellStore
@@ -1563,76 +1534,6 @@ def wc_ingest_json_wire(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Z-ordered CellStore scan (round 7, VERDICT r6 ask #5)
 
-_ZSTORE_CACHE: dict = {}
-
-
-def _store_code_tag() -> str:
-    """Code-version fingerprint baked into build-once store cache paths
-    (ADVICE r7: a tempdir store written by an OLDER code revision — or
-    surviving a testdata regeneration — used to be served stale because
-    the builder skipped rebuild whenever current_version() != 0, and the
-    resulting cert failure pointed at the query, not the cache). Hashing
-    the store/layout/melt source files means any revision that could
-    change the on-disk store lands in a FRESH path — the same
-    invalidation discipline the oracle ledger applies to stamps. The
-    data shape is already in the path via sf_dir."""
-    import hashlib
-
-    from smoltable_spark.sources import relational, store, store_layout
-
-    h = hashlib.sha256()
-    for m in (store, store_layout, relational):
-        with open(m.__file__, "rb") as fh:
-            h.update(fh.read())
-    return h.hexdigest()[:10]
-
-
-def _store_cache_path(prefix: str, sf_dir: str) -> str:
-    """Tempdir path for a build-once store cache, tagged with the
-    current code revision — and SWEEP superseded revisions' dirs for
-    the same (prefix, sf_dir) while at it: every edit to the hashed
-    sources changes the tag, so without the sweep each iteration on the
-    store code leaves a complete orphaned base+delta parquet tree in
-    /tmp forever (unbounded growth on any machine that iterates). The
-    glob is pinned to this prefix, an exact-width tag slot, AND this
-    sf_dir suffix, so a concurrent run at another SF (or the other
-    store family) is never touched — the tag wildcard is ten ``?``s,
-    not ``*``, because a ``*`` would also swallow the tag + the HEAD of
-    a longer sanitized sf path whose tail equals this suffix (e.g.
-    ``/a/.data/sf1`` sanitizes to ``_a__data_sf1``, which ends with
-    ``/data/sf1``'s ``__data_sf1`` suffix) and delete a live store out
-    from under that session. A superseded-revision dir is only swept
-    once it has been QUIET for an hour (dir-tree mtime check): a
-    concurrent session running a different code revision at the same SF
-    keeps touching its cache's marker files, so the sweep can no longer
-    yank a live store out from under a mid-scan reader (advisor r8) —
-    truly orphaned trees still age out on the next run after the hour."""
-    tag = _store_code_tag()
-    suffix = "_" + re.sub(r"\W", "_", sf_dir)
-    tmp = tempfile.gettempdir()
-    current = os.path.join(tmp, prefix + tag + suffix)
-    import glob as _glob
-    import shutil
-    import time
-
-    quiet_s = 3600.0
-    now = time.time()
-    for d in _glob.glob(os.path.join(tmp, prefix + "?" * len(tag) + suffix)):
-        if d == current:
-            continue
-        try:
-            # newest mtime across the dir root and its immediate children
-            # (version dirs / marker files get rewritten by live builders)
-            newest = os.path.getmtime(d)
-            with os.scandir(d) as it:
-                for e in it:
-                    newest = max(newest, e.stat().st_mtime)
-        except OSError:
-            continue  # vanished mid-scan: another sweeper got it
-        if now - newest > quiet_s:
-            shutil.rmtree(d, ignore_errors=True)
-    return current
-
 #: the 2-D box: user buckets {1..5} × day buckets {2..4} ⟹ 15 of the 64
 #: Morton partitions (same box shape rel_events_zorder_prune pins on the
 #: dedicated events store — here it prunes the CellStore itself)
@@ -1717,22 +1618,20 @@ def _events_zstore(spark, sf_dir):
     metadata-level partition pruning)."""
     from smoltable_spark.sources.store_layout import ZorderCellStore
 
-    key = sf_dir
-    if key not in _ZSTORE_CACHE:
-        path = _store_cache_path("smoltable_zstore_", sf_dir)
+    def build():
         store = ZorderCellStore(
             spark,
-            path,
+            scratch_dir("smoltable_zstore_") + "/store",
             a_bucket=lambda: F.substring(F.col("row_key"), -6, 6).cast("long")
             % 8,
             b_bucket=lambda: F.expr(f"(ts div {_Z_DAY_NS}) % 8"),
             bits=3,
         )
         store.save_families([ColumnFamilyDef("value")])
-        if store.current_version() == 0:
-            store.write(_events_cells_seq(spark, sf_dir), seq_col="_seq")
-        _ZSTORE_CACHE[key] = store
-    return _ZSTORE_CACHE[key]
+        store.write(_events_cells_seq(spark, sf_dir), seq_col="_seq")
+        return store
+
+    return build_once(spark, sf_dir, "events_zstore", build)
 
 
 @q(
@@ -1912,9 +1811,6 @@ def wc_scan_advisor(spark, sf_dir):
     )
 
 
-_RZSTORE_CACHE: dict = {}
-
-
 def _events_rzstore(spark, sf_dir):
     """Build-once RANGE-bucketed Z-ordered CellStore of the events melt:
     key buckets come from a persisted boundaries sidecar (estimated once
@@ -1922,20 +1818,18 @@ def _events_rzstore(spark, sf_dir):
     residue boxes — prune the zb partitions."""
     from smoltable_spark.sources.store_layout import RangeZorderCellStore
 
-    key = sf_dir
-    if key not in _RZSTORE_CACHE:
-        path = _store_cache_path("smoltable_rzstore_", sf_dir)
+    def build():
         store = RangeZorderCellStore(
             spark,
-            path,
+            scratch_dir("smoltable_rzstore_") + "/store",
             b_bucket=lambda: F.expr(f"(ts div {_Z_DAY_NS}) % 8"),
             bits=3,
         )
         store.save_families([ColumnFamilyDef("value")])
-        if store.current_version() == 0:
-            store.write(_events_cells_seq(spark, sf_dir), seq_col="_seq")
-        _RZSTORE_CACHE[key] = store
-    return _RZSTORE_CACHE[key]
+        store.write(_events_cells_seq(spark, sf_dir), seq_col="_seq")
+        return store
+
+    return build_once(spark, sf_dir, "events_rzstore", build)
 
 
 #: the range scan's bounds: every click# and error# series key
@@ -2081,8 +1975,6 @@ def wc_store_zorder_compact_cycle(spark, sf_dir):
     write, exactly the reference's levelled fold (mod.rs:156-165), and
     it re-establishes metadata-level 2-D pruning for everything
     ingested since the last fold."""
-    import tempfile as _tf
-
     from smoltable_spark.sources.store_layout import ZorderCellStore
 
     cells = _events_cells_seq(spark, sf_dir, mod=4)
@@ -2166,8 +2058,6 @@ def wc_store_zorder_rebucket(spark, sf_dir):
     re-estimate is one percentile_approx over the same pass, and read
     amplification tracks the data as it is NOW, not as it first
     arrived."""
-    import tempfile as _tf
-
     from smoltable_spark.sources.store_layout import RangeZorderCellStore
 
     cells = _events_cells_seq(spark, sf_dir, mod=4)
@@ -2330,8 +2220,6 @@ def wc_lg_read_amp(spark, sf_dir):
     published example verbatim; results_equal pins that both layouts
     return identical cells. sf-independent by design — the fixture IS
     the workload (like the reference's own docs example)."""
-    import tempfile as _tf
-
     from smoltable_spark.table import Smoltable
 
     base = scratch_dir("smoltable_lgamp_")
@@ -2433,8 +2321,6 @@ def wc_table_stats(spark, sf_dir):
     - disk_space_usage (mod.rs:906-922) pinned as a >0 flag (bytes are
       compression/layout dependent — the reference reports real fs
       bytes too, and those are not stable constants either)."""
-    import tempfile as _tf
-
     from smoltable_spark.table import Smoltable
 
     t = Smoltable.open(spark, scratch_dir("smoltable_stats_") + "/t")

@@ -15,6 +15,11 @@ driver's value-hash compare is bit-exact):
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
@@ -108,30 +113,55 @@ def cents_sql(expr: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# RAM-backed scratch for per-call synthetic stores
+# RAM-backed per-process scratch, and build-once registry fixtures
+
+_scratch_root: str | None = None
 
 
 def scratch_dir(prefix: str) -> str:
-    """mkdtemp preferring RAM-backed tmpfs (``/dev/shm``) over ``/tmp``.
+    """A fresh dir inside this process's scratch root, which is made on
+    first use (preferring RAM-backed tmpfs, ``/dev/shm``, over ``/tmp``)
+    and removed with everything in it when the process exits.
 
-    The lifecycle/driver rows build small SINGLE-SESSION synthetic
-    stores and indexes whose durability is irrelevant — they exist to
-    prove invariants, then get thrown away. On this host a tiny parquet
-    commit to disk-backed ``/tmp`` carries a 1.5–4 s fsync floor
-    (measured: 7-row file, 0.45 s on tmpfs vs 2–5 s on /dev/vda), which
-    would dominate every multi-commit lifecycle row in the bench while
-    measuring the DISK, not the plans (VERDICT r8 ask #7). Persistent
-    cross-session caches (``_store_cache_path``) deliberately stay on
-    real disk. Override base with ``$SPARK_GRAFT_SCRATCH``."""
-    import os
-    import tempfile as _tf
+    Every on-disk fixture, per-call synthetic store and checkpoint lives
+    here: none of them is meant to outlive the process, so no later run
+    (or later code revision) can read one back. Durability is irrelevant
+    to them, and a tiny parquet commit to disk-backed ``/tmp`` carries a
+    1.5–4 s fsync floor (measured: 7-row file, 0.45 s on tmpfs vs 2–5 s
+    on /dev/vda), which would dominate every multi-commit lifecycle row
+    while measuring the disk, not the plans. ``$SPARK_GRAFT_SCRATCH``
+    moves the root's parent dir."""
+    global _scratch_root
+    if _scratch_root is None:
+        base = os.environ.get("SPARK_GRAFT_SCRATCH")
+        if base is None and os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
+            base = "/dev/shm/smoltable_scratch"
+        if base is not None:
+            os.makedirs(base, exist_ok=True)
+        _scratch_root = tempfile.mkdtemp(prefix="smoltable_", dir=base)
+        atexit.register(shutil.rmtree, _scratch_root, True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)
 
-    base = os.environ.get("SPARK_GRAFT_SCRATCH")
-    if base is None and os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        base = "/dev/shm/smoltable_scratch"
-    if base is not None:
-        os.makedirs(base, exist_ok=True)
-    return _tf.mkdtemp(prefix=prefix, dir=base)
+
+#: (applicationId, sf_dir, name) -> fixture; only the live context's
+#: entries are kept
+_built: dict = {}
+
+
+def build_once(spark, sf_dir: str, name: str, build):
+    """The fixture ``name`` over ``sf_dir`` for this Spark application:
+    ``build()`` runs on the first call, and every later call in the same
+    application returns its result (build once, serve many). A new
+    application, e.g. a second session after ``stop()``, builds afresh,
+    so no fixture bound to a stopped context is ever served. On-disk
+    fixtures put their files in :func:`scratch_dir`."""
+    app = spark.sparkContext.applicationId
+    key = (app, sf_dir, name)
+    if key not in _built:
+        for stale in [k for k in _built if k[0] != app]:
+            del _built[stale]
+        _built[key] = build()
+    return _built[key]
 
 
 # ---------------------------------------------------------------------------

@@ -32,16 +32,14 @@ context already has one, so a deployment points it at shared storage by
 calling ``setCheckpointDir`` first. Checkpoint files of garbage-collected
 frames are deleted by ``spark.cleaner.referenceTracking.cleanCheckpoints``,
 and local blocks by the context cleaner, so no caller unpersists. Spark
-leaves the rest behind when the context stops, so a scratch checkpoint
-dir this module created is removed when the process exits (a dir the
-caller set is never touched).
+leaves the rest behind when the context stops; a scratch checkpoint dir
+goes with the process's scratch root at exit (a dir the caller set is
+never touched).
 """
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -93,7 +91,5 @@ def materialize(df: DataFrame, scale: str, *, eager: bool = True) -> DataFrame:
         raise ValueError("corpus-scale materialization is always eager")
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is None:
-        ckpt = scratch_dir("smoltable_ckpt_")
-        atexit.register(shutil.rmtree, ckpt, True)
-        sc.setCheckpointDir(ckpt)
+        sc.setCheckpointDir(scratch_dir("smoltable_ckpt_"))
     return df.checkpoint(eager=True)

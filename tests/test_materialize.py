@@ -9,7 +9,11 @@
 
 The same static style guards the store's one-listing rule: no module
 other than ``sources/store.py`` resolves or probes a store's leg dirs
-(``_version_dir``, ``_fs.isdir``); they read the store's listing.
+(``_version_dir``, ``_fs.isdir``); they read the store's listing. It
+also guards the one build-once rule for registry fixtures: outside
+``queries_util.py`` no module keeps a module-level cache dict or makes
+or cleans up temp dirs itself (``queries_util.build_once`` and
+``queries_util.scratch_dir`` do).
 """
 
 from __future__ import annotations
@@ -95,6 +99,87 @@ def _store_probe_calls() -> list[tuple[str, int, str]]:
     return found
 
 
+_TEMP_CALLS = {"tempfile.gettempdir", "tempfile.mkdtemp", "atexit.register"}
+_DICT_READS = {"get", "setdefault", "pop"}
+
+
+def _is_empty_dict(node) -> bool:
+    return (isinstance(node, ast.Dict) and not node.keys) or (
+        isinstance(node, ast.Call)
+        and ast.unparse(node.func) == "dict"
+        and not node.args
+        and not node.keywords
+    )
+
+
+def _fixture_strays() -> list[tuple[str, int, str]]:
+    """Outside ``queries_util.py``: module-level empty dicts that a
+    function of the same module reads back (a cache, as opposed to a
+    registry the module only fills), and calls that make or clean up
+    temp dirs (``_TEMP_CALLS``, import aliases resolved)."""
+    found = []
+    for rel, tree in _modules():
+        if rel == "queries_util.py":
+            continue
+        dicts = {}
+        for node in tree.body:
+            if isinstance(node, ast.Assign) and _is_empty_dict(node.value):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign) and node.value is not None and (
+                _is_empty_dict(node.value)
+            ):
+                targets = [node.target]
+            else:
+                continue
+            for t in targets:
+                if isinstance(t, ast.Name):
+                    dicts[t.id] = node.lineno
+        aliases = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    aliases[a.asname or a.name] = a.name
+            elif isinstance(node, ast.ImportFrom) and node.module:
+                for a in node.names:
+                    aliases[a.asname or a.name] = f"{node.module}.{a.name}"
+        read = set()
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Subscript)
+                    and isinstance(node.ctx, ast.Load)
+                    and isinstance(node.value, ast.Name)
+                ):
+                    read.add(node.value.id)
+                elif isinstance(node, ast.Compare) and isinstance(
+                    node.ops[0], (ast.In, ast.NotIn)
+                ) and isinstance(node.comparators[0], ast.Name):
+                    read.add(node.comparators[0].id)
+                elif (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in _DICT_READS
+                    and isinstance(node.func.value, ast.Name)
+                ):
+                    read.add(node.func.value.id)
+        found += [(rel, dicts[n], f"cache dict {n}") for n in sorted(dicts) if n in read]
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if isinstance(f, ast.Name):
+                name = aliases.get(f.id, f.id)
+            elif isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name):
+                name = f"{aliases.get(f.value.id, f.value.id)}.{f.attr}"
+            else:
+                continue
+            if name in _TEMP_CALLS:
+                found.append((rel, node.lineno, name))
+    return found
+
+
 def test_materialize_is_the_only_materialization_site():
     stray = [
         c for c in _materializing_calls() if (c[0], c[1]) != ("session.py", "materialize")
@@ -110,6 +195,14 @@ def test_only_the_store_resolves_leg_dirs():
     assert not stray, (
         "read leg-dir existence and names from the store's listing "
         f"(CellStore._leg_dirs after current_version()): {stray}"
+    )
+
+
+def test_fixtures_build_once_in_scratch():
+    stray = _fixture_strays()
+    assert not stray, (
+        "keep registry fixtures with queries_util.build_once and their "
+        f"files in queries_util.scratch_dir: {stray}"
     )
 
 
@@ -154,26 +247,64 @@ def test_corpus_keeps_a_preset_checkpoint_dir(spark, tmp_path):
             sc.setCheckpointDir(prev)
 
 
-def test_scratch_checkpoint_dir_removed_at_exit(tmp_path):
-    """Spark keeps reliable checkpoint files when its context stops; the
-    scratch dir ``materialize`` created goes away with the process."""
+def test_scratch_checkpoint_dir_removed_at_exit(spark, sf_dir, tmp_path):
+    """One process, two sessions, clean exit. Spark keeps reliable
+    checkpoint files when its context stops, and registry fixtures leave
+    their stores and indexes behind; all of it lives in the process's
+    scratch root, which goes away with the process. A second session in
+    the same process builds its own fixtures (a fixture bound to the
+    stopped context fails), and a store left in the temp dir by an older
+    run is never read."""
+    import json
+    import re
     import subprocess
     import sys
 
+    from smoltable_spark.api import ColumnFamilyDef
+    from smoltable_spark.sources.relational import load_table
+    from smoltable_spark.sources.store import CellStore
+    from smoltable_spark.sources.writer import rows_to_cells
+
+    tmpdir, scratch = tmp_path / "tmp", tmp_path / "scratch"
+    tmpdir.mkdir()
+    # a one-cell orders store where earlier revisions kept theirs
+    planted = tmpdir / ("smoltable_store_" + re.sub(r"\W", "_", sf_dir))
+    store = CellStore(spark, str(planted))
+    store.save_families([ColumnFamilyDef("o", lg="lg_orders")])
+    store.write(rows_to_cells(spark, [{"row_key": "order#000000000120", "cells": [
+        {"column_key": "o:totalprice", "value": {"f64": -1.0}, "timestamp": 1}]}]))
+
     script = (
+        "import json, sys\n"
+        "from smoltable_spark.queries_analytics import rel_events_day_prune\n"
+        "from smoltable_spark.queries_core import wc_store_scan_prefix\n"
         "from smoltable_spark.session import get_spark, materialize\n"
-        "spark = get_spark('ckpt_exit', cpus=1, shuffle_partitions=1)\n"
-        "materialize(spark.range(10), 'corpus').count()\n"
-        "print(spark.sparkContext.getCheckpointDir())\n"
-        "spark.stop()\n"
+        "sf, out = sys.argv[1], {}\n"
+        "for label in ('a', 'b'):\n"
+        "    spark = get_spark('two_sessions', cpus=1, shuffle_partitions=1)\n"
+        "    materialize(spark.range(10), 'corpus').count()\n"
+        "    out['ckpt_' + label] = spark.sparkContext.getCheckpointDir()\n"
+        "    out[label] = [sorted(map(repr, q(spark, sf).collect()))\n"
+        "                  for q in (wc_store_scan_prefix, rel_events_day_prune)]\n"
+        "    spark.stop()\n"
+        "print(json.dumps(out))\n"
     )
     repo = os.path.dirname(PKG_DIR)
-    env = {**os.environ, "SPARK_GRAFT_SCRATCH": str(tmp_path),
-           "PYTHONPATH": repo}
-    out = subprocess.run(
-        [sys.executable, "-c", script], cwd=repo, env=env,
-        capture_output=True, text=True, timeout=300, check=True,
-    ).stdout
-    ckpt = out.strip().splitlines()[-1]
-    assert ckpt.startswith(("file:" + str(tmp_path), str(tmp_path))), ckpt
-    assert not [p for p in tmp_path.iterdir() if p.name.startswith("smoltable_ckpt_")]
+    env = {**os.environ, "SPARK_GRAFT_SCRATCH": str(scratch),
+           "TMPDIR": str(tmpdir), "PYTHONPATH": repo}
+    out = json.loads(subprocess.run(
+        [sys.executable, "-c", script, sf_dir], cwd=repo, env=env,
+        capture_output=True, text=True, timeout=600, check=True,
+    ).stdout.strip().splitlines()[-1])
+    assert out["a"] == out["b"]
+    scan, day_prune = out["a"]
+    n_orders = load_table(spark, sf_dir, "orders").filter(
+        F.lpad(F.col("o_orderkey").cast("string"), 12, "0").startswith("00000000012")
+    ).count()
+    assert len(scan) == n_orders > 1, scan
+    assert day_prune
+    for label in ("a", "b"):
+        ckpt = out["ckpt_" + label]
+        assert ckpt.startswith(("file:" + str(scratch), str(scratch))), ckpt
+    leftover = [p for p in tmp_path.rglob("smoltable_*") if p != planted]
+    assert not leftover, leftover

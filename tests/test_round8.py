@@ -411,48 +411,6 @@ def test_color_decode_fractional_ratio_supported():
     assert rgb.shape == (10, 30, 3) and rgb.dtype == np.uint8
 
 
-def test_store_cache_path_sweeps_superseded_revisions(tmp_path):
-    """Every code revision retags the build-once store cache path;
-    without the sweep each iteration leaves a full orphaned parquet
-    store in /tmp forever (the round-8 review finding). Sibling dirs of
-    the SAME prefix+sf but a stale tag are removed — but only once
-    QUIET for an hour (advisor r9: a concurrent session on a different
-    code revision must not lose its live cache mid-scan); other SFs and
-    other prefixes are never touched."""
-    import os
-    import tempfile
-    import time
-
-    from smoltable_spark.queries_core import _store_cache_path
-
-    tmp = tempfile.gettempdir()
-    sf = "/pytest/sweep/sfA"
-    other_sf = "/pytest/sweep/sfB"
-    stale = os.path.join(tmp, "smoltable_zstore_deadbeef00__pytest_sweep_sfA")
-    live = os.path.join(tmp, "smoltable_zstore_deadbeef11__pytest_sweep_sfA")
-    other = os.path.join(tmp, "smoltable_zstore_deadbeef00__pytest_sweep_sfB")
-    os.makedirs(stale, exist_ok=True)
-    os.makedirs(live, exist_ok=True)
-    os.makedirs(other, exist_ok=True)
-    old = time.time() - 7200
-    os.utime(stale, (old, old))  # quiet for two hours → sweepable
-    try:
-        current = _store_cache_path("smoltable_zstore_", sf)
-        assert not os.path.isdir(stale)  # superseded + quiet: swept
-        assert os.path.isdir(live)  # superseded but ACTIVE: kept
-        assert os.path.isdir(other)  # other SF untouched
-        assert current.endswith("__pytest_sweep_sfA")
-        # idempotent: the current path itself is never deleted
-        os.makedirs(current, exist_ok=True)
-        assert _store_cache_path("smoltable_zstore_", sf) == current
-        assert os.path.isdir(current)
-    finally:
-        import shutil
-
-        for d in (stale, live, other, current):
-            shutil.rmtree(d, ignore_errors=True)
-
-
 # --- incremental MinHash dedup (round 8e) ---------------------------------
 
 
@@ -761,39 +719,6 @@ def test_pack_split_raises_on_uncastable_ids(spark):
     )
     with _pytest.raises(Exception, match="not castable"):
         T.pack_split(docs, length=4)
-
-
-def test_store_cache_sweep_never_crosses_sf_suffixes(tmp_path):
-    """The tag slot is an exact-width wildcard: another sf whose
-    sanitized path ENDS with this sf's suffix (``/a/.pytest2/data/sf1``
-    sanitizes to ``_a__pytest2_data_sf1``, which ends with
-    ``/pytest2/data/sf1``'s ``__pytest2_data_sf1``) must never be
-    swept. The victim below matches the naive ``prefix + '*' + suffix``
-    glob — the test fails against that unfixed pattern — but not the
-    exact-width one."""
-    import fnmatch
-    import os
-    import shutil
-    import tempfile
-
-    from smoltable_spark.queries_core import _store_cache_path
-
-    tmp = tempfile.gettempdir()
-    suffix = "__pytest2_data_sf1"
-    victim = os.path.join(
-        tmp, "smoltable_zstore_deadbeef00_a" + suffix
-    )
-    # the naive glob really would have swept it (guards test vacuity)
-    assert fnmatch.fnmatch(victim, os.path.join(
-        tmp, "smoltable_zstore_" + "*" + suffix
-    ))
-    os.makedirs(victim, exist_ok=True)
-    try:
-        cur = _store_cache_path("smoltable_zstore_", "/pytest2/data/sf1")
-        assert os.path.isdir(victim)  # tail-overlapping SF untouched
-    finally:
-        shutil.rmtree(victim, ignore_errors=True)
-        shutil.rmtree(cur, ignore_errors=True)
 
 
 def test_rollup_legacy_meta_fails_loudly(spark, tmp_path):
