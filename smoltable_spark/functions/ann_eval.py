@@ -46,8 +46,7 @@ def ivf_index_health(
     - ``tombstones`` / ``tombstone_permille``: outstanding delete
       backlog vs rows_total — serve-time anti-join work that
       ``compact_ivf_index`` resets;
-    - ``generation``: the pointer number (0 = never folded on a
-      rename-unsafe filesystem);
+    - ``generation``: the pointer number (0 = never folded);
     - ``recommendation``: ``"compact"`` when the tombstone backlog
       crosses ``tombstone_warn_permille``, else ``"retrain"`` when
       imbalance crosses ``imbalance_warn_permille``, else

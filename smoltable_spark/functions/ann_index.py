@@ -22,17 +22,15 @@ compaction story the CellStore uses for table data.
 Filesystem contract: the whole maintenance family — append, delete,
 fold, compact, vacuum — runs its metadata through the storage adapter
 (``sources/store_fs.py``), so an index on ``hdfs://`` or ``s3a://`` is
-maintained from any driver. Publishes are staged under dot-prefixed
-names invisible to readers, and crash leftovers fail the next
-maintenance op fast. The fold/compact family dispatches on the probed
-``atomic_rename`` capability: rename-atomic filesystems keep the
-in-place per-list swap; elsewhere survivors land in dot-prefixed
-``.gen/g=<m>/`` dirs and one ``_LISTGEN`` pointer commit (see
-``functions/similarity.py``) atomically swaps the affected lists to
-their new generation and transitions the tombstone set.
-``vacuum_ivf_index`` reclaims superseded generations under FIFO pointer
-retention; ``allow_non_atomic_swap=True`` selects the in-place swap for
-pointer-less indexes in a no-readers maintenance window.
+maintained from any driver, by the same code on every filesystem.
+Publishes are staged under dot-prefixed names invisible to readers. A
+fold never renames anything a reader can see: the survivors of the
+affected lists land in dot-prefixed ``.gen/g=<m>/`` dirs, and one
+``_LISTGEN`` pointer commit (see ``functions/similarity.py``)
+atomically swaps those lists to their new generation and transitions
+the tombstone set. Readers resolve lists through
+``similarity.read_ivf_lists``. ``vacuum_ivf_index`` reclaims superseded
+generations and the pre-fold plain dirs under FIFO pointer retention.
 """
 
 from __future__ import annotations
@@ -88,7 +86,6 @@ def append_ivf_index(
     new_vectors: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    allow_non_atomic_swap: bool = False,
 ) -> None:
     """Add vectors to a persisted IVF index WITHOUT retraining: assign
     each new vector to its nearest list under the index's own persisted
@@ -139,12 +136,9 @@ def append_ivf_index(
             "partitions to finish that publish, or delete the staging dir "
             "to roll it back; then retry this append."
         )
-    # a crashed fold may have left a list retired inside its staging
-    # dir; appending on top would compound the damage
-    _check_fold_crash_evidence(fs, base)
     # the assigned batch feeds two actions (the tombstone intersection
     # and the staged write) and is often join-derived: compute it once,
-    # after the fail-fast checks.
+    # after the fail-fast check.
     nv_listed = materialize(nv_listed, "bounded")
     # fold the tombstones the batch supersedes BEFORE its rows become
     # visible, so the published rows serve unmasked. Batch ids and
@@ -159,10 +153,7 @@ def append_ivf_index(
             ).collect()
         }
         if batch_ids:
-            _fold_tombstones(
-                spark, path, only_vec_ids=batch_ids,
-                allow_non_atomic_swap=allow_non_atomic_swap,
-            )
+            _fold_tombstones(spark, path, only_vec_ids=batch_ids)
     (
         nv_listed
         .write.mode("overwrite")
@@ -213,14 +204,12 @@ def append_ivf_index(
 
 
 # ---------------------------------------------------------------------------
-# deletes: tombstones + targeted list compaction (round 9)
+# deletes: tombstones + targeted list compaction
 
 _TOMBSTONE_ROOT = "_tombstones"
 
-#: VERDICT r10 "What's wrong": the fold used to ``collect()`` the whole
-#: tombstone set trusting an UNENFORCED "bounded by deletes since last
-#: compact" invariant. The fold is now fully distributed (no collect of
-#: tombstone rows at all); this threshold only decides whether the
+#: The fold collects no tombstone rows (nothing bounds the tombstone set
+#: but the compaction cadence); this threshold only decides whether the
 #: victim side of the survivor anti-join is broadcast (small: one
 #: executor-local hash map) or shuffled (large: AQE picks the strategy).
 _BROADCAST_MAX_TOMBS = 1_000_000
@@ -264,22 +253,14 @@ def delete_from_ivf_index(
     # sweep rollback artifacts of a crashed PREVIOUS delete: a leftover
     # .staging-delete-* was never published (the atomic rename into
     # _tombstones/ is the commit point), so under the single-writer
-    # contract removing it is a pure rollback — unlike the list-swap
-    # leftovers _check_fold_crash_evidence fails fast on, nothing here
-    # needs reconciliation
+    # contract removing it is a pure rollback
     for d in fs.listdir(base):
         if d.startswith(".staging-delete-"):
             fs.rmtree(f"{base}/{d}")
-    # ADVICE r10 (low): after a crashed fold, a list partition may be
-    # sitting retired inside staging — the victim→list resolution below
-    # would then record 0 hits for ids in that list (treated as absent),
-    # and a later manual reconciliation would restore those rows
-    # UN-tombstoned: a silent delete loss. Fail fast before mutating.
-    _check_fold_crash_evidence(fs, base)
     victims = ids.select(F.col(id_col).alias("vec_id")).distinct()
     # the delete batch is caller-bounded (an API request), the index is
-    # not: broadcast the victims, stream the index. Generation-aware
-    # read (round 13): victims resolve against each list's LIVE dir.
+    # not: broadcast the victims, stream the index. Victims resolve
+    # against each list's LIVE dir.
     lists = read_ivf_lists(spark, base)
     if lists is None:  # fully-retired index: nothing to delete
         return 0
@@ -301,54 +282,29 @@ def delete_from_ivf_index(
         return 0
     dst_root = f"{base}/{_TOMBSTONE_ROOT}"
     fs.makedirs(dst_root)
-    # atomic publish (dir rename on HDFS/local; see module header
-    # for the S3A caveat — an unpublished staging dir is swept by
-    # the next delete, so a torn copy never becomes a tombstone leg)
+    # the publish is a dir rename: atomic on rename-atomic
+    # filesystems; a copy+delete rename can show a concurrent reader a
+    # partly copied leg. An unpublished staging dir is swept by the
+    # next delete.
     fs.rename(staging, f"{dst_root}/d-{tag}")
     return int(n)
 
 
-def _check_fold_crash_evidence(fs, base: str) -> None:
-    """Fail fast on leftovers of a crashed list-partition swap (ADVICE
-    r9, medium): a ``.staging-compact-*`` or ``.new-list_id=*`` dir
-    means a previous fold died mid-swap — a list partition may be
-    sitting retired inside staging (queries would silently return fewer
-    rows) or half-published under the dot name. Blindly re-running
-    would compound the damage; recovery is explicit, mirroring
-    ``append_ivf_index``'s staging check."""
-    leftovers = [
-        d
-        for d in fs.listdir(base)
-        if d.startswith(".staging-compact-") or d.startswith(".new-list_id=")
-    ]
-    if leftovers:
-        raise IOError(
-            f"IVF fold aborted: leftover dirs {leftovers} under {base} — "
-            "a previous compact/fold crashed mid-swap (or a concurrent "
-            "writer is running, violating the single-writer contract). "
-            "Reconcile: for each .new-list_id=<l>, finish the swap by "
-            "moving any .staging-compact-*/.retired-<l> aside and "
-            "renaming .new-list_id=<l> to list_id=<l>; restore any "
-            "retired list dirs still inside staging that have no "
-            "replacement; then delete the staging dirs and retry."
-        )
-
-
 def _fold_tombstones(
-    spark, path: str, only_vec_ids: set | None = None,
-    allow_non_atomic_swap: bool = False,
+    spark, path: str, only_vec_ids: set | None = None
 ) -> dict:
-    """Physically drop tombstoned rows from their list partitions and
-    clear the folded tombstones. ``only_vec_ids`` restricts the fold to
-    a subset of tombstoned ids (the append-upsert path); the remaining
-    tombstones are preserved via an atomic rewrite of ``_tombstones/``.
+    """Physically drop tombstoned rows from their lists and clear the
+    folded tombstones. ``only_vec_ids`` restricts the fold to a subset
+    of tombstoned ids (the append-upsert path); the remaining tombstones
+    stay live in a kept leg.
 
-    Crash discipline: the per-list swap publishes the new
-    dir BESIDE the old one first (dot-prefixed, invisible to readers),
-    then retires the old, then renames the new into place — every
-    intermediate state is either pre-swap, detectable via
-    ``_check_fold_crash_evidence``, or post-swap; already-removed list
-    dirs are tolerated on replay.
+    Crash discipline: the survivors of the affected lists land in the
+    dot-prefixed ``.gen/g=<m+1>/`` dir and the kept tombstones in a
+    dot-prefixed ``.t-*`` leg, both invisible to every reader. ONE
+    ``_LISTGEN`` pointer create then swaps the lists and transitions the
+    tombstone set together, so a crash before it leaves only
+    unreferenced dot dirs (the next fold or ``vacuum_ivf_index`` sweeps
+    them) and a crash after it only legs the pointer already excludes.
 
     Scale discipline: NOTHING
     table-sized touches the driver. The victim/keep split and the
@@ -362,65 +318,43 @@ def _fold_tombstones(
 
     base = path.rstrip("/")
     fs = store_fs_for(spark, base)
-    # before the no-tombstones early return: swap leftovers must fail
-    # fast, not report a clean no-op compact
-    _check_fold_crash_evidence(fs, base)
     m, gmap, meta = _ivf_pointer(fs, base)
-    # an index with a ``_LISTGEN`` pointer is permanently generational
-    # (its live dirs resolve only through the pointer); a pointer-less
-    # one goes generational the first time it folds on a rename-unsafe
-    # scheme, unless ``allow_non_atomic_swap`` asserts a no-readers
-    # window for the in-place swap
-    gen_mode = m > 0 or (
-        not getattr(fs, "atomic_rename", True) and not allow_non_atomic_swap
-    )
     tombs = _tombstones(spark, base)
     if tombs is None:
         return {"tombstones": 0, "lists_rewritten": 0}
     troot = f"{base}/{_TOMBSTONE_ROOT}"
-    # sweep a crashed subset-fold's unpublished tombstone rewrite (the
-    # rename to d-* — or, in generation mode, the pointer naming a
-    # ``.t-*`` leg — is its commit point; an UNREFERENCED dot dir is
-    # pure rollback: the legs it was derived from are still live)
+    # a kept leg is committed by the pointer naming it in ``tomb_keep``:
+    # an UNREFERENCED ``.t-*`` dir is a crashed subset fold's pure
+    # rollback (the legs it was derived from are still live)
     folded_names = set(meta.get("tomb_folded", []))
     keep_names = set(meta.get("tomb_keep", []))
     legs = []       # live tombstone legs (full paths)
     leg_names = []  # their basenames — the next pointer's tomb_folded
     for d, is_dir in fs.list_status(troot):
-        if d.startswith(".staging-rewrite-"):
-            fs.rmtree(f"{troot}/{d}")
-        elif not is_dir:
+        if not is_dir:
             continue
         elif (d.startswith("d-") and d not in folded_names) or d in keep_names:
             legs.append(f"{troot}/{d}")
             leg_names.append(d)
         elif d.startswith(".t-"):
-            fs.rmtree(f"{troot}/{d}")  # unreferenced kept-leg: rollback
+            fs.rmtree(f"{troot}/{d}")
     # total tombstone rows from the legs' parquet FOOTERS — driver-side
     # metadata, no Spark job; n_folded derives from it (total − kept)
     # so neither the full fold nor the subset fold pays a count job
     tombs_total = sum(fs.parquet_dir_rows(d) for d in legs)
     if tombs_total == 0:
         return {"tombstones": 0, "lists_rewritten": 0}
-    fold_df = None
     # the victim/keep split, the per-list aggregation and the survivor
     # anti-join all read the (bounded) tombstone set; it fills in the
     # first of them
     tombs = materialize(tombs, "bounded", eager=False)
-    tag = uuid.uuid4().hex[:12]
     kept = 0
     stage = None
-    # r14 (guide §2.4 / VERDICT r13 ask #3 — commit/job-count
-    # reduction on the maintenance floor): ONE bounded aggregation
-    # job computes the per-list folded counts (which IS the
-    # 'affected' set), the kept count, and therefore n_folded —
-    # replacing the old unconditional kept-leg write + footer
-    # read + separate distinct-list collect. The grouped rows are
-    # bounded by n_centroids (the same driver-safe bound the old
-    # collect relied on). The kept leg is then written ONLY when
-    # kept > 0: the append-upsert path's common case folds EVERY
-    # tombstone it intersects, so it skips that whole parquet
-    # commit (write + footer round-trip + publish rename).
+    # ONE bounded aggregation job computes the per-list folded counts
+    # (which IS the affected set) and the kept count, hence n_folded;
+    # its rows are bounded by n_centroids. The kept leg is written
+    # ONLY when kept > 0: the append-upsert path usually folds every
+    # tombstone it intersects and then skips that parquet write.
     if only_vec_ids is not None:
         # the subset is the append batch's ids: caller-bounded (an
         # API request), so the split joins broadcast it
@@ -443,25 +377,16 @@ def _fold_tombstones(
         )
         kept = sum(int(r["kept"]) for r in split)
         if kept:
-            keep_df = tombs.join(F.broadcast(batch), "vec_id", "left_anti")
-            # subset fold: atomically replace the tombstone set with
-            # the survivors. Legacy mode stages under a dot dir and
-            # renames it in as a d-* leg after the list swap (every
-            # crash window leaves a SUPERSET of the intended
-            # tombstones — over-masking = still-deleted, consistent).
-            # Generation mode writes the kept leg under its final DOT
-            # name directly: invisible to both listing rules until
-            # the pointer commit below names it in ``tomb_keep`` —
-            # the tombstone transition is atomic WITH the list swap.
-            # Types pinned to the d-* leg schema (vec_id int64,
-            # list_id int32) so multi-leg reads merge.
-            stage = (
-                f"{troot}/.t-{tag}"
-                if gen_mode
-                else f"{troot}/.staging-rewrite-{tag}"
-            )
+            # the survivors go under their final DOT name directly:
+            # invisible to both listing rules until the pointer commit
+            # below names the leg in ``tomb_keep``, so the tombstone
+            # transition is atomic WITH the list swap. Types pinned to
+            # the d-* leg schema (vec_id int64, list_id int32) so
+            # multi-leg reads merge.
+            stage = f"{troot}/.t-{uuid.uuid4().hex[:12]}"
             (
-                keep_df.select(
+                tombs.join(F.broadcast(batch), "vec_id", "left_anti")
+                .select(
                     F.col("vec_id").cast("long").alias("vec_id"),
                     F.col("list_id").cast("int").alias("list_id"),
                 )
@@ -481,11 +406,8 @@ def _fold_tombstones(
         if stage is not None:
             fs.rmtree(stage)
         return {"tombstones": 0, "lists_rewritten": 0}
-    # tolerate already-removed list dirs (a fully-tombstoned list
-    # from a previous fold, or a replay after manual crash
-    # reconciliation): a tombstone pointing at a vanished list has
-    # nothing left to drop. Serving dirs resolve generation-aware:
-    # a retired list (g=0) has nothing to drop.
+    # a tombstone pointing at a list with no live dir (retired by an
+    # earlier fold, or removed by hand) has nothing left to drop
     affected = []
     for r in split:
         if int(r["folded"]) == 0:
@@ -497,109 +419,64 @@ def _fold_tombstones(
     victims = fold_df.select("vec_id").distinct()
     if tombs_total <= _BROADCAST_MAX_TOMBS:
         victims = F.broadcast(victims)
-    if gen_mode:
-        g_new = m + 1
-        new_lists = dict(gmap)
-        if affected:
-            survivors = read_ivf_lists(spark, base, affected).join(
-                victims, "vec_id", "left_anti"
-            )
-            gen_dir = f"{base}/{_GEN_ROOT}/g={g_new}"
-            # dot-prefixed: invisible to every reader until the
-            # pointer commit; a crashed previous attempt at this
-            # same generation number is simply overwritten
-            survivors.write.mode("overwrite").partitionBy(
-                "list_id"
-            ).parquet(gen_dir)
-            present = {
-                int(nm.split("=", 1)[1])
-                for nm, isd in fs.list_status(gen_dir)
-                if isd and nm.startswith("list_id=")
-            }
-            for l in affected:
-                # a list whose every row was tombstoned RETIRES
-                # (g=0): readers skip it (the empty LSM level)
-                new_lists[l] = g_new if l in present else 0
-        # THE commit point: one all-or-nothing pointer PUT swaps
-        # the affected lists to their new generation AND
-        # transitions the tombstone set (folded legs out, kept leg
-        # in). Readers see pre-fold or post-fold, never mid-swap.
-        _commit_listgen(
-            fs, base, g_new, new_lists,
-            tomb_keep=[stage.rsplit("/", 1)[1]] if stage else [],
-            tomb_folded=sorted(folded_names | set(leg_names)),
-        )
-        # post-commit sweep: the pointer already excludes these
-        # legs, so a crash mid-sweep leaves only ignored garbage
-        # (vacuum_ivf_index finishes the job)
-        for d in legs:
-            fs.rmtree(d)
-        return {
-            "tombstones": int(n_folded),
-            "lists_rewritten": len(affected),
-        }
+    g_new = m + 1
+    new_lists = dict(gmap)
     if affected:
-        survivors = (
-            spark.read.option("basePath", base)
-            .parquet(*[f"{base}/list_id={l}" for l in affected])
-            .join(victims, "vec_id", "left_anti")
+        survivors = read_ivf_lists(spark, base, affected).join(
+            victims, "vec_id", "left_anti"
         )
-        staging = f"{base}/.staging-compact-{tag}"
-        survivors.write.mode("overwrite").partitionBy(
-            "list_id"
-        ).parquet(staging)
+        gen_dir = f"{base}/{_GEN_ROOT}/g={g_new}"
+        # dot-prefixed: invisible to every reader until the pointer
+        # commit; a crashed previous attempt at this same generation
+        # number is simply overwritten
+        survivors.write.mode("overwrite").partitionBy("list_id").parquet(
+            gen_dir
+        )
+        present = {
+            int(nm.split("=", 1)[1])
+            for nm, isd in fs.list_status(gen_dir)
+            if isd and nm.startswith("list_id=")
+        }
         for l in affected:
-            old = f"{base}/list_id={l}"
-            staged = f"{staging}/list_id={l}"
-            new = f"{base}/.new-list_id={l}"
-            # publish-beside first: readers keep serving the old dir
-            # until the final rename, and a crash from here on
-            # leaves recoverable evidence instead of a
-            # silently-vanished list
-            if fs.isdir(staged):
-                fs.rename(staged, new)
-            if fs.isdir(old):
-                fs.rename(old, f"{staging}/.retired-{l}")
-            if fs.isdir(new):
-                fs.rename(new, old)
-            # a list whose every row was tombstoned has no staged
-            # dir: the partition simply disappears (an empty LSM
-            # level)
-        fs.rmtree(staging)
-    if stage is not None:
-        fs.rename(stage, f"{troot}/d-{tag}")
+            # a list whose every row was tombstoned RETIRES (g=0):
+            # readers skip it (the empty LSM level)
+            new_lists[l] = g_new if l in present else 0
+    # THE commit point: one all-or-nothing pointer create swaps the
+    # affected lists to their new generation AND transitions the
+    # tombstone set (folded legs out, kept leg in). Readers see
+    # pre-fold or post-fold, never mid-swap.
+    _commit_listgen(
+        fs, base, g_new, new_lists,
+        tomb_keep=[stage.rsplit("/", 1)[1]] if stage else [],
+        tomb_folded=sorted(folded_names | set(leg_names)),
+    )
+    # post-commit sweep: the pointer already excludes these legs, so a
+    # crash mid-sweep leaves only ignored garbage (vacuum_ivf_index
+    # finishes the job)
     for d in legs:
         fs.rmtree(d)
     return {"tombstones": int(n_folded), "lists_rewritten": len(affected)}
 
 
-def compact_ivf_index(
-    spark, path: str, allow_non_atomic_swap: bool = False
-) -> dict:
-    """Fold tombstones into the index: rewrite ONLY the list partitions
-    that contain tombstoned rows (O(affected lists), never O(index)),
-    then clear the folded tombstone files. Serving results are
-    BIT-IDENTICAL before and after — the tombstone anti-join and the
-    physical drop express the same set — so compaction is pure
-    read-amplification maintenance, exactly like the CellStore's minor
-    fold.
+def compact_ivf_index(spark, path: str) -> dict:
+    """Fold tombstones into the index: rewrite ONLY the lists that
+    contain tombstoned rows (O(affected lists), never O(index)), then
+    clear the folded tombstone files. Serving results are BIT-IDENTICAL
+    before and after — the tombstone anti-join and the physical drop
+    express the same set — so compaction is pure read-amplification
+    maintenance, exactly like the CellStore's minor fold.
 
-    Publish strategy (see the module docstring): the in-place per-list
-    swap on rename-atomic filesystems for pointer-less indexes, else
-    the ``_LISTGEN`` generation commit — readers see pre-fold or
-    post-fold, never a mid-copy directory. ``allow_non_atomic_swap``
-    asserts a no-readers window and takes the in-place swap on a
-    rename-unsafe scheme. Single maintenance writer (a violation raises
-    ``ConcurrentCommitError``); fails fast on a previous fold's crash
-    evidence (``_check_fold_crash_evidence``)."""
-    return _fold_tombstones(
-        spark, path, only_vec_ids=None,
-        allow_non_atomic_swap=allow_non_atomic_swap,
-    )
+    The fold publishes through one ``_LISTGEN`` generation commit on
+    every filesystem (see the module docstring): readers see pre-fold
+    or post-fold, never a mid-copy directory. The pre-fold rows stay
+    in the plain list dirs, shielded by the pointer, until
+    ``vacuum_ivf_index`` removes them. Single maintenance writer (a
+    violation raises ``ConcurrentCommitError``)."""
+    return _fold_tombstones(spark, path)
 
 
 def vacuum_ivf_index(spark, path: str, keep_pointers: int = 2) -> dict:
-    """Reclaim storage a generational IVF index no longer serves:
+    """Reclaim storage a folded IVF index no longer serves:
     superseded ``.gen/g=<g>`` dirs, pre-fold stale plain ``list_id=``
     dirs, swept-but-crashed tombstone legs, and old pointer files —
     the IVF analog of ``CellStore.vacuum`` (same retention discipline:

@@ -569,9 +569,9 @@ def build_ivf_index(
 
 
 #: The IVF maintenance pointer: a ``store_fs.GenerationPointer`` named
-#: ``_LISTGEN`` at the index root, always committed as create-if-absent
-#: generations (vacuum_ivf_index keeps the newest few, and readers of an
-#: older one must still find its dirs). Its JSON payload:
+#: ``_LISTGEN`` at the index root (vacuum_ivf_index keeps the newest few
+#: generations, and readers of an older one must still find its dirs).
+#: Every fold commits through it. Its JSON payload:
 #:   {"v": m, "lists": {list_id: g}, "tomb_keep": [...], "tomb_folded": [...]}
 #: - ``lists``: lists whose LIVE data is the dot-prefixed generation dir
 #:   ``.gen/g=<g>/list_id=<k>`` (g >= 1) or retired entirely (g == 0).
@@ -590,7 +590,7 @@ _GEN_ROOT = ".gen"
 def _listgen_pointer(fs, base: str):
     from smoltable_spark.sources.store_fs import GenerationPointer
 
-    return GenerationPointer(fs, base, _LISTGEN, swap=False)
+    return GenerationPointer(fs, base, _LISTGEN)
 
 
 def _ivf_pointer(fs, base: str) -> tuple[int, dict[int, int], dict]:
@@ -604,7 +604,7 @@ def _ivf_pointer(fs, base: str) -> tuple[int, dict[int, int], dict]:
 
 def ivf_list_generations(spark, path: str) -> tuple[int, dict[int, int]]:
     """(pointer number, {list_id: live generation}) of a persisted IVF
-    index — (0, {}) for never-folded-on-rename-unsafe indexes."""
+    index — (0, {}) for a never-folded index."""
     from smoltable_spark.sources.store_fs import store_fs_for
 
     base = path.rstrip("/")
@@ -613,21 +613,25 @@ def ivf_list_generations(spark, path: str) -> tuple[int, dict[int, int]]:
 
 
 def read_ivf_lists(spark, path: str, list_ids=None):
-    """Generation-aware read of a persisted IVF index's inverted lists
-    (columns ``vec_id, q, nrm2, list_id``), or None when no serving dir
-    matches (an empty/fully-retired selection).
+    """The one read of a persisted IVF or IVF-PQ index's inverted lists
+    (the index's own columns plus ``list_id``), or None when no serving
+    dir matches (an empty/fully-retired selection). Every reader goes
+    through it, because after a fold a list's live rows are wherever
+    the ``_LISTGEN`` pointer says, and its plain dir may still hold the
+    deleted rows until ``vacuum_ivf_index``.
 
-    No pointer — the overwhelmingly common state — is ONE partition-
-    discovery read of the root, byte-identical in plan and cost to the
-    pre-r13 direct read (``list_ids`` becomes the usual
-    ``list_id IN (...)`` partition filter Catalyst prunes on). With a
-    pointer, each list serves from its live location: unmapped lists
-    read their plain dirs EXPLICITLY (physical pruning — stale plain
-    dirs of mapped lists are never listed), and mapped lists group into
-    one read per generation with that generation's basePath, so the
-    read fan-out is O(live generations), not O(lists)."""
+    No pointer (a never-folded index) is ONE partition-discovery read
+    of the root (``list_ids`` becomes the usual ``list_id IN (...)``
+    partition filter Catalyst prunes on). With a pointer, each list
+    serves from its live location: unmapped lists read their plain dirs
+    EXPLICITLY (physical pruning — stale plain dirs of mapped lists are
+    never listed), and mapped lists group into one read per generation
+    with that generation's basePath, so the read fan-out is O(live
+    generations), not O(lists)."""
     from smoltable_spark.sources.store_fs import store_fs_for
 
+    if list_ids is not None and not list_ids:
+        return None
     base = path.rstrip("/")
     fs = store_fs_for(spark, base)
     _m, gmap, _meta = _ivf_pointer(fs, base)
@@ -730,15 +734,10 @@ def query_ivf_index(
     )
     probes = _nearest_centroids(qd, cents, nprobe=nprobe).select("vec_id", "list_id")
     probe_ids = [r["list_id"] for r in probes.select("list_id").distinct().collect()]
-    if not probe_ids:  # empty query batch: skip reading the index root
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rank int"
-        )
-    # generation-aware list read (round 13): without a _LISTGEN pointer
-    # this is the identical partition-discovery read + IN-list pruning
-    # as before; with one, each probed list reads its live location
+    # without a _LISTGEN pointer this is one partition-discovery read +
+    # IN-list pruning; with one, each probed list reads its live location
     probed = read_ivf_lists(spark, path, probe_ids)
-    if probed is None:  # every probed list is retired/empty
+    if probed is None:  # no probes, or every probed list retired/empty
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, cosine double, rank int"
         )
@@ -1408,7 +1407,8 @@ def query_ivfpq_index(
         F.col("vec_id").alias("query_id"), "list_id"
     )
     probe_ids = [r["list_id"] for r in probes.select("list_id").distinct().collect()]
-    if not probe_ids:
+    codes = read_ivf_lists(spark, path, probe_ids)
+    if codes is None:  # no probes, or every probed list retired/empty
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, adc_dist long, rank int"
         )
@@ -1423,7 +1423,6 @@ def query_ivfpq_index(
             "d2",
         )
     )
-    codes = spark.read.parquet(path).filter(F.col("list_id").isin(probe_ids))
     tombs = ivf_tombstones(spark, path)
     if tombs is not None:
         # same delete-tombstone mask as query_ivf_index: the maintenance

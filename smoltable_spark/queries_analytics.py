@@ -11846,14 +11846,14 @@ def ann_ivf_readd(spark, sf_dir):
                     corpus_where="vec_id % 11 <> 3"),
 )
 def ann_ivf_fold_unsafe(spark, sf_dir):
-    """IVF fold on a RENAME-UNSAFE filesystem (round 13, VERDICT r12
-    ask #2): with the object-store capability profile forced over local
-    syscalls, ``compact_ivf_index`` must publish through the rename-free
-    ``_LISTGEN`` generation protocol — survivors land in dot-prefixed
+    """IVF fold under the object-store capability profile (forced over
+    local syscalls, with a ``rename`` that raises): ``compact_ivf_index``
+    publishes through the rename-free ``_LISTGEN`` generation protocol,
+    as on every filesystem — survivors land in dot-prefixed
     ``.gen/g=1/`` dirs and ONE create-if-absent pointer PUT atomically
-    swaps the affected lists and clears the folded tombstones (the r12
-    build REFUSED here; object-store indexes could be served but not
-    maintained). The row deletes every ``vec_id % 11 == 3``, asserts
+    swaps the affected lists and clears the folded tombstones, so an
+    index on an object store is maintained, not only served. The row
+    deletes every ``vec_id % 11 == 3``, asserts
     the masked (tombstone anti-join) and generation-folded servings are
     bit-identical, asserts the pointer exists and the serving dirs are
     generational, runs ``vacuum_ivf_index`` over the superseded

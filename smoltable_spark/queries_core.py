@@ -374,14 +374,14 @@ def wc_store_time_travel(spark, sf_dir):
     "newest_cents AS cents_after_vacuum FROM n, s",
 )
 def wc_store_unsafe_commit(spark, sf_dir):
-    """Rename-free commit protocol end-to-end, oracle-pinned (round 12,
-    VERDICT r11 ask #2): a CellStore whose filesystem reports
-    ``atomic_rename = False`` (the object-store capability profile —
-    simulated here over local syscalls with a deliberately TORN
-    ``replace_text``, so any regression to rename-based publishing
-    surfaces as a missing pointer) commits every version as a fresh
-    ``_VERSION`` generation file. The row pins the full protocol
-    against orders-derived oracle math: resolution (max over
+    """The generation commit protocol end-to-end under the object-store
+    capability profile, oracle-pinned: a CellStore whose filesystem
+    reports ``atomic_rename = False`` (simulated here over local
+    syscalls with a ``replace_text`` that raises, so any rename-based
+    publish of a pointer or sidecar fails the row) commits every version
+    as a fresh ``_VERSION-v<n>`` generation file — the one commit form
+    of every filesystem — and never writes a plain ``_VERSION``. The row
+    pins the full protocol against orders-derived oracle math: resolution (max over
     generations), LSM shadowing across the generation-committed chain
     (newest per-coordinate totalprice after two rewrite deltas), MVCC
     time travel to v1, and vacuum's generation sweep (legs all retained

@@ -3,7 +3,7 @@
 Physical design (SURVEY §1.6, §4):
 
 - one directory per table, containing immutable snapshot versions
-  ``v=<n>/`` and a ``_VERSION`` pointer file — a minimal copy-on-write
+  ``v=<n>/`` and ``_VERSION-v<n>`` pointer files — a minimal copy-on-write
   MVCC that stands in for the reference's LSM snapshots
   (``keyspace.instant()``, smoltable/src/table/mod.rs:653) and gives
   Delta-style time travel without external dependencies;
@@ -37,40 +37,39 @@ table at 100 TB):
 
 Readers always see a consistent version: the ``_VERSION`` pointer
 (``store_fs.GenerationPointer``) is the commit point, published after
-the snapshot's data and kind marker are fully on disk. On rename-atomic
-filesystems it is one file swapped in place; elsewhere each commit
-creates a fresh generation file, so no reader can catch a torn pointer,
-and ``vacuum`` sweeps generations below its retention cutoff.
+the snapshot's data and kind marker are fully on disk. Every commit, on
+every filesystem, creates the fresh generation file ``_VERSION-v<n>``
+if absent, so no reader can catch a torn pointer, and ``vacuum`` sweeps
+generations below its retention cutoff. A store that carries a plain
+``_VERSION`` file (the older single-file layout) is refused: rebuild it.
 
 The pointer's content is a JSON chain manifest ``{"v": n, "legs": {v:
 [kind, folds], ...}}`` — a write-once cache of every live leg's
 ``_KIND``/``_FOLDS`` markers, so opening a chain costs one pointer read
 instead of two reads per leg on object stores. The marker files stay
-authoritative: a legacy plain-int pointer, or a version missing from
-the manifest, falls back to reading markers. Kind and folds are
-immutable per version number (numbers are never reused), so the cache
-needs no invalidation.
+authoritative: a version missing from the manifest (trimmed, see
+``_MANIFEST_KEEP_VERSIONS``) falls back to reading markers. Kind and
+folds are immutable per version number (numbers are never reused), so
+the cache needs no invalidation.
 
 **One pointer read + one listing per operation.** Every operation
-(``read``, ``read_changes``, a commit, ``vacuum``, ``migrate_minor_legs``,
-the stats) starts with ``current_version()``: the pointer resolve lists
+(``read``, ``read_changes``, a commit, ``vacuum``, the stats) starts
+with ``current_version()``: the pointer resolve lists
 the store root and reads the pointer, and that one listing becomes the
 handle's version → leg-dir map (``_leg_dirs``). Leg-dir names, the
 chain's base and every missing-leg check are answered from the map — no
 per-leg existence probe, which on a URI store would be one RPC each. A
-mutation on the handle (a commit, ``vacuum``, ``migrate_minor_legs``)
-updates the entries it changed.
+mutation on the handle (a commit, ``vacuum``) updates the entries it
+changed.
 
 **Writer concurrency.** Mutations assume a SINGLE writer per store, like
 LSM memtable flushes: two writers can interleave staging under the same
 ``v=<n>`` dir, or a vacuum listing with a commit, in ways no pointer
 protocol repairs after the fact. What the engine guarantees is that a
-violation is loud: on rename-unsafe filesystems the generation create is
-a create-if-absent CAS, so of two writers racing to commit the same
-version exactly one wins and the other raises
-:class:`ConcurrentCommitError`. (On rename-atomic filesystems the single
-``_VERSION`` file matches the reference's single-process model,
-smoltable/src/table/writer.rs:75-79.) Readers need no coordination.
+violation is loud: the generation create is a create-if-absent CAS on
+every filesystem, so of two writers racing to commit the same version
+exactly one wins and the other raises :class:`ConcurrentCommitError`.
+Readers need no coordination.
 """
 
 from __future__ import annotations
@@ -202,9 +201,9 @@ class CellStore:
     #: re-consumes re-laid-out cells. Explicit-path reads
     #: (``_merge_legs``) see the dir fine: the hidden-name filter applies
     #: to listed CHILDREN, not a given root — so the ``All paths were
-    #: ignored`` WARN Spark logs for such a root is benign. Both name
-    #: forms are recognised from the one root listing an operation takes
-    #: (``_leg_map``); nothing probes for either.
+    #: ignored`` WARN Spark logs for such a root is benign. Leg dirs are
+    #: recognised from the one root listing an operation takes
+    #: (``_leg_map``); nothing probes for them.
     _MINOR_DIR = ".v={n}.minor"
 
     @staticmethod
@@ -225,13 +224,11 @@ class CellStore:
 
     @classmethod
     def _leg_map(cls, names: list[str]) -> dict[int, str]:
-        """Version -> leg dir name among a root listing. The plain name
-        wins when both forms exist, so legacy minor legs committed
-        before the dot naming keep resolving to their plain dirs."""
+        """Version -> leg dir name among a root listing."""
         legs: dict[int, str] = {}
         for name in names:
             v = cls._dirname_version(name)
-            if v is not None and (v not in legs or name.startswith("v=")):
+            if v is not None:
                 legs[v] = name
         return legs
 
@@ -418,14 +415,13 @@ class CellStore:
         returns (possibly transformed df, partition columns). Layout
         subclasses (e.g. Z-order bucketing in ``store_layout.py``)
         override ONLY this; the commit sequence itself (version dir,
-        WRITE_OPTIONS, kind marker, atomic pointer rename) stays here so
-        it can never drift between layouts (ADVICE r7: the Z-ordered
-        base path used to re-implement the whole sequence).
+        WRITE_OPTIONS, kind marker, pointer commit) stays here so it
+        can never drift between layouts.
 
-        The hook OWNS the base snapshot's arrangement shuffle (round 9:
-        it used to run after ``write()`` had already range-partitioned,
-        so a Z-ordered base write shuffled the whole table twice — at
-        100 TB, one entire wasted exchange per write/compaction). The
+        The hook OWNS the base snapshot's arrangement shuffle, so a
+        base write shuffles the table once: a layout that re-arranged
+        after ``write()`` had range-partitioned would pay a second
+        exchange of the whole table per write/compaction. The
         default base layout is range-partition by (lg, row_key) +
         key-sort; deltas are written as they arrive (O(batch) memtable
         flush, the caller sorts within partitions)."""
@@ -537,7 +533,7 @@ class CellStore:
         markers: dict[str, str] | None = None,
     ) -> int:
         """``markers``: extra marker files written into the version dir
-        BEFORE the pointer rename — like ``_KIND``, they must be visible
+        BEFORE the pointer commit — like ``_KIND``, they must be visible
         the instant the commit is (a crash in between must never leave a
         committed leg missing its metadata)."""
         df, part_cols = self._layout(df, kind, num_range_partitions)
@@ -683,58 +679,6 @@ class CellStore:
                 )
             },
         )
-
-    def migrate_minor_legs(self, allow_non_atomic: bool = False) -> int:
-        """Rename legacy PLAIN-named minor legs (``v=<n>`` dirs with a
-        ``_KIND`` of ``minor``, from before the dot naming) to the
-        stream-invisible ``.v=<n>.minor`` form; returns how many. A
-        plain minor leg is visible to the streaming-CDC file source, so
-        the chain guard classifies it as a base rewrite and every stream
-        over the store hits the resync error; migrating makes the fold
-        invisible, as if committed by current code.
-
-        Contract: single writer, like ``compact()``, and no LIVE stream
-        incarnation over the store (its checkpoint may already have
-        consumed the plain leg); start a fresh one afterwards. Each leg
-        rename is atomic on rename-atomic filesystems, so a crash leaves
-        a smaller legacy set and a re-run converges. On copy+delete
-        schemes a crash mid-leg can leave both dirs — a torn copy, which
-        the both-exist check refuses with recovery guidance (the plain
-        dir is the source of truth). Batch readers are unaffected
-        (the leg-dir map resolves both names)."""
-        if not getattr(self._fs, "atomic_rename", True) and not allow_non_atomic:
-            raise IOError(
-                f"minor-leg migration refused on rename-unsafe scheme "
-                f"'{getattr(self._fs, 'scheme', '?')}' ({self.path}): each "
-                "leg rename is copy+delete here, so a BATCH reader could "
-                "catch a leg dir missing or half-copied mid-migration. "
-                "Run in a no-readers maintenance window and pass "
-                "allow_non_atomic=True, or host the store on a "
-                "rename-atomic filesystem (hdfs/local/viewfs)."
-            )
-        migrated = 0
-        cur = self.current_version()
-        for v, name in sorted(self._leg_dirs.items()):
-            if v > cur or not name.startswith("v=") or self._kind(v) != "minor":
-                continue
-            plain = os.path.join(self.path, name)
-            dotted_name = self._MINOR_DIR.format(n=v)
-            dotted = os.path.join(self.path, dotted_name)
-            if dotted_name in self._listing:
-                raise IOError(
-                    f"minor-leg migration aborted: both {plain} and "
-                    f"{dotted} exist for v{v}. On a copy+delete-rename "
-                    "filesystem (s3a/gs) this is most likely a TORN "
-                    "MIGRATION: the plain dir is the source of truth — "
-                    f"delete the partial {dotted} and re-run. Otherwise "
-                    "a concurrent writer or manual copy left the chain "
-                    "ambiguous; verify which dir is complete before "
-                    "removing the other"
-                )
-            self._fs.rename(plain, dotted)  # atomic per-leg
-            self._leg_dirs[v] = dotted_name
-            migrated += 1
-        return migrated
 
     def read(self, version: int | None = None) -> DataFrame:
         """Read a snapshot (default: current). Includes the ``lg`` column.

@@ -21,12 +21,14 @@ implementations of the same vocabulary:
 Each adapter reports ``atomic_rename``: True only on schemes where a
 rename is one metadata operation no reader can observe half-done
 (:data:`RENAME_ATOMIC_SCHEMES`). Unknown schemes default to False, so a
-new connector can only be treated more safely than it deserves.
+new connector can only be treated more safely than it deserves. Only
+:func:`publish_text` reads it, to publish sidecar files; no commit
+depends on it.
 
 **The pointer.** :class:`GenerationPointer` is the single commit point
 of a persisted structure — the analog of the reference's one keyspace
-batch commit (smoltable/src/table/writer.rs:75-79). See its docstring
-for the rules.
+batch commit (smoltable/src/table/writer.rs:75-79). It commits the same
+way on every filesystem; see its docstring for the rules.
 """
 
 from __future__ import annotations
@@ -341,48 +343,43 @@ class ConcurrentCommitError(IOError):
 
 class GenerationPointer:
     """The commit point of one persisted structure under ``root``: the
-    newest of a plain ``<prefix>`` file and ``<prefix>-v<n>`` generation
-    files. Its content is a JSON object that carries the pointer number
-    under ``"v"``.
+    newest ``<prefix>-v<n>`` generation file. Its content is a JSON
+    object that carries the generation number under ``"v"``.
 
-    ``commit(n, payload)`` publishes ``payload`` as number ``n``:
+    ``commit(n, payload)`` publishes ``payload`` as generation ``n`` by
+    creating ``<prefix>-v<n>`` if absent — a new file, complete on
+    close, so no reader sees a torn pointer, and no file is renamed or
+    overwritten. This is the one commit form on every filesystem:
 
-    - on rename-atomic filesystems (``swap`` defaults to the adapter's
-      ``atomic_rename``) the plain file is swapped in (write beside,
-      then rename over);
-    - everywhere else ``<prefix>-v<n>`` is created if absent — a new
-      file, complete on close, so no reader sees a torn pointer. Exactly
-      one writer wins each ``n``; the loser raises
-      :class:`ConcurrentCommitError`. An unparsable file already at
-      ``n`` is garbage from a crashed writer: it is swept once and the
-      create retried, and a second collision raises. With ``keep`` set,
-      generations older than the newest ``keep`` are swept after each
-      commit; otherwise the owner sweeps (``sweep``).
+    - exactly one writer wins each ``n``; the loser raises
+      :class:`ConcurrentCommitError`;
+    - an unparsable file already at ``n`` is garbage from a crashed
+      writer: it is swept once and the create retried, and a second
+      collision raises;
+    - with ``keep`` set, generations older than the newest ``keep`` are
+      swept after each commit; otherwise the owner sweeps (``sweep``).
 
     ``resolve()`` returns ``(n, payload)`` of the newest parsable
-    pointer, ``(0, None)`` when there is none (``resolve_listed()`` also
-    returns the root listing it read):
+    generation, ``(0, None)`` when there is none (``resolve_listed()``
+    also returns the root listing it read):
 
-    - both forms are read and the max wins, so a structure can move
-      between schemes; a plain file's number is its ``"v"`` (a bare
-      JSON int, or 0 when the field is missing — legacy formats);
-    - the plain file is only ever published by an atomic swap, so
-      unparsable content there is corruption and raises;
     - a torn generation is skipped for the next lower one;
     - a listed file that vanishes before it is read (a vacuum racing
       the reader) re-lists; the newer max is then present, so each retry
-      advances.
+      advances;
+    - a plain ``<prefix>`` file is an older single-file layout whose
+      number a resolve cannot order against generations; it raises
+      rather than read as "no commit", which would let the next commit
+      reuse a committed number.
     """
 
     #: consecutive vacuum races a resolve tolerates before raising
     ATTEMPTS = 5
 
-    def __init__(self, fs, root: str, prefix: str,
-                 swap: bool | None = None, keep: int | None = None):
+    def __init__(self, fs, root: str, prefix: str, keep: int | None = None):
         self.fs = fs
         self.root = root
         self.prefix = prefix
-        self.swap = swap
         self.keep = keep
 
     def _path(self, name: str) -> str:
@@ -407,14 +404,6 @@ class GenerationPointer:
         """Generation numbers present, newest first (one listing)."""
         return self._numbers(self.fs.listdir(self.root))
 
-    def _decode(self, text: str) -> tuple[int, dict]:
-        d = json.loads(text)
-        if isinstance(d, int):
-            return d, {}
-        if not isinstance(d, dict):
-            raise ValueError(f"pointer content is not an object: {text[:40]!r}")
-        return int(d.get("v", 0)), d
-
     def _read(self, name: str) -> str:
         """Content of a listed pointer file; FileNotFoundError when it
         has vanished since the listing, any other failure as raised."""
@@ -429,7 +418,11 @@ class GenerationPointer:
     def load(self, n: int) -> dict:
         """Payload of generation ``n``: FileNotFoundError when it is
         gone, ValueError when it is torn."""
-        return self._decode(self._read(self._gen_name(n)))[1]
+        text = self._read(self._gen_name(n))
+        d = json.loads(text)
+        if not isinstance(d, dict):
+            raise ValueError(f"pointer content is not an object: {text[:40]!r}")
+        return d
 
     def resolve(self) -> tuple[int, dict | None]:
         n, payload, _names = self.resolve_listed()
@@ -441,18 +434,20 @@ class GenerationPointer:
         dirs) pays for one listing, not two."""
         for _attempt in range(self.ATTEMPTS):
             names = self.fs.listdir(self.root)
+            if self.prefix in names:
+                raise IOError(
+                    f"{self._path(self.prefix)} is a single-file pointer "
+                    "written by an older layout, which commits cannot be "
+                    f"ordered against (only {self.prefix}-v<n> generations "
+                    "are committed now): rebuild the structure"
+                )
             try:
-                best: tuple[int, dict | None] = (0, None)
-                if self.prefix in names:
-                    best = self._decode(self._read(self.prefix))
                 for g in self._numbers(names):
-                    if best[1] is not None and g <= best[0]:
-                        break
                     try:
                         return g, self.load(g), names
                     except ValueError:
                         continue  # torn: pre-commit garbage
-                return (*best, names)
+                return 0, None, names
             except FileNotFoundError:
                 continue  # vacuum race: re-list
         raise IOError(
@@ -464,12 +459,6 @@ class GenerationPointer:
 
     def commit(self, n: int, payload: dict) -> None:
         content = json.dumps({**payload, "v": n})
-        swap = self.swap
-        if swap is None:
-            swap = getattr(self.fs, "atomic_rename", True)
-        if swap:
-            self.fs.replace_text(self._path(self.prefix), content)
-            return
         target = self._path(self._gen_name(n))
         for _attempt in range(2):
             try:

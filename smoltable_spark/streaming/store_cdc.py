@@ -198,7 +198,7 @@ class StoreChangeRollup:
     def _commit_meta(self, meta: dict) -> None:
         # the rollup's commit point: the generation after the one this
         # meta was read at, so a concurrent writer's commit makes this
-        # one raise ConcurrentCommitError on rename-unsafe filesystems
+        # one raise ConcurrentCommitError
         self._meta_pointer.commit(meta.get("v", 0) + 1, meta)
 
     def _version_dir(self, n: int) -> str:

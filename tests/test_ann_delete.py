@@ -1,4 +1,4 @@
-"""IVF index deletes: tombstones + targeted compaction — round 9.
+"""IVF index deletes: tombstones + targeted compaction.
 
 The maintenance family's missing third op: ``append_ivf_index`` is the
 memtable flush, ``delete_from_ivf_index`` writes tombstones that
@@ -19,8 +19,10 @@ from smoltable_spark.functions import similarity
 from smoltable_spark.functions.ann_index import (
     compact_ivf_index,
     delete_from_ivf_index,
+    vacuum_ivf_index,
 )
 from smoltable_spark.sources.relational import load_table
+from smoltable_spark.sources.store_fs import store_fs_for
 
 
 @pytest.fixture()
@@ -39,6 +41,22 @@ def _serve(spark, path, emb, k=10):
             similarity.query_ivf_index(spark, path, q, k=k, nprobe=2).collect(),
         )
     )
+
+
+def _rows_on_disk(spark, path):
+    """Every index row file on disk, wherever it lives: plain
+    ``list_id=`` dirs and generation dirs alike (a raw read of the root
+    sees neither generation dirs nor, once vacuum removed every plain
+    dir, anything at all); None when there is none."""
+    files = [
+        full
+        for name, full, _size in store_fs_for(spark, path).walk_files(path)
+        if name.endswith(".parquet")
+        and full.rsplit("/", 2)[1].startswith("list_id=")
+    ]
+    if not files:
+        return None
+    return spark.read.option("recursiveFileLookup", "true").parquet(*files)
 
 
 def test_delete_masks_at_serve_time(spark, sf_dir, tmp_path, built):
@@ -78,9 +96,15 @@ def test_compact_is_invisible_and_clears_tombstones(spark, sf_dir, built):
     assert stats["tombstones"] > 0 and stats["lists_rewritten"] > 0
     assert _serve(spark, path, emb) == before  # bit-identical
     assert similarity.ivf_tombstones(spark, path) is None
-    # the physical rows are gone, not just masked
-    remaining = spark.read.parquet(path).filter(F.col("vec_id") % 7 == 6)
-    assert remaining.count() == 0
+    # the live rows are gone, not just masked; the pre-fold plain dirs
+    # keep them until vacuum, after which no file on disk holds them
+    def remaining(df):
+        return df.filter(F.col("vec_id") % 7 == 6).count()
+
+    assert remaining(similarity.read_ivf_lists(spark, path)) == 0
+    assert remaining(_rows_on_disk(spark, path)) > 0
+    vacuum_ivf_index(spark, path, keep_pointers=1)
+    assert remaining(_rows_on_disk(spark, path)) == 0
     # idempotent: nothing left to fold
     assert compact_ivf_index(spark, path) == {
         "tombstones": 0,
@@ -90,10 +114,12 @@ def test_compact_is_invisible_and_clears_tombstones(spark, sf_dir, built):
 
 def test_compact_rewrites_only_affected_lists(spark, sf_dir, built):
     emb, path = built
-    # tombstone ONE existing vector → at most one affected list
+    # tombstone ONE existing vector → exactly one affected list
     delete_from_ivf_index(
         spark, path, emb.filter(F.col("vec_id") == 6).select("vec_id")
     )
+    (hit,) = similarity.ivf_tombstones(spark, path).collect()
+
     def files_by_list():
         out = {}
         for d in os.listdir(path):
@@ -103,12 +129,16 @@ def test_compact_rewrites_only_affected_lists(spark, sf_dir, built):
                     if f.endswith(".parquet")
                 )
         return out
+
     before = files_by_list()
     stats = compact_ivf_index(spark, path)
     assert stats["lists_rewritten"] == 1
-    after = files_by_list()
-    changed = [d for d in before if after.get(d) != before[d]]
-    assert len(changed) <= 1  # every other list's files byte-stable
+    # only that list moved to the new generation; every plain list dir,
+    # the affected one's included, is byte-stable until vacuum
+    assert similarity.ivf_list_generations(spark, path) == (
+        1, {hit["list_id"]: 1}
+    )
+    assert files_by_list() == before
 
 
 def test_delete_absent_ids_is_noop(spark, built):
@@ -204,31 +234,10 @@ def test_reappend_preserves_other_tombstones(spark, built):
     assert _serve(spark, path, emb) == got
 
 
-def test_fold_fails_fast_on_crash_evidence(spark, built):
-    """ADVICE r9 (medium): leftover swap dirs from a crashed fold must
-    abort the next fold with reconciliation instructions instead of
-    silently compounding the damage."""
-    emb, path = built
-    delete_from_ivf_index(
-        spark, path, emb.filter(F.col("vec_id") == 6).select("vec_id")
-    )
-    evidence = os.path.join(path, ".new-list_id=0")
-    os.makedirs(evidence)
-    with pytest.raises(IOError, match="crashed mid-swap"):
-        compact_ivf_index(spark, path)
-    os.rmdir(evidence)
-    stale = os.path.join(path, ".staging-compact-deadbeef")
-    os.makedirs(stale)
-    with pytest.raises(IOError, match="crashed mid-swap"):
-        compact_ivf_index(spark, path)
-    os.rmdir(stale)
-    assert compact_ivf_index(spark, path)["tombstones"] == 1  # recovers
-
-
 def test_compact_tolerates_vanished_list_dir(spark, built):
-    """ADVICE r9: a tombstone referencing an already-removed list dir
-    (replay after crash reconciliation, or a fully-deleted list) must
-    fold cleanly instead of raising on the parquet read."""
+    """A tombstone referencing an already-removed list dir (a list
+    removed by hand, or a fully-deleted one) must fold cleanly instead
+    of raising on the parquet read."""
     import shutil
 
     emb, path = built
@@ -243,12 +252,14 @@ def test_compact_tolerates_vanished_list_dir(spark, built):
     assert similarity.ivf_tombstones(spark, path) is None
 
 
-def test_ivfpq_honors_tombstones_and_compact(spark, sf_dir, tmp_path):
+def test_ivfpq_honors_tombstones_and_compact(spark, sf_dir, tmp_path, mkuri):
     """The maintenance layout is shared: deletes committed by
     delete_from_ivf_index mask ADC serving on an IVF-PQ index too, and
-    compact folds the codes rows (all M subcodes of a victim)."""
+    compact folds the codes rows (all M subcodes of a victim) through
+    the generation pointer, which ADC serving reads through — before
+    and after vacuum reclaims the pre-fold dirs."""
     emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivfpq")
+    path = mkuri(tmp_path / "ivfpq")
     similarity.build_ivfpq_index(emb, path, n_centroids=8, m=8)
 
     def serve():
@@ -273,9 +284,9 @@ def test_ivfpq_honors_tombstones_and_compact(spark, sf_dir, tmp_path):
     stats = compact_ivf_index(spark, path)
     assert stats["lists_rewritten"] > 0
     assert serve() == masked
-    assert (
-        spark.read.parquet(path).filter(F.col("vec_id") % 7 == 6).count() == 0
-    )
+    assert vacuum_ivf_index(spark, path, keep_pointers=1)["plain_dirs"] > 0
+    assert serve() == masked
+    assert _rows_on_disk(spark, path).filter(F.col("vec_id") % 7 == 6).count() == 0
 
 
 def test_delete_sweeps_stale_rollback_staging(spark, built):
@@ -293,14 +304,15 @@ def test_delete_sweeps_stale_rollback_staging(spark, built):
 
 
 def test_fold_sweeps_stale_tombstone_rewrite(spark, built):
-    """A crashed subset-fold's unpublished .staging-rewrite-* under
-    _tombstones/ is swept on the next fold; the committed d-* legs it
-    derived from are intact, so the fold result is unaffected."""
+    """A crashed subset fold's kept-tombstone leg (``.t-*`` under
+    _tombstones/) that no pointer names was never committed: the next
+    fold sweeps it, and the committed d-* legs it derived from fold
+    unaffected."""
     emb, path = built
     delete_from_ivf_index(
         spark, path, emb.filter(F.col("vec_id") == 6).select("vec_id")
     )
-    stale = os.path.join(path, "_tombstones", ".staging-rewrite-feedf00d")
+    stale = os.path.join(path, "_tombstones", ".t-feedf00d")
     os.makedirs(stale)
     stats = compact_ivf_index(spark, path)
     assert stats["tombstones"] == 1

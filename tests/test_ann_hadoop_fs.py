@@ -17,8 +17,6 @@ this file pins the FS-API routing.
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -28,7 +26,6 @@ from smoltable_spark.functions.ann_index import (
     compact_ivf_index,
     delete_from_ivf_index,
 )
-from smoltable_spark.sources.store_fs import HadoopStoreFS
 from smoltable_spark.sources.relational import load_table
 
 
@@ -60,7 +57,7 @@ def test_full_lifecycle_on_file_uri(spark, tmp_path, built_uri):
     masked = _serve(spark, path, emb)
     assert not any(r[1] % 7 == 6 for r in masked)
     # upsert append: id 6 comes back with query 0's embedding — the
-    # intersecting tombstone folds through the Hadoop-FS swap path
+    # intersecting tombstone folds through the Hadoop-FS adapter
     new6 = emb.filter(F.col("vec_id") == 0).select(
         F.lit(6).cast("long").alias("vec_id"), "embedding"
     )
@@ -72,13 +69,15 @@ def test_full_lifecycle_on_file_uri(spark, tmp_path, built_uri):
     assert stats["tombstones"] > 0 and stats["lists_rewritten"] > 0
     assert _serve(spark, path, emb) == served
     assert similarity.ivf_tombstones(spark, path) is None
-    # physical drop happened under the URI layout. On rename-atomic
-    # schemes the fold swapped the plain dirs in place; on rename-unsafe
-    # ones (cpdel) the live state is the generation the pointer names —
-    # read through it, and prove vacuum then reclaims the shielded
-    # pre-fold dirs so even a RAW root read agrees.
+    # physical drop happened under the URI layout: the live state is
+    # the generation the pointer names — read through it, and prove
+    # vacuum then reclaims the shielded pre-fold dirs so even a RAW
+    # root read agrees.
     from smoltable_spark.functions.ann_index import vacuum_ivf_index
-    from smoltable_spark.functions.similarity import read_ivf_lists
+    from smoltable_spark.functions.similarity import (
+        ivf_list_generations,
+        read_ivf_lists,
+    )
     from smoltable_spark.sources.store_fs import store_fs_for
 
     def _gone():
@@ -87,20 +86,17 @@ def test_full_lifecycle_on_file_uri(spark, tmp_path, built_uri):
         )
 
     assert _gone().count() == 0
+    vacuum_ivf_index(spark, path, keep_pointers=1)
+    # every pre-fold stale plain dir of a mapped list is reclaimed:
+    # nothing on disk can serve the deleted rows anymore
     fsa = store_fs_for(spark, path)
-    if not fsa.atomic_rename:
-        vacuum_ivf_index(spark, path, keep_pointers=1)
-        # every pre-fold stale plain dir of a mapped list is reclaimed:
-        # nothing on disk can serve the deleted rows anymore
-        from smoltable_spark.functions.similarity import ivf_list_generations
-
-        _m, gmap = ivf_list_generations(spark, path)
-        stale = [
-            k for k in gmap
-            if fsa.isdir(f"{path.rstrip('/')}/list_id={k}")
-        ]
-        assert stale == []
-        assert _serve(spark, path, emb) == served
+    _m, gmap = ivf_list_generations(spark, path)
+    stale = [
+        k for k in gmap
+        if fsa.isdir(f"{path.rstrip('/')}/list_id={k}")
+    ]
+    assert stale == []
+    assert _serve(spark, path, emb) == served
 
 
 def test_uri_and_local_path_results_agree(spark, sf_dir, tmp_path, built_uri):
@@ -116,37 +112,6 @@ def test_uri_and_local_path_results_agree(spark, sf_dir, tmp_path, built_uri):
         )
         compact_ivf_index(spark, p)
     assert _serve(spark, path_uri, emb) == _serve(spark, path_local, emb)
-
-
-def test_crash_evidence_fails_fast_on_uri(spark, tmp_path, built_uri):
-    """Crash-evidence checks must see leftovers through the FS API, and
-    ADVICE r10: delete/append fail fast on fold leftovers too — not
-    just the next fold."""
-    emb, path = built_uri
-    fs = HadoopStoreFS(spark, path)
-    evidence = path + "/.new-list_id=0"
-    fs.makedirs(evidence)
-    with pytest.raises(IOError, match="crashed mid-swap"):
-        compact_ivf_index(spark, path)
-    with pytest.raises(IOError, match="crashed mid-swap"):
-        delete_from_ivf_index(
-            spark, path, emb.filter(F.col("vec_id") == 6).select("vec_id")
-        )
-    with pytest.raises(IOError, match="crashed mid-swap"):
-        append_ivf_index(
-            spark,
-            path,
-            emb.filter(F.col("vec_id") == 0).select("vec_id", "embedding"),
-        )
-    fs.rmtree(evidence)
-    # recovered: the lifecycle proceeds
-    assert (
-        delete_from_ivf_index(
-            spark, path, emb.filter(F.col("vec_id") == 6).select("vec_id")
-        )
-        == 1
-    )
-    assert compact_ivf_index(spark, path)["tombstones"] == 1
 
 
 def test_no_os_calls_left_in_maintenance_family(spark):
@@ -168,23 +133,3 @@ def test_no_os_calls_left_in_maintenance_family(spark):
             continue
         hit = names & banned
         assert not hit, f"local-only fs import regressed: {sorted(hit)}"
-
-
-def test_fold_without_tombstone_legs_still_checks_crash_evidence(
-    spark, tmp_path, built_uri
-):
-    """ADVICE r10 (low): an index whose tombstone legs were cleared
-    during partial manual reconciliation but that still has swap
-    leftovers must fail fast — not report a clean no-op compact."""
-    emb, path = built_uri
-    fs = HadoopStoreFS(spark, path)
-    fs.makedirs(path + "/.staging-compact-deadbeef")
-    # no tombstones exist at all — the old code early-returned here
-    assert similarity.ivf_tombstones(spark, path) is None
-    with pytest.raises(IOError, match="crashed mid-swap"):
-        compact_ivf_index(spark, path)
-    fs.rmtree(path + "/.staging-compact-deadbeef")
-    assert compact_ivf_index(spark, path) == {
-        "tombstones": 0,
-        "lists_rewritten": 0,
-    }

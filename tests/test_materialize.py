@@ -13,7 +13,10 @@ other than ``sources/store.py`` resolves or probes a store's leg dirs
 also guards the one build-once rule for registry fixtures: outside
 ``queries_util.py`` no module keeps a module-level cache dict or makes
 or cleans up temp dirs itself (``queries_util.build_once`` and
-``queries_util.scratch_dir`` do).
+``queries_util.scratch_dir`` do). And it guards the one commit form: no
+module other than ``sources/store_fs.py`` reads the adapter's
+``atomic_rename`` capability or passes ``swap=``, so no commit path
+forks on the filesystem.
 """
 
 from __future__ import annotations
@@ -180,6 +183,37 @@ def _fixture_strays() -> list[tuple[str, int, str]]:
     return found
 
 
+def _commit_fork_sites() -> list[tuple[str, int, str]]:
+    """Reads of ``<x>.atomic_rename`` (``getattr(<x>, "atomic_rename",
+    ...)`` included) and ``swap=`` keyword arguments outside
+    ``sources/store_fs.py``. A class body that sets ``atomic_rename``
+    (a capability-profile double) does not read it."""
+    found = []
+    for rel, tree in _modules():
+        if rel == os.path.join("sources", "store_fs.py"):
+            continue
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "atomic_rename"
+                and isinstance(node.ctx, ast.Load)
+            ) or (
+                isinstance(node, ast.Call)
+                and ast.unparse(node.func) == "getattr"
+                and len(node.args) >= 2
+                and isinstance(node.args[1], ast.Constant)
+                and node.args[1].value == "atomic_rename"
+            ):
+                found.append((rel, node.lineno, ast.unparse(node)))
+            if isinstance(node, ast.Call):
+                found += [
+                    (rel, node.lineno, f"swap={ast.unparse(kw.value)}")
+                    for kw in node.keywords
+                    if kw.arg == "swap"
+                ]
+    return found
+
+
 def test_materialize_is_the_only_materialization_site():
     stray = [
         c for c in _materializing_calls() if (c[0], c[1]) != ("session.py", "materialize")
@@ -203,6 +237,14 @@ def test_fixtures_build_once_in_scratch():
     assert not stray, (
         "keep registry fixtures with queries_util.build_once and their "
         f"files in queries_util.scratch_dir: {stray}"
+    )
+
+
+def test_commits_do_not_fork_on_the_filesystem():
+    stray = _commit_fork_sites()
+    assert not stray, (
+        "commit through store_fs.GenerationPointer, which commits the same "
+        f"way on every filesystem: {stray}"
     )
 
 

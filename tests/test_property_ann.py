@@ -9,11 +9,12 @@ differential model catches the whole interleaving class — double
 delete, delete-of-never-added, re-append-then-delete-again,
 compact-between-every-op — instead of the single pinned scenario.
 
-Invariant after EVERY op: the index's live rows (base + appended legs,
-minus outstanding tombstones) ≡ the model's vec_id → vector map,
-compared as exact (vec_id, q, nrm2) triples computed through the same
-``with_quantized_norm`` code path. After a full compact, additionally:
-no tombstones remain and the dropped rows are physically gone.
+Invariant after EVERY op: the index's live rows (its lists as
+``read_ivf_lists`` resolves them, minus outstanding tombstones) ≡ the
+model's vec_id → vector map, compared as exact (vec_id, q, nrm2)
+triples computed through the same ``with_quantized_norm`` code path.
+After a full compact and a vacuum, additionally: no tombstones remain
+and the dropped rows are physically gone.
 """
 
 from __future__ import annotations
@@ -26,7 +27,10 @@ from smoltable_spark.functions.ann_index import (
     append_ivf_index,
     compact_ivf_index,
     delete_from_ivf_index,
+    vacuum_ivf_index,
 )
+
+from tests.test_ann_delete import _rows_on_disk
 
 DIM = 4
 #: ids 0..7 seed the default centroids (vec_id < n_centroids) and stay
@@ -58,17 +62,23 @@ def _df(spark, pairs):
     )
 
 
+def _triples(df):
+    if df is None:
+        return set()
+    return {
+        (r["vec_id"], tuple(r["q"]), r["nrm2"])
+        for r in df.select("vec_id", "q", "nrm2").collect()
+    }
+
+
 def _live_state(spark, path):
-    idx = spark.read.parquet(path)
+    idx = similarity.read_ivf_lists(spark, path)
     t = similarity.ivf_tombstones(spark, path)
-    if t is not None:
+    if idx is not None and t is not None:
         idx = idx.join(
             t.select("vec_id").distinct(), "vec_id", "left_anti"
         )
-    return {
-        (r["vec_id"], tuple(r["q"]), r["nrm2"])
-        for r in idx.select("vec_id", "q", "nrm2").collect()
-    }
+    return _triples(idx)
 
 
 def _expected_state(spark, model: dict):
@@ -125,13 +135,8 @@ def test_upsert_interleavings_match_dict_model(spark, tmp_path_factory, ops):
             assert _live_state(spark, path) == before
             assert similarity.ivf_tombstones(spark, path) is None
         assert _live_state(spark, path) == _expected_state(spark, model)
-    # final full fold: physical rows == model exactly
+    # final full fold + vacuum: physical rows == model exactly
     compact_ivf_index(spark, path)
     assert similarity.ivf_tombstones(spark, path) is None
-    phys = {
-        (r["vec_id"], tuple(r["q"]), r["nrm2"])
-        for r in spark.read.parquet(path)
-        .select("vec_id", "q", "nrm2")
-        .collect()
-    }
-    assert phys == _expected_state(spark, model)
+    vacuum_ivf_index(spark, path, keep_pointers=1)
+    assert _triples(_rows_on_disk(spark, path)) == _expected_state(spark, model)

@@ -1,8 +1,7 @@
-"""Round-12 tests: the rename-free ``_VERSION`` generation protocol for
-rename-unsafe filesystems (VERDICT r11 ask #2), the pointer's chain
-manifest that makes a chain open cost one metadata read (ask #7), and
-fault injection for ``.tmp`` staging leftovers in the pointer path
-(ask #6).
+"""The rename-free ``_VERSION`` generation protocol (the one commit
+form on every filesystem), the pointer's chain manifest that makes a
+chain open cost one metadata read, and ``.tmp`` leftovers beside the
+pointer.
 
 The rename-unsafe double models an object store with LOCAL syscalls:
 ``atomic_rename = False`` plus a deliberately TORN ``replace_text``
@@ -108,21 +107,27 @@ def test_unsafe_store_commits_generations_never_rename(spark, tmp_path):
 
 
 def test_generation_and_plain_pointer_interoperate(spark, tmp_path):
-    """A store moved between schemes resolves max() over both forms."""
+    """Handles of either capability profile commit the same generation
+    files, so a store moved between schemes keeps resolving; a plain
+    ``_VERSION`` file (the older single-file layout) is refused."""
     s = CellStore(spark, str(tmp_path / "t"))
     s.save_families([ColumnFamilyDef("f")])
-    _append(spark, s, "a")  # plain _VERSION = 1 (atomic local path)
+    _append(spark, s, "a")  # rename-atomic local path
     s2 = _unsafe_store(spark, tmp_path / "t")
-    _append(spark, s2, "b")  # generation _VERSION-v2
-    assert os.path.exists(os.path.join(s2.path, "_VERSION"))
-    assert os.path.exists(os.path.join(s2.path, "_VERSION-v2"))
-    # both a fresh atomic handle and a fresh unsafe handle agree
-    assert CellStore(spark, str(tmp_path / "t")).current_version() == 2
-    assert _unsafe_store(spark, tmp_path / "t").current_version() == 2
-    # continuing on the atomic scheme overtakes the generation file
-    s3 = CellStore(spark, str(tmp_path / "t"))
-    _append(spark, s3, "c")
+    _append(spark, s2, "b")
+    _append(spark, CellStore(spark, str(tmp_path / "t")), "c")
+    names = os.listdir(s.path)
+    assert sorted(n for n in names if n.startswith("_VERSION")) == [
+        "_VERSION-v1", "_VERSION-v2", "_VERSION-v3"
+    ]
+    assert CellStore(spark, str(tmp_path / "t")).current_version() == 3
     assert _unsafe_store(spark, tmp_path / "t").current_version() == 3
+    with open(os.path.join(s.path, "_VERSION"), "w") as fh:
+        fh.write(json.dumps({"v": 4, "legs": {}}))
+    for h in (CellStore(spark, str(tmp_path / "t")),
+              _unsafe_store(spark, tmp_path / "t")):
+        with pytest.raises(IOError, match="older layout"):
+            h.current_version()
 
 
 def test_crash_before_pointer_publish_serves_previous_version(spark, tmp_path):
@@ -159,12 +164,12 @@ def test_vacuum_sweeps_old_generations_keeps_retained(spark, tmp_path):
 
 
 def test_stale_tmp_leftovers_are_ignored_and_swept(spark, tmp_path):
+    """Foreign ``.tmp`` names beside the generations (an older layout's
+    staged swap, a crashed tool) are never parsed as a pointer, and
+    commits neither read nor write them."""
     s = CellStore(spark, str(tmp_path / "t"))
     s.save_families([ColumnFamilyDef("f")])
     _append(spark, s, "a")
-    # crash between write_text(tmp) and the pointer rename leaves
-    # _VERSION.tmp beside the valid pointer; a crashed generation write
-    # could leave a foreign .tmp name too
     with open(os.path.join(s.path, "_VERSION.tmp"), "w") as fh:
         fh.write("999")
     with open(os.path.join(s.path, "_VERSION-v999.tmp"), "w") as fh:
@@ -172,13 +177,12 @@ def test_stale_tmp_leftovers_are_ignored_and_swept(spark, tmp_path):
     r = CellStore(spark, str(tmp_path / "t"))
     assert r.current_version() == 1  # readers ignore .tmp leftovers
     assert _unsafe_store(spark, tmp_path / "t").current_version() == 1
-    _append(spark, r, "b")  # next commit overwrites its own .tmp path
+    _append(spark, r, "b")
     assert r.current_version() == 2
-    # the commit re-staged through _VERSION.tmp: whatever remains there
-    # is the JUST-committed content, not the injected garbage
-    leftover = os.path.join(s.path, "_VERSION.tmp")
-    if os.path.exists(leftover):
-        assert open(leftover).read() != "999"
+    assert sorted(n for n in os.listdir(s.path) if n.startswith("_VERSION")) == [
+        "_VERSION-v1", "_VERSION-v2", "_VERSION-v999.tmp", "_VERSION.tmp"
+    ]
+    assert open(os.path.join(s.path, "_VERSION.tmp")).read() == "999"
 
 
 # ---------------------------------------------------------------------------
@@ -205,19 +209,26 @@ def test_pointer_manifest_makes_open_one_read(spark, tmp_path):
     assert cur == 5 and legs == [4, 5]
     assert kinds == ["minor", "delta"]
     assert folds == [(1, 3), None]
-    assert spy.reads == ["_VERSION"], spy.reads
+    assert spy.reads == ["_VERSION-v5"], spy.reads
 
 
 def test_pointer_manifest_fallback_for_legacy_int_pointer(spark, tmp_path):
-    """A pre-r12 store (plain-int pointer, no manifest) still resolves —
-    through the authoritative marker files."""
+    """A pointer generation whose manifest lacks the chain's legs
+    resolves through the authoritative marker files; a legacy plain-int
+    ``_VERSION`` file is refused, not read as an empty store."""
     s = CellStore(spark, str(tmp_path / "t"))
     s.save_families([ColumnFamilyDef("f")])
     _append(spark, s, "a")
     s.minor_compact()  # no-op (single leg), keep it simple
     _append(spark, s, "b")
-    with open(os.path.join(s.path, "_VERSION"), "w") as fh:
-        fh.write("2")  # rewrite to the legacy format
+    plain = os.path.join(s.path, "_VERSION")
+    with open(plain, "w") as fh:
+        fh.write("2")  # the legacy format
+    with pytest.raises(IOError, match="older layout"):
+        CellStore(spark, str(tmp_path / "t")).current_version()
+    os.remove(plain)
+    with open(os.path.join(s.path, "_VERSION-v2"), "w") as fh:
+        fh.write(json.dumps({"v": 2}))  # no manifest
     r = CellStore(spark, str(tmp_path / "t"))
     assert r.current_version() == 2
     assert r._legs_of(2) == [1, 2]
@@ -233,7 +244,7 @@ def test_pointer_manifest_is_trimmed_but_chain_complete(spark, tmp_path):
     s.save_families([ColumnFamilyDef("f")])
     for i in range(3):
         _append(spark, s, f"a{i}")
-    d = json.loads(open(os.path.join(s.path, "_VERSION")).read())
+    d = json.loads(open(os.path.join(s.path, "_VERSION-v3")).read())
     assert d["v"] == 3
     assert set(d["legs"]) == {"1", "2", "3"}
     assert d["legs"]["3"] == ["delta", None]
@@ -243,17 +254,15 @@ def test_pointer_manifest_is_trimmed_but_chain_complete(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# IVF fold gate on rename-unsafe schemes (ADVICE r11)
+# IVF fold on rename-unsafe schemes
 
 
 def test_ivf_fold_on_rename_unsafe_scheme_goes_generational(
     spark, tmp_path, monkeypatch
 ):
-    """Round 13 (VERDICT r12 ask #2): the r12 refusal gate is replaced —
-    a fold on a rename-unsafe scheme now publishes via the rename-free
-    ``_LISTGEN`` generation pointer (no reader-visible dir is ever
-    renamed), and the legacy maintenance-window escape hatch keeps its
-    meaning for callers who prefer the in-place swap."""
+    """A fold on a rename-unsafe scheme publishes via the rename-free
+    ``_LISTGEN`` generation pointer, like everywhere else: no
+    reader-visible dir is ever renamed."""
     import os
 
     import pyspark.sql.functions as F
@@ -348,15 +357,6 @@ def test_bpe_merge_table_is_pinned(spark):
         (7, "a", "b", "ab", 12),
         (8, "ab", "ana", "abana", 12),
     ]
-
-
-def test_migrate_minor_legs_gates_on_rename_unsafe(spark, tmp_path):
-    s = _unsafe_store(spark, tmp_path / "t")
-    s.save_families([ColumnFamilyDef("f")])
-    _append(spark, s, "a")
-    with pytest.raises(IOError, match="rename-unsafe"):
-        s.migrate_minor_legs()
-    assert s.migrate_minor_legs(allow_non_atomic=True) == 0  # nothing legacy
 
 
 def test_cdc_guard_and_changes_over_unsafe_store(spark, tmp_path):

@@ -4,10 +4,10 @@ degraded-pointer resolution paths (ADVICE r12).
 - ``create_exclusive`` is an atomic create-if-absent on BOTH adapters
   (``open(..., 'x')`` locally; ``FileSystem.create(path, overwrite=false)``
   through the JVM), raising Python ``FileExistsError`` uniformly.
-- ``_commit_version`` on a rename-unsafe filesystem publishes through
-  that CAS: two writers racing to the same generation get exactly one
-  winner and a loud :class:`ConcurrentCommitError`, never a silent
-  last-writer-wins (the r12 protocol's lost-update window).
+- ``_commit_version`` publishes through that CAS on every filesystem:
+  two writers racing to the same generation get exactly one winner and
+  a loud :class:`ConcurrentCommitError`, never a silent
+  last-writer-wins.
 - A TORN newest generation (crashed writer on a flush-visible scheme,
   e.g. wasb/abfs) is pre-commit garbage: readers fall back to the
   next-lower parsable generation and the next commit sweeps the file.
@@ -207,13 +207,6 @@ def _cpdel(spark, tmp_path):
     return "cpdel:" + str(tmp_path)
 
 
-def _set_cpdel_fault(store_fs, value: str) -> None:
-    """Set the fault flag on the CACHED FileSystem instance's own conf —
-    the instance binds the Configuration it was created with, so setting
-    the session conf is not guaranteed to reach it."""
-    store_fs._fs.getConf().set("fs.cpdel.rename.fault", value)
-
-
 def test_cpdel_probe_and_generation_commits(spark, tmp_path):
     """The capability probe classifies cpdel as rename-unsafe (unknown
     scheme => conservative False), so a CellStore hosted there commits
@@ -256,52 +249,6 @@ def test_cpdel_generation_cas_conflict(spark, tmp_path):
     a._commit_version(n)
     with pytest.raises(ConcurrentCommitError, match=f"v{n}"):
         b._commit_version(n)
-
-
-def test_cpdel_migrate_crash_leaves_dual_dir_state_refused(spark, tmp_path):
-    """A REAL mid-migration crash on a copy+delete filesystem: the
-    rename's copy completes but the source delete never runs, leaving
-    BOTH the plain and the dotted minor dir — exactly the torn state
-    ``migrate_minor_legs`` must refuse with recovery guidance
-    (store.py's both-exist check, previously only provable with a
-    Python double)."""
-    from smoltable_spark.sources.store import CellStore
-
-    base = _cpdel(spark, tmp_path)
-    store = CellStore(spark, base + "/t")
-    store.save_families([ColumnFamilyDef("f")])
-    _append(spark, store, "a")
-    _append(spark, store, "b")
-    _append(spark, store, "c")
-    store.minor_compact()
-    n = store.current_version()
-    # rebuild the LEGACY state: the minor leg under its plain pre-r10
-    # name (fault flag off; this rename is the test fixture, not the op
-    # under test)
-    dotted = f"{store.path}/.v={n}.minor"
-    plain = f"{store.path}/v={n}"
-    store._fs.rename(dotted, plain)
-    assert store._fs.isdir(plain) and not store._fs.isdir(dotted)
-    # now the migration crashes AFTER the copy, BEFORE the delete
-    _set_cpdel_fault(store._fs, "fail-after-copy")
-    try:
-        with pytest.raises(Exception, match="fault injection"):
-            store.migrate_minor_legs(allow_non_atomic=True)
-    finally:
-        _set_cpdel_fault(store._fs, "")
-    # the torn state is real: both dirs exist on disk
-    assert store._fs.isdir(plain) and store._fs.isdir(dotted)
-    # and the re-run refuses it, naming the recovery
-    with pytest.raises(IOError, match="both"):
-        store.migrate_minor_legs(allow_non_atomic=True)
-    # recovery per the error text: the plain dir is the source of truth
-    store._fs.rmtree(dotted)
-    assert store.migrate_minor_legs(allow_non_atomic=True) == 1
-    # the three appends share coordinates, so the snapshot is 2 shadowed
-    # cells and the newest values win
-    assert sorted(
-        (r["row_key"], r["v_str"]) for r in store.read().collect()
-    ) == [("k0", "c.0"), ("k1", "c.1")]
 
 
 def test_cpdel_ivf_generation_fold_for_real(spark, tmp_path):
@@ -410,7 +357,7 @@ def test_ivf_pointer_read_survives_vacuum_race(tmp_path):
     assert (m2, gmap2) == (1, {3: 1})
 
 
-def test_ivf_index_health_tracks_maintenance(spark, tmp_path, unsafe_ann):
+def test_ivf_index_health_tracks_maintenance(spark, tmp_path):
     """The health report follows the index through its lifecycle: fresh
     build = healthy; a tombstone backlog flips the recommendation to
     compact; the generation fold clears it and the report reads the
@@ -435,7 +382,7 @@ def test_ivf_index_health_tracks_maintenance(spark, tmp_path, unsafe_ann):
     assert h1["recommendation"] == "compact"
     assert h1["tombstones"] == 50 and h1["tombstone_permille"] == 100
     assert h1["rows_total"] == 500  # backlog, not yet folded
-    ann_index.compact_ivf_index(spark, path)  # generation fold (unsafe FS)
+    ann_index.compact_ivf_index(spark, path)  # generation fold
     h2 = ivf_index_health(spark, path)
     assert h2["tombstones"] == 0 and h2["generation"] == 1
     assert h2["rows_total"] == 450  # generation-aware list sizes
@@ -511,40 +458,6 @@ def test_scan_advisor_costs_match_actual_reads(spark, tmp_path):
     assert df2.count() == 64
 
 
-def test_cpdel_legacy_fold_crash_leaves_evidence(spark, tmp_path):
-    """Force the LEGACY in-place swap on the copy+delete filesystem
-    (maintenance-window mode) and crash it with the mid-copy fault: the
-    torn state must trip ``_check_fold_crash_evidence`` on the next
-    fold — the refusal gate finally observed against a real torn
-    rename, not a Python double."""
-    import pyspark.sql.functions as F
-
-    from smoltable_spark.functions import ann_index
-    from smoltable_spark.functions.similarity import build_ivf_index
-    from smoltable_spark.sources.store_fs import store_fs_for
-    from smoltable_spark.sources.relational import load_table
-
-    base = _cpdel(spark, tmp_path)
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    path = base + "/ivf_legacy"
-    build_ivf_index(emb, path, n_centroids=8)
-    ann_index.delete_from_ivf_index(
-        spark, path, emb.filter(F.col("vec_id") == 4).select("vec_id")
-    )
-    fsa = store_fs_for(spark, path)
-    fsa._fs.getConf().set("fs.cpdel.rename.fault", "fail-mid-copy")
-    try:
-        with pytest.raises(Exception, match="fault injection"):
-            ann_index.compact_ivf_index(
-                spark, path, allow_non_atomic_swap=True
-            )
-    finally:
-        fsa._fs.getConf().set("fs.cpdel.rename.fault", "")
-    # the torn swap left evidence; every maintenance op now fails fast
-    with pytest.raises(IOError, match="leftover dirs"):
-        ann_index.compact_ivf_index(spark, path, allow_non_atomic_swap=True)
-
-
 # ---------------------------------------------------------------------------
 # IVF rename-free generation protocol (VERDICT r12 ask #2)
 
@@ -553,25 +466,6 @@ def _emb(spark):
     from smoltable_spark.sources.relational import load_table
 
     return load_table(spark, "/root/testdata/sf0.001", "embeddings")
-
-
-class _UnsafeAnnFS:
-    """Factory installing an object-store capability profile over local
-    syscalls for the ANN maintenance family."""
-
-    def __new__(cls):
-        class UnsafeLocalFS(LocalStoreFS):
-            scheme = "s3a"
-            atomic_rename = False
-
-        return UnsafeLocalFS()
-
-
-@pytest.fixture()
-def unsafe_ann(monkeypatch):
-    from smoltable_spark.functions import ann_index
-
-    monkeypatch.setattr(ann_index, "store_fs_for", lambda _s, _b: _UnsafeAnnFS())
 
 
 def _topk(spark, path, queries, k=5):
@@ -585,41 +479,39 @@ def _topk(spark, path, queries, k=5):
     )
 
 
-def test_generation_fold_matches_legacy_fold(spark, tmp_path, unsafe_ann):
-    """Differential: the same build→delete→fold→upsert sequence through
-    the legacy in-place swap (rename-atomic) and the generation pointer
-    (rename-unsafe) serves IDENTICAL top-k results."""
+def test_generation_fold_matches_legacy_fold(spark, tmp_path):
+    """Differential: the same build→delete→fold→upsert sequence on the
+    rename-atomic ``file`` filesystem and on ``cpdel`` (whose rename is
+    copy+delete) runs the same generation fold and serves IDENTICAL
+    top-k results from the same generation map."""
     import pyspark.sql.functions as F
 
     from smoltable_spark.functions import ann_index
-    from smoltable_spark.functions.similarity import build_ivf_index
+    from smoltable_spark.functions.similarity import (
+        build_ivf_index,
+        ivf_list_generations,
+    )
 
     emb = _emb(spark)
-    legacy, gen = str(tmp_path / "legacy"), str(tmp_path / "gen")
-    build_ivf_index(emb, legacy, n_centroids=8)
-    build_ivf_index(emb, gen, n_centroids=8)
+    paths = ["file:" + str(tmp_path / "file"), _cpdel(spark, tmp_path) + "/cpdel"]
     victims = emb.filter(F.col("vec_id").isin([3, 7, 11])).select("vec_id")
     batch = emb.filter(F.col("vec_id").isin([7, 200]))
-    for path, allow in ((legacy, True), (gen, False)):
+    for path in paths:
+        build_ivf_index(emb, path, n_centroids=8)
         ann_index.delete_from_ivf_index(spark, path, victims)
-        ann_index.compact_ivf_index(
-            spark, path, allow_non_atomic_swap=allow
-        )
+        ann_index.compact_ivf_index(spark, path)
         ann_index.delete_from_ivf_index(
             spark, path, victims.filter(F.col("vec_id") == 7)
         )
         # upsert: id 7 carries an outstanding tombstone
         ann_index.append_ivf_index(spark, path, batch)
     qs = emb.limit(4)
-    assert _topk(spark, legacy, qs) == _topk(spark, gen, qs)
-    # the generation index really is generational; the legacy one is not
-    import os
-
-    assert any(n.startswith("_LISTGEN-v") for n in os.listdir(gen))
-    assert not any(n.startswith("_LISTGEN-v") for n in os.listdir(legacy))
+    assert _topk(spark, paths[0], qs) == _topk(spark, paths[1], qs)
+    gens = [ivf_list_generations(spark, p) for p in paths]
+    assert gens[0] == gens[1] and gens[0][0] >= 1
 
 
-def test_generation_append_lands_in_live_generation(spark, tmp_path, unsafe_ann):
+def test_generation_append_lands_in_live_generation(spark, tmp_path):
     """After a fold maps a list to .gen/g=1, appended vectors assigned to
     that list must land (and serve) from the generation dir, not the
     stale pointer-shielded plain dir."""
@@ -662,7 +554,7 @@ def test_generation_append_lands_in_live_generation(spark, tmp_path, unsafe_ann)
     assert stale, "fold keeps pre-fold dirs for in-flight readers"
 
 
-def test_retired_list_revival_and_stacked_folds(spark, tmp_path, unsafe_ann):
+def test_retired_list_revival_and_stacked_folds(spark, tmp_path):
     """A list whose every row is tombstoned retires (g=0); appending a
     vector assigned there revives it under a fresh generation via a
     pointer CAS. A second fold stacks generation 2 over generation 1."""
@@ -713,7 +605,7 @@ def test_retired_list_revival_and_stacked_folds(spark, tmp_path, unsafe_ann):
     assert ivf_tombstones(spark, path) is None
 
 
-def test_vacuum_ivf_index_reclaims_superseded_state(spark, tmp_path, unsafe_ann):
+def test_vacuum_ivf_index_reclaims_superseded_state(spark, tmp_path):
     import os
 
     import pyspark.sql.functions as F

@@ -740,8 +740,8 @@ def test_rollup_legacy_meta_fails_loudly(spark, tmp_path):
     store.save_families([ColumnFamilyDef("value")])
     p = str(tmp_path / "roll")
     os.makedirs(p)
-    with open(os.path.join(p, "_ROLLUP_META.json"), "w") as fh:
-        json.dump({"last_batch_id": 5, "version": 3}, fh)  # old revision
+    with open(os.path.join(p, "_ROLLUP_META.json-v1"), "w") as fh:
+        json.dump({"v": 1, "last_batch_id": 5, "version": 3}, fh)  # old revision
     with _pytest.raises(ValueError, match="no recorded start_version"):
         StoreChangeRollup(spark, p, keys=["k"], sums={"s": "1"},
                           store=store)
@@ -756,9 +756,6 @@ def test_rollup_read_side_never_stamps_horizon(spark, tmp_path):
     """A store=None (read-side) construction must not persist a horizon:
     the later streaming instance owns that stamp, computed from ITS
     store at first construction."""
-    import json
-    import os
-
     from smoltable_spark.api import ColumnFamilyDef
     from smoltable_spark.sources.store import CellStore
     from smoltable_spark.streaming.store_cdc import StoreChangeRollup
@@ -770,10 +767,7 @@ def test_rollup_read_side_never_stamps_horizon(spark, tmp_path):
     store.write(_mk_cells(spark, [("a", 1, 1.0)]))  # initial base, v1
     p = str(tmp_path / "roll")
     reader = StoreChangeRollup(spark, p, keys=["k"], sums={"s": "1"})
-    meta_path = os.path.join(p, "_ROLLUP_META.json")
-    assert not os.path.exists(meta_path) or "start_version" not in json.load(
-        open(meta_path)
-    )
+    assert "start_version" not in reader._meta()
     streamer = StoreChangeRollup(spark, p, keys=["k"], sums={"s": "1"},
                                  store=store)
     assert streamer._start_version == 1  # the store's version, not 0

@@ -1,6 +1,6 @@
 """The shared storage-metadata layer (``sources/store_fs.py``): the
-generation pointer's race rules as every structure sees them, the
-streaming metas' create-if-absent commit, and the pinned leg-read
+generation pointer's race rules as every structure sees them, racing
+writers getting one winner on every filesystem, and the pinned leg-read
 schema of ``CellStore._merge_legs``."""
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ from smoltable_spark.streaming.dedup_stream import MinhashAdmitter
 from smoltable_spark.streaming.store_cdc import StoreChangeRollup
 
 from tests.conftest import make_cells
-from tests.test_round13 import _cpdel
 
 
 # ---------------------------------------------------------------------------
@@ -63,24 +62,27 @@ def test_ivf_pointer_vacuum_race_relists_to_newer(tmp_path):
 
 
 def test_pointer_resolves_max_over_plain_and_generations(tmp_path):
+    """The newest generation wins; a plain ``_P`` file — the older
+    single-file layout, whatever its content — is refused, because
+    reading it as "no commit" would let the next commit reuse a
+    committed number."""
     base = str(tmp_path)
     p = GenerationPointer(LocalStoreFS(), base, "_P")
     assert p.resolve() == (0, None)
-    _write(base, "_P", {"x": "legacy"})  # legacy plain form, no number
-    assert p.resolve() == (0, {"x": "legacy"})
+    _write(base, "_P-v1", {"x": "old", "v": 1})
     _write(base, "_P-v2", {"x": "gen", "v": 2})
     assert p.resolve() == (2, {"x": "gen", "v": 2})
-    _write(base, "_P", {"x": "plain", "v": 3})
-    assert p.resolve() == (3, {"x": "plain", "v": 3})
-    with open(os.path.join(base, "_P"), "w") as fh:
-        fh.write("{torn")
-    with pytest.raises(ValueError):  # only ever swapped in: corruption
-        p.resolve()
+    for legacy in ({"x": "legacy"}, {"x": "plain", "v": 3}, 3):
+        _write(base, "_P", legacy)
+        with pytest.raises(IOError, match="older layout"):
+            p.resolve()
+        with pytest.raises(IOError, match="older layout"):
+            p.resolve_listed()
 
 
 def test_pointer_commit_sweeps_torn_garbage_once(tmp_path):
     base = str(tmp_path)
-    p = GenerationPointer(LocalStoreFS(), base, "_P", swap=False)
+    p = GenerationPointer(LocalStoreFS(), base, "_P")
     with open(os.path.join(base, "_P-v1"), "w") as fh:
         fh.write('{"v": 1, "x"')  # a crashed writer's half file
     assert p.resolve() == (0, None)
@@ -93,7 +95,7 @@ def test_pointer_commit_sweeps_torn_garbage_once(tmp_path):
 
 def test_pointer_keep_bounds_generations(tmp_path):
     base = str(tmp_path)
-    p = GenerationPointer(LocalStoreFS(), base, "_P", swap=False, keep=2)
+    p = GenerationPointer(LocalStoreFS(), base, "_P", keep=2)
     for n in range(1, 6):
         p.commit(n, {})
     assert p.generations() == [5, 4]
@@ -101,7 +103,7 @@ def test_pointer_keep_bounds_generations(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# streaming metas: one winner, loud loser
+# racing writers: one winner, loud loser, on every filesystem
 
 
 def _rollup(spark, path):
@@ -113,10 +115,9 @@ def _admitter(spark, path):
 
 
 @pytest.mark.parametrize("make", [_rollup, _admitter], ids=["rollup", "admitter"])
-def test_cpdel_racing_meta_writers_one_winner(spark, tmp_path, make):
-    path = _cpdel(spark, tmp_path) + "/state"
+def test_racing_meta_writers_one_winner(spark, tmp_path, mkuri, make):
+    path = mkuri(tmp_path) + "/state"
     a, b = make(spark, path), make(spark, path)
-    assert a._fs.atomic_rename is False
     ma, mb = a._meta(), b._meta()  # both read the same generation
     a._commit_meta({**ma, "last_batch_id": 1})
     with pytest.raises(ConcurrentCommitError):
@@ -127,24 +128,49 @@ def test_cpdel_racing_meta_writers_one_winner(spark, tmp_path, make):
     assert make(spark, path)._meta()["last_batch_id"] == 3
 
 
+def test_racing_store_writers_one_winner(spark, tmp_path, mkuri):
+    """Two CellStore handles commit the same next version: exactly one
+    wins, the other raises, and the winner's pointer is what a fresh
+    handle resolves."""
+    path = mkuri(tmp_path / "t")
+    a, b = CellStore(spark, path), CellStore(spark, path)
+    a.save_families([ColumnFamilyDef("f")])
+    a.write(make_cells(spark, [("k", "f", "", 1, "string", "a")]))
+    n = a.current_version() + 1
+    assert b.current_version() + 1 == n
+    a._commit_version(n)
+    with pytest.raises(ConcurrentCommitError, match=f"v{n}"):
+        b._commit_version(n)
+    assert CellStore(spark, path).current_version() == n
+    names = a._fs.listdir(a.path)
+    assert sorted(x for x in names if x.startswith("_VERSION")) == [
+        "_VERSION-v1", f"_VERSION-v{n}"
+    ]
+
+
 @pytest.mark.parametrize(
     "make,name", [(_rollup, "_ROLLUP_META.json"), (_admitter, "_META")],
     ids=["rollup", "admitter"],
 )
 def test_file_meta_written_by_plain_overwrite_still_reads(spark, tmp_path, make, name):
-    """A meta in the plain single-file form (no generation number) is
-    read back through both adapters, and the next commit supersedes it
-    in place on a rename-atomic filesystem."""
+    """A meta in the plain single-file form an older layout wrote on a
+    rename-atomic filesystem is refused through both adapters, rather
+    than read as an empty meta whose next commit would start over at
+    generation 1; commits write generations."""
     local = tmp_path / "state"
     os.makedirs(local)
     legacy = {"last_batch_id": 4, "version": 0, "checkpoint": "/ck"}
     (local / name).write_text(json.dumps(legacy))
     for path in (str(local), "file:" + str(local)):
-        assert make(spark, path)._meta() == legacy
+        with pytest.raises(IOError, match="older layout"):
+            make(spark, path)._meta()
+    os.remove(local / name)
     h = make(spark, "file:" + str(local))
     h._commit_meta({**h._meta(), "last_batch_id": 5})
     assert make(spark, str(local))._meta()["last_batch_id"] == 5
-    assert sorted(n for n in os.listdir(local) if n.startswith(name)) == [name]
+    assert sorted(n for n in os.listdir(local) if n.startswith(name)) == [
+        f"{name}-v1"
+    ]
 
 
 # ---------------------------------------------------------------------------

@@ -115,6 +115,10 @@ def test_zorder_boundaries_sidecar_on_uri(spark, tmp_path, mkuri):
 
 
 def test_migrate_and_cdc_guard_on_uri(spark, tmp_path, mkuri):
+    """The CDC chain guard classifies a URI store's legs through its FS
+    adapter: a dot-named minor fold is benign, and a minor leg renamed
+    to the plain ``v=<n>`` name (outside input the file source would
+    re-consume) is refused by a fresh incarnation."""
     from smoltable_spark.streaming.store_cdc import StoreChangeRollup
 
     store = CellStore(spark, mkuri(tmp_path / "mig_uri"))
@@ -129,11 +133,9 @@ def test_migrate_and_cdc_guard_on_uri(spark, tmp_path, mkuri):
     m = store.minor_compact()
     # guard probes the URI store's legs through its FS adapter
     roll.guard_chain()  # benign fold: no raise
-    # legacy-simulation + migration, all through the adapter. The rename
-    # is an OUT-OF-BAND mutation (not a store op), so the long-lived
-    # incarnation's guard cache — which already classified v{m} as a
-    # dotted minor — keeps its verdict; the documented contract is a
-    # FRESH incarnation, which cold-walks the chain:
+    # an OUT-OF-BAND rename (not a store op): the long-lived
+    # incarnation's guard cache already classified v{m} as a dotted
+    # minor, so a FRESH incarnation cold-walks the chain
     store._fs.rename(
         store._version_dir(m), store.path + f"/v={m}"
     )
@@ -143,21 +145,6 @@ def test_migrate_and_cdc_guard_on_uri(spark, tmp_path, mkuri):
     )
     with pytest.raises(ValueError, match="rewrite"):
         fresh.guard_chain()
-    if store._fs.atomic_rename:
-        assert store.migrate_minor_legs() == 1
-    else:
-        # cpdel: the per-leg rename is a REAL copy+delete — migration
-        # refuses without the maintenance-window assertion (round 13:
-        # this refusal finally fires against a genuine torn-rename FS)
-        with pytest.raises(IOError, match="rename-unsafe"):
-            store.migrate_minor_legs()
-        assert store.migrate_minor_legs(allow_non_atomic=True) == 1
-    assert os.path.basename(store._version_dir(m)) == f".v={m}.minor"
-    fresh2 = StoreChangeRollup(
-        spark, str(tmp_path / "roll"), keys=["family"],
-        sums={"n": "1"}, store=store,
-    )
-    fresh2.guard_chain()  # migrated fold: benign again
 
 
 def test_dedup_admitter_state_on_uri(spark, tmp_path, mkuri):

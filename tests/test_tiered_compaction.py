@@ -443,86 +443,3 @@ def test_delta_legs_carry_row_key_bloom(spark, tmp_path):
     got = store.read().filter(F.col("row_key") == key).count()
     want = sum(1 for r in rows if r[0] == key)
     assert got == want and got >= 1
-
-
-def test_migrate_minor_legs_enables_fold_transparent_cdc(spark, tmp_path):
-    """Round 11 (VERDICT r10 ask #4): a store whose minor legs were
-    committed under the pre-r10 PLAIN name permanently forced the CDC
-    resync; ``migrate_minor_legs()`` renames them to the dot form so a
-    FRESH stream incarnation passes the guard and the rollup sees no
-    double count — the stream_store_cdc_minor invariants on a migrated
-    store."""
-    from smoltable_spark.streaming.store_cdc import (
-        StoreChangeRollup,
-        stream_store_changes,
-        stream_store_rollup,
-    )
-
-    store = _mk(spark, tmp_path)
-    store.write(_cells(spark, [("a", 1, "v0")]))
-    # first incarnation starts at horizon v1, BEFORE the legacy fold
-    legacy = StoreChangeRollup(
-        spark, str(tmp_path / "roll"), keys=["family"],
-        sums={"n": "1"}, store=store,
-    )
-    store.append(_cells(spark, [("b", 1, "w")]))
-    store.append(_cells(spark, [("c", 1, "x")]))
-    m = store.minor_compact()
-    os.rename(
-        store._version_dir(m), os.path.join(store.path, f"v={m}")
-    )  # simulate an r9-committed store
-    before = _snapshot(store)
-    with pytest.raises(ValueError, match="rewrite"):
-        legacy.guard_chain()  # plain minor: documented resync raise
-
-    assert store.migrate_minor_legs() == 1
-    assert os.path.basename(store._version_dir(m)) == f".v={m}.minor"
-    assert store._kind(m) == "minor"
-    assert _snapshot(store) == before  # batch reads unaffected
-    assert store.migrate_minor_legs() == 0  # idempotent no-op
-    # the legacy incarnation's guard cache classified v{m} permanently —
-    # the documented contract is a FRESH incarnation after migration
-    with pytest.raises(ValueError, match="rewrite"):
-        legacy.guard_chain()
-
-    # second (fresh) incarnation: guard passes and the feed is exact —
-    # the initial snapshot arrives once (migrated minor invisible), and
-    # a POST-migration fold stays transparent mid-stream
-    roll = StoreChangeRollup(
-        spark, str(tmp_path / "roll2"), keys=["family"],
-        sums={"n": "1"}, store=store,
-    )
-    roll.guard_chain()  # no raise: the fold is structurally invisible
-
-    def drain():
-        s = stream_store_changes(spark, store)
-        q = stream_store_rollup(s, roll, str(tmp_path / "ckpt2"))
-        assert q.awaitTermination(120)
-
-    drain()  # base + 2 deltas = 3 cells, folded cells exactly once
-    got = {r["family"]: (r["n"], r["_rows"]) for r in roll.result().collect()}
-    assert got == {"f": (3, 3)}
-    store.append(_cells(spark, [("d", 1, "y")]))
-    store.append(_cells(spark, [("e", 1, "z")]))
-    m2 = store.minor_compact()  # r10+ fold: dotted from birth
-    assert os.path.basename(store._version_dir(m2)).startswith(".")
-    drain()  # guard passes across the new fold; only the deltas arrive
-    got = {r["family"]: (r["n"], r["_rows"]) for r in roll.result().collect()}
-    assert got == {"f": (5, 5)}
-    assert roll.processed_rows() == 5
-
-
-def test_migrate_minor_legs_refuses_ambiguous_duplicate(spark, tmp_path):
-    """Both the plain and the dotted dir existing for one version means
-    a concurrent writer or manual copy — fail fast, migrate nothing."""
-    import shutil
-
-    store = _mk(spark, tmp_path)
-    store.write(_cells(spark, [("a", 1, "v0")]))
-    store.append(_cells(spark, [("b", 1, "w")]))
-    store.append(_cells(spark, [("c", 1, "x")]))
-    m = store.minor_compact()
-    dotted = store._version_dir(m)
-    shutil.copytree(dotted, os.path.join(store.path, f"v={m}"))
-    with pytest.raises(IOError, match="ambiguous"):
-        store.migrate_minor_legs()

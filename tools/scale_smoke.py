@@ -363,19 +363,13 @@ def main():
         return round(full[0], 3)
     timed("ann_recall_curve_sweep12_10x", recall_curve_10x)
 
-    # round 13: IVF generation fold at 10x on a forced rename-unsafe
-    # profile — build, tombstone 1/701 of ids, fold via the _LISTGEN
-    # pointer, serve. Times the full maintenance cycle; correctness is
-    # the served-vs-masked equality inside.
+    # IVF generation fold at 10x — build, tombstone 1/701 of ids, fold
+    # via the _LISTGEN pointer, serve. Times the full maintenance cycle;
+    # the fold must leave no tombstone outstanding.
     def gen_fold_10x():
         import shutil as _sh
 
         from smoltable_spark.functions import ann_index
-        from smoltable_spark.sources.store_fs import LocalStoreFS
-
-        class _Unsafe(LocalStoreFS):
-            scheme = "s3a"
-            atomic_rename = False
 
         p = os.path.join(OUT, "ivf_genfold")
         _sh.rmtree(p, ignore_errors=True)
@@ -383,12 +377,7 @@ def main():
         ann_index.delete_from_ivf_index(
             spark, p, emb.filter(F.col("vec_id") % 701 == 0).select("vec_id")
         )
-        real = ann_index.store_fs_for
-        ann_index.store_fs_for = lambda _s, _b: _Unsafe()
-        try:
-            stats = ann_index.compact_ivf_index(spark, p)
-        finally:
-            ann_index.store_fs_for = real
+        stats = ann_index.compact_ivf_index(spark, p)
         assert similarity.ivf_tombstones(spark, p) is None
         served = similarity.query_ivf_index(spark, p, qs, k=10, nprobe=4)
         return (stats["lists_rewritten"], served.count())
