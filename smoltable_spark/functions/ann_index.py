@@ -330,10 +330,12 @@ def _fold_tombstones(
     keep_names = set(meta.get("tomb_keep", []))
     legs = []       # live tombstone legs (full paths)
     leg_names = []  # their basenames — the next pointer's tomb_folded
+    listed = set()  # every leg dir still on disk
     for d, is_dir in fs.list_status(troot):
         if not is_dir:
             continue
-        elif (d.startswith("d-") and d not in folded_names) or d in keep_names:
+        listed.add(d)
+        if (d.startswith("d-") and d not in folded_names) or d in keep_names:
             legs.append(f"{troot}/{d}")
             leg_names.append(d)
         elif d.startswith(".t-"):
@@ -448,7 +450,9 @@ def _fold_tombstones(
     _commit_listgen(
         fs, base, g_new, new_lists,
         tomb_keep=[stage.rsplit("/", 1)[1]] if stage else [],
-        tomb_folded=sorted(folded_names | set(leg_names)),
+        # a folded name stays only while its dir does (a crash before
+        # the sweep below left it): the pointer stays bounded
+        tomb_folded=sorted((folded_names & listed) | set(leg_names)),
     )
     # post-commit sweep: the pointer already excludes these legs, so a
     # crash mid-sweep leaves only ignored garbage (vacuum_ivf_index

@@ -27,10 +27,10 @@ def gc_worker(store: CellStore, metrics: MetricsTable | None = None, now_nanos: 
     before_df = store.read()
     before = before_df.count()
     gced = run_gc(before_df.drop("lg"), families, now_nanos=now)
-    # read()'s shadowing contract + GC's pure row filter keep cell
-    # coordinates unique by construction, so the write skips the dedup
-    # window — one full shuffle of the table removed per GC cycle, the
-    # same argument compact() makes (round 12)
+    # read() returns one cell per coordinate and GC only filters rows,
+    # so the write skips the newest-wins step; read()'s row_key exchange
+    # also serves the version-GC window, so the rewrite shuffles twice
+    # (that exchange and the layout's range exchange)
     store.write(gced, assume_unique_coords=True)
     # the rewrite is now the chain's only leg, so parquet footer counts
     # are exact: the after-count is driver-side metadata, not a job

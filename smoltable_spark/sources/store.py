@@ -27,11 +27,19 @@ table at 100 TB):
   retention rewrites and compaction, the levelled-compaction analog);
 - ``append()`` produces a **delta** snapshot containing only the batch —
   the memtable-flush analog: cost is O(batch), not O(table);
-- ``read(v)`` unions the latest base ≤ v with every delta in between —
-  the merge the reference's MergeReader does across LSM segments
-  (smoltable/src/table/merge_reader.rs:4-64), except Spark needs no
-  key-order merge at read time (sorts/windows re-establish order where a
-  query needs it);
+- ``read(v)`` unions the latest base ≤ v with every leg after it and
+  resolves shadowing with ONE rule, the merge the reference's
+  MergeReader does across LSM segments
+  (smoltable/src/table/merge_reader.rs:4-64): of the copies of a cell
+  key (lg, row_key, family, qualifier, ts) the newest leg's wins. The
+  legs are read as one union tagged with their version number, and one
+  window (``_newest_wins``) keeps the highest tag per key — no join, no
+  broadcast, at most one exchange whatever the chain length. A read
+  makes that exchange by row_key, so row assembly, the cell-limit
+  windows and row counts reuse it; a rewrite resolves inside its
+  layout's own range exchange. A single-leg snapshot is read as is.
+  The same step, ordered by batch position, keeps the last write of a
+  coordinate within one commit;
 - ``compact()`` folds base+deltas into a new base (``OPTIMIZE`` analog;
   reference levelled compaction, mod.rs:156-165).
 
@@ -74,13 +82,14 @@ Readers need no coordination.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from smoltable_spark.api import ColumnFamilyDef
-from smoltable_spark.schema import CELL_COLUMNS, CELLS_SCHEMA
+from smoltable_spark.schema import CELL_COLUMNS, CELLS_SCHEMA, cell_order
 from smoltable_spark.sources.store_fs import (  # noqa: F401 — re-exported
     ConcurrentCommitError,
     GenerationPointer,
@@ -100,6 +109,45 @@ _MANIFEST_KEEP_VERSIONS = 64
 #: partitioning cannot round-trip an empty string (it reads back as NULL),
 #: so '' is encoded as this sentinel on disk and decoded on read.
 _DEFAULT_LG = "_default"
+
+#: the newest-wins order a chain read or a commit batch carries until
+#: :func:`_newest_wins` resolves it: a leg's version number, or a cell's
+#: position in its batch
+_SEQ = "__seq"
+#: a cell's identity: its locality group (which follows from its
+#: family) and the reference's LSM key row:cf:cq:!ts (cell.rs:168-182)
+_CELL_KEY = ["lg", "row_key", "family", "qualifier", "ts"]
+
+
+def _newest_wins(df: DataFrame) -> DataFrame:
+    """THE shadowing step: of the rows sharing a cell key keep the one
+    with the highest ``_SEQ``, and drop ``_SEQ``; a frame without the
+    column is returned as is. One window, no join and no broadcast. It
+    adds no exchange when its input is already clustered on part of the
+    cell key (hash by row_key for reads, range by (lg, row_key) for base
+    rewrites); otherwise Spark inserts one exchange on the key."""
+    from pyspark.sql.window import Window
+
+    if _SEQ not in df.columns:
+        return df
+    w = Window.partitionBy(*_CELL_KEY).orderBy(F.col(_SEQ).desc())
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", _SEQ)
+    )
+
+
+def _shadowed(chain: DataFrame) -> DataFrame:
+    """A read's placement of :func:`_newest_wins`: behind an exchange by
+    row_key. That hash partitioning satisfies every row-key consumer
+    downstream (row assembly, the cell-limit and GC windows, distinct
+    row counts), so they resolve shadowing inside the exchange they make
+    anyway, and filters on any cell-key column (lg pruning included)
+    still reach the leg scans."""
+    if _SEQ not in chain.columns:
+        return chain
+    return _newest_wins(chain.repartition("row_key"))
 
 
 class CellStore:
@@ -293,41 +341,6 @@ class CellStore:
 
     # -- write / read ------------------------------------------------------
 
-    @staticmethod
-    def _dedup_coords(df: DataFrame, seq_col: str | None = None) -> DataFrame:
-        """Keep exactly one value per cell coordinate (row_key, family,
-        qualifier, ts) within a batch — the reference's LSM key
-        ``row:cf:cq:!ts`` overwrites on insert (cell.rs:168-182), so a
-        batch that writes the same coordinate twice keeps only the last
-        occurrence.
-
-        **Ordering contract (ADVICE r2).** With no ``seq_col``, batch
-        order is captured with ``monotonically_increasing_id``, which
-        follows (partition_index, position-within-partition). That equals
-        logical batch order for order-preserving inputs — file reads and
-        ``createDataFrame`` — which is the only supported default. For
-        input that arrives SHUFFLED (a join/repartition upstream) or may
-        re-run under task retries, the winning duplicate would be
-        partition-layout-dependent: callers in that situation MUST pass
-        ``seq_col`` naming an explicit monotone tie-break column (e.g. a
-        write sequence number); it is consumed (dropped from the stored
-        batch). Pinned by
-        tests/test_property_dedup.py::test_dedup_coords_explicit_seq.
-        """
-        from pyspark.sql.window import Window
-
-        seq = seq_col or "__seq"
-        if seq_col is None:
-            df = df.withColumn("__seq", F.monotonically_increasing_id())
-        w = Window.partitionBy("row_key", "family", "qualifier", "ts").orderBy(
-            F.col(seq).desc()
-        )
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop(seq, "__rn")
-        )
-
     def write(
         self,
         cells: DataFrame,
@@ -338,15 +351,27 @@ class CellStore:
         """Write a new **base** snapshot containing exactly ``cells``;
         returns version. Layout: lg partition dirs → range-partitioned,
         key-sorted parquet (the ``_layout`` hook — Z-order subclasses
-        substitute their own SINGLE arrangement shuffle). ``seq_col``
-        names an explicit tie-break column for within-batch duplicate
-        coordinates (required when the input is not order-preserving —
-        see ``_dedup_coords``). ``assume_unique_coords=True`` skips the
-        dedup window entirely — ONLY for input whose coordinates are
-        unique by construction (``compact()``: the fold comes from
-        ``read()``, whose LSM shadowing contract returns exactly one
-        cell per coordinate). At scale that dedup is a full shuffle of
-        the table per compaction, paid for nothing.
+        substitute their own SINGLE arrangement shuffle).
+
+        A batch that writes one coordinate twice keeps only the last
+        occurrence (the reference's LSM key ``row:cf:cq:!ts`` overwrites
+        on insert, cell.rs:168-182); ``_layout`` resolves it with the
+        chain's newest-wins step inside its range exchange. **Ordering
+        contract.** With no ``seq_col``, batch order is captured with
+        ``monotonically_increasing_id``, which follows (partition_index,
+        position-within-partition). That equals logical batch order for
+        order-preserving inputs — file reads and ``createDataFrame`` —
+        which is the only supported default. For input that arrives
+        SHUFFLED (a join/repartition upstream) or may re-run under task
+        retries, the winning duplicate would be partition-layout-
+        dependent: callers in that situation MUST pass ``seq_col`` naming
+        an explicit monotone tie-break column (e.g. a write sequence
+        number); it is consumed (dropped from the stored batch). Pinned
+        by tests/test_property_dedup.py::test_dedup_coords_explicit_seq.
+
+        ``assume_unique_coords=True`` skips the step — ONLY for input
+        whose coordinates are unique by construction (a filter of
+        ``read()``, which returns exactly one cell per coordinate).
         """
         return self._commit_snapshot(
             self._batch_with_lg(cells, seq_col, assume_unique_coords),
@@ -357,11 +382,11 @@ class CellStore:
     def _batch_with_lg(
         self, cells: DataFrame, seq_col: str | None, assume_unique_coords: bool
     ) -> DataFrame:
-        """The cell columns of a write batch, deduplicated per coordinate
-        (see ``_dedup_coords``; skipped for ``assume_unique_coords``),
-        plus ``lg``: each cell's locality group by family, the
-        ``_DEFAULT_LG`` sentinel for the default group and for families
-        the manifest does not name."""
+        """The cell columns of a commit plus ``lg``: each cell's locality
+        group by family, the ``_DEFAULT_LG`` sentinel for the default
+        group and for families the manifest does not name. Unless
+        ``assume_unique_coords``, the ``_SEQ`` order ``_layout`` resolves
+        duplicate coordinates by: ``seq_col``, else batch position."""
         fam_lg = {f: g or _DEFAULT_LG for f, g in self.family_to_lg().items()}
         lg_expr = F.lit(_DEFAULT_LG)
         if fam_lg:
@@ -369,12 +394,11 @@ class CellStore:
                 *[x for f, g in fam_lg.items() for x in (F.lit(f), F.lit(g))]
             )
             lg_expr = F.coalesce(mapping[F.col("family")], F.lit(_DEFAULT_LG))
-        df = cells.select(*CELL_COLUMNS, *([seq_col] if seq_col else []))
+        seq = []
         if not assume_unique_coords:
-            df = self._dedup_coords(df, seq_col)
-        elif seq_col:
-            df = df.drop(seq_col)
-        return df.withColumn("lg", lg_expr)
+            order = F.col(seq_col) if seq_col else F.monotonically_increasing_id()
+            seq = [order.alias(_SEQ)]
+        return cells.select(*CELL_COLUMNS, *seq).withColumn("lg", lg_expr)
 
     #: parquet layout tuning — the reference picks 64 KiB LSM blocks because
     #: "the workload is dominated by prefix & range searches"
@@ -423,20 +447,22 @@ class CellStore:
         after ``write()`` had range-partitioned would pay a second
         exchange of the whole table per write/compaction. The
         default base layout is range-partition by (lg, row_key) +
-        key-sort; deltas are written as they arrive (O(batch) memtable
-        flush, the caller sorts within partitions)."""
+        key-sort; deltas and minor legs are written in the partitions
+        they arrive in (O(batch) memtable flush), key-sorted.
+
+        ``df`` may carry a ``_SEQ`` order (duplicate coordinates of one
+        batch, or the legs of a fold): every layout resolves it with
+        ``_newest_wins`` before the rows are written. The default layout
+        does it after the range exchange, which clusters every copy of a
+        cell key into one partition; a delta or minor leg pays the
+        step's own exchange."""
         if kind == "base":
             if num_range_partitions is None:
                 num_range_partitions = self._adaptive_base_partitions(df)
             df = df.repartitionByRange(
                 num_range_partitions, F.col("lg"), F.col("row_key")
-            ).sortWithinPartitions(
-                F.col("row_key").asc(),
-                F.col("family").asc(),
-                F.col("qualifier").asc(),
-                F.col("ts").desc(),
             )
-        return df, ["lg"]
+        return _newest_wins(df).sortWithinPartitions(*cell_order()), ["lg"]
 
     def _leg_schema(self) -> T.StructType:
         """The schema every leg reads back with: the cell columns plus
@@ -577,19 +603,14 @@ class CellStore:
         flush, never a table rewrite. Run ``compact()`` periodically to
         fold deltas into a base (small-file + read-amp maintenance).
         ``seq_col``: see ``write``. ``assume_unique_coords=True`` skips
-        the within-batch dedup window — ONLY for batches whose
+        the within-batch newest-wins step — ONLY for batches whose
         coordinates are unique by construction (e.g. one cell per source
-        row); like ``write``'s flag, it removes a full shuffle of the
-        batch that would find nothing to drop."""
-        df = self._batch_with_lg(
-            cells, seq_col, assume_unique_coords
-        ).sortWithinPartitions(
-            F.col("row_key").asc(),
-            F.col("family").asc(),
-            F.col("qualifier").asc(),
-            F.col("ts").desc(),
+        row, or a batch the driver already deduplicated); like
+        ``write``'s flag, it removes a full shuffle of the batch that
+        would find nothing to drop."""
+        return self._commit_snapshot(
+            self._batch_with_lg(cells, seq_col, assume_unique_coords), kind="delta"
         )
-        return self._commit_snapshot(df, kind="delta")
 
     def compact(self, num_range_partitions: int | None = None) -> int:
         """Fold the current base + deltas into one new base snapshot
@@ -598,13 +619,14 @@ class CellStore:
         n = self.current_version()
         if n == 0 or self._kind(n) == "base":
             return n
-        # read()'s shadowing contract returns exactly one cell per
-        # coordinate — the dedup window (a second full shuffle of the
-        # table) would find nothing to drop
-        return self.write(
-            self.read().select(*CELL_COLUMNS),
-            num_range_partitions,
-            assume_unique_coords=True,
+        # the chain's leg tags ride into the layout, which shadows inside
+        # its range exchange: the fold shuffles the snapshot once
+        chain = self._chain(n)
+        tagged = _SEQ in chain.columns
+        return self._commit_snapshot(
+            self._batch_with_lg(chain, _SEQ if tagged else None, not tagged),
+            kind="base",
+            num_range_partitions=num_range_partitions,
         )
 
     def minor_compact(self) -> int:
@@ -612,8 +634,9 @@ class CellStore:
         leg — tiered (L0 → L1) compaction. ``compact()`` is a full
         O(table) base rewrite; at 100 TB you cannot afford one whenever
         a handful of small deltas has accumulated. A minor fold is
-        O(changes): it reads ONLY the delta legs, merges them with the
-        same coordinate-shadowing ``read()`` applies, and commits the
+        O(changes): it reads ONLY the delta legs, keeps the newest leg's
+        copy of every cell key (the one rule ``read()`` applies, resolved
+        by ``_layout`` in the step's own exchange), and commits the
         result as a single leg that supersedes them in the chain
         (``_legs_of``). Read amplification drops from (#deltas + 1) legs
         to 2; the base is never touched. fjall — the reference's LSM
@@ -646,32 +669,10 @@ class CellStore:
         run.reverse()
         if len(run) < 2:
             return n
-        merged = self._merge_legs(run).select(*CELL_COLUMNS, "lg")
-        # bound the output file count without a shuffle: the union of k
-        # small legs carries the sum of their partition counts. Floor at
-        # the core count — coalesce below it collapses the upstream
-        # merge pipeline (leg scans + shadowing anti-joins are all
-        # narrow) into the same few tasks (measured: coalesce(1) on a
-        # tiny fold cost +30% on wc_minor_compact) — but scale UP by the
-        # folded legs' actual on-disk bytes (r13, guide §2/§6): at
-        # 100 TB a fold gets one ~64 MiB partition per segment instead
-        # of the old hard cap of defaultParallelism giant files.
-        fold_bytes = sum(
-            sz
-            for v in run
-            for name, _full, sz in self._fs.walk_files(self._version_dir(v))
-            if name.endswith(".parquet")
-        )
-        by_bytes = -(-fold_bytes // self._TARGET_BASE_PARTITION_BYTES)
-        n_out = max(self.spark.sparkContext.defaultParallelism, 8, by_bytes)
-        merged = merged.coalesce(n_out).sortWithinPartitions(
-            F.col("row_key").asc(),
-            F.col("family").asc(),
-            F.col("qualifier").asc(),
-            F.col("ts").desc(),
-        )
+        # AQE sizes the step's exchange by bytes: a small fold writes a
+        # few files, a large one ~64 MiB partitions
         return self._commit_snapshot(
-            merged,
+            self._merge_legs(run).select(*CELL_COLUMNS, "lg", _SEQ),
             kind="minor",
             markers={
                 self._FOLDS_FILE: json.dumps(
@@ -683,9 +684,11 @@ class CellStore:
     def read(self, version: int | None = None) -> DataFrame:
         """Read a snapshot (default: current). Includes the ``lg`` column.
 
-        A snapshot = latest base ≤ version, unioned with every delta after
-        it. Each leg is its own parquet relation, so predicate pushdown,
-        row-group skipping, and lg partition pruning apply per leg.
+        A snapshot = latest base ≤ version, unioned with every leg after
+        it, the newest leg's copy of each cell key winning (see
+        ``_merge_legs``). Each leg is its own parquet relation, so
+        predicate pushdown, row-group skipping, and lg partition pruning
+        apply per leg.
         """
         cur = self.current_version()
         return self._read_listed(cur if version is None else version)
@@ -693,6 +696,11 @@ class CellStore:
     def _read_listed(self, n: int) -> DataFrame:
         """``read(n)`` against the listing the caller's
         ``current_version()`` just took."""
+        return _shadowed(self._chain(n))
+
+    def _chain(self, n: int) -> DataFrame:
+        """Snapshot ``n``'s legs as ``_merge_legs`` unions them, shadowing
+        still unresolved."""
         if n == 0:
             raise FileNotFoundError(f"no snapshot in {self.path}")
         # lg keeps the physical sentinel value ('_default' for ''): decoding
@@ -716,27 +724,26 @@ class CellStore:
         return self._merge_legs(legs)
 
     def _merge_legs(self, legs: list[int]) -> DataFrame:
-        """Shadowed union of leg dirs, newest level wins.
+        """The legs as ONE union, each row tagged ``_SEQ`` with its leg's
+        version number — the input of the one shadowing rule.
 
-        LSM shadowing: a rewrite of the SAME cell coordinates
-        (row, family, qualifier, ts) in a newer snapshot replaces the
-        older value (the reference's LSM key row:cf:cq:!ts overwrites,
-        cell.rs:168-182). Each older leg is anti-joined against the
-        union of newer legs' coordinates — the LSM read path: newer
-        levels shadow older. Deltas are small, so the anti-join build
-        side is small (AQE broadcasts it); single-leg stores (the
-        common compacted state) skip all of this."""
+        LSM shadowing: a rewrite of the SAME cell key (lg, row, family,
+        qualifier, ts) in a newer leg replaces the older value (the
+        reference's LSM key row:cf:cq:!ts overwrites, cell.rs:168-182,
+        and its MergeReader lets the newer segment win,
+        merge_reader.rs:4-64). ``_newest_wins`` keeps the highest tag
+        per key; the caller places it after the exchange it makes anyway
+        (``_shadowed`` for reads, ``_layout`` for folds). A single leg
+        holds one copy per key, so it is returned untagged and read as
+        is."""
         reader = self.spark.read.schema(self._leg_schema())
-        dfs = [reader.parquet(self._version_dir(v)) for v in legs]
-        if len(dfs) == 1:
-            return dfs[0]
-        coord = ["row_key", "family", "qualifier", "ts"]
-        out = dfs[-1]
-        newer_coords = dfs[-1].select(*coord)
-        for older in reversed(dfs[:-1]):
-            out = older.join(newer_coords, coord, "left_anti").unionByName(out)
-            newer_coords = newer_coords.unionByName(older.select(*coord))
-        return out
+        if len(legs) == 1:
+            return reader.parquet(self._version_dir(legs[0]))
+        dfs = [
+            reader.parquet(self._version_dir(v)).withColumn(_SEQ, F.lit(v))
+            for v in legs
+        ]
+        return functools.reduce(DataFrame.unionByName, dfs)
 
     def read_changes(
         self, since_version: int, to_version: int | None = None
@@ -746,7 +753,8 @@ class CellStore:
         pipeline consumes instead of re-scanning the table. Reads ONLY the
         delta leg files of the range (O(changes), never O(table)); a
         coordinate rewritten twice within the range yields its newest
-        value (same LSM shadowing as ``read``).
+        value: the newest leg's copy of a cell key wins, the one rule
+        ``read`` applies, resolved in the same row_key exchange.
 
         Raises if the range crosses a **base** rewrite (``write()`` /
         ``compact()``): a base leg physically rewrites every cell, so
@@ -824,7 +832,7 @@ class CellStore:
             )
         if not effective:
             return self._read_listed(to).limit(0)
-        return self._merge_legs(effective)
+        return _shadowed(self._merge_legs(effective))
 
     def read_for_filter(self, column_filter=None, version: int | None = None) -> DataFrame:
         """Partition-pruned read: only the locality groups a column filter

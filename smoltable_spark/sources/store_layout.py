@@ -29,9 +29,9 @@ import os
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from smoltable_spark.functions.layout import morton2, zorder_covering
-from smoltable_spark.schema import CELL_COLUMNS
+from smoltable_spark.schema import CELL_COLUMNS, cell_order
 from smoltable_spark.session import materialize
-from smoltable_spark.sources.store import CellStore
+from smoltable_spark.sources.store import CellStore, _newest_wins
 from smoltable_spark.sources.store_fs import publish_text
 
 
@@ -61,10 +61,11 @@ class ZorderCellStore(CellStore):
         """Layout hook override (ADVICE r7: the commit sequence itself —
         version dir, kind marker, atomic pointer — stays in the parent's
         ``_commit_snapshot``; only the physical arrangement lives here).
-        The hook owns the base arrangement shuffle outright (round 9):
-        it REPLACES the parent's (lg, row_key) range partitioning with
-        ONE (lg, zb) exchange — previously both ran, shuffling every
-        base/compaction write twice."""
+        The hook owns the base arrangement shuffle outright: it REPLACES
+        the parent's (lg, row_key) range partitioning with ONE (lg, zb)
+        exchange. A base commit that carries a newest-wins order (an
+        unchecked batch, or the legs of a fold) resolves it in the
+        step's own exchange first."""
         zb = morton2(
             self._a_bucket().cast("int"),
             self._b_bucket().cast("int"),
@@ -78,15 +79,14 @@ class ZorderCellStore(CellStore):
             # applies to delta rows via row-group stats instead of
             # partition pruning — compaction folds them into the
             # z-ordered base
-            return df, ["lg"]
+            return super()._layout(df, kind)
+        # the newest-wins step runs BEFORE the (lg, zb) exchange: zb may
+        # be any function of the cell columns, so two copies of a cell
+        # key can land in different buckets
         df = (
-            df.repartition(F.col("lg"), F.col("zb"))
-            .sortWithinPartitions(
-                F.col("row_key").asc(),
-                F.col("family").asc(),
-                F.col("qualifier").asc(),
-                F.col("ts").desc(),
-            )
+            _newest_wins(df)
+            .repartition(F.col("lg"), F.col("zb"))
+            .sortWithinPartitions(*cell_order())
         )
         return df, ["lg", "zb"]
 

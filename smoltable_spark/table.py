@@ -179,8 +179,8 @@ class Smoltable:
         cells = self.store.read().drop("lg")
         deleted = deleted_cell_count(cells, row_key, column_filter).collect()[0][0]
         remaining = _delete_row_op(cells, row_key, column_filter)
-        # a filter of read() keeps coordinates unique: skip the dedup
-        # window (round 12 — same argument as store.compact())
+        # a filter of read() keeps coordinates unique: skip the
+        # newest-wins step
         self.store.write(remaining, assume_unique_coords=True)
         return int(deleted)
 

@@ -79,10 +79,10 @@ def mkuri(request, spark):
       cluster. Each call gets a fresh mount-table authority so the
       FileSystem cache can never serve a stale mount.
     - ``cpdel``: tests/fsshim — a RawLocalFileSystem subclass whose
-      rename REALLY is copy+delete (the object-store shape), with a
-      per-rename fault hook. Not in RENAME_ATOMIC_SCHEMES, so the
-      probed capability is ``atomic_rename=False`` and the engines'
-      rename-free generation protocols run FOR REAL here."""
+      rename REALLY is copy+delete (the object-store shape). Not in
+      RENAME_ATOMIC_SCHEMES, so the probed capability is
+      ``atomic_rename=False`` and the engines' rename-free generation
+      protocols run FOR REAL here."""
     if request.param == "file":
         return lambda p: "file:" + str(p)
     if request.param == "cpdel":

@@ -19,16 +19,6 @@ import org.apache.hadoop.fs.permission.FsPermission;
  * Registered via {@code fs.cpdel.impl = smoltablefs.CopyDeleteFileSystem}
  * with this class directory on {@code spark.driver.extraClassPath}
  * (compiled on the fly by tests/conftest.py when javac is available).
- *
- * Fault injection, read per-rename from the live Configuration
- * ({@code fs.cpdel.rename.fault}):
- *   "fail-after-copy"  — copy completes, the source delete never runs:
- *                        the dual-dir crash state migrate_minor_legs
- *                        must refuse.
- *   "fail-mid-copy"    — a directory rename dies after copying at most
- *                        one child: the torn-copy state (partial
- *                        destination beside an intact source).
- *   "fail-before-copy" — the rename throws before any mutation.
  */
 public class CopyDeleteFileSystem extends RawLocalFileSystem {
   static final URI NAME = URI.create("cpdel:///");
@@ -78,33 +68,8 @@ public class CopyDeleteFileSystem extends RawLocalFileSystem {
 
   @Override
   public boolean rename(Path src, Path dst) throws IOException {
-    String fault = getConf().get("fs.cpdel.rename.fault", "");
-    if (fault.equals("fail-before-copy")) {
-      throw new IOException(
-          "cpdel fault injection: rename failed before any copy: " + src);
-    }
-    if (fault.equals("fail-mid-copy")) {
-      FileStatus st = getFileStatus(src);
-      if (st.isDirectory()) {
-        mkdirs(dst);
-        FileStatus[] kids = listStatus(src);
-        if (kids.length > 0) {
-          FileUtil.copy(this, kids[0].getPath(), this,
-              new Path(dst, kids[0].getPath().getName()),
-              false, true, getConf());
-        }
-      }
-      throw new IOException(
-          "cpdel fault injection: crashed mid-copy: " + src + " -> " + dst);
-    }
-    boolean copied = FileUtil.copy(this, src, this, dst, false, true, getConf());
-    if (!copied) {
+    if (!FileUtil.copy(this, src, this, dst, false, true, getConf())) {
       return false;
-    }
-    if (fault.equals("fail-after-copy")) {
-      throw new IOException(
-          "cpdel fault injection: crashed after copy, before delete: "
-              + src + " -> " + dst);
     }
     return delete(src, true);
   }

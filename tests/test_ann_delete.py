@@ -318,3 +318,26 @@ def test_fold_sweeps_stale_tombstone_rewrite(spark, built):
     assert stats["tombstones"] == 1
     assert not os.path.isdir(stale)
     assert similarity.ivf_tombstones(spark, path) is None
+
+
+def test_tomb_folded_names_only_listed_legs(spark, built):
+    """Five delete / compact / vacuum cycles: the pointer's
+    ``tomb_folded`` carries forward only names whose leg dir a fold
+    still listed, so it names the latest fold's legs and nothing older
+    (it used to grow by one name per delete batch, forever), and serving
+    still masks every deleted id."""
+    emb, path = built
+    fs = store_fs_for(spark, path)
+    troot = f"{path}/_tombstones"
+    deleted: set = set()
+    for i in range(5):
+        victims = emb.filter(F.col("vec_id") % 11 == i).select("vec_id")
+        deleted |= {r["vec_id"] for r in victims.collect()}
+        delete_from_ivf_index(spark, path, victims)
+        last_folded = {d for d, is_dir in fs.list_status(troot) if is_dir}
+        compact_ivf_index(spark, path)
+        vacuum_ivf_index(spark, path, keep_pointers=1)
+    _m, _gmap, meta = similarity._ivf_pointer(fs, path)
+    assert set(meta["tomb_folded"]) == last_folded, meta["tomb_folded"]
+    served = _serve(spark, path, emb)
+    assert served and not any(r[1] in deleted for r in served)

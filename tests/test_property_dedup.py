@@ -144,19 +144,25 @@ def test_banded_simhash_equals_bruteforce(spark, sig_rows):
     assert got == want
 
 
-@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
 @given(
     values=st.lists(
         st.integers(min_value=0, max_value=9), min_size=2, max_size=12
     ),
     shuffle_seed=st.integers(min_value=0, max_value=2**31 - 1),
+    kind=st.sampled_from(["write", "append"]),
 )
-def test_dedup_coords_explicit_seq(spark, values, shuffle_seed):
-    """The _dedup_coords ordering contract (ADVICE r2): with an explicit
-    seq_col the winning duplicate is the max-seq value REGARDLESS of how
-    the input DataFrame is partitioned or shuffled — hypothesis drives
-    duplicate coordinate batches through an adversarial repartition and
-    the highest-sequence write must always win."""
+def test_dedup_coords_explicit_seq(spark, tmp_path_factory, values, shuffle_seed, kind):
+    """The in-batch ordering contract of ``CellStore.write``/``append``:
+    with an explicit seq_col the winning duplicate is the max-seq value
+    REGARDLESS of how the input DataFrame is partitioned or shuffled —
+    hypothesis drives duplicate coordinate batches through an
+    adversarial repartition into a base or a delta commit, and the
+    highest-sequence write must always win."""
     import random
 
     from pyspark.sql import functions as F
@@ -187,7 +193,9 @@ def test_dedup_coords_explicit_seq(spark, values, shuffle_seed):
 
     schema = T.StructType(CELLS_SCHEMA.fields + [T.StructField("wseq", T.LongType())])
     df = spark.createDataFrame(rows, schema).repartition(5, "v_i64")  # adversarial layout
-    out = CellStore._dedup_coords(df, seq_col="wseq").collect()
+    store = CellStore(spark, str(tmp_path_factory.mktemp("dedup") / "s"))
+    getattr(store, kind)(df, seq_col="wseq")
+    out = store.read().drop("lg").collect()
     assert len(out) == 1
     assert out[0]["v_i64"] == values[-1]  # max wseq == last logical write
     assert "wseq" not in out[0].asDict()  # seq column is consumed

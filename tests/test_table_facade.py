@@ -176,6 +176,35 @@ def test_i64_extremes_roundtrip_exactly(spark, tmp_path):
     assert got == {"lo": -(2**63), "hi": 2**63 - 1}
 
 
+def test_write_keeps_later_of_duplicate_coordinate(spark, tmp_path):
+    """A batch that writes one coordinate twice stores the later value,
+    in one cell: the store's in-batch rule, applied on the driver. A
+    malformed cell fails the batch even when a later cell overwrites
+    its coordinate."""
+    import pytest
+
+    from smoltable_spark import ColumnFamilyDef, Smoltable
+
+    t = Smoltable.open(spark, str(tmp_path / "dtbl"))
+    t.create_column_families([ColumnFamilyDef("v")])
+    t.write([
+        {"row_key": "r",
+         "cells": [{"column_key": "v:x", "value": {"i64": 1}, "timestamp": 5},
+                   {"column_key": "v:y", "value": {"i64": 7}, "timestamp": 5}]},
+        {"row_key": "r",
+         "cells": [{"column_key": "v:x", "value": {"string": "later"},
+                    "timestamp": 5}]},
+    ])
+    got = sorted((r.qualifier, r.vtype, r.v_i64, r.v_str) for r in t.store.read().collect())
+    assert got == [("x", "string", None, "later"), ("y", "i64", 7, None)]
+    with pytest.raises(ValueError, match="unknown value type"):
+        t.write([
+            {"row_key": "r",
+             "cells": [{"column_key": "v:x", "value": {"bogus": 1}, "timestamp": 6},
+                       {"column_key": "v:x", "value": {"i64": 2}, "timestamp": 6}]},
+        ])
+
+
 def test_write_rejects_non_ident_qualifier(spark, tmp_path):
     """The write path enforces the reference's column-key charset
     ([A-Za-z0-9-_.#$], column_key.rs:4-11) — the same validation the
