@@ -13,8 +13,9 @@ Spark shape:
         time: LONG, vtype: STRING,
         v_str ... v_f64  (typed value, exactly one non-null)>>>>
 
-Built entirely from groupBy + collect_list + map_from_entries — one
-shuffle, all JVM-side.
+Built entirely from groupBy + collect_list + map_from_entries, all
+JVM-side, under the caller's placement: one shuffle by row_key, or none
+for a read bounded by a literal key set.
 """
 
 from __future__ import annotations
@@ -24,20 +25,22 @@ from pyspark.sql import DataFrame, functions as F
 from smoltable_spark.schema import VALUE_COLUMNS
 
 
-def assemble_rows(cells: DataFrame, descending: bool = False) -> DataFrame:
-    """Nest flat cells into rows; output ordered by row_key."""
+def assemble_rows(cells: DataFrame, placement, descending: bool = False) -> DataFrame:
+    """Nest flat cells into rows; output ordered by row_key.
+    ``placement``: ``schema.by_row_key`` or ``schema.one_partition``."""
     cell_struct = F.struct(
         F.col("ts").alias("time"),
         F.col("vtype"),
         *[F.col(c) for c in VALUE_COLUMNS],
     )
-    # ONE exchange for all three nesting levels: hash-partitioning by
-    # row_key satisfies the ClusteredDistribution of every groupBy below
-    # (each groups by a superset of {row_key}), so Catalyst inserts no
-    # further shuffles — without this the pipeline exchanged 3 times
-    # (by (row,fam,qual), (row,fam), (row)), tripling shuffle bytes of
-    # the user-facing nested scan at scale.
-    cells = cells.repartition("row_key")
+    # ONE placement for all three nesting levels and the final sort:
+    # hash-partitioning by row_key satisfies the ClusteredDistribution
+    # of every groupBy below (each groups by a superset of {row_key}),
+    # so Catalyst inserts no further shuffles — without it the pipeline
+    # exchanged 3 times (by (row,fam,qual), (row,fam), (row)), tripling
+    # shuffle bytes of the user-facing nested scan at scale. One
+    # partition satisfies every distribution, the sort's included.
+    cells = placement(cells)
     # per (row, family, qualifier): version list, newest first.
     # sort_array on struct sorts by first field (time) asc → reverse.
     per_column = (

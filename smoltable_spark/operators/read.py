@@ -9,6 +9,11 @@ non-matching row group — the DataFrame equivalent of the reference's LSM
 prefix seek (row_reader.rs:122-126). ``multi_get`` uses ``isin`` for small
 key lists (compiled to an In-filter, pushed down) or a broadcast semi-join
 for large ones, instead of the reference's per-row loop.
+
+A read bounded by a literal key set — ``get_row``, and ``multi_get`` of
+up to ``_ISIN_THRESHOLD`` keys — runs its cell-limit windows and row
+assembly in one partition (``schema.one_partition``): one stage, no
+exchange. A larger ``multi_get`` keeps the row_key exchange.
 """
 
 from __future__ import annotations
@@ -19,6 +24,7 @@ from smoltable_spark.api import QueryRowInput, ScanInput
 from smoltable_spark.operators.filters import column_filter_expr
 from smoltable_spark.operators.scan import _apply_cell_limits
 from smoltable_spark.operators.assemble import assemble_rows
+from smoltable_spark.schema import by_row_key, one_partition
 
 #: above this many keys, use a join instead of an In-filter
 _ISIN_THRESHOLD = 256
@@ -31,7 +37,7 @@ def get_row_cells(cells: DataFrame, inp: QueryRowInput) -> DataFrame:
     limit first, then the whole-row cell budget counted in
     (family, qualifier, ts-desc) order.
     """
-    out = cells.filter(F.col("row_key") == F.lit(inp.row_key))
+    out = one_partition(cells.filter(F.col("row_key") == F.lit(inp.row_key)))
     if inp.column_filter is not None:
         out = out.filter(column_filter_expr(inp.column_filter))
     scan_like = ScanInput(
@@ -42,7 +48,7 @@ def get_row_cells(cells: DataFrame, inp: QueryRowInput) -> DataFrame:
 
 def get_row(cells: DataFrame, inp: QueryRowInput) -> DataFrame:
     """Nested single-row result (empty DataFrame when the row is absent)."""
-    return assemble_rows(get_row_cells(cells, inp))
+    return assemble_rows(get_row_cells(cells, inp), one_partition)
 
 
 def multi_get_cells(cells: DataFrame, inputs: list[QueryRowInput]) -> DataFrame:
@@ -64,7 +70,7 @@ def multi_get_cells(cells: DataFrame, inputs: list[QueryRowInput]) -> DataFrame:
     if same_opts:
         keys = [i.row_key for i in inputs]
         if len(keys) <= _ISIN_THRESHOLD:
-            out = cells.filter(F.col("row_key").isin(keys))
+            out = one_partition(cells.filter(F.col("row_key").isin(keys)))
         else:
             spark = cells.sparkSession
             keys_df = spark.createDataFrame([(k,) for k in keys], "row_key STRING")
@@ -86,4 +92,9 @@ def multi_get_cells(cells: DataFrame, inputs: list[QueryRowInput]) -> DataFrame:
 
 def multi_get(cells: DataFrame, inputs: list[QueryRowInput]) -> DataFrame:
     """Nested rows for a batch of point reads, ordered by row key."""
-    return assemble_rows(multi_get_cells(cells, inputs))
+    return assemble_rows(multi_get_cells(cells, inputs), key_placement(len(inputs)))
+
+
+def key_placement(n_keys: int):
+    """Placement of a read bounded by ``n_keys`` literal keys."""
+    return one_partition if n_keys <= _ISIN_THRESHOLD else by_row_key

@@ -30,7 +30,7 @@ import sys
 from pyspark.sql import DataFrame, Window, functions as F
 
 from smoltable_spark.api import ScanInput
-from smoltable_spark.schema import cell_order
+from smoltable_spark.schema import by_row_key, cell_order
 from smoltable_spark.operators.filters import (
     column_filter_expr,
     row_prefix_expr,
@@ -231,4 +231,6 @@ def scan_rows(cells: DataFrame, inp: ScanInput, observation=None) -> DataFrame:
     collects into a BTreeMap, mod.rs:662,794-795; descending for the
     backward-scan extension).
     """
-    return assemble_rows(scan_cells(cells, inp, observation), descending=inp.reverse)
+    return assemble_rows(
+        scan_cells(cells, inp, observation), by_row_key, descending=inp.reverse
+    )

@@ -5,6 +5,8 @@ from smoltable_spark.plans.explain import (
     partition_filters,
     has_broadcast_join,
     shuffle_count,
+    file_scan_count,
+    codegen_compile_count,
     whole_stage_codegen_spans,
     read_schema_columns,
     audit,
@@ -17,6 +19,8 @@ __all__ = [
     "partition_filters",
     "has_broadcast_join",
     "shuffle_count",
+    "file_scan_count",
+    "codegen_compile_count",
     "whole_stage_codegen_spans",
     "read_schema_columns",
     "audit",

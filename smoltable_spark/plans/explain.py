@@ -46,6 +46,20 @@ def partition_filters(df: DataFrame) -> list[str]:
     return out
 
 
+def file_scan_count(df: DataFrame) -> int:
+    """File scans of the physical plan: one per parquet relation, however
+    many leg dirs it reads."""
+    return len(re.findall(r"\bFileScan ", physical_plan(df)))
+
+
+def codegen_compile_count(spark) -> int:
+    """Whole-stage and expression classes the driver JVM has compiled so
+    far (Janino), from ``CodegenMetrics``. The difference across a block
+    of queries is how many of them missed Spark's codegen cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in physical_plan(df) or "BroadcastNestedLoopJoin" in physical_plan(df)
 
@@ -102,6 +116,7 @@ def audit(df: DataFrame) -> dict:
         "partition_filters": partition_filters(df),
         "broadcast_join": has_broadcast_join(df),
         "shuffles": shuffle_count(df),
+        "file_scans": file_scan_count(df),
         "codegen_stages": whole_stage_codegen_spans(df),
         "read_schemas": read_schema_columns(df),
     }

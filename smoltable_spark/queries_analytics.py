@@ -10890,7 +10890,7 @@ def stream_store_cdc_minor(spark, sf_dir):
     """Streaming CDC ACROSS minor compaction (VERDICT r9 ask #1 —
     closing r9's analog of the r8 zorder/CDC exclusion, where the two
     newest features were mutually exclusive in steady state). Minor
-    legs commit under the dot-prefixed stream-invisible dir name
+    legs commit under the stream-invisible ``.minor/`` dir
     (sources/store.py::_MINOR_DIR), so the checkpointed file source
     keeps consuming the ORIGINAL delta legs and a ``minor_compact()``
     between incarnations is a benign re-layout — the reference's LSM
@@ -11846,22 +11846,22 @@ def ann_ivf_readd(spark, sf_dir):
                     corpus_where="vec_id % 11 <> 3"),
 )
 def ann_ivf_fold_unsafe(spark, sf_dir):
-    """IVF fold under the object-store capability profile (forced over
-    local syscalls, with a ``rename`` that raises): ``compact_ivf_index``
-    publishes through the rename-free ``_LISTGEN`` generation protocol,
-    as on every filesystem — survivors land in dot-prefixed
+    """IVF fold and vacuum with no rename: ``compact_ivf_index`` and
+    ``vacuum_ivf_index`` run over a metadata adapter whose ``rename``
+    raises, so the row fails if either makes a ``rename`` call. The fold
+    publishes through the rename-free ``_LISTGEN`` generation protocol
+    it uses on every filesystem — survivors land in dot-prefixed
     ``.gen/g=1/`` dirs and ONE create-if-absent pointer PUT atomically
-    swaps the affected lists and clears the folded tombstones, so an
-    index on an object store is maintained, not only served. The row
-    deletes every ``vec_id % 11 == 3``, asserts
-    the masked (tombstone anti-join) and generation-folded servings are
-    bit-identical, asserts the pointer exists and the serving dirs are
-    generational, runs ``vacuum_ivf_index`` over the superseded
-    pre-fold state, and re-asserts serving — then returns the served
-    top-k, which the oracle recomputes from the surviving corpus under
-    the UNCHANGED frozen quantizer. 100 TB: fold cost is O(affected
-    lists) + one pointer PUT; no reader can ever catch a mid-copy
-    directory because nothing reader-visible is renamed."""
+    swaps the affected lists and clears the folded tombstones. The row
+    deletes every ``vec_id % 11 == 3``, asserts the masked (tombstone
+    anti-join) and generation-folded servings are bit-identical, asserts
+    the pointer exists and the serving dirs are generational, runs
+    ``vacuum_ivf_index`` over the superseded pre-fold state, and
+    re-asserts serving — then returns the served top-k, which the oracle
+    recomputes from the surviving corpus under the UNCHANGED frozen
+    quantizer. 100 TB: fold cost is O(affected lists) + one pointer PUT;
+    no reader can ever catch a mid-copy directory because nothing
+    reader-visible is renamed."""
     from smoltable_spark.functions import ann_index
     from smoltable_spark.functions.ann_index import (
         compact_ivf_index,
@@ -11871,9 +11871,6 @@ def ann_ivf_fold_unsafe(spark, sf_dir):
     from smoltable_spark.sources.store_fs import LocalStoreFS
 
     class _UnsafeFS(LocalStoreFS):
-        scheme = "s3a"  # the probe's verdict for an S3A-hosted index
-        atomic_rename = False
-
         def rename(self, src, dst):  # pragma: no cover — guard
             raise AssertionError(
                 "reader-visible rename during a generation fold"

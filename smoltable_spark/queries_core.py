@@ -1185,11 +1185,11 @@ def wc_minor_compact(spark, sf_dir):
     changes_base = store.read_changes(v1).count()
     changes_fold = store.read_changes(v_minor).count()
     store.vacuum(keep_last=1)
-    # count leg dirs in BOTH name forms (minor legs live under the
-    # dot-prefixed stream-invisible name since round 10)
+    # count leg dirs on disk: root legs, and minor legs under .minor/
     dirs = sum(
         1
-        for d in os.listdir(store.path)
+        for root in (store.path, os.path.join(store.path, store._MINOR_DIR))
+        for d in os.listdir(root)
         if store._dirname_version(d) is not None
     )
     n_cells2, cents2 = observables()

@@ -72,6 +72,27 @@ def cell_order():
 #: backwards-friendly alias used as ``*CELL_ORDER()``
 CELL_ORDER = cell_order
 
+
+# --- placements: where a read's row-key steps run -------------------------
+#
+# A read resolves the chain's newest-wins step, the cell-limit windows and
+# row assembly; each groups by the row key. A placement arranges the cells
+# once so that every one of those steps runs where the placement put them.
+
+
+def by_row_key(cells):
+    """One hash exchange by row_key: it satisfies every row-key step's
+    distribution, so none adds an exchange of its own. The placement of
+    any read that is not bounded by a literal key set."""
+    return cells.repartition("row_key")
+
+
+def one_partition(cells):
+    """One partition, no exchange: the placement of a read bounded by a
+    literal key set (``get_row``, a small ``multi_get``), whose few
+    matching cells are cheaper to resolve in one task than to shuffle."""
+    return cells.coalesce(1)
+
 #: same order as plain column names for sortWithinPartitions at write time
 #: (ts_inv = -ts makes it expressible as all-ascending).
 CELL_SORT_COLUMNS = ["row_key", "family", "qualifier"]

@@ -32,14 +32,19 @@ table at 100 TB):
   MergeReader does across LSM segments
   (smoltable/src/table/merge_reader.rs:4-64): of the copies of a cell
   key (lg, row_key, family, qualifier, ts) the newest leg's wins. The
-  legs are read as one union tagged with their version number, and one
-  window (``_newest_wins``) keeps the highest tag per key — no join, no
-  broadcast, at most one exchange whatever the chain length. A read
-  makes that exchange by row_key, so row assembly, the cell-limit
-  windows and row counts reuse it; a rewrite resolves inside its
-  layout's own range exchange. A single-leg snapshot is read as is.
-  The same step, ordered by batch position, keeps the last write of a
-  coordinate within one commit;
+  legs are read through one parquet relation per leg layout, whose
+  partition discovery yields each row's leg version as the ``v``
+  column, and one window (``_newest_wins``) keeps the highest ``v`` per
+  key — no join, no broadcast, at most one exchange whatever the chain
+  length. The plan is the same for every version and every chain
+  length, so Spark's codegen cache serves every read after the first.
+  The read's placement (``schema.by_row_key`` or
+  ``schema.one_partition``) decides where the step runs: a read makes
+  its exchange by row_key, so row assembly, the cell-limit windows and
+  row counts reuse it; a key-bounded read runs them all in one
+  partition; a rewrite resolves inside its layout's own range exchange.
+  A single-leg snapshot is read as is. The same step, ordered by batch
+  position, keeps the last write of a coordinate within one commit;
 - ``compact()`` folds base+deltas into a new base (``OPTIMIZE`` analog;
   reference levelled compaction, mod.rs:156-165).
 
@@ -59,6 +64,13 @@ authoritative: a version missing from the manifest (trimmed, see
 ``_MANIFEST_KEEP_VERSIONS``) falls back to reading markers. Kind and
 folds are immutable per version number (numbers are never reused), so
 the cache needs no invalidation.
+
+**Leg dirs.** Base and delta legs live at ``<root>/v=<n>/``, minor
+(tiered-compaction) legs at ``<root>/.minor/v=<n>/`` — see
+``_MINOR_DIR``. Either way the path below its relation's ``basePath``
+is ``v=<n>/lg=<g>/``, so both parse to the same ``v`` and ``lg``
+partition columns. A minor leg's ``_FOLDS`` marker sits at the root as
+``_FOLDS-v<n>``, which is how the root listing names it.
 
 **One pointer read + one listing per operation.** Every operation
 (``read``, ``read_changes``, a commit, ``vacuum``, the stats) starts
@@ -89,7 +101,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from smoltable_spark.api import ColumnFamilyDef
-from smoltable_spark.schema import CELL_COLUMNS, CELLS_SCHEMA, cell_order
+from smoltable_spark.schema import CELL_COLUMNS, CELLS_SCHEMA, by_row_key, cell_order
 from smoltable_spark.sources.store_fs import (  # noqa: F401 — re-exported
     ConcurrentCommitError,
     GenerationPointer,
@@ -111,9 +123,10 @@ _MANIFEST_KEEP_VERSIONS = 64
 _DEFAULT_LG = "_default"
 
 #: the newest-wins order a chain read or a commit batch carries until
-#: :func:`_newest_wins` resolves it: a leg's version number, or a cell's
-#: position in its batch
-_SEQ = "__seq"
+#: :func:`_newest_wins` resolves it: in a chain read, the ``v`` partition
+#: column its relations discover from the leg dirs (``v=<n>``); in a
+#: commit batch, a cell's position in the batch. It never reaches disk.
+_SEQ = "v"
 #: a cell's identity: its locality group (which follows from its
 #: family) and the reference's LSM key row:cf:cq:!ts (cell.rs:168-182)
 _CELL_KEY = ["lg", "row_key", "family", "qualifier", "ts"]
@@ -124,8 +137,9 @@ def _newest_wins(df: DataFrame) -> DataFrame:
     with the highest ``_SEQ``, and drop ``_SEQ``; a frame without the
     column is returned as is. One window, no join and no broadcast. It
     adds no exchange when its input is already clustered on part of the
-    cell key (hash by row_key for reads, range by (lg, row_key) for base
-    rewrites); otherwise Spark inserts one exchange on the key."""
+    cell key (hash by row_key or one partition for reads, range by
+    (lg, row_key) for base rewrites); otherwise Spark inserts one
+    exchange on the key."""
     from pyspark.sql.window import Window
 
     if _SEQ not in df.columns:
@@ -138,16 +152,18 @@ def _newest_wins(df: DataFrame) -> DataFrame:
     )
 
 
-def _shadowed(chain: DataFrame) -> DataFrame:
-    """A read's placement of :func:`_newest_wins`: behind an exchange by
-    row_key. That hash partitioning satisfies every row-key consumer
-    downstream (row assembly, the cell-limit and GC windows, distinct
-    row counts), so they resolve shadowing inside the exchange they make
-    anyway, and filters on any cell-key column (lg pruning included)
-    still reach the leg scans."""
+def _shadowed(chain: DataFrame, placement) -> DataFrame:
+    """A read's :func:`_newest_wins`, under ``placement``
+    (``schema.by_row_key`` or ``schema.one_partition``). Either one
+    satisfies every row-key step downstream (row assembly, the
+    cell-limit and GC windows, distinct row counts), so they resolve
+    shadowing where they run anyway, and filters on any cell-key column
+    (lg pruning and key predicates included) still reach the scans. An
+    untagged (single-leg) chain has no step to place and is returned as
+    is."""
     if _SEQ not in chain.columns:
         return chain
-    return _newest_wins(chain.repartition("row_key"))
+    return _newest_wins(placement(chain))
 
 
 class CellStore:
@@ -241,44 +257,58 @@ class CellStore:
                 floor = v
         return {v: kf for v, kf in self._chain_cache.items() if v >= floor}
 
-    #: minor (tiered-compaction) legs live under a DOT-prefixed dir name:
-    #: Spark's file listing skips dot/underscore-prefixed paths, so a
-    #: minor leg is invisible to a flat store's root partition discovery
-    #: (``readStream.parquet(store.path)``) and to the layout stores'
+    #: minor (tiered-compaction) legs live at ``.minor/v=<n>/``. Spark's
+    #: file listing skips dot-prefixed names, so no minor leg reaches a
+    #: flat store's root partition discovery
+    #: (``readStream.parquet(store.path)``) or the layout stores'
     #: ``v=*/lg=*/*.parquet`` delta glob — the streaming CDC source never
-    #: re-consumes re-laid-out cells. Explicit-path reads
-    #: (``_merge_legs``) see the dir fine: the hidden-name filter applies
-    #: to listed CHILDREN, not a given root — so the ``All paths were
-    #: ignored`` WARN Spark logs for such a root is benign. Leg dirs are
-    #: recognised from the one root listing an operation takes
-    #: (``_leg_map``); nothing probes for them.
-    _MINOR_DIR = ".v={n}.minor"
+    #: re-consumes re-laid-out cells. Below ``.minor`` the path is the
+    #: same ``v=<n>/lg=<g>/`` as at the root, so a chain's minor legs
+    #: read as one relation with ``basePath`` ``<root>/.minor`` and the
+    #: same ``v``/``lg`` columns (``_merge_legs``). The root listing
+    #: names each minor leg by its ``_FOLDS-v<n>`` marker (``_leg_map``);
+    #: nothing lists ``.minor`` or probes for a leg.
+    _MINOR_DIR = ".minor"
 
     @staticmethod
     def _dirname_version(name: str) -> int | None:
-        """Version number encoded in a leg dir name (either the plain
-        ``v=<n>`` or the dot-prefixed minor form), else None."""
+        """Version number of a ``v=<n>`` dir name, else None."""
         if name.startswith("v="):
             try:
                 return int(name[2:])
-            except ValueError:
-                return None
-        if name.startswith(".v=") and name.endswith(".minor"):
-            try:
-                return int(name[3:-len(".minor")])
             except ValueError:
                 return None
         return None
 
     @classmethod
     def _leg_map(cls, names: list[str]) -> dict[int, str]:
-        """Version -> leg dir name among a root listing."""
+        """Version -> leg dir (relative to the root) among a root
+        listing: ``v=<n>`` for a root leg, ``.minor/v=<n>`` for each
+        ``_FOLDS-v<n>`` marker. A plain ``v=<n>`` dir wins over a marker
+        of the same version (a minor leg moved out of ``.minor``). A
+        ``.v=<n>.minor`` dir is the older layout's minor leg, which this
+        layout cannot read: rebuild the store."""
         legs: dict[int, str] = {}
+        marker = cls._FOLDS_FILE + "-v"
         for name in names:
+            if name.startswith(".v=") and name.endswith(".minor"):
+                raise IOError(
+                    f"minor leg dir {name} was written by an older layout "
+                    f"(minor legs now live at {cls._MINOR_DIR}/v=<n>): "
+                    "rebuild the store"
+                )
             v = cls._dirname_version(name)
             if v is not None:
                 legs[v] = name
+        for name in names:
+            if name.startswith(marker) and name[len(marker):].isdigit():
+                v = int(name[len(marker):])
+                legs.setdefault(v, os.path.join(cls._MINOR_DIR, f"v={v}"))
         return legs
+
+    def _folds_marker(self, n: int) -> str:
+        """A minor leg's ``_FOLDS`` marker, kept at the root."""
+        return os.path.join(self.path, f"{self._FOLDS_FILE}-v{n}")
 
     def _version_dir(self, n: int) -> str:
         """A version's leg dir as the last listing named it, else the
@@ -312,7 +342,7 @@ class CellStore:
         cached = self._chain_cache.get(n)
         if cached is not None:
             return cached[1]
-        p = os.path.join(self._version_dir(n), self._FOLDS_FILE)
+        p = self._folds_marker(n)
         if not self._fs.exists(p):
             return None
         d = json.loads(self._fs.read_text(p))
@@ -462,7 +492,16 @@ class CellStore:
             df = df.repartitionByRange(
                 num_range_partitions, F.col("lg"), F.col("row_key")
             )
-        return _newest_wins(df).sortWithinPartitions(*cell_order()), ["lg"]
+        return (
+            _newest_wins(df).sortWithinPartitions(*cell_order()),
+            self._leg_partitions(kind),
+        )
+
+    def _leg_partitions(self, kind: str) -> list[str]:
+        """The partition columns ``_layout`` writes a leg of ``kind``
+        under. Legs with the same columns (and the same ``basePath``)
+        read as one relation (``_merge_legs``)."""
+        return ["lg"]
 
     def _leg_schema(self) -> T.StructType:
         """The schema every leg reads back with: the cell columns plus
@@ -556,17 +595,20 @@ class CellStore:
         df: DataFrame,
         kind: str,
         num_range_partitions: int | None = None,
-        markers: dict[str, str] | None = None,
+        folds: tuple[int, int] | None = None,
     ) -> int:
-        """``markers``: extra marker files written into the version dir
-        BEFORE the pointer commit — like ``_KIND``, they must be visible
-        the instant the commit is (a crash in between must never leave a
-        committed leg missing its metadata)."""
+        """``folds``: the (from, through) range a **minor** leg folded,
+        published as its ``_FOLDS-v<n>`` root marker BEFORE the pointer
+        commit — like ``_KIND``, it must be visible the instant the
+        commit is (a crash in between must never leave a committed leg
+        missing its metadata, or the root listing not naming it)."""
         df, part_cols = self._layout(df, kind, num_range_partitions)
         n = self.current_version() + 1
-        # kind picks the dir name at commit time: minor legs get the
-        # dot-prefixed stream-invisible form (see _MINOR_DIR)
-        leg = self._MINOR_DIR.format(n=n) if kind == "minor" else f"v={n}"
+        # kind picks the dir at commit time: minor legs go under the
+        # stream-invisible _MINOR_DIR
+        leg = (
+            os.path.join(self._MINOR_DIR, f"v={n}") if kind == "minor" else f"v={n}"
+        )
         d = os.path.join(self.path, leg)
         w = df.write.mode("overwrite")
         opts = dict(self.WRITE_OPTIONS)
@@ -576,16 +618,14 @@ class CellStore:
             w = w.option(k, v)
         w.partitionBy(*part_cols).parquet(d)
         self._fs.write_text(os.path.join(d, self._KIND_FILE), kind)
-        for name, content in (markers or {}).items():
-            self._fs.write_text(os.path.join(d, name), content)
+        if folds is not None:
+            self._fs.write_text(
+                self._folds_marker(n),
+                json.dumps({"from": folds[0], "through": folds[1]}),
+            )
         # the marker files above are authoritative and already durable;
         # mirror them into the chain cache so the pointer's manifest
         # (written next) lets future opens skip re-reading them
-        folds = None
-        folds_json = (markers or {}).get(self._FOLDS_FILE)
-        if folds_json is not None:
-            fd = json.loads(folds_json)
-            folds = (int(fd["from"]), int(fd["through"]))
         self._chain_cache[n] = (kind, folds)
         self._commit_version(n)  # pointer publish = the commit point
         self._leg_dirs[n] = leg
@@ -674,29 +714,28 @@ class CellStore:
         return self._commit_snapshot(
             self._merge_legs(run).select(*CELL_COLUMNS, "lg", _SEQ),
             kind="minor",
-            markers={
-                self._FOLDS_FILE: json.dumps(
-                    {"from": run[0], "through": run[-1]}
-                )
-            },
+            folds=(run[0], run[-1]),
         )
 
-    def read(self, version: int | None = None) -> DataFrame:
+    def read(self, version: int | None = None, placement=by_row_key) -> DataFrame:
         """Read a snapshot (default: current). Includes the ``lg`` column.
 
         A snapshot = latest base ≤ version, unioned with every leg after
         it, the newest leg's copy of each cell key winning (see
-        ``_merge_legs``). Each leg is its own parquet relation, so
-        predicate pushdown, row-group skipping, and lg partition pruning
-        apply per leg.
+        ``_merge_legs``), resolved under ``placement`` (``_shadowed``):
+        ``schema.one_partition`` for a read the caller bounds by a
+        literal key set, else the row_key exchange. The legs of one
+        layout share one parquet relation, so predicate pushdown,
+        row-group skipping and lg partition pruning apply to all of them
+        in one scan.
         """
         cur = self.current_version()
-        return self._read_listed(cur if version is None else version)
+        return self._read_listed(cur if version is None else version, placement)
 
-    def _read_listed(self, n: int) -> DataFrame:
+    def _read_listed(self, n: int, placement) -> DataFrame:
         """``read(n)`` against the listing the caller's
         ``current_version()`` just took."""
-        return _shadowed(self._chain(n))
+        return _shadowed(self._chain(n), placement)
 
     def _chain(self, n: int) -> DataFrame:
         """Snapshot ``n``'s legs as ``_merge_legs`` unions them, shadowing
@@ -724,24 +763,40 @@ class CellStore:
         return self._merge_legs(legs)
 
     def _merge_legs(self, legs: list[int]) -> DataFrame:
-        """The legs as ONE union, each row tagged ``_SEQ`` with its leg's
-        version number — the input of the one shadowing rule.
+        """The legs as ONE union carrying ``_SEQ`` = each row's leg
+        version — the input of the one shadowing rule.
 
         LSM shadowing: a rewrite of the SAME cell key (lg, row, family,
         qualifier, ts) in a newer leg replaces the older value (the
         reference's LSM key row:cf:cq:!ts overwrites, cell.rs:168-182,
         and its MergeReader lets the newer segment win,
-        merge_reader.rs:4-64). ``_newest_wins`` keeps the highest tag
-        per key; the caller places it after the exchange it makes anyway
-        (``_shadowed`` for reads, ``_layout`` for folds). A single leg
-        holds one copy per key, so it is returned untagged and read as
-        is."""
-        reader = self.spark.read.schema(self._leg_schema())
+        merge_reader.rs:4-64). ``_newest_wins`` keeps the highest
+        version per key; the caller places it (``_shadowed`` for reads,
+        ``_layout`` for folds).
+
+        The legs that share a ``basePath`` (the root, or ``_MINOR_DIR``)
+        and a partition layout (``_leg_partitions``) are read as ONE
+        parquet relation: its partition discovery parses ``v=<n>`` into
+        the ``_SEQ`` column, so no leg adds a literal, a scan or a
+        broadcast of the Hadoop conf, files pack into splits across
+        legs, and the plan is the same whatever the versions and the
+        chain length. A flat store reads its base and delta legs as one
+        relation and its minor legs as at most one more. A single leg
+        holds one copy per key, so it is read from its own dir, untagged,
+        as is."""
         if len(legs) == 1:
-            return reader.parquet(self._version_dir(legs[0]))
+            return self.spark.read.schema(self._leg_schema()).parquet(
+                self._version_dir(legs[0])
+            )
+        groups: dict[tuple[str, tuple[str, ...]], list[str]] = {}
+        for v in legs:
+            d = self._version_dir(v)
+            layout = tuple(self._leg_partitions(self._kind(v)))
+            groups.setdefault((os.path.dirname(d), layout), []).append(d)
+        schema = self._leg_schema().add(_SEQ, T.IntegerType())
         dfs = [
-            reader.parquet(self._version_dir(v)).withColumn(_SEQ, F.lit(v))
-            for v in legs
+            self.spark.read.schema(schema).option("basePath", base).parquet(*dirs)
+            for (base, _layout), dirs in groups.items()
         ]
         return functools.reduce(DataFrame.unionByName, dfs)
 
@@ -768,7 +823,7 @@ class CellStore:
             raise ValueError(f"since_version {since_version} > to_version {to}")
         legs = list(range(since_version + 1, to + 1))
         if not legs:
-            return self._read_listed(to).limit(0)
+            return self._read_listed(to, by_row_key).limit(0)
         rewrites = [
             v
             for v in legs
@@ -831,16 +886,19 @@ class CellStore:
                 f"{missing}; vacuumed or corrupt"
             )
         if not effective:
-            return self._read_listed(to).limit(0)
-        return _shadowed(self._merge_legs(effective))
+            return self._read_listed(to, by_row_key).limit(0)
+        return _shadowed(self._merge_legs(effective), by_row_key)
 
-    def read_for_filter(self, column_filter=None, version: int | None = None) -> DataFrame:
+    def read_for_filter(
+        self, column_filter=None, version: int | None = None, placement=by_row_key
+    ) -> DataFrame:
         """Partition-pruned read: only the locality groups a column filter
         touches (S5 parity — get_affected_locality_groups,
-        reference smoltable/src/table/row_reader.rs:6-69)."""
+        reference smoltable/src/table/row_reader.rs:6-69). ``placement``:
+        see ``read``."""
         from smoltable_spark.operators.filters import affected_locality_groups
 
-        df = self.read(version)
+        df = self.read(version, placement)
         groups = affected_locality_groups(column_filter, self.family_to_lg())
         if groups is not None:
             phys = [g if g != "" else _DEFAULT_LG for g in groups]
@@ -872,11 +930,13 @@ class CellStore:
         needed: set[int] = set()
         for v in range(oldest_kept, cur + 1):
             needed.update(self._legs_of(v))
-        for name in self._listing:
-            n = self._dirname_version(name)
-            if n is not None and n <= cur and n not in needed:
-                self._fs.rmtree(os.path.join(self.path, name))
-                self._leg_dirs.pop(n, None)
+        for n, leg in list(self._leg_dirs.items()):
+            if n <= cur and n not in needed:
+                self._fs.rmtree(os.path.join(self.path, leg))
+                marker = self._folds_marker(n)
+                if os.path.basename(marker) in self._listing:
+                    self._fs.remove(marker)
+                del self._leg_dirs[n]
         # pointer generations below the retention cutoff — never the
         # max, and a reader that listed before this sweep re-lists
         self._pointer.sweep(oldest_kept, self._listing)

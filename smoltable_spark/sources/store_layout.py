@@ -88,7 +88,12 @@ class ZorderCellStore(CellStore):
             .repartition(F.col("lg"), F.col("zb"))
             .sortWithinPartitions(*cell_order())
         )
-        return df, ["lg", "zb"]
+        return df, self._leg_partitions(kind)
+
+    def _leg_partitions(self, kind: str) -> list[str]:
+        # base legs nest zb= under lg=, so a chain reads them as a
+        # relation of their own, apart from the lg-only deltas
+        return ["lg", "zb"] if kind == "base" else ["lg"]
 
     def _leg_schema(self) -> T.StructType:
         # zb: a partition column of base legs, a data column of the rest

@@ -22,11 +22,12 @@ the streamed interval. A base rewrite (``write()`` / ``compact()``)
 physically rewrites every cell, so "what changed" is no longer derivable
 from new files alone; ``StoreChangeRollup`` detects base legs in the
 stream and raises the same resync error instead of silently
-double-counting. MINOR (tiered) compaction is benign since round 10:
-its legs commit under a dot-prefixed dir name that Spark's file listing
-skips, so the source keeps consuming the original delta legs and the
-fold never enters the stream — live CDC and steady-state tiered
-compaction coexist, as the reference's LSM runs minor compactions
+double-counting. MINOR (tiered) compaction is benign: its legs commit
+under ``<root>/.minor/v=<n>/``, and Spark's file listing skips the
+dot-prefixed ``.minor`` (its ``_FOLDS-v<n>`` root markers are
+underscore-prefixed, skipped too), so the source keeps consuming the
+original delta legs and the fold never enters the stream — live CDC and
+steady-state tiered compaction coexist, as the reference's LSM runs minor compactions
 continuously under live readers (smoltable/src/table/mod.rs:156-165).
 Resync is still required if the fold's originals are vacuumed under the
 stream (consumption unprovable) — size retention to cover consumer lag.
@@ -264,14 +265,14 @@ class StoreChangeRollup:
         is why ``stream_store_rollup`` ALSO runs this check at wiring
         time.
 
-        Minor (tiered) legs are BENIGN re-layouts since round 10
-        (VERDICT r9 ask #1): they commit under the dot-prefixed
-        stream-invisible dir name (``CellStore._MINOR_DIR``), so the
-        file source keeps consuming the ORIGINAL delta legs and never
-        sees the fold — exactly how batch ``read_changes`` skips a
-        fold of already-consumed changes. Two minor cases still force a
-        resync: a legacy plain-named minor dir (its files ARE visible
-        to the source → double count), and a fold whose post-horizon
+        A minor (tiered) leg is a BENIGN re-layout exactly when it lives
+        under ``.minor/`` (``CellStore._MINOR_DIR``), which the file
+        source never lists: the source keeps consuming the ORIGINAL
+        delta legs and never sees the fold — exactly how batch
+        ``read_changes`` skips a fold of already-consumed changes. Two
+        minor cases still force a resync: a plain-named minor dir at the
+        root (its files ARE visible to the source → double count), and
+        a fold whose post-horizon
         originals were vacuumed (the conservative stream horizon is
         ``start_version`` — consumption of the vanished files cannot be
         proven, the batch path's exact straddle rule). Operationally:
@@ -284,6 +285,8 @@ class StoreChangeRollup:
         which leg dirs exist, and under which name, comes from the one
         root listing ``current_version()`` takes (the store's leg-dir
         map), not from a probe per leg."""
+        from smoltable_spark.sources.store import CellStore
+
         if self.store is None:
             return []
         cur = self.store.current_version()
@@ -296,9 +299,9 @@ class StoreChangeRollup:
             if k == "base":
                 self._base_rewrites.add(v)
             elif k == "minor":
-                if not legs[v].startswith("."):
-                    # legacy plain-named minor: structurally visible to
-                    # the file source — permanent double-count hazard
+                if os.path.dirname(legs[v]) != CellStore._MINOR_DIR:
+                    # plain-named minor at the root: structurally visible
+                    # to the file source — permanent double-count hazard
                     self._base_rewrites.add(v)
                 else:
                     self._minor_folds[v] = self.store._folds_of(v)
@@ -337,9 +340,9 @@ class StoreChangeRollup:
         vs = [
             r["v"] for r in batch_df.select("v").distinct().collect()
         ]  # bounded: one scalar per commit in this trigger
-        # in-stream file check: dot-named minor legs can never appear
-        # here (structurally invisible to the source); a "minor" kind in
-        # the stream therefore means a legacy plain-named fold whose
+        # in-stream file check: legs under .minor/ can never appear here
+        # (structurally invisible to the source); a "minor" kind in the
+        # stream therefore means a plain-named fold at the root whose
         # files WOULD double-count — same resync as a base rewrite
         rewrites = sorted(
             set(chain_rewrites)

@@ -11,6 +11,11 @@ no join and no broadcast.
   as on a one-leg store; a major fold and a GC rewrite shuffle the
   snapshot once per exchange they already make; a family-filtered read
   still prunes locality-group partitions of every leg.
+- A chain reads through one relation per leg layout, ordered by its
+  ``v`` partition column: one FileScan for base and delta legs whatever
+  the chain length (at most one more for minor legs), the same plan for
+  every version, so a commit between two rounds of reads compiles no new
+  class; ``get_row`` and a small ``multi_get`` plan no exchange.
 """
 
 from __future__ import annotations
@@ -250,7 +255,90 @@ def test_fold_and_gc_rewrites_shuffle_once_per_exchange(spark, tmp_path, monkeyp
 
 
 def test_family_filtered_chain_read_prunes_every_leg(chain4):
+    """The chain's legs share one relation, and its lg partition filter
+    prunes every one of them: the pruned scans read all four leg dirs."""
     df = chain4.store.read_for_filter(ColumnFilter.key("m:y"))
-    pruned = [f for f in plans.partition_filters(df) if re.search(r"lg#\d+ = lm\)", f)]
-    assert len(pruned) == len(LEGS), plans.physical_plan(df)
+    scans = [ln for ln in plans.physical_plan(df).splitlines() if "FileScan " in ln]
+    pruned_legs = sum(
+        int(re.search(r"InMemoryFileIndex\((\d+) paths\)", ln).group(1))
+        for ln in scans
+        if re.search(r"PartitionFilters: \[[^\]]*lg#\d+ = lm\)", ln)
+    )
+    assert pruned_legs == len(LEGS), plans.physical_plan(df)
     assert {r["family"] for r in df.collect()} == {"m"}
+
+
+# ---------------------------------------------------------------------------
+# one relation per leg layout, one stage per key-bounded read
+
+
+def _plan_shape(df) -> str:
+    """The physical plan without expression ids, plan ids and the file
+    index's paths."""
+    plan = plans.physical_plan(df)
+    plan = re.sub(r"InMemoryFileIndex\(\d+ paths\)\[[^\]]*\]", "InMemoryFileIndex", plan)
+    return re.sub(r"#\d+L?|plan_id=\d+", "", plan)
+
+
+def test_chain_read_is_one_file_scan_whatever_its_length(spark, tmp_path):
+    """Base and delta legs read as one relation: a 2-leg and a 4-leg
+    chain plan one FileScan each, with the same plan apart from paths.
+    Minor legs add at most one more relation."""
+    t2 = _table(spark, str(tmp_path / "t2"), LEGS[:2])
+    t4 = _table(spark, str(tmp_path / "t4"), LEGS)
+    r2, r4 = t2.store.read(), t4.store.read()
+    assert plans.file_scan_count(r2) == plans.file_scan_count(r4) == 1
+    assert _plan_shape(r2) == _plan_shape(r4)
+    # two stacked minors between the base and a trailing delta
+    t = _table(spark, str(tmp_path / "tm"), LEGS[:3])
+    t.store.minor_compact()
+    for batch in LEGS[1:3]:
+        t.store.append(_cells(spark, batch))
+    t.store.minor_compact()
+    t.store.append(_cells(spark, LEGS[3]))
+    kinds = [t.store._kind(v) for v in t.store._legs_of(t.store.current_version())]
+    assert kinds == ["base", "minor", "minor", "delta"]
+    df = t.store.read()
+    assert plans.file_scan_count(df) == 2, plans.physical_plan(df)
+    assert _cell_map(df) == _cell_map(t4.store.read())
+
+
+def _point_reads(t: Smoltable) -> dict:
+    return {
+        "get_row": t.get_row(QueryRowInput("r1")),
+        "multi_get": t.multi_get([QueryRowInput(f"r{i}") for i in range(32)]),
+    }
+
+
+@pytest.mark.parametrize("op", ["get_row", "multi_get"])
+def test_key_bounded_reads_plan_no_exchange(chain4, flat1, op):
+    """``get_row`` and a 32-key ``multi_get`` run newest-wins, the
+    cell-limit windows and row assembly in one partition: no exchange on
+    a one-leg store or on a 4-leg chain, and the same rows from both."""
+    chained, flat = _point_reads(chain4)[op], _point_reads(flat1)[op]
+    assert _exchanges(chained) == 0, plans.physical_plan(chained)
+    assert _exchanges(flat) == 0, plans.physical_plan(flat)
+    assert _row_map(chained.collect()) == _row_map(flat.collect())
+
+
+def test_new_leg_compiles_no_new_class(spark, tmp_path):
+    """A read's plan does not change with the version or the chain
+    length, so after one warm-up a commit and the same reads again hit
+    Spark's codegen cache: zero new Janino compilations."""
+    t = _table(spark, str(tmp_path / "t"), LEGS[:2])
+
+    def reads():
+        t.get_row(QueryRowInput("r1")).collect()
+        t.scan_count(CountInput(prefix="r")).collect()
+
+    def write(val: str):
+        t.write([{"row_key": "r2", "cells": [
+            {"column_key": "o:x", "value": {"string": val}, "timestamp": 1}]}])
+
+    write("w1")
+    reads()
+    before = plans.codegen_compile_count(spark)
+    write("w2")
+    reads()
+    assert plans.codegen_compile_count(spark) - before == 0
+    assert _row_map(t.get_row(QueryRowInput("r2")).collect())[("r2", "o", "x", 1)] == "w2"

@@ -63,9 +63,9 @@ def test_full_lifecycle_on_file_uri(spark, tmp_path, mkuri):
     assert store._kind(1) == "base" and store._kind(3) == "delta"
     snap = _snapshot(store)
     assert ("b", 2, "w1") in snap and len(snap) == 4
-    # tiered fold commits the dot-named minor leg through the FS API
+    # tiered fold commits the minor leg under .minor/ through the FS API
     m = store.minor_compact()
-    assert os.path.basename(store._version_dir(m)) == f".v={m}.minor"
+    assert store._version_dir(m) == store.path + f"/.minor/v={m}"
     assert store._folds_of(m) == (2, 3)
     assert _snapshot(store) == snap
     # O(changes) feed across the fold

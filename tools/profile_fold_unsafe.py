@@ -32,9 +32,6 @@ def main() -> None:
     from smoltable_spark.queries_util import scratch_dir
 
     class _UnsafeFS(LocalStoreFS):
-        scheme = "s3a"
-        atomic_rename = False
-
         def rename(self, src, dst):  # pragma: no cover
             raise AssertionError("reader-visible rename during a fold")
 
