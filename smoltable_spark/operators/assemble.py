@@ -15,7 +15,7 @@ Spark shape:
 
 Built entirely from groupBy + collect_list + map_from_entries, all
 JVM-side, under the caller's placement: one shuffle by row_key, or none
-for a read bounded by a literal key set.
+for cells a key-bounded read gathered in one partition.
 """
 
 from __future__ import annotations
@@ -27,19 +27,20 @@ from smoltable_spark.schema import VALUE_COLUMNS
 
 def assemble_rows(cells: DataFrame, placement, descending: bool = False) -> DataFrame:
     """Nest flat cells into rows; output ordered by row_key.
-    ``placement``: ``schema.by_row_key`` or ``schema.one_partition``."""
+    ``placement``: ``schema.by_row_key``, or ``schema.one_partition``
+    for cells already in one partition (``CellStore._read_gathered``)."""
     cell_struct = F.struct(
         F.col("ts").alias("time"),
         F.col("vtype"),
         *[F.col(c) for c in VALUE_COLUMNS],
     )
-    # ONE placement for all three nesting levels and the final sort:
-    # hash-partitioning by row_key satisfies the ClusteredDistribution
-    # of every groupBy below (each groups by a superset of {row_key}),
-    # so Catalyst inserts no further shuffles — without it the pipeline
-    # exchanged 3 times (by (row,fam,qual), (row,fam), (row)), tripling
-    # shuffle bytes of the user-facing nested scan at scale. One
-    # partition satisfies every distribution, the sort's included.
+    # ONE exchange for all three nesting levels: hash-partitioning by
+    # row_key satisfies the ClusteredDistribution of every groupBy below
+    # (each groups by a superset of {row_key}), so Catalyst inserts no
+    # further shuffles — without it the pipeline exchanged 3 times
+    # (by (row,fam,qual), (row,fam), (row)), tripling shuffle bytes of
+    # the user-facing nested scan at scale. One partition satisfies
+    # every distribution, the final sort's included.
     cells = placement(cells)
     # per (row, family, qualifier): version list, newest first.
     # sort_array on struct sorts by first field (time) asc → reverse.

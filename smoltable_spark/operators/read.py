@@ -9,11 +9,6 @@ non-matching row group — the DataFrame equivalent of the reference's LSM
 prefix seek (row_reader.rs:122-126). ``multi_get`` uses ``isin`` for small
 key lists (compiled to an In-filter, pushed down) or a broadcast semi-join
 for large ones, instead of the reference's per-row loop.
-
-A read bounded by a literal key set — ``get_row``, and ``multi_get`` of
-up to ``_ISIN_THRESHOLD`` keys — runs its cell-limit windows and row
-assembly in one partition (``schema.one_partition``): one stage, no
-exchange. A larger ``multi_get`` keeps the row_key exchange.
 """
 
 from __future__ import annotations
@@ -24,7 +19,6 @@ from smoltable_spark.api import QueryRowInput, ScanInput
 from smoltable_spark.operators.filters import column_filter_expr
 from smoltable_spark.operators.scan import _apply_cell_limits
 from smoltable_spark.operators.assemble import assemble_rows
-from smoltable_spark.schema import by_row_key, one_partition
 
 #: above this many keys, use a join instead of an In-filter
 _ISIN_THRESHOLD = 256
@@ -37,7 +31,7 @@ def get_row_cells(cells: DataFrame, inp: QueryRowInput) -> DataFrame:
     limit first, then the whole-row cell budget counted in
     (family, qualifier, ts-desc) order.
     """
-    out = one_partition(cells.filter(F.col("row_key") == F.lit(inp.row_key)))
+    out = cells.filter(F.col("row_key") == F.lit(inp.row_key))
     if inp.column_filter is not None:
         out = out.filter(column_filter_expr(inp.column_filter))
     scan_like = ScanInput(
@@ -46,9 +40,10 @@ def get_row_cells(cells: DataFrame, inp: QueryRowInput) -> DataFrame:
     return _apply_cell_limits(out, scan_like)
 
 
-def get_row(cells: DataFrame, inp: QueryRowInput) -> DataFrame:
-    """Nested single-row result (empty DataFrame when the row is absent)."""
-    return assemble_rows(get_row_cells(cells, inp), one_partition)
+def get_row(cells: DataFrame, inp: QueryRowInput, placement) -> DataFrame:
+    """Nested single-row result (empty DataFrame when the row is absent),
+    assembled under ``placement`` (see ``assemble_rows``)."""
+    return assemble_rows(get_row_cells(cells, inp), placement)
 
 
 def multi_get_cells(cells: DataFrame, inputs: list[QueryRowInput]) -> DataFrame:
@@ -70,7 +65,7 @@ def multi_get_cells(cells: DataFrame, inputs: list[QueryRowInput]) -> DataFrame:
     if same_opts:
         keys = [i.row_key for i in inputs]
         if len(keys) <= _ISIN_THRESHOLD:
-            out = one_partition(cells.filter(F.col("row_key").isin(keys)))
+            out = cells.filter(F.col("row_key").isin(keys))
         else:
             spark = cells.sparkSession
             keys_df = spark.createDataFrame([(k,) for k in keys], "row_key STRING")
@@ -90,11 +85,7 @@ def multi_get_cells(cells: DataFrame, inputs: list[QueryRowInput]) -> DataFrame:
     return out
 
 
-def multi_get(cells: DataFrame, inputs: list[QueryRowInput]) -> DataFrame:
-    """Nested rows for a batch of point reads, ordered by row key."""
-    return assemble_rows(multi_get_cells(cells, inputs), key_placement(len(inputs)))
-
-
-def key_placement(n_keys: int):
-    """Placement of a read bounded by ``n_keys`` literal keys."""
-    return one_partition if n_keys <= _ISIN_THRESHOLD else by_row_key
+def multi_get(cells: DataFrame, inputs: list[QueryRowInput], placement) -> DataFrame:
+    """Nested rows for a batch of point reads, ordered by row key,
+    assembled under ``placement`` (see ``assemble_rows``)."""
+    return assemble_rows(multi_get_cells(cells, inputs), placement)

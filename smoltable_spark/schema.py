@@ -82,15 +82,17 @@ CELL_ORDER = cell_order
 
 def by_row_key(cells):
     """One hash exchange by row_key: it satisfies every row-key step's
-    distribution, so none adds an exchange of its own. The placement of
-    any read that is not bounded by a literal key set."""
+    distribution, so none adds an exchange of its own. A store read is
+    already placed this way (its newest-wins step runs behind it), and
+    Spark then drops a second one as redundant."""
     return cells.repartition("row_key")
 
 
 def one_partition(cells):
-    """One partition, no exchange: the placement of a read bounded by a
-    literal key set (``get_row``, a small ``multi_get``), whose few
-    matching cells are cheaper to resolve in one task than to shuffle."""
+    """One partition, no exchange: it satisfies every distribution, a
+    global sort's included. The placement of a read bounded by a literal
+    key set, whose few matching cells are cheaper to resolve in one task
+    than to shuffle (``CellStore._read_gathered``)."""
     return cells.coalesce(1)
 
 #: same order as plain column names for sortWithinPartitions at write time

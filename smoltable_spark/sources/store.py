@@ -38,11 +38,11 @@ table at 100 TB):
   key — no join, no broadcast, at most one exchange whatever the chain
   length. The plan is the same for every version and every chain
   length, so Spark's codegen cache serves every read after the first.
-  The read's placement (``schema.by_row_key`` or
-  ``schema.one_partition``) decides where the step runs: a read makes
-  its exchange by row_key, so row assembly, the cell-limit windows and
-  row counts reuse it; a key-bounded read runs them all in one
-  partition; a rewrite resolves inside its layout's own range exchange.
+  A read resolves the step behind its exchange by row_key, which row
+  assembly, the cell-limit windows and row counts reuse; a read bounded
+  by a literal key set resolves it in one partition
+  (``_read_gathered``); a rewrite resolves it inside its layout's own
+  range exchange.
   A single-leg snapshot is read as is. The same step, ordered by batch
   position, keeps the last write of a coordinate within one commit;
 - ``compact()`` folds base+deltas into a new base (``OPTIMIZE`` analog;
@@ -101,7 +101,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from smoltable_spark.api import ColumnFamilyDef
-from smoltable_spark.schema import CELL_COLUMNS, CELLS_SCHEMA, by_row_key, cell_order
+from smoltable_spark.schema import (
+    CELL_COLUMNS,
+    CELLS_SCHEMA,
+    by_row_key,
+    cell_order,
+    one_partition,
+)
 from smoltable_spark.sources.store_fs import (  # noqa: F401 — re-exported
     ConcurrentCommitError,
     GenerationPointer,
@@ -152,18 +158,18 @@ def _newest_wins(df: DataFrame) -> DataFrame:
     )
 
 
-def _shadowed(chain: DataFrame, placement) -> DataFrame:
-    """A read's :func:`_newest_wins`, under ``placement``
-    (``schema.by_row_key`` or ``schema.one_partition``). Either one
-    satisfies every row-key step downstream (row assembly, the
-    cell-limit and GC windows, distinct row counts), so they resolve
-    shadowing where they run anyway, and filters on any cell-key column
+def _shadowed(chain: DataFrame) -> DataFrame:
+    """A read's placement of :func:`_newest_wins`: behind an exchange by
+    row_key (``schema.by_row_key``). That hash partitioning satisfies
+    every row-key consumer downstream (row assembly, the cell-limit and
+    GC windows, distinct row counts), so they resolve shadowing inside
+    the exchange they make anyway, and filters on any cell-key column
     (lg pruning and key predicates included) still reach the scans. An
     untagged (single-leg) chain has no step to place and is returned as
     is."""
     if _SEQ not in chain.columns:
         return chain
-    return _newest_wins(placement(chain))
+    return _newest_wins(by_row_key(chain))
 
 
 class CellStore:
@@ -281,15 +287,20 @@ class CellStore:
         return None
 
     @classmethod
-    def _leg_map(cls, names: list[str]) -> dict[int, str]:
-        """Version -> leg dir (relative to the root) among a root
-        listing: ``v=<n>`` for a root leg, ``.minor/v=<n>`` for each
-        ``_FOLDS-v<n>`` marker. A plain ``v=<n>`` dir wins over a marker
-        of the same version (a minor leg moved out of ``.minor``). A
-        ``.v=<n>.minor`` dir is the older layout's minor leg, which this
-        layout cannot read: rebuild the store."""
-        legs: dict[int, str] = {}
+    def _minor_leg(cls, n: int) -> str:
+        """A minor leg's dir, relative to the root."""
+        return os.path.join(cls._MINOR_DIR, f"v={n}")
+
+    @classmethod
+    def _listed_legs(cls, names: list[str]) -> list[tuple[int, str]]:
+        """Every (version, leg dir relative to the root) a root listing
+        names: ``v=<n>`` for each root leg, then ``.minor/v=<n>`` for
+        each ``_FOLDS-v<n>`` marker. A ``.v=<n>.minor`` dir is the older
+        layout's minor leg, which this layout cannot read: rebuild the
+        store."""
         marker = cls._FOLDS_FILE + "-v"
+        root: list[tuple[int, str]] = []
+        minor: list[tuple[int, str]] = []
         for name in names:
             if name.startswith(".v=") and name.endswith(".minor"):
                 raise IOError(
@@ -299,12 +310,30 @@ class CellStore:
                 )
             v = cls._dirname_version(name)
             if v is not None:
-                legs[v] = name
-        for name in names:
-            if name.startswith(marker) and name[len(marker):].isdigit():
+                root.append((v, name))
+            elif name.startswith(marker) and name[len(marker):].isdigit():
                 v = int(name[len(marker):])
-                legs.setdefault(v, os.path.join(cls._MINOR_DIR, f"v={v}"))
+                minor.append((v, cls._minor_leg(v)))
+        return root + minor
+
+    @classmethod
+    def _leg_map(cls, names: list[str]) -> dict[int, str]:
+        """Version -> leg dir among a root listing (``_listed_legs``). A
+        version listed twice had a commit lose the race for it after
+        writing its data: the root dir wins, and ``vacuum`` removes the
+        other."""
+        legs: dict[int, str] = {}
+        for v, leg in cls._listed_legs(names):
+            legs.setdefault(v, leg)
         return legs
+
+    def _remove_leg(self, n: int, leg: str) -> None:
+        """Remove a listed leg dir, and a minor leg's root marker."""
+        self._fs.rmtree(os.path.join(self.path, leg))
+        if leg == self._minor_leg(n):
+            self._fs.remove(self._folds_marker(n))
+        if self._leg_dirs.get(n) == leg:
+            del self._leg_dirs[n]
 
     def _folds_marker(self, n: int) -> str:
         """A minor leg's ``_FOLDS`` marker, kept at the root."""
@@ -598,17 +627,27 @@ class CellStore:
         folds: tuple[int, int] | None = None,
     ) -> int:
         """``folds``: the (from, through) range a **minor** leg folded,
-        published as its ``_FOLDS-v<n>`` root marker BEFORE the pointer
-        commit — like ``_KIND``, it must be visible the instant the
-        commit is (a crash in between must never leave a committed leg
-        missing its metadata, or the root listing not naming it)."""
+        published as its ``_FOLDS-v<n>`` root marker BEFORE the leg's
+        data — like ``_KIND``, it must be visible the instant the commit
+        is (a crash in between must never leave a committed leg missing
+        its metadata), and every ``.minor`` dir, a failed commit's too,
+        must have a name in the root listing."""
         df, part_cols = self._layout(df, kind, num_range_partitions)
         n = self.current_version() + 1
         # kind picks the dir at commit time: minor legs go under the
         # stream-invisible _MINOR_DIR
-        leg = (
-            os.path.join(self._MINOR_DIR, f"v={n}") if kind == "minor" else f"v={n}"
-        )
+        leg = self._minor_leg(n) if kind == "minor" else f"v={n}"
+        # n is above the pointer, so a dir the listing names for it in
+        # the other layout is a failed commit's: clear it, or it would
+        # shadow this leg (a root dir wins) or outlive it
+        for v, stale in self._listed_legs(self._listing):
+            if v == n and stale != leg:
+                self._remove_leg(v, stale)
+        if folds is not None:
+            self._fs.write_text(
+                self._folds_marker(n),
+                json.dumps({"from": folds[0], "through": folds[1]}),
+            )
         d = os.path.join(self.path, leg)
         w = df.write.mode("overwrite")
         opts = dict(self.WRITE_OPTIONS)
@@ -618,11 +657,6 @@ class CellStore:
             w = w.option(k, v)
         w.partitionBy(*part_cols).parquet(d)
         self._fs.write_text(os.path.join(d, self._KIND_FILE), kind)
-        if folds is not None:
-            self._fs.write_text(
-                self._folds_marker(n),
-                json.dumps({"from": folds[0], "through": folds[1]}),
-            )
         # the marker files above are authoritative and already durable;
         # mirror them into the chain cache so the pointer's manifest
         # (written next) lets future opens skip re-reading them
@@ -717,25 +751,23 @@ class CellStore:
             folds=(run[0], run[-1]),
         )
 
-    def read(self, version: int | None = None, placement=by_row_key) -> DataFrame:
+    def read(self, version: int | None = None) -> DataFrame:
         """Read a snapshot (default: current). Includes the ``lg`` column.
 
         A snapshot = latest base ≤ version, unioned with every leg after
         it, the newest leg's copy of each cell key winning (see
-        ``_merge_legs``), resolved under ``placement`` (``_shadowed``):
-        ``schema.one_partition`` for a read the caller bounds by a
-        literal key set, else the row_key exchange. The legs of one
-        layout share one parquet relation, so predicate pushdown,
-        row-group skipping and lg partition pruning apply to all of them
-        in one scan.
+        ``_merge_legs``), resolved behind the row_key exchange
+        (``_shadowed``). The legs of one layout share one parquet
+        relation, so predicate pushdown, row-group skipping and lg
+        partition pruning apply to all of them in one scan.
         """
         cur = self.current_version()
-        return self._read_listed(cur if version is None else version, placement)
+        return self._read_listed(cur if version is None else version)
 
-    def _read_listed(self, n: int, placement) -> DataFrame:
+    def _read_listed(self, n: int) -> DataFrame:
         """``read(n)`` against the listing the caller's
         ``current_version()`` just took."""
-        return _shadowed(self._chain(n), placement)
+        return _shadowed(self._chain(n))
 
     def _chain(self, n: int) -> DataFrame:
         """Snapshot ``n``'s legs as ``_merge_legs`` unions them, shadowing
@@ -823,7 +855,7 @@ class CellStore:
             raise ValueError(f"since_version {since_version} > to_version {to}")
         legs = list(range(since_version + 1, to + 1))
         if not legs:
-            return self._read_listed(to, by_row_key).limit(0)
+            return self._read_listed(to).limit(0)
         rewrites = [
             v
             for v in legs
@@ -886,24 +918,40 @@ class CellStore:
                 f"{missing}; vacuumed or corrupt"
             )
         if not effective:
-            return self._read_listed(to, by_row_key).limit(0)
-        return _shadowed(self._merge_legs(effective), by_row_key)
+            return self._read_listed(to).limit(0)
+        return _shadowed(self._merge_legs(effective))
 
-    def read_for_filter(
-        self, column_filter=None, version: int | None = None, placement=by_row_key
-    ) -> DataFrame:
+    def read_for_filter(self, column_filter=None, version: int | None = None) -> DataFrame:
         """Partition-pruned read: only the locality groups a column filter
         touches (S5 parity — get_affected_locality_groups,
-        reference smoltable/src/table/row_reader.rs:6-69). ``placement``:
-        see ``read``."""
+        reference smoltable/src/table/row_reader.rs:6-69)."""
+        return self._lg_pruned(self.read(version), column_filter)
+
+    def _lg_pruned(self, df: DataFrame, column_filter) -> DataFrame:
         from smoltable_spark.operators.filters import affected_locality_groups
 
-        df = self.read(version, placement)
         groups = affected_locality_groups(column_filter, self.family_to_lg())
         if groups is not None:
             phys = [g if g != "" else _DEFAULT_LG for g in groups]
             df = df.filter(F.col("lg").isin(phys))
         return df
+
+    def _read_gathered(self, column_filter) -> DataFrame:
+        """The current snapshot as ``read_for_filter`` prunes it, in ONE
+        partition with shadowing resolved: the input of a read bounded
+        by a literal key set, whose few matching cells (the key filter
+        reaches the scan) are then limited, assembled and ordered in that
+        partition. A chain whose files Spark's own split sizing would
+        open in one task (files × ``openCostInBytes`` ≤
+        ``maxPartitionBytes``: 32 files at the defaults) is scanned by
+        that task, with no exchange. A larger one is scanned in parallel
+        and gathered behind the row_key exchange, so its files are not
+        opened one after another."""
+        chain = self._lg_pruned(self._chain(self.current_version()), column_filter)
+        conf = self.spark._jsparkSession.sessionState().conf()
+        if len(chain.inputFiles()) * conf.filesOpenCostInBytes() > conf.filesMaxPartitionBytes():
+            chain = by_row_key(chain)
+        return _newest_wins(one_partition(chain))
 
     def read_or_none(self, version: int | None = None) -> DataFrame | None:
         try:
@@ -930,13 +978,14 @@ class CellStore:
         needed: set[int] = set()
         for v in range(oldest_kept, cur + 1):
             needed.update(self._legs_of(v))
-        for n, leg in list(self._leg_dirs.items()):
-            if n <= cur and n not in needed:
-                self._fs.rmtree(os.path.join(self.path, leg))
-                marker = self._folds_marker(n)
-                if os.path.basename(marker) in self._listing:
-                    self._fs.remove(marker)
-                del self._leg_dirs[n]
+        # every other listed dir at or below the pointer goes: a
+        # superseded leg, or what a commit that lost the race for a
+        # version left beside the leg that won it. Dirs above the pointer
+        # are a failed commit's, which the next commit of that version
+        # overwrites or clears (``_commit_snapshot``).
+        for n, leg in self._listed_legs(self._listing):
+            if n <= cur and not (n in needed and self._leg_dirs.get(n) == leg):
+                self._remove_leg(n, leg)
         # pointer generations below the retention cutoff — never the
         # max, and a reader that listed before this sweep re-lists
         self._pointer.sweep(oldest_kept, self._listing)

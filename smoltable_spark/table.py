@@ -45,9 +45,9 @@ from smoltable_spark.operators.count import approximate_row_count
 from smoltable_spark.operators.delete import delete_row as _delete_row_op
 from smoltable_spark.operators.delete import deleted_cell_count
 from smoltable_spark.operators.read import (
+    _ISIN_THRESHOLD,
     get_row as _get_row_op,
     get_row_cells as _get_row_cells_op,
-    key_placement,
     multi_get as _multi_get_op,
 )
 from smoltable_spark.operators.scan import scan_rows
@@ -92,45 +92,50 @@ class Smoltable:
 
     # -- queries -----------------------------------------------------------
 
-    def _cells(self, column_filter: ColumnFilter | None, placement) -> DataFrame:
-        """The current snapshot's cells, the chain's newest-wins step run
-        under ``placement``: ``one_partition`` for reads bounded by a
-        literal key set, ``by_row_key`` for the rest."""
-        return self.store.read_for_filter(column_filter, placement=placement).drop("lg")
+    def _cells(self, column_filter: ColumnFilter | None = None) -> DataFrame:
+        return self.store.read_for_filter(column_filter).drop("lg")
+
+    def _gathered(self, column_filter: ColumnFilter | None) -> DataFrame:
+        """The cells of a read bounded by a literal key set, in one
+        partition (``CellStore._read_gathered``), where its cell limits
+        and row assembly run too."""
+        return self.store._read_gathered(column_filter).drop("lg")
 
     def scan(self, inp: ScanInput, observation=None) -> DataFrame:
         """Nested rows (reference Smoltable::scan, mod.rs:630-801)."""
-        return scan_rows(self._cells(inp.column_filter, by_row_key), inp, observation)
+        return scan_rows(self._cells(inp.column_filter), inp, observation)
 
     def scan_cells(self, inp: ScanInput, observation=None) -> DataFrame:
         """Flat matching cells (engine-native shape)."""
-        return scan_cells(
-            self._cells(inp.column_filter, by_row_key), inp, observation
-        )
+        return scan_cells(self._cells(inp.column_filter), inp, observation)
 
     def get_row(self, inp: QueryRowInput) -> DataFrame:
         """One nested row (reference mod.rs:824-882)."""
-        return _get_row_op(self._cells(inp.column_filter, one_partition), inp)
+        return _get_row_op(self._gathered(inp.column_filter), inp, one_partition)
 
     def get_row_cells(self, inp: QueryRowInput) -> DataFrame:
-        return _get_row_cells_op(self._cells(inp.column_filter, one_partition), inp)
+        return _get_row_cells_op(self._gathered(inp.column_filter), inp)
 
     def multi_get(self, inputs: list[QueryRowInput]) -> DataFrame:
-        """Multi point-get (reference mod.rs:600-626)."""
-        return _multi_get_op(self._cells(None, key_placement(len(inputs))), inputs)
+        """Multi point-get (reference mod.rs:600-626). Up to
+        ``_ISIN_THRESHOLD`` keys it reads like ``get_row``; a larger key
+        set keeps the row_key exchange."""
+        if len(inputs) > _ISIN_THRESHOLD:
+            return _multi_get_op(self._cells(), inputs, by_row_key)
+        return _multi_get_op(self._gathered(None), inputs, one_partition)
 
     def count(self) -> DataFrame:
         """Exact (row_count, cell_count) (reference mod.rs:323-359)."""
-        return count_exact(self._cells(None, by_row_key))
+        return count_exact(self._cells())
 
     def scan_count(self, inp: CountInput) -> DataFrame:
         """Predicated count without materializing rows (mod.rs:361-451)."""
-        return scan_count(self._cells(inp.column_filter, by_row_key), inp)
+        return scan_count(self._cells(inp.column_filter), inp)
 
     def approximate_count(self) -> DataFrame:
         """Heuristic row count ≈ cells / #families (reference mod.rs:310-320)."""
         n_fams = max(len(self.store.load_families()), 1)
-        return approximate_row_count(self._cells(None, by_row_key), n_fams)
+        return approximate_row_count(self._cells(), n_fams)
 
     def scan_collect(self, inp: ScanInput) -> tuple[list[dict], dict]:
         """Execute a scan and return (rows-in-JSON-shape, metrics) — the

@@ -8,6 +8,7 @@ from smoltable_spark.operators import count_exact, get_row, multi_get, scan_coun
 from smoltable_spark.operators.assemble import rows_to_json_shape
 from smoltable_spark.operators.delete import delete_row, deleted_cell_count
 from smoltable_spark.operators.read import get_row_cells
+from smoltable_spark.schema import by_row_key
 
 from tests.conftest import make_cells
 
@@ -31,7 +32,7 @@ def webtable(spark):
 
 
 def test_get_row_simple(spark):
-    out = get_row(webtable(spark), QueryRowInput("org.apache.hbase"))
+    out = get_row(webtable(spark), QueryRowInput("org.apache.hbase"), by_row_key)
     assert rows_to_json_shape(out) == [
         {
             "row_key": "org.apache.hbase",
@@ -89,7 +90,7 @@ def test_get_row_qualifier_prefix_filter(spark):
 
 
 def test_typed_values_roundtrip(spark):
-    out = get_row(webtable(spark), QueryRowInput("org.apache.spark"))
+    out = get_row(webtable(spark), QueryRowInput("org.apache.spark"), by_row_key)
     shape = rows_to_json_shape(out)[0]["columns"]["meta"]
     assert shape["size"][0]["value"] == {"i64": 152014}
     assert shape["fresh"][0]["value"] == {"boolean": True}
@@ -100,6 +101,7 @@ def test_multi_get(spark):
     out = multi_get(
         webtable(spark),
         [QueryRowInput("org.apache.hbase"), QueryRowInput("org.apache.spark")],
+        by_row_key,
     )
     assert [r["row_key"] for r in out.collect()] == [
         "org.apache.hbase",

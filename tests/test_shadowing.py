@@ -15,7 +15,8 @@ no join and no broadcast.
   ``v`` partition column: one FileScan for base and delta legs whatever
   the chain length (at most one more for minor legs), the same plan for
   every version, so a commit between two rounds of reads compiles no new
-  class; ``get_row`` and a small ``multi_get`` plan no exchange.
+  class; ``get_row`` and a small ``multi_get`` of a chain of few files
+  plan no exchange, and of a chain of many files one, by row_key.
 """
 
 from __future__ import annotations
@@ -319,6 +320,27 @@ def test_key_bounded_reads_plan_no_exchange(chain4, flat1, op):
     assert _exchanges(chained) == 0, plans.physical_plan(chained)
     assert _exchanges(flat) == 0, plans.physical_plan(flat)
     assert _row_map(chained.collect()) == _row_map(flat.collect())
+
+
+@pytest.mark.parametrize("op", ["get_row", "multi_get"])
+def test_key_bounded_read_of_many_files_scans_in_parallel(spark, chain4, flat1, op):
+    """A chain whose files Spark's split sizing would not open in one
+    task (here every file open is priced above a whole split) is scanned
+    in parallel and gathered behind one row_key exchange; the rows are
+    still assembled and ordered in one partition, with no range
+    exchange, and are the same."""
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(256 * 1024 * 1024))
+    try:
+        chained, flat = _point_reads(chain4)[op], _point_reads(flat1)[op]
+        for df in (chained, flat):
+            plan = plans.physical_plan(df)
+            assert _exchanges(df) == 1, plan
+            assert "Exchange hashpartitioning(row_key#" in plan, plan
+        assert _row_map(chained.collect()) == _row_map(flat.collect())
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_new_leg_compiles_no_new_class(spark, tmp_path):

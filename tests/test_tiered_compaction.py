@@ -296,6 +296,92 @@ def test_older_layout_minor_leg_dir_is_refused(spark, tmp_path):
         fresh.vacuum(keep_last=1)
 
 
+def _fail_commit(monkeypatch, store, at):
+    """Make the next commit fail ``at`` "data" (the leg's parquet write)
+    or "publish" (the pointer publish, after the data is on disk)."""
+    from pyspark.sql import DataFrameWriter
+
+    class _Stop(Exception):
+        pass
+
+    def boom(*_a, **_k):
+        raise _Stop(at)
+
+    if at == "data":
+        monkeypatch.setattr(DataFrameWriter, "parquet", boom)
+    else:
+        monkeypatch.setattr(store, "_commit_version", boom)
+    return _Stop
+
+
+@pytest.mark.parametrize("at", ["data", "publish"])
+def test_failed_minor_commit_is_named_and_vacuumed(spark, tmp_path, monkeypatch, at):
+    """A minor commit that fails before its pointer publish names its
+    ``.minor`` dir by the root marker, which it writes first. The next
+    commit of that version clears it, and reads never see it."""
+    store = _mk(spark, tmp_path)
+    store.write(_cells(spark, [("a", 1, "v0")]))
+    store.append(_cells(spark, [("b", 1, "w")]))
+    store.append(_cells(spark, [("c", 1, "x")]))
+    before = _snapshot(store)
+    with monkeypatch.context() as m:
+        stop = _fail_commit(m, store, at)
+        with pytest.raises(stop):
+            store.minor_compact()
+    n = store.current_version() + 1
+    assert f"_FOLDS-v{n}" in os.listdir(store.path)
+    assert _snapshot(store) == before
+    store.vacuum(keep_last=1)  # above the pointer: left to the next commit
+    d = store.append(_cells(spark, [("d", 1, "y")]))
+    assert d == n and store._kind(d) == "delta"
+    assert _snapshot(store) == before + [("d", 1, "y")]
+    assert not os.path.exists(os.path.join(store.path, ".minor", f"v={n}"))
+    assert f"_FOLDS-v{n}" not in os.listdir(store.path)
+
+
+def test_leftover_of_lost_commit_race_is_vacuumed(spark, tmp_path):
+    """A minor commit that lost the race for its version leaves its
+    ``.minor`` dir and marker beside the winner's root leg: reads take
+    the root leg, and ``vacuum`` removes the leftover."""
+    import shutil
+
+    store = _mk(spark, tmp_path)
+    store.write(_cells(spark, [("a", 1, "v0")]))
+    store.append(_cells(spark, [("b", 1, "w")]))
+    store.append(_cells(spark, [("c", 1, "x")]))
+    m = store.append(_cells(spark, [("d", 1, "y")]))  # the winner
+    # the loser: a fold of v2..v3 written to .minor/v=<m>, and its marker
+    loser = os.path.join(store.path, ".minor", f"v={m}")
+    shutil.copytree(store._version_dir(2), loser)
+    store._fs.write_text(store._folds_marker(m), '{"from": 2, "through": 3}')
+    fresh = _mk(spark, tmp_path)
+    assert fresh._version_dir(m) == os.path.join(fresh.path, f"v={m}")
+    before = _snapshot(fresh)
+    fresh.vacuum(keep_last=1)
+    assert not os.path.exists(loser)
+    assert f"_FOLDS-v{m}" not in os.listdir(fresh.path)
+    assert _snapshot(fresh) == before
+
+
+def test_failed_delta_commit_never_shadows_the_minor_leg(spark, tmp_path, monkeypatch):
+    """A delta commit that fails after writing ``v=<n>`` leaves a root
+    dir that would win over a later minor leg of the same version: the
+    minor commit clears it first, so reads see the fold."""
+    store = _mk(spark, tmp_path)
+    store.write(_cells(spark, [("a", 1, "v0")]))
+    store.append(_cells(spark, [("b", 1, "w")]))
+    store.append(_cells(spark, [("c", 1, "x")]))
+    before = _snapshot(store)
+    with monkeypatch.context() as m:
+        stop = _fail_commit(m, store, "publish")
+        with pytest.raises(stop):
+            store.append(_cells(spark, [("z", 1, "lost")]))
+    n = store.minor_compact()
+    assert store._version_dir(n) == os.path.join(store.path, ".minor", f"v={n}")
+    assert f"v={n}" not in os.listdir(store.path)
+    assert _snapshot(store) == before
+
+
 def test_cdc_stream_survives_minor_compaction(spark, tmp_path):
     """The r9 exclusion is gone: a minor fold between micro-batches is
     a benign re-layout — the stream keeps consuming the ORIGINAL delta
