@@ -25,13 +25,6 @@ from smoltable_spark.functions.hashing import md5_long, md5_long_sql
 RATE_MOD = 1_000_000
 
 
-def keep_fraction(seed: str, ident: Column, rate: float) -> Column:
-    """Boolean column: deterministically keep ~``rate`` of rows by identity
-    hash. ``ident`` must uniquely identify the row (e.g. its doc_id)."""
-    bucket = md5_long(F.concat(F.lit(seed + "|"), ident)) % RATE_MOD
-    return bucket < int(round(rate * RATE_MOD))
-
-
 def stratified_sample(
     df: DataFrame,
     strata_col: str,

@@ -10913,8 +10913,9 @@ def stream_store_cdc_minor(spark, sf_dir):
       vanished files can no longer be proven — size retention to
       consumer lag, the standard change-feed contract.
 
-    100 TB: per-commit cost O(batch)+O(rollup); the guard's kind walk
-    is cached behind a high-water mark (O(new commits) per trigger)."""
+    100 TB: per-commit cost O(batch)+O(rollup); the guard reads every
+    commit kind from the store pointer's chain manifest (one pointer
+    read and one listing per trigger)."""
     from smoltable_spark.api import ColumnFamilyDef
     from smoltable_spark.queries_core import _events_cells_seq
     from smoltable_spark.sources.store import CellStore

@@ -69,10 +69,6 @@ def cell_order():
     ]
 
 
-#: backwards-friendly alias used as ``*CELL_ORDER()``
-CELL_ORDER = cell_order
-
-
 # --- placements: where a read's row-key steps run -------------------------
 #
 # A read resolves the chain's newest-wins step, the cell-limit windows and
@@ -94,10 +90,6 @@ def one_partition(cells):
     key set, whose few matching cells are cheaper to resolve in one task
     than to shuffle (``CellStore._read_gathered``)."""
     return cells.coalesce(1)
-
-#: same order as plain column names for sortWithinPartitions at write time
-#: (ts_inv = -ts makes it expressible as all-ascending).
-CELL_SORT_COLUMNS = ["row_key", "family", "qualifier"]
 
 
 def value_as_string():

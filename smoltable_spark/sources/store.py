@@ -50,27 +50,31 @@ table at 100 TB):
 
 Readers always see a consistent version: the ``_VERSION`` pointer
 (``store_fs.GenerationPointer``) is the commit point, published after
-the snapshot's data and kind marker are fully on disk. Every commit, on
-every filesystem, creates the fresh generation file ``_VERSION-v<n>``
-if absent, so no reader can catch a torn pointer, and ``vacuum`` sweeps
-generations below its retention cutoff. A store that carries a plain
-``_VERSION`` file (the older single-file layout) is refused: rebuild it.
+the snapshot's data is fully on disk. Every commit, on every filesystem,
+creates the fresh generation file ``_VERSION-v<n>`` if absent, so no
+reader can catch a torn pointer, and ``vacuum`` sweeps generations below
+its retention cutoff. A store that carries a plain ``_VERSION`` file
+(the older single-file layout) is refused: rebuild it.
 
-The pointer's content is a JSON chain manifest ``{"v": n, "legs": {v:
-[kind, folds], ...}}`` — a write-once cache of every live leg's
-``_KIND``/``_FOLDS`` markers, so opening a chain costs one pointer read
-instead of two reads per leg on object stores. The marker files stay
-authoritative: a version missing from the manifest (trimmed, see
-``_MANIFEST_KEEP_VERSIONS``) falls back to reading markers. Kind and
-folds are immutable per version number (numbers are never reused), so
-the cache needs no invalidation.
+**The pointer is the only record of what a commit wrote.** Its content
+is the chain manifest ``{"v": n, "chain": {v: [kind, folds], ...}}``:
+the kind (base, delta or minor) of every leg the commit's root listing
+names at or below ``n``, and the ``(from, through)`` range each minor
+leg folded. No leg dir carries metadata of its own, so opening a chain
+costs one pointer read, and kind and folds are lookups in the manifest
+the last resolve read (numbers are never reused, so an entry never
+changes). Anything of a version above the pointer belongs to a commit
+in flight or one that failed, and the next commit of that version
+clears it. A pointer without the manifest (or with the older ``"legs"``
+one), or a listed leg at or below the pointer that it does not record,
+was written by an older layout: rebuild the store.
 
 **Leg dirs.** Base and delta legs live at ``<root>/v=<n>/``, minor
 (tiered-compaction) legs at ``<root>/.minor/v=<n>/`` — see
 ``_MINOR_DIR``. Either way the path below its relation's ``basePath``
 is ``v=<n>/lg=<g>/``, so both parse to the same ``v`` and ``lg``
-partition columns. A minor leg's ``_FOLDS`` marker sits at the root as
-``_FOLDS-v<n>``, which is how the root listing names it.
+partition columns. A minor commit writes an empty ``_FOLDS-v<n>`` file
+at the root, which is how the root listing names its leg.
 
 **One pointer read + one listing per operation.** Every operation
 (``read``, ``read_changes``, a commit, ``vacuum``, the stats) starts
@@ -117,11 +121,8 @@ from smoltable_spark.sources.store_fs import (  # noqa: F401 — re-exported
 
 _VERSION_FILE = "_VERSION"
 _MANIFEST_FILE = "_MANIFEST.json"
-#: chain-manifest entries older than the latest base below (current -
-#: this many) versions are trimmed from the pointer at commit time —
-#: bounds pointer size on long-lived stores; trimmed versions just fall
-#: back to their marker files (time travel stays correct, only slower)
-_MANIFEST_KEEP_VERSIONS = 64
+#: the pointer key of the chain manifest (see module docstring)
+_CHAIN = "chain"
 
 #: physical directory value for the default locality group: Hive-style
 #: partitioning cannot round-trip an empty string (it reads back as NULL),
@@ -181,11 +182,9 @@ class CellStore:
         # driver-side metadata adapter (sources/store_fs.py)
         self._fs = store_fs_for(spark, path)
         self._fs.makedirs(path)
-        # write-once chain metadata: version -> (kind, folds|None),
-        # refreshed from the pointer's JSON manifest on every pointer
-        # read (see module docstring — kind/folds are immutable per
-        # version number, so entries never need invalidation)
-        self._chain_cache: dict[int, tuple[str, tuple[int, int] | None]] = {}
+        # the chain manifest the last pointer resolve read: version ->
+        # (kind, folds|None) (see module docstring)
+        self._manifest: dict[int, tuple[str, tuple[int, int] | None]] = {}
         # the store root as the last pointer resolve listed it, and the
         # leg dirs in it: version -> dir name (see module docstring)
         self._listing: list[str] = []
@@ -222,14 +221,18 @@ class CellStore:
     def current_version(self) -> int:
         """The committed version (0 before the first commit). Re-resolves
         every call — a long-lived handle (streaming CDC polls this per
-        batch) must observe other writers' commits — and refreshes the
-        chain-manifest cache and the leg-dir map from the listing the
-        resolve took."""
+        batch) must observe other writers' commits — and replaces the
+        chain manifest and the leg-dir map with what the resolve read."""
         n, payload, names = self._pointer.resolve_listed()
-        for v, (kind, folds) in (payload or {}).get("legs", {}).items():
-            self._chain_cache[int(v)] = (
-                str(kind), tuple(folds) if folds is not None else None
+        if n and _CHAIN not in payload:
+            raise IOError(
+                f"{_VERSION_FILE}-v{n} in {self.path} has no chain manifest: "
+                "the store was written by an older layout, rebuild it"
             )
+        self._manifest = {
+            int(v): (kind, tuple(folds) if folds else None)
+            for v, (kind, folds) in (payload[_CHAIN] if n else {}).items()
+        }
         legs = self._leg_map(names)
         if n and n not in legs:
             # the newest leg's dir appeared after the listing (a commit
@@ -237,31 +240,29 @@ class CellStore:
             # dir of version <= n exists by now
             names = self._fs.listdir(self.path)
             legs = self._leg_map(names)
+        unrecorded = sorted(v for v in legs if v <= n and v not in self._manifest)
+        if unrecorded:
+            raise IOError(
+                f"{_VERSION_FILE}-v{n} in {self.path} does not record listed "
+                f"legs {unrecorded}: the store was written by an older "
+                "layout, rebuild it"
+            )
         self._listing, self._leg_dirs = names, legs
         return n
 
     def _commit_version(self, n: int) -> None:
-        """Publish version ``n`` with its chain manifest. Old generations
-        stay until ``vacuum`` sweeps past them (removing n-1 here would
-        make a reader that listed just before this commit re-list)."""
-        manifest = {
-            str(v): [kind, list(folds) if folds is not None else None]
-            for v, (kind, folds) in self._trimmed_manifest(n).items()
-        }
-        self._pointer.commit(n, {"legs": manifest})
-
-    def _trimmed_manifest(self, n: int) -> dict[int, tuple[str, tuple[int, int] | None]]:
-        """Chain-cache entries worth publishing in version ``n``'s
-        pointer: everything at or above the latest base at or below
-        (n - _MANIFEST_KEEP_VERSIONS) — every leg of the last
-        _MANIFEST_KEEP_VERSIONS snapshots' chains is ≥ that base, so
-        recent reads stay one-RPC while the pointer stays bounded."""
-        horizon = n - _MANIFEST_KEEP_VERSIONS
-        floor = 1
-        for v, (kind, _f) in self._chain_cache.items():
-            if kind == "base" and floor < v <= horizon:
-                floor = v
-        return {v: kf for v, kf in self._chain_cache.items() if v >= floor}
+        """Publish version ``n`` with its chain manifest: the entry of
+        every leg the listing names below ``n``, plus ``n``'s own when
+        ``_commit_snapshot`` recorded it. Old generations stay until
+        ``vacuum`` sweeps past them (removing n-1 here would make a
+        reader that listed just before this commit re-list)."""
+        chain = {v: self._manifest[v] for v in sorted(self._leg_dirs) if v < n}
+        if n in self._manifest:
+            chain[n] = self._manifest[n]
+        self._pointer.commit(n, {_CHAIN: {
+            str(v): [kind, list(folds) if folds else None]
+            for v, (kind, folds) in chain.items()
+        }})
 
     #: minor (tiered-compaction) legs live at ``.minor/v=<n>/``. Spark's
     #: file listing skips dot-prefixed names, so no minor leg reaches a
@@ -272,8 +273,9 @@ class CellStore:
     #: same ``v=<n>/lg=<g>/`` as at the root, so a chain's minor legs
     #: read as one relation with ``basePath`` ``<root>/.minor`` and the
     #: same ``v``/``lg`` columns (``_merge_legs``). The root listing
-    #: names each minor leg by its ``_FOLDS-v<n>`` marker (``_leg_map``);
-    #: nothing lists ``.minor`` or probes for a leg.
+    #: names each minor leg by its empty ``_FOLDS-v<n>`` file
+    #: (``_listed_legs``); nothing lists ``.minor``, probes for a leg or
+    #: reads the file.
     _MINOR_DIR = ".minor"
 
     @staticmethod
@@ -290,6 +292,11 @@ class CellStore:
     def _minor_leg(cls, n: int) -> str:
         """A minor leg's dir, relative to the root."""
         return os.path.join(cls._MINOR_DIR, f"v={n}")
+
+    @classmethod
+    def _leg_name(cls, n: int, kind: str | None) -> str:
+        """The dir, relative to the root, a leg of ``kind`` commits to."""
+        return cls._minor_leg(n) if kind == "minor" else f"v={n}"
 
     @classmethod
     def _listed_legs(cls, names: list[str]) -> list[tuple[int, str]]:
@@ -316,19 +323,19 @@ class CellStore:
                 minor.append((v, cls._minor_leg(v)))
         return root + minor
 
-    @classmethod
-    def _leg_map(cls, names: list[str]) -> dict[int, str]:
+    def _leg_map(self, names: list[str]) -> dict[int, str]:
         """Version -> leg dir among a root listing (``_listed_legs``). A
         version listed twice had a commit lose the race for it after
-        writing its data: the root dir wins, and ``vacuum`` removes the
-        other."""
+        writing its data: the dir of the version's committed kind wins,
+        and ``vacuum`` removes the other."""
         legs: dict[int, str] = {}
-        for v, leg in cls._listed_legs(names):
-            legs.setdefault(v, leg)
+        for v, leg in self._listed_legs(names):
+            if v not in legs or leg == self._leg_name(v, self._kind(v)):
+                legs[v] = leg
         return legs
 
     def _remove_leg(self, n: int, leg: str) -> None:
-        """Remove a listed leg dir, and a minor leg's root marker."""
+        """Remove a listed leg dir, and a minor leg's root name."""
         self._fs.rmtree(os.path.join(self.path, leg))
         if leg == self._minor_leg(n):
             self._fs.remove(self._folds_marker(n))
@@ -336,7 +343,7 @@ class CellStore:
             del self._leg_dirs[n]
 
     def _folds_marker(self, n: int) -> str:
-        """A minor leg's ``_FOLDS`` marker, kept at the root."""
+        """The root listing's name for a minor leg."""
         return os.path.join(self.path, f"{self._FOLDS_FILE}-v{n}")
 
     def _version_dir(self, n: int) -> str:
@@ -344,21 +351,15 @@ class CellStore:
         plain name (the name a new base/delta commit takes)."""
         return os.path.join(self.path, self._leg_dirs.get(n, f"v={n}"))
 
-    _KIND_FILE = "_KIND"
-
-    def _kind(self, n: int) -> str:
-        cached = self._chain_cache.get(n)
-        if cached is not None:
-            return cached[0]
-        p = os.path.join(self._version_dir(n), self._KIND_FILE)
-        if not self._fs.exists(p):
-            return "base"  # pre-delta layouts: every snapshot was full
-        return self._fs.read_text(p).strip()
+    def _kind(self, n: int) -> str | None:
+        """Version ``n``'s committed kind, from the manifest; None for a
+        version it does not record (vacuumed before the last commit, or
+        above the pointer)."""
+        return self._manifest.get(n, (None, None))[0]
 
     def _base_of(self, n: int) -> int:
         """Latest listed base version ≤ n (0 when the chain starts with
-        deltas): one downward walk over the listed legs, kinds from the
-        chain cache (a marker read only for a version it lacks)."""
+        deltas): one downward walk over the listed legs."""
         for v in range(n, 0, -1):
             if v in self._leg_dirs and self._kind(v) == "base":
                 return v
@@ -368,33 +369,25 @@ class CellStore:
 
     def _folds_of(self, n: int) -> tuple[int, int] | None:
         """(from, through) leg range a **minor** leg folded, else None."""
-        cached = self._chain_cache.get(n)
-        if cached is not None:
-            return cached[1]
-        p = self._folds_marker(n)
-        if not self._fs.exists(p):
-            return None
-        d = json.loads(self._fs.read_text(p))
-        return int(d["from"]), int(d["through"])
+        return self._manifest.get(n, (None, None))[1]
 
     def _legs_of(self, n: int) -> list[int]:
         """Version numbers whose files constitute snapshot ``n``, in
         commit order: the latest base ≤ n, then subsequent delta legs —
         except that a **minor** leg (tiered compaction: the fold of a
         run of delta legs into ONE leg, see ``minor_compact``) supersedes
-        exactly the ``_FOLDS`` range it merged, so stacked minors (L1)
-        coexist until a major ``compact()``. This is THE chain resolver:
-        ``read``/``vacuum``/stats all agree on it by construction."""
+        exactly the range it folded, so stacked minors (L1) coexist
+        until a major ``compact()``. This is THE chain resolver:
+        ``read``/``vacuum``/stats all agree on it by construction. A
+        version the manifest does not record stays in the chain unless a
+        fold supersedes it, so a leg removed out of contract is named by
+        the missing-leg check, never skipped."""
         base = self._base_of(n)
         legs: list[int] = []
         for v in range(max(base, 1), n + 1):
             if self._kind(v) == "minor":
-                folds = self._folds_of(v)
-                if folds is None:  # no marker: conservatively assume the
-                    legs = [base] if base >= 1 else []  # fold-all form
-                else:
-                    frm, through = folds
-                    legs = [u for u in legs if u < frm or u > through]
+                frm, through = self._folds_of(v)
+                legs = [u for u in legs if u < frm or u > through]
             legs.append(v)
         return legs
 
@@ -498,8 +491,8 @@ class CellStore:
         returns (possibly transformed df, partition columns). Layout
         subclasses (e.g. Z-order bucketing in ``store_layout.py``)
         override ONLY this; the commit sequence itself (version dir,
-        WRITE_OPTIONS, kind marker, pointer commit) stays here so it
-        can never drift between layouts.
+        WRITE_OPTIONS, pointer commit) stays here so it can never drift
+        between layouts.
 
         The hook OWNS the base snapshot's arrangement shuffle, so a
         base write shuffles the table once: a layout that re-arranged
@@ -627,27 +620,23 @@ class CellStore:
         folds: tuple[int, int] | None = None,
     ) -> int:
         """``folds``: the (from, through) range a **minor** leg folded,
-        published as its ``_FOLDS-v<n>`` root marker BEFORE the leg's
-        data — like ``_KIND``, it must be visible the instant the commit
-        is (a crash in between must never leave a committed leg missing
-        its metadata), and every ``.minor`` dir, a failed commit's too,
-        must have a name in the root listing."""
+        published with its kind in the pointer's manifest. A minor leg's
+        root name (``_folds_marker``) is written BEFORE its data, so
+        every ``.minor`` dir, a failed commit's too, is named in the
+        root listing."""
         df, part_cols = self._layout(df, kind, num_range_partitions)
         n = self.current_version() + 1
         # kind picks the dir at commit time: minor legs go under the
         # stream-invisible _MINOR_DIR
-        leg = self._minor_leg(n) if kind == "minor" else f"v={n}"
+        leg = self._leg_name(n, kind)
         # n is above the pointer, so a dir the listing names for it in
         # the other layout is a failed commit's: clear it, or it would
-        # shadow this leg (a root dir wins) or outlive it
+        # outlive this leg
         for v, stale in self._listed_legs(self._listing):
             if v == n and stale != leg:
                 self._remove_leg(v, stale)
-        if folds is not None:
-            self._fs.write_text(
-                self._folds_marker(n),
-                json.dumps({"from": folds[0], "through": folds[1]}),
-            )
+        if kind == "minor":
+            self._fs.write_text(self._folds_marker(n), "")
         d = os.path.join(self.path, leg)
         w = df.write.mode("overwrite")
         opts = dict(self.WRITE_OPTIONS)
@@ -656,11 +645,7 @@ class CellStore:
         for k, v in opts.items():
             w = w.option(k, v)
         w.partitionBy(*part_cols).parquet(d)
-        self._fs.write_text(os.path.join(d, self._KIND_FILE), kind)
-        # the marker files above are authoritative and already durable;
-        # mirror them into the chain cache so the pointer's manifest
-        # (written next) lets future opens skip re-reading them
-        self._chain_cache[n] = (kind, folds)
+        self._manifest[n] = (kind, folds)
         self._commit_version(n)  # pointer publish = the commit point
         self._leg_dirs[n] = leg
         return n
@@ -727,10 +712,10 @@ class CellStore:
         Returns the new version (or the current one when there is
         nothing to fold: 0/1 trailing delta legs). Time travel holds:
         the folded delta dirs stay on disk until ``vacuum`` proves no
-        retained snapshot needs them. The leg records the
-        ``(from, through)`` range it folded in a ``_FOLDS`` marker so
-        ``read_changes`` can keep serving O(changes) feeds across it and
-        ``_legs_of`` supersedes exactly that range."""
+        retained snapshot needs them. The manifest records the
+        ``(from, through)`` range the leg folded, so ``read_changes``
+        can keep serving O(changes) feeds across it and ``_legs_of``
+        supersedes exactly that range."""
         n = self.current_version()
         if n == 0:
             return n
@@ -856,13 +841,9 @@ class CellStore:
         legs = list(range(since_version + 1, to + 1))
         if not legs:
             return self._read_listed(to).limit(0)
+        # a vacuumed leg is named by the missing-leg check below
         rewrites = [
-            v
-            for v in legs
-            # a missing dir is NOT a base rewrite (``_kind`` falls back
-            # to "base" for pre-delta layouts): let the minor-resolution
-            # and missing-leg checks below name the real condition
-            if v in self._leg_dirs and self._kind(v) == "base"
+            v for v in legs if v in self._leg_dirs and self._kind(v) == "base"
         ]
         if rewrites:
             raise ValueError(
@@ -883,17 +864,10 @@ class CellStore:
         for v in sorted(legs, reverse=True):
             if skip_below is not None and v >= skip_below:
                 continue
-            k = self._kind(v)
-            if k != "minor":
+            if self._kind(v) != "minor":
                 effective.append(v)
                 continue
-            folds = self._folds_of(v)
-            if folds is None:
-                raise ValueError(
-                    f"minor leg v{v} has no {self._FOLDS_FILE} marker; "
-                    "store metadata is corrupt"
-                )
-            frm, through = folds
+            frm, through = self._folds_of(v)
             if through <= since_version:
                 continue  # already consumed, re-laid out — nothing new
             if frm > since_version:

@@ -59,7 +59,7 @@ class ZorderCellStore(CellStore):
         num_range_partitions: int | None = None,
     ) -> tuple[DataFrame, list[str]]:
         """Layout hook override (ADVICE r7: the commit sequence itself —
-        version dir, kind marker, atomic pointer — stays in the parent's
+        version dir, atomic pointer — stays in the parent's
         ``_commit_snapshot``; only the physical arrangement lives here).
         The hook owns the base arrangement shuffle outright: it REPLACES
         the parent's (lg, row_key) range partitioning with ONE (lg, zb)
@@ -179,7 +179,12 @@ class RangeZorderCellStore(ZorderCellStore):
     never breaks), because reads resolve the newest sidecar <= the read
     version. Under key-distribution drift the read amplification of
     ``key_range_scan`` therefore resets to the fresh distribution at
-    each compaction instead of decaying toward a full scan.
+    each compaction instead of decaying toward a full scan. A sidecar
+    above the pointer belongs to a commit in flight or one that failed
+    (an aborted ``compact()``): like a leg dir above the pointer, the
+    next commit of that version removes it (``_layout``) unless this
+    handle wrote it for that very commit (``_pending_base``), so a
+    failed compact's set never buckets a later commit.
 
     The design invariant that keeps this scale-safe: CORRECTNESS NEVER
     DEPENDS ON THE BOUNDARIES. ``key_range_scan`` computes its covering
@@ -197,9 +202,9 @@ class RangeZorderCellStore(ZorderCellStore):
             bits=bits,
         )
         self._boundaries_cache: dict[int, list[int]] = {}
-        #: version of a BASE snapshot currently being committed: its
-        #: sidecar (written moments earlier) is valid for the in-flight
-        #: layout even though the snapshot dir does not exist yet
+        #: version of the commit in flight whose sidecar this handle
+        #: wrote for it (the founding set, or a compact's fresh set):
+        #: ``_layout`` keeps that one sidecar above the pointer
         self._pending_base: int | None = None
 
     # -- boundaries sidecar ------------------------------------------------
@@ -220,43 +225,14 @@ class RangeZorderCellStore(ZorderCellStore):
     def _boundaries_dir(self, bv: int) -> str:
         return os.path.join(self._boundaries_root, f"v={bv}")
 
-    def _valid_boundary_versions(self) -> list[int]:
-        """Sidecar versions that actually took effect. A boundary set
-        only governs a physical re-bucketing, which only BASE commits
-        perform — so a sidecar is valid iff it is v=1 (the store's
-        founding set: every commit before the next base is bucketed
-        under it), its version is a committed base snapshot, or it is
-        the base commit currently in flight (``_pending_base``). This
-        excludes ORPHANS from an aborted ``compact()`` (sidecar written,
-        snapshot never committed): without the kind check, a later
-        ``append()`` would bucket its delta under the orphan set while
-        the un-rewritten base still sits under the old one, and
-        ``key_range_scan``'s covering pruning would silently drop
-        in-range base rows."""
-        cur = self.current_version()
-        out = []
-        for bv in self.boundary_versions():
-            if bv == 1 or bv == self._pending_base or (
-                bv <= cur and self._kind(bv) == "base"
-            ):
-                out.append(bv)
-        return out
-
     def boundaries_for(self, version: int) -> list[int]:
         """Boundary set in effect for snapshot ``version``: the newest
-        VALID sidecar version <= it (a snapshot is always written with
-        the boundaries current at its own commit; orphaned sidecars
-        from aborted compacts never become current —
-        ``_valid_boundary_versions``). The in-flight base's sidecar
-        (``_pending_base`` = current+1) is covered by ``v <= version``
-        on the write path, which asks for exactly that version — a
-        bare pending-membership test here would leak the NEW boundary
-        set into reads of OLDER versions issued while a commit is in
-        flight."""
+        sidecar version <= it. A snapshot is written with the boundaries
+        current at its own commit; the write path asks for the version
+        in flight, so it resolves that commit's own new sidecar, while a
+        read of an older version never sees it."""
         self._check_image_version()
-        eligible = [
-            v for v in self._valid_boundary_versions() if v <= version
-        ]
+        eligible = [v for v in self.boundary_versions() if v <= version]
         if not eligible:
             raise FileNotFoundError(
                 f"no layout boundaries <= v{version} in {self._boundaries_root}"
@@ -334,14 +310,32 @@ class RangeZorderCellStore(ZorderCellStore):
             os.path.join(d, "part-00000.parquet"), "boundary", bounds
         )
         # a crash after this write but before the snapshot commit leaves a
-        # sidecar no snapshot references: harmless (reads resolve <= their
-        # version; a retried compact overwrites it)
+        # sidecar above the pointer: reads resolve <= their version, and
+        # the next commit removes it or, a retried compact, overwrites it
         self._boundaries_cache.pop(at_version, None)
 
     def _ensure_boundaries(self, cells: DataFrame) -> None:
+        """Write the founding set, for the store's first commit."""
         if self.boundary_versions():
             return
-        self._write_boundaries(cells, at_version=self.current_version() + 1)
+        self._pending_base = self.current_version() + 1
+        self._write_boundaries(cells, at_version=self._pending_base)
+
+    def _layout(
+        self,
+        df: DataFrame,
+        kind: str,
+        num_range_partitions: int | None = None,
+    ) -> tuple[DataFrame, list[str]]:
+        # every commit comes through here, minor folds included: clear
+        # the sidecars above the pointer before the buckets resolve,
+        # except the one this commit wrote for itself
+        cur = self.current_version()
+        for bv in self.boundary_versions():
+            if bv > cur and bv != self._pending_base:
+                self._fs.rmtree(self._boundaries_dir(bv))
+                self._boundaries_cache.pop(bv, None)
+        return super()._layout(df, kind, num_range_partitions)
 
     def _key_bucket(self):
         # write side: the commit in flight becomes current_version()+1,
@@ -356,11 +350,8 @@ class RangeZorderCellStore(ZorderCellStore):
 
     def write(self, cells: DataFrame, num_range_partitions=None,
               seq_col=None, assume_unique_coords=False) -> int:
-        self._ensure_boundaries(cells)
-        # base commit in flight: its sidecar (if one was just written at
-        # this version) is the set this snapshot is being bucketed under
-        self._pending_base = self.current_version() + 1
         try:
+            self._ensure_boundaries(cells)
             return super().write(
                 cells, num_range_partitions, seq_col,
                 assume_unique_coords=assume_unique_coords,
@@ -369,8 +360,11 @@ class RangeZorderCellStore(ZorderCellStore):
             self._pending_base = None
 
     def append(self, cells: DataFrame, seq_col=None) -> int:
-        self._ensure_boundaries(cells)
-        return super().append(cells, seq_col)
+        try:
+            self._ensure_boundaries(cells)
+            return super().append(cells, seq_col)
+        finally:
+            self._pending_base = None
 
     def compact(self, num_range_partitions=None) -> int:
         """Fold base+deltas into a new base AND recompute the key-range
@@ -390,6 +384,7 @@ class RangeZorderCellStore(ZorderCellStore):
         # window's shuffle) runs once
         cells = materialize(self.read().select(*CELL_COLUMNS), "corpus")
         self._write_boundaries(cells, at_version=n + 1)
+        self._pending_base = n + 1  # write() clears it when its commit ends
         # fold input comes from read() → coordinate-unique by contract
         return self.write(cells, num_range_partitions, assume_unique_coords=True)
 

@@ -9,28 +9,29 @@ the streaming analog of ``rel_incremental_rollup``'s batch proof, and
 the pattern a 100 TB pipeline uses to keep aggregate tables fresh
 without rescanning the store.
 
-How the source works: snapshot dirs are Hive-style ``v=<n>/lg=<g>/``
-partitions, so a ``readStream.parquet(store.path)`` with the cell schema
-plus the two partition columns sees every NEW data file of every new
-commit exactly once (checkpointed file tracking — the same machinery
+How the source works: leg dirs are Hive-style ``v=<n>/lg=<g>/``
+partitions, so a file stream over the ``v=*/lg=*/*.parquet`` glob with
+``basePath`` at the store root, the cell schema and the two partition
+columns sees every NEW data file of every new commit exactly once
+(checkpointed file tracking — the same machinery
 ``stream_restart_resume`` proves survives restarts). Commit metadata
-files (``_VERSION``, ``_MANIFEST.json``, ``_KIND``) are
-underscore-prefixed and therefore invisible to the source.
+(``_VERSION-v<n>``, ``_MANIFEST.json``) sits outside the glob.
 
 Contract (same as ``read_changes``): the chain must be APPEND-ONLY over
 the streamed interval. A base rewrite (``write()`` / ``compact()``)
 physically rewrites every cell, so "what changed" is no longer derivable
-from new files alone; ``StoreChangeRollup`` detects base legs in the
-stream and raises the same resync error instead of silently
-double-counting. MINOR (tiered) compaction is benign: its legs commit
-under ``<root>/.minor/v=<n>/``, and Spark's file listing skips the
-dot-prefixed ``.minor`` (its ``_FOLDS-v<n>`` root markers are
-underscore-prefixed, skipped too), so the source keeps consuming the
-original delta legs and the fold never enters the stream — live CDC and
-steady-state tiered compaction coexist, as the reference's LSM runs minor compactions
-continuously under live readers (smoltable/src/table/mod.rs:156-165).
-Resync is still required if the fold's originals are vacuumed under the
-stream (consumption unprovable) — size retention to cover consumer lag.
+from new files alone; ``StoreChangeRollup`` walks the committed kinds in
+the store pointer's manifest and raises the resync error instead of
+silently double-counting. MINOR (tiered) compaction is benign: its legs
+commit under ``<root>/.minor/v=<n>/``, which the glob does not match, so
+the source keeps consuming the original delta legs and the fold never
+enters the stream — live CDC and steady-state tiered compaction coexist,
+as the reference's LSM runs minor compactions continuously under live
+readers (smoltable/src/table/mod.rs:156-165). Resync is still required
+if the fold's originals are vacuumed under the stream (consumption
+unprovable) — size retention to cover consumer lag. The files of a
+version above the pointer (a commit in flight or one that failed) are
+not change data; the rollup raises on them too.
 Delivery granularity is the FILE (a commit's files can
 split across micro-batches under ``maxFilesPerTrigger``); every file is
 processed exactly once, and since rollup merges are associative sums the
@@ -43,7 +44,6 @@ into incremental maintenance.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -71,35 +71,27 @@ def stream_store_changes(
     the checkpoint makes delivery exactly-once per file across
     restarts.
 
-    Layout subclasses (ZorderCellStore and descendants) stream their
-    DELTA LEGS ONLY (VERDICT r8 ask #4): their BASE snapshots nest a
-    third ``zb=`` partition level, so one basePath would mix partition
-    depths across version dirs and Spark's partition discovery dies with
-    a cryptic 'conflicting partition column names' AnalysisException
-    mid-stream. Deltas are deliberately lg-only by design
-    (store_layout.py::ZorderCellStore._layout — LSM memtable flushes,
-    with zb carried as a DATA column the explicit schema simply prunes),
-    so a file-level glob ``v=*/lg=*/*.parquet`` under the store basePath
-    matches exactly the delta files and never descends into a base
-    leg's ``zb=`` dirs. Consequences, both enforced downstream:
+    The source reads the file-level glob ``v=*/lg=*/*.parquet`` under
+    the store's ``basePath``: every base and delta leg of a flat store,
+    and every delta leg of a layout store. The one rule: a base leg
+    with a ``zb=`` level (ZorderCellStore and descendants) does not
+    match the glob, so no file of it enters the stream. (Deltas are
+    lg-only by design — store_layout.py::ZorderCellStore._layout, LSM
+    memtable flushes, with zb carried as a DATA column the explicit
+    schema prunes.) Consequences for a layout store, both enforced
+    downstream:
 
     - the initial base snapshot (if any) is NOT part of the stream —
       a rollup over a layout store covers the delta chain and must be
       seeded from a batch ``read()`` if base content matters;
     - base rewrites are INVISIBLE to the file source, so the
-      append-only contract cannot be policed from streamed rows alone —
-      ``StoreChangeRollup`` therefore also walks the commit-kind chain
-      (driver-side scalars) before every fold and raises the same
-      resync error a flat store gets from in-stream base files."""
-    from smoltable_spark.sources.store import CellStore
-
-    r = spark.readStream.schema(_cdc_schema())
+      append-only contract cannot be policed from streamed rows —
+      ``StoreChangeRollup`` walks the committed kinds (driver-side
+      scalars) before every fold, for every store."""
+    r = spark.readStream.schema(_cdc_schema()).option("basePath", store.path)
     if max_files_per_trigger is not None:
         r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    if type(store)._layout is not CellStore._layout:
-        r = r.option("basePath", store.path)
-        return r.parquet(os.path.join(store.path, "v=*", "lg=*", "*.parquet"))
-    return r.parquet(store.path)
+    return r.parquet(os.path.join(store.path, "v=*", "lg=*", "*.parquet"))
 
 
 class StoreChangeRollup:
@@ -122,9 +114,9 @@ class StoreChangeRollup:
     foreachBatch recipe.
 
     Scale: nothing driver-side grows with data volume — the only
-    ``collect`` is the distinct commit-version guard (bounded by commits
-    per trigger, scalars) and the meta JSON (three ints). The rollup
-    itself lives as parquet and merges distributed."""
+    ``collect`` is the distinct commit versions of a batch (bounded by
+    commits per trigger, scalars) and the meta JSON (three ints). The
+    rollup itself lives as parquet and merges distributed."""
 
     _META = "_ROLLUP_META.json"
 
@@ -143,14 +135,6 @@ class StoreChangeRollup:
         self.sums = dict(sums)
         self.store = store
         self.keep_last = keep_last
-        # chain-guard cache (VERDICT r9 ask #7): versions <= _kind_hwm
-        # have been classified once and never re-read; known base
-        # rewrites are permanent, known minor folds re-verify only
-        # their originals' existence per call. Per-incarnation state —
-        # a fresh instance re-walks from the horizon once.
-        self._kind_hwm = 0
-        self._base_rewrites: set[int] = set()
-        self._minor_folds: dict[int, tuple[int, int] | None] = {}
         # the rollup's own state (meta + versioned result legs) lives
         # beside the store, through the same metadata layer
         self._fs = store_fs_for(spark, path)
@@ -255,113 +239,71 @@ class StoreChangeRollup:
 
     # -- the foreachBatch hook -------------------------------------------------
 
-    def _chain_rewrites(self) -> list[int]:
-        """Commits after the horizon that break the stream's append-only
-        contract, from the commit-kind markers (driver-side scalars).
-        This is how a LAYOUT store's rewrites are detected at all
-        (VERDICT r8 ask #4): its base legs never enter the delta-only
-        stream, so there are no in-stream rows to flag — and a compact
-        with no subsequent delta produces no micro-batch either, which
-        is why ``stream_store_rollup`` ALSO runs this check at wiring
-        time.
+    def _guard(self, streamed: set[int]) -> None:
+        """Raise the resync error when the stream cannot stay
+        append-only, from one pointer resolve of the store (its manifest
+        and listing, driver-side scalars):
 
-        A minor (tiered) leg is a BENIGN re-layout exactly when it lives
-        under ``.minor/`` (``CellStore._MINOR_DIR``), which the file
-        source never lists: the source keeps consuming the ORIGINAL
-        delta legs and never sees the fold — exactly how batch
-        ``read_changes`` skips a fold of already-consumed changes. Two
-        minor cases still force a resync: a plain-named minor dir at the
-        root (its files ARE visible to the source → double count), and
-        a fold whose post-horizon
-        originals were vacuumed (the conservative stream horizon is
-        ``start_version`` — consumption of the vanished files cannot be
-        proven, the batch path's exact straddle rule). Operationally:
-        size the store's vacuum retention to cover consumer lag, the
-        standard change-feed retention contract.
-
-        Cost per call (VERDICT r9 ask #7): the kind walk is cached
-        behind a high-water mark — versions once classified are never
-        re-read, so each trigger pays O(new commits) ``_kind`` reads;
-        which leg dirs exist, and under which name, comes from the one
-        root listing ``current_version()`` takes (the store's leg-dir
-        map), not from a probe per leg."""
-        from smoltable_spark.sources.store import CellStore
-
+        - a commit after the horizon is a base rewrite, or a minor fold
+          that is not benign. A layout store's base legs never enter its
+          stream, so the walk is the only way to see its rewrites; a
+          compact with no later delta makes no micro-batch either,
+          which is why ``stream_store_rollup`` also calls
+          ``guard_chain`` at wiring time. A fold under ``.minor/`` is a
+          BENIGN re-layout: the source never lists it and keeps
+          consuming the original delta legs, the way batch
+          ``read_changes`` skips a fold of already-consumed changes. It
+          stops being benign when a root ``v=<n>`` dir of its version is
+          listed too (a lost race's leftover, or the fold renamed out of
+          band), whose files the source streams, or when its
+          post-horizon originals are vacuumed: the stream horizon is the
+          conservative ``start_version``, so their consumption cannot be
+          proven (the batch path's straddle rule) — size the store's
+          vacuum retention to cover consumer lag, the standard
+          change-feed retention contract;
+        - a ``streamed`` version is above the pointer. The pointer is
+          resolved after the caller collected the batch's versions, so
+          a commit the source listed before its publish is committed by
+          then unless it failed or is still in flight: its rows are not
+          committed data."""
         if self.store is None:
-            return []
+            return
         cur = self.store.current_version()
-        legs = self.store._leg_dirs
-        hwm = max(self._kind_hwm, self._start_version)
-        for v in range(hwm + 1, cur + 1):
-            if v not in legs:
-                continue  # vacuumed leg: same skip as the pre-r10 walk
-            k = self.store._kind(v)
-            if k == "base":
-                self._base_rewrites.add(v)
-            elif k == "minor":
-                if os.path.dirname(legs[v]) != CellStore._MINOR_DIR:
-                    # plain-named minor at the root: structurally visible
-                    # to the file source — permanent double-count hazard
-                    self._base_rewrites.add(v)
-                else:
-                    self._minor_folds[v] = self.store._folds_of(v)
-        self._kind_hwm = cur
-        out = set(self._base_rewrites)
-        for v, folds in self._minor_folds.items():
-            if folds is None:
-                out.add(v)  # corrupt _FOLDS marker: cannot prove benign
-                continue
-            frm, through = folds
-            originals = range(max(frm, self._start_version + 1), through + 1)
-            if any(u not in legs for u in originals):
-                out.add(v)  # originals vacuumed under the stream
-        return sorted(out)
+        legs, listing = self.store._leg_dirs, set(self.store._listing)
+        rewrites = []
+        for v in sorted(u for u in legs if self._start_version < u <= cur):
+            kind = self.store._kind(v)
+            if kind == "minor":
+                frm, through = self.store._folds_of(v)
+                originals = range(max(frm, self._start_version + 1), through + 1)
+                if all(u in legs for u in originals) and f"v={v}" not in listing:
+                    continue
+            if kind != "delta":
+                rewrites.append(v)
+        uncommitted = sorted(v for v in streamed if v > cur)
+        if rewrites or uncommitted:
+            raise ValueError(
+                f"store CDC stream hit base rewrite(s) {rewrites} or files "
+                f"of uncommitted version(s) {uncommitted}: changes are not "
+                "derivable across a full rewrite (or a minor fold whose "
+                "original delta legs were vacuumed before the stream "
+                "provably consumed them), and a commit in flight or one "
+                "that failed wrote no change data — rebuild the rollup "
+                "from the base snapshot and restart the stream (same "
+                "contract as CellStore.read_changes)"
+            )
 
     def guard_chain(self) -> None:
-        rewrites = self._chain_rewrites()
-        if rewrites:
-            raise ValueError(
-                f"store CDC stream hit base rewrite(s) {rewrites}: "
-                "changes are not derivable across a full rewrite (or a "
-                "minor fold whose original delta legs were vacuumed "
-                "before the stream provably consumed them) — rebuild "
-                "the rollup from the base snapshot and restart the "
-                "stream (same contract as CellStore.read_changes)"
-            )
+        self._guard(set())
 
     def _guard_append_only(self, batch_df: DataFrame) -> None:
         if self.store is None:
             return
-        # chain-level check first (catches layout-store rewrites whose
-        # files are invisible to the delta-only stream, and fails a flat
-        # store one batch earlier); the in-stream file check below is
-        # kept as the belt for pre-chain-walk checkpoints mid-replay.
-        chain_rewrites = self._chain_rewrites()
-        vs = [
-            r["v"] for r in batch_df.select("v").distinct().collect()
-        ]  # bounded: one scalar per commit in this trigger
-        # in-stream file check: legs under .minor/ can never appear here
-        # (structurally invisible to the source); a "minor" kind in the
-        # stream therefore means a plain-named fold at the root whose
-        # files WOULD double-count — same resync as a base rewrite
-        rewrites = sorted(
-            set(chain_rewrites)
-            | {
-                int(v)
-                for v in vs
-                if v is not None and v > self._start_version
-                and self.store._kind(int(v)) in ("base", "minor")
-            }
+        # bounded: one scalar per commit in this trigger
+        self._guard(
+            {int(r["v"]) for r in batch_df.select("v").distinct().collect()
+             if r["v"] is not None}
         )
-        if rewrites:
-            raise ValueError(
-                f"store CDC stream hit base rewrite(s) {rewrites}: "
-                "changes are not derivable across a full rewrite (or a "
-                "minor fold whose original delta legs were vacuumed "
-                "before the stream provably consumed them) — rebuild "
-                "the rollup from the base snapshot and restart the "
-                "stream (same contract as CellStore.read_changes)"
-            )
 
     def _partial(self, df: DataFrame) -> DataFrame:
         aggs = [F.sum(F.expr(e)).alias(c) for c, e in self.sums.items()]

@@ -1,17 +1,15 @@
-"""Differential property test for the CDC chain guard's high-water-mark
-cache (VERDICT r10 ask #8).
+"""Differential property test for the CDC chain guard across rollup
+incarnations.
 
-The guard cache (streaming/store_cdc.py: ``_kind_hwm`` /
-``_base_rewrites`` / ``_minor_folds``) is r10 state with hand-reasoned
-invalidation: versions are classified ONCE, base rewrites are
-permanent, and known minor folds re-verify only their originals'
-existence per call. This suite drives random interleavings of
+The guard keeps no state of its own between calls: every call resolves
+the store's pointer and walks the committed kinds in its chain manifest
+from the persisted horizon. This suite drives random interleavings of
 append / minor-compact / major-compact / vacuum against ONE long-lived
-incarnation and asserts, after every op, that its cached
-``guard_chain()`` decision (pass, or which documented ValueError) is
-IDENTICAL to a from-scratch incarnation constructed over the same
-persisted rollup meta — i.e. the cache can never accept a chain the
-cold walk rejects, or vice versa.
+incarnation and asserts, after every op, that its ``guard_chain()``
+decision (pass, or which documented ValueError) is IDENTICAL to a fresh
+incarnation constructed over the same persisted rollup meta — i.e. a
+long-lived rollup can never accept a chain a fresh one rejects, or vice
+versa.
 """
 
 from __future__ import annotations
@@ -82,13 +80,13 @@ def test_guard_cache_equals_cold_walk(spark, tmp_path_factory, ops):
             store.vacuum(keep_last=op[1])
         cold = StoreChangeRollup(
             spark, roll_path, keys=["family"], sums={"n": "1"}, store=store
-        )  # same persisted horizon, empty cache: re-walks from scratch
+        )  # same persisted horizon, a fresh incarnation
         got_cold = _guard_outcome(cold)
         got_cached = _guard_outcome(cached)
         assert got_cached == got_cold, (
             f"cache diverged after {op}: cached={got_cached} "
             f"cold={got_cold} (chain v{store.current_version()})"
         )
-        # decisions must also be STABLE per state: a second cached call
-        # with nothing new classifies nothing and must agree with itself
+        # decisions must also be STABLE per state: a second call with
+        # nothing new must agree with the first
         assert _guard_outcome(cached) == got_cached

@@ -48,7 +48,7 @@ class RenameUnsafeFS(LocalStoreFS):
 
 
 class ReadCountingFS(LocalStoreFS):
-    """Spy: counts read_text calls (pointer + marker content reads)."""
+    """Spy: records the file names read_text reads."""
 
     def __init__(self):
         self.reads = []
@@ -198,7 +198,7 @@ def test_pointer_manifest_makes_open_one_read(spark, tmp_path):
     s.minor_compact()
     _append(spark, s, "d3")
     # fresh handle with a read-counting FS: resolving the chain reads
-    # the pointer once and ZERO _KIND/_FOLDS marker files
+    # the pointer once and no other file
     r = CellStore(spark, str(tmp_path / "t"))
     spy = ReadCountingFS()
     r._fs = spy
@@ -212,14 +212,14 @@ def test_pointer_manifest_makes_open_one_read(spark, tmp_path):
     assert spy.reads == ["_VERSION-v5"], spy.reads
 
 
-def test_pointer_manifest_fallback_for_legacy_int_pointer(spark, tmp_path):
-    """A pointer generation whose manifest lacks the chain's legs
-    resolves through the authoritative marker files; a legacy plain-int
-    ``_VERSION`` file is refused, not read as an empty store."""
+def test_pointer_without_chain_manifest_is_refused(spark, tmp_path):
+    """The pointer's chain manifest is the only record of the legs'
+    kinds: a plain-int ``_VERSION`` file, a generation with no manifest
+    and one with the older ``"legs"`` manifest are all refused with the
+    rebuild error, not read as an empty store or guessed at."""
     s = CellStore(spark, str(tmp_path / "t"))
     s.save_families([ColumnFamilyDef("f")])
     _append(spark, s, "a")
-    s.minor_compact()  # no-op (single leg), keep it simple
     _append(spark, s, "b")
     plain = os.path.join(s.path, "_VERSION")
     with open(plain, "w") as fh:
@@ -227,30 +227,46 @@ def test_pointer_manifest_fallback_for_legacy_int_pointer(spark, tmp_path):
     with pytest.raises(IOError, match="older layout"):
         CellStore(spark, str(tmp_path / "t")).current_version()
     os.remove(plain)
+    for payload in ({"v": 2}, {"v": 2, "legs": {"1": ["delta", None]}}):
+        with open(os.path.join(s.path, "_VERSION-v2"), "w") as fh:
+            fh.write(json.dumps(payload))
+        r = CellStore(spark, str(tmp_path / "t"))
+        with pytest.raises(IOError, match="older layout.*rebuild"):
+            r.current_version()
+    # a manifest that misses a listed leg at or below the pointer
     with open(os.path.join(s.path, "_VERSION-v2"), "w") as fh:
-        fh.write(json.dumps({"v": 2}))  # no manifest
-    r = CellStore(spark, str(tmp_path / "t"))
-    assert r.current_version() == 2
-    assert r._legs_of(2) == [1, 2]
-    assert [r._kind(v) for v in r._legs_of(2)] == ["delta", "delta"]
-    # same coordinates in both batches: LSM shadowing keeps the newest
-    assert sorted(x["v_str"] for x in r.read().collect()) == ["b.0", "b.1"]
+        fh.write(json.dumps({"v": 2, "chain": {"2": ["delta", None]}}))
+    with pytest.raises(IOError, match=r"legs \[1\].*older layout"):
+        CellStore(spark, str(tmp_path / "t")).read()
 
 
-def test_pointer_manifest_is_trimmed_but_chain_complete(spark, tmp_path):
-    """The published manifest stays bounded (entries below the trim
-    horizon's base are dropped) yet always covers the current chain."""
+def test_pointer_manifest_holds_exactly_the_listed_legs(spark, tmp_path):
+    """Each commit's manifest records exactly the legs its root listing
+    names at or below it: every leg of the chain, and after a vacuum
+    and one more commit nothing the vacuum removed."""
     s = CellStore(spark, str(tmp_path / "t"))
     s.save_families([ColumnFamilyDef("f")])
     for i in range(3):
         _append(spark, s, f"a{i}")
-    d = json.loads(open(os.path.join(s.path, "_VERSION-v3")).read())
-    assert d["v"] == 3
-    assert set(d["legs"]) == {"1", "2", "3"}
-    assert d["legs"]["3"] == ["delta", None]
-    # every leg of the current chain is present in the manifest
-    for v in s._legs_of(3):
-        assert str(v) in d["legs"]
+
+    def chain(v):
+        d = json.loads(open(os.path.join(s.path, f"_VERSION-v{v}")).read())
+        assert d["v"] == v and "legs" not in d
+        return d["chain"]
+
+    assert chain(3) == {
+        "1": ["delta", None], "2": ["delta", None], "3": ["delta", None]
+    }
+    m = s.minor_compact()
+    assert chain(m)[str(m)] == ["minor", [1, 3]]
+    s.compact()
+    s.vacuum(keep_last=1)
+    _append(spark, s, "b")
+    cur = s.current_version()
+    listed = sorted(v for v in s._leg_dirs)
+    assert listed == [cur - 1, cur]
+    assert sorted(int(v) for v in chain(cur)) == listed
+    assert chain(cur) == {str(cur - 1): ["base", None], str(cur): ["delta", None]}
 
 
 # ---------------------------------------------------------------------------

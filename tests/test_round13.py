@@ -142,9 +142,11 @@ class _VacuumRacingFS(RenameUnsafeFS):
         if not self.raced and os.path.basename(p) == "_VERSION-v2":
             self.raced = True
             root = os.path.dirname(p)
+            with open(p) as fh:
+                racer = {**json.load(fh), "v": 3}  # same chain, next number
             os.remove(p)
             with open(os.path.join(root, "_VERSION-v3"), "w") as fh:
-                fh.write(json.dumps({"v": 3, "legs": {}}))
+                fh.write(json.dumps(racer))
             raise FileNotFoundError(p)
         return super().read_text(p)
 

@@ -323,16 +323,17 @@ def test_orphan_boundary_sidecar_is_ignored(spark, tmp_path):
         at_version=s.current_version() + 1,
     )
     assert 3 in s.boundary_versions()  # the orphan exists on disk...
-    assert s._valid_boundary_versions() == [1]  # ...but never takes effect
-    # a post-abort append buckets under v=1 and every row stays served
+    # ...until the next commit of v3, which removes it: a post-abort
+    # append buckets under v=1 and every row stays served
     s.append(_mk_cells(spark, [(f"zx{i}", i, 200 + i) for i in range(3)]))
+    assert s.boundary_versions() == [1]
     out = s.key_range_scan("k", "zz~", b_values=[0, 1, 2, 3])
     assert out.count() == 21
     assert s.boundaries_for(s.current_version()) == s.boundaries_for(1)
     # a RETRIED compact commits base+sidecar together and takes over
     v = s.compact()
     assert s._kind(v) == "base"
-    assert v in s._valid_boundary_versions()
+    assert s.boundary_versions() == [1, v]
     assert s.key_range_scan("k", "zz~", b_values=[0, 1, 2, 3]).count() == 21
 
 

@@ -128,6 +128,50 @@ def test_racing_meta_writers_one_winner(spark, tmp_path, mkuri, make):
     assert make(spark, path)._meta()["last_batch_id"] == 3
 
 
+def test_commit_writes_no_metadata_file_but_its_pointer(spark, tmp_path):
+    """The pointer generation is the only metadata file a base or delta
+    commit writes; a minor commit also writes its leg's root name. No
+    leg dir gets a marker file."""
+    written = []
+
+    class Spy(LocalStoreFS):
+        def write_text(self, p, content):
+            written.append(os.path.basename(p))
+            super().write_text(p, content)
+
+        def replace_text(self, p, content):
+            written.append(os.path.basename(p))
+            super().replace_text(p, content)
+
+        def create_exclusive(self, p, content):
+            written.append(os.path.basename(p))
+            super().create_exclusive(p, content)
+
+    s = CellStore(spark, str(tmp_path / "t"))
+    s.save_families([ColumnFamilyDef("f")])
+    s._fs = Spy()
+
+    def commit(op, *args):
+        written.clear()
+        v = op(*args)
+        return v, list(written)
+
+    def cells(tag):
+        return make_cells(spark, [("k", "f", "", 1, "string", tag)])
+
+    assert commit(s.write, cells("a")) == (1, ["_VERSION-v1"])
+    assert commit(s.append, cells("b")) == (2, ["_VERSION-v2"])
+    assert commit(s.append, cells("c")) == (3, ["_VERSION-v3"])
+    assert commit(s.minor_compact) == (4, ["_FOLDS-v4", "_VERSION-v4"])
+    assert commit(s.compact) == (5, ["_VERSION-v5"])
+    assert os.path.getsize(os.path.join(s.path, "_FOLDS-v4")) == 0
+    leg_files = {
+        f for v in range(1, 6) for _r, _d, fs in os.walk(s._version_dir(v))
+        for f in fs
+    }
+    assert not {f for f in leg_files if f.startswith("_") and f != "_SUCCESS"}
+
+
 def test_racing_store_writers_one_winner(spark, tmp_path, mkuri):
     """Two CellStore handles commit the same next version: exactly one
     wins, the other raises, and the winner's pointer is what a fresh

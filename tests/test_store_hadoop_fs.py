@@ -1,10 +1,11 @@
 """CellStore administration over a Hadoop-FS URI — round 11.
 
 The store's data always moved through Spark jobs (URI-capable); its
-driver-side metadata (manifest, _VERSION pointer, _KIND/_FOLDS markers,
-vacuum's reclaim, footer stats, the Z-order boundaries sidecar) used
-local ``os``/``open`` calls — so a store on hdfs:// or s3a:// could be
-READ but not administered. ``sources/store_fs.py`` dispatches on the
+driver-side metadata (manifest, _VERSION pointer with its chain
+manifest, minor-leg names, vacuum's reclaim, footer stats, the Z-order
+boundaries sidecar) used local ``os``/``open`` calls — so a store on
+hdfs:// or s3a:// could be READ but not administered.
+``sources/store_fs.py`` dispatches on the
 path scheme; these tests drive the full lifecycle against TWO real
 Hadoop filesystems via the parametrized ``mkuri`` fixture — a ``file:``
 URI (JVM LocalFileSystem: any lingering os.* call, which cannot parse

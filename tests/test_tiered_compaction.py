@@ -2,8 +2,8 @@
 
 ``compact()`` is a full O(table) base rewrite; ``minor_compact()`` folds
 only the trailing run of delta legs into ONE **minor** leg (O(changes)),
-recording the ``(from, through)`` range it superseded in a ``_FOLDS``
-marker. ``_legs_of`` is the single chain resolver every consumer
+recording the ``(from, through)`` range it superseded in the pointer's
+chain manifest. ``_legs_of`` is the single chain resolver every consumer
 (read / read_changes / vacuum / stats) goes through.
 
 Reference parity: fjall compacts L0 segments tier-wise before a levelled
@@ -258,7 +258,7 @@ def test_minor_leg_dir_is_stream_invisible(spark, tmp_path):
     listing skips at every level — structurally invisible to both the
     flat-store root stream and the layout stores' delta glob, while
     explicit-path batch reads (_merge_legs) see the dir fine. The root
-    names the leg by its ``_FOLDS-v<n>`` marker."""
+    names the leg by its ``_FOLDS-v<n>`` file."""
     store = _mk(spark, tmp_path)
     store.write(_cells(spark, [("a", 1, "v0")]))
     store.append(_cells(spark, [("b", 1, "w")]))
@@ -363,6 +363,33 @@ def test_leftover_of_lost_commit_race_is_vacuumed(spark, tmp_path):
     assert _snapshot(fresh) == before
 
 
+def test_minor_leg_wins_over_the_root_leftover_of_a_lost_race(spark, tmp_path):
+    """A minor commit wins version m, and a delta writer that lost the
+    race for m has left its ``v=<m>`` dir at the root: the pointer's
+    manifest says m is minor, so reads take the fold, and ``vacuum``
+    removes the root leftover."""
+    import shutil
+
+    store = _mk(spark, tmp_path)
+    store.write(_cells(spark, [("a", 1, "v0")]))
+    store.append(_cells(spark, [("b", 1, "w")]))
+    store.append(_cells(spark, [("c", 1, "x")]))
+    before = _snapshot(store)
+    m = store.minor_compact()  # the winner
+    other = _mk(spark, tmp_path, "other")
+    other.append(_cells(spark, [("z", 1, "lost")]))
+    leftover = os.path.join(store.path, f"v={m}")
+    shutil.copytree(other._version_dir(1), leftover)  # the loser's data
+    fresh = _mk(spark, tmp_path)
+    fresh.current_version()
+    assert fresh._version_dir(m) == os.path.join(fresh.path, ".minor", f"v={m}")
+    assert _snapshot(fresh) == before
+    fresh.vacuum(keep_last=1)
+    assert not os.path.exists(leftover)
+    assert _snapshot(fresh) == before
+    assert fresh._version_dir(m) == os.path.join(fresh.path, ".minor", f"v={m}")
+
+
 def test_failed_delta_commit_never_shadows_the_minor_leg(spark, tmp_path, monkeypatch):
     """A delta commit that fails after writing ``v=<n>`` leaves a root
     dir that would win over a later minor leg of the same version: the
@@ -424,6 +451,47 @@ def test_cdc_stream_survives_minor_compaction(spark, tmp_path):
     store.compact()
     with pytest.raises(ValueError, match="rewrite"):
         drain()
+
+
+def test_cdc_stream_refuses_files_of_a_failed_commit(spark, tmp_path, monkeypatch):
+    """A delta commit that fails at its pointer publish leaves its files
+    where the stream's source lists them. The version is above the
+    pointer, so the drain raises and names it, and the rollup folds
+    none of its rows."""
+    from smoltable_spark.streaming.store_cdc import (
+        StoreChangeRollup,
+        stream_store_changes,
+        stream_store_rollup,
+    )
+
+    store = _mk(spark, tmp_path)
+    store.write(_cells(spark, [("a", 1, "v0")]))
+    roll = StoreChangeRollup(
+        spark, str(tmp_path / "roll"), keys=["family"], sums={"n": "1"},
+        store=store,
+    )
+
+    def drain():
+        s = stream_store_changes(spark, store)
+        q = stream_store_rollup(s, roll, str(tmp_path / "ckpt"))
+        try:
+            assert q.awaitTermination(120)
+        finally:
+            q.stop()
+
+    store.append(_cells(spark, [("b", 1, "w")]))
+    drain()
+    folded = roll.processed_rows()
+    assert folded == 2
+    with monkeypatch.context() as m:
+        stop = _fail_commit(m, store, "publish")
+        with pytest.raises(stop):
+            store.append(_cells(spark, [("z", 1, "lost")]))
+    n = store.current_version() + 1
+    assert os.path.isdir(os.path.join(store.path, f"v={n}"))
+    with pytest.raises(Exception, match=rf"uncommitted version\(s\) \[{n}\]"):
+        drain()
+    assert roll.processed_rows() == folded
 
 
 def test_cdc_stream_survives_minor_compaction_on_layout_store(spark, tmp_path):
@@ -519,10 +587,11 @@ def test_cdc_stream_rejects_legacy_plain_minor_leg(spark, tmp_path):
         rollup.guard_chain()
 
 
-def test_chain_guard_kind_walk_is_cached(spark, tmp_path):
-    """VERDICT r9 ask #7: the guard's commit-kind walk is O(new commits)
-    per call behind a high-water mark, not O(chain) — counted across
-    two folds."""
+def test_chain_guard_reads_only_the_pointer_and_one_listing(spark, tmp_path):
+    """The guard resolves the store's pointer once per call and takes
+    every kind and fold range from its manifest: one listing of the
+    store root and one file read, the pointer, however long the chain."""
+    from smoltable_spark.sources.store_fs import LocalStoreFS
     from smoltable_spark.streaming.store_cdc import StoreChangeRollup
 
     store = _mk(spark, tmp_path)
@@ -534,24 +603,27 @@ def test_chain_guard_kind_walk_is_cached(spark, tmp_path):
         sums={"n": "1"},
         store=store,
     )
+    for rk in ("b", "c", None, "d", "e", None):
+        if rk is None:
+            store.minor_compact()
+        else:
+            store.append(_cells(spark, [(rk, 1, "w")]))
+
     calls = []
-    orig_kind = store._kind
-    store._kind = lambda v: (calls.append(v), orig_kind(v))[1]
-    store.append(_cells(spark, [("b", 1, "w")]))
-    store.append(_cells(spark, [("c", 1, "x")]))
-    store.minor_compact()  # fold #1
-    rollup.guard_chain()
-    first = len(calls)
-    assert first > 0
-    calls.clear()
-    rollup.guard_chain()  # nothing new: zero _kind reads
-    assert calls == []
-    store.append(_cells(spark, [("d", 1, "y")]))
-    store.append(_cells(spark, [("e", 1, "z")]))
-    store.minor_compact()  # fold #2
-    calls.clear()  # drop the store's OWN resolver traffic from the fold
-    rollup.guard_chain()
-    assert sorted(set(calls)) == [5, 6, 7]  # only the new commits
+
+    class Spy(LocalStoreFS):
+        def __getattribute__(self, name):
+            if name in ("listdir", "list_status", "read_text", "exists",
+                        "isdir", "walk_files"):
+                calls.append(name)
+            return super().__getattribute__(name)
+
+    store._fs = Spy()
+    for _ in range(2):
+        calls.clear()
+        rollup.guard_chain()
+        assert calls == ["listdir", "read_text"]
+    assert store.current_version() == 7
 
 
 def test_delta_legs_carry_row_key_bloom(spark, tmp_path):
